@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — driver runs it with SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1
   * and reads ONE JSON line from stdout.
   *
@@ -85,38 +83,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning.shuffleIo(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_AQE", "true"))
-      // Coalesce post-shuffle partitions to the advisory SIZE, not to
-      // defaultParallelism: tiny shuffles otherwise still launch 32 tasks
-      // per stage — ~20% of the per-query constant at bench scale, and the
-      // right behavior at 100 TB too (task count follows data volume).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // 24 headline queries × several codegen stages each overflow the
-      // default 100-entry generated-class cache, so every "warm" run
-      // recompiles evicted stages with Janino — steady-state times become
-      // first-run times. Static conf: must be set before session creation.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // Single-host tuning, mirrors what a resident local engine would run
-      // with: no locality wait (every task is process-local), no shuffle
-      // block compression (blocks live on local tmpfs/page cache; lz4
-      // costs CPU per block with nothing to save on a loopback "network").
-      // On a real cluster leave compression on — these are bench-session
-      // settings, not library defaults.
-      .config("spark.locality.wait", "0s")
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        graft.functions.GraftExtensions.ExcludedOptimizerRules)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.queryPack(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     // JVM/codegen warmup on the smallest SF so headline timings measure
     // the engine, not first-query class-loading.

@@ -43,11 +43,33 @@ object Component {
     // (DuckDB types live in the database file)
     TypeSql.reset()
 
-    // graft's native SQL functions (dot_f32, simhash64, ...) are available
-    // to user scripts, like any engine built-in — plus the DuckDB names
-    // users carry over from the reference (list_transform, epoch_us, ...)
-    graft.functions.GraftExtensions.register(spark)
-    DuckFunctions.register(spark)
+    // A26: resolve the configured compatibility version through the
+    // registry (alias + unsupported-falls-back-to-default, the reference
+    // launcher's contract) and pin the session's `version()` function to
+    // the resolved version — the one observable difference between the
+    // reference's per-version engines at this surface (its `version-1-4-4`
+    // golden fixture exports `SELECT version()` and expects `v1.4.4`).
+    val requested = config.duckdbVersion.getOrElse(Versions.LatestAlias)
+    val resolved = Versions.resolve(requested)
+    if (Versions.isFallback(requested))
+      System.err.println(
+        s"[component] configured engine version: $requested is not in this " +
+          s"build's registry ${Versions.Supported.mkString("{", ", ", "}")}; " +
+          s"falling back to $resolved (launcher routes versions per container)")
+    else if (config.duckdbVersion.isDefined)
+      System.err.println(
+        s"[component] configured engine version: $requested resolved to " +
+          s"$resolved (running Spark ${spark.version})")
+    // a registered temp function shadows the built-in version() for this
+    // session; re-registered per run so each config's pick wins
+    spark.udf.register("version", () => Versions.reportedVersion(resolved))
+    // graft's native SQL functions (dot_f32, simhash64, ...) ride the
+    // session's extensions (graft.GraftSession); the DuckDB names users
+    // carry over from the reference (list_transform, epoch_us, ...) bind
+    // once per run under the resolved version: names above their
+    // FunctionFloors throw the version error a reference user would get
+    // from the version-matched engine (A26 round 15)
+    DuckFunctions.register(spark, resolved)
 
     config.action match {
       case Some("syntax_check") =>
@@ -90,31 +112,6 @@ object Component {
 
     // 3. ingest
     Ingest.loadAll(spark, dataDir, config)
-
-    // A26: resolve the configured compatibility version through the
-    // registry (alias + unsupported-falls-back-to-default, the reference
-    // launcher's contract) and pin the session's `version()` function to
-    // the resolved version — the one observable difference between the
-    // reference's per-version engines at this surface (its `version-1-4-4`
-    // golden fixture exports `SELECT version()` and expects `v1.4.4`).
-    val requested = config.duckdbVersion.getOrElse(Versions.LatestAlias)
-    val resolved = Versions.resolve(requested)
-    if (Versions.isFallback(requested))
-      System.err.println(
-        s"[component] configured engine version: $requested is not in this " +
-          s"build's registry ${Versions.Supported.mkString("{", ", ", "}")}; " +
-          s"falling back to $resolved (launcher routes versions per container)")
-    else if (config.duckdbVersion.isDefined)
-      System.err.println(
-        s"[component] configured engine version: $requested resolved to " +
-          s"$resolved (running Spark ${spark.version})")
-    // a registered temp function shadows the built-in version() for this
-    // session; re-registered per run so each config's pick wins
-    spark.udf.register("version", () => Versions.reportedVersion(resolved))
-    // re-bind the DuckDB name surface under the resolved version: names
-    // above their FunctionFloors throw the version error a reference
-    // user would get from the version-matched engine (A26 round 15)
-    DuckFunctions.register(spark, resolved)
 
     // 4-5. plan + execute
     val outWarehouse = Paths.get(dataDir, "out", "files", "warehouse")

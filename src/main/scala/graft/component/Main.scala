@@ -1,7 +1,5 @@
 package graft.component
 
-import org.apache.spark.sql.SparkSession
-
 /** Component entrypoint: `graft.component.Main <dataDir> [action]` — the
   * Spark analogue of the reference's `component.py` run (KBC_DATADIR
   * layout: config.json, in/tables, in/files, out/tables, out/files).
@@ -21,31 +19,11 @@ object Main {
     val config = Config.parse(java.nio.file.Files.readString(configPath))
     val threads = SystemResources.resolveThreads(config.threads)
     val memMb = SystemResources.resolveMemoryMb(config.maxMemoryMb)
-    // `threads` tasks scan concurrently; size input splits so their working
-    // set (~8× on-disk bytes after decompression + exec structures) fits
-    // the memory budget, clamped to Spark's sane [16 MB, 128 MB] band
-    val maxPartitionBytes = math.min(128L << 20,
-      math.max(16L << 20, memMb * 1048576L / (threads * 8L)))
     System.err.println(
       s"[component] resources: threads=$threads (config=${config.threads.getOrElse("auto")}), " +
         s"memory=${memMb}MB (config=${config.maxMemoryMb.getOrElse("auto")}), " +
-        s"maxPartitionBytes=$maxPartitionBytes")
-    val spark = SparkSession.builder()
-      .master(s"local[$threads]")
-      .config("spark.sql.shuffle.partitions", threads)
-      .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // post-shuffle partition count follows data volume (advisory size),
-      // not defaultParallelism — small intermediate results don't pay a
-      // full-width task launch per stage
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        graft.functions.GraftExtensions.ExcludedOptimizerRules)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+        s"maxPartitionBytes=${graft.GraftSession.maxPartitionBytes(threads, memMb)}")
+    val spark = graft.GraftSession.component(threads, memMb)
     try {
       val t0 = System.nanoTime()
       val result = Component.run(spark, dataDir)

@@ -54,15 +54,21 @@ object SystemResources {
   }
 
   /** Memory limit (MB) from cgroup v1 (`memory/memory.limit_in_bytes`) or
-    * v2 (`memory.max` = bytes | "max"). None = no limit found. */
+    * v2 (`memory.max` = bytes | "max"). None = no limit found. A limit at
+    * or above the host's RAM limits nothing: cgroup v1 writes "unlimited"
+    * as 9223372036854771712, which read literally is 8796093021951 MB. */
   def detectMemoryMb(root: String = "/sys/fs/cgroup"): Option[Long] = {
-    val v1 = readLong(Paths.get(root, "memory", "memory.limit_in_bytes"))
-      .filter(_ > 0).map(_ / (1024L * 1024L))
-    v1.orElse {
-      readTrimmed(Paths.get(root, "memory.max")).filter(_ != "max")
-        .flatMap(s => Try(s.toLong).toOption).map(_ / (1024L * 1024L))
-    }
+    val v1 = readLong(Paths.get(root, "memory", "memory.limit_in_bytes")).filter(_ > 0)
+    val v2 = readTrimmed(Paths.get(root, "memory.max")).filter(_ != "max")
+      .flatMap(s => Try(s.toLong).toOption)
+    (v1 ++ v2).map(_ / (1024L * 1024L)).find(mb => physicalMemoryMb.forall(mb < _))
   }
+
+  /** Host RAM from `/proc/meminfo` (a container sees the host's figure). */
+  private lazy val physicalMemoryMb: Option[Long] =
+    readTrimmed(Paths.get("/proc/meminfo")).flatMap(_.linesIterator.collectFirst {
+      case l if l.startsWith("MemTotal:") => Try(l.split("\\s+")(1).toLong / 1024L).toOption
+    }.flatten)
 
   /** Detected memory minus the runtime reserve, floored at 1 MB. */
   def optimalMemoryMb(root: String = "/sys/fs/cgroup"): Option[Long] =

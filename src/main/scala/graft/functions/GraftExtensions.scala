@@ -6,13 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions registration exposing graft's native expressions
   * as SQL functions, so `spark.sql("SELECT simhash64(text) ...")` works
-  * next to the Column API. Enable with:
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)
-  *   // or: .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-  * }}}
+  * next to the Column API. Every [[graft.GraftSession]] enables it; any
+  * other session sets `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -256,7 +251,7 @@ object GraftExtensions {
       args => KmvSketch(args.head, 256).toAggregateExpression()))
 
   /** Optimizer rules this library excludes, applied by [[register]] and
-    * every graft session builder.
+    * every [[graft.GraftSession]].
     *
     * `InferFiltersFromGenerate` clones a Generate's input expression into
     * inferred `size(e) > 0 AND e IS NOT NULL` filters. For a stored array

@@ -19,9 +19,9 @@ object ScaleOps {
     *    of splits) this fails and spread is a no-op, so no shuffle is
     *    ever added at scale;
     *  - big enough to matter (optimizer size estimate ≥ 4 MiB): the text
-    *    expressions cost ~10–30 µs per ~300 B row (measured,
-    *    tools/MicroBench), so below a few MiB the whole pass is tens of
-    *    ms single-threaded — CHEAPER than the extra stage's task+schedule
+    *    expressions cost ~10–30 µs per ~300 B row (measured, MicroBench
+    *    in REMOVED_PROBES.md), so below a few MiB the whole pass is tens
+    *    of ms single-threaded — CHEAPER than the extra stage's task+schedule
     *    overhead it would take to parallelize it (measured: dropping the
     *    exchange cut d08 ~25% at sf0.1 while sf≥1 corpora still spread). */
   def spread(df: DataFrame, minBytes: Long = 4L << 20): DataFrame = {

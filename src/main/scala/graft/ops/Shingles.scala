@@ -75,8 +75,9 @@ object Shingles {
     // (pair = a<<32|b, sizes = na<<32|nb — PairGen.packedIdPairs, half
     // the group-key width the JFR profile pointed at) measured 0.834 s
     // warm-median vs 0.795 s for the identical sort-free plan on the
-    // 4-long key (D03Probe, relation-equal) — the hash map is bound by
-    // per-row probe count, not key bytes, at this pair mass. The 21%
+    // 4-long key (D03Probe in REMOVED_PROBES.md, relation-equal) — the
+    // hash map is bound by per-row probe count, not key bytes, at this
+    // pair mass. The 21%
     // that WAS on the table was the trailing ORDER BY's re-executed
     // final aggregate; the d03 ledger query now omits it (the driver
     // compare canon-sorts rows). d03 was classified done-at-floor r7-r18:
@@ -88,8 +89,8 @@ object Shingles {
     // sampling showed the dominant task-time sink was
     // BypassMergeSortShuffleWriter's per-reduce-partition file creates
     // (32×32 = 1,024 per exchange — quadratic in core count). Fixed at
-    // the session layer (graft.SessionTuning: sort-path writer + tmpfs
-    // local dirs), NOT here: d03 warm 0.76 → ~0.39-0.55 s and the
+    // the session layer (graft.GraftSession.queryPack: sort-path writer +
+    // tmpfs local dirs), NOT here: d03 warm 0.76 → ~0.39-0.55 s and the
     // 8c/32c cold ratio flipped to 2.6× in favor of 32 cores. The
     // posting-list/pair-agg shape itself stands as adjudicated.
     val all = ScaleOps.spread(docs)

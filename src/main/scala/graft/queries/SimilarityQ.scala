@@ -64,7 +64,8 @@ object SimilarityQ {
     //    treatment) was MEASURED and rejected: this corpus is
     //    near-isotropic (max query cosine 0.37), so JL noise at outDim 16
     //    sinks true top-5 members to projected rank 405/500 (221/500 even
-    //    at outDim 32 — graft.tools.S06Probe), and no honest candidate
+    //    at outDim 32 — S06Probe in REMOVED_PROBES.md), and no honest
+    //    candidate
     //    margin covers that. Neighbor quality vs s01 is pinned in OpsSpec
     //    on clustered vectors, where the projection actually preserves
     //    structure.
@@ -84,7 +85,7 @@ object SimilarityQ {
     //    the s06 call: this corpus is near-isotropic (max query cosine
     //    0.37), so 8-byte codes rank true top-5 members behind ~50
     //    reconstruction-ties (measured recall@5-from-50: 0.88/0.95/0.64
-    //    across the three dirs — graft.tools.PqProbe); no honest
+    //    across the three dirs — PqProbe in REMOVED_PROBES.md); no honest
     //    candidate margin covers that, while on CLUSTERED vectors (where
     //    PQ cells align with real structure) recall is 1.0, pinned in
     //    Round9OpsSpec.
@@ -284,7 +285,8 @@ object SimilarityQ {
     // s02/s04/s06/s08/s09 full top-k: no oracle — LSH/IVF candidate sets
     // are hash-impl-specific with no exactness guarantee at their pruning
     // strength, and the 16-dim projection measurably cannot cover the
-    // exact top-5 on this isotropic corpus (S06Probe); recall/quality vs
+    // exact top-5 on this isotropic corpus (S06Probe in
+    // REMOVED_PROBES.md); recall/quality vs
     // s01 is pinned in OpsSpec instead. The r16 planted-twin slices below
     // ARE exact: an identical vector is guaranteed through every route.
     // s07b: the converged codebook equals the per-cluster means of the
@@ -313,7 +315,8 @@ object SimilarityQ {
 
   /** The planted-twin ground truth, computable from the same parquet:
     * rank-1 for a duplicated query IS its twin (cosine exactly 1 beats
-    * the corpus max 0.37 — measured, S06Probe/PqProbe). */
+    * the corpus max 0.37 — measured, S06Probe/PqProbe in
+    * REMOVED_PROBES.md). */
   private lazy val plantedOracle: String =
     """SELECT vec_id + 1000000 AS qid, vec_id AS nid, CAST(1 AS INT) AS rk
       |FROM embeddings WHERE vec_id >= 100 AND vec_id < 120

@@ -164,9 +164,9 @@ object TextQ {
       // (doc, term) rows are invisible to AQE's byte-based coalescing, so
       // it collapses each 150-250 ms stage to ONE task and the stages run
       // serially (measured: AQE-coalesced warm 0.54 s vs 0.28 s pinned,
-      // T05Probe). Width = shuffle.partitions/4 — the distinct-pair
-      // relation the map-side TF dedup produces is genuinely smaller than
-      // the token stream full width is sized for.
+      // T05Probe in REMOVED_PROBES.md). Width = shuffle.partitions/4 —
+      // the distinct-pair relation the map-side TF dedup produces is
+      // genuinely smaller than the token stream full width is sized for.
       val w = math.max(1,
         s.conf.get("spark.sql.shuffle.partitions").toInt / 4)
       val tf = docs

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Spark leg of the function-semantics differential sweep (r17,
   * VERDICT r16 #5; driven by tools/function_sweep.py).
   *
@@ -94,14 +92,7 @@ object FunctionSweep {
       return
     }
     require(args.length == 2, "usage: FunctionSweep --names | <exprs> <out>")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-function-sweep")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = graft.GraftSession.component(4, graft.component.SystemResources.DefaultMemoryMb)
     spark.sparkContext.setLogLevel("ERROR")
     graft.component.DuckFunctions.register(spark)
     val exprs = scala.io.Source.fromFile(args(0)).getLines()

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -23,20 +22,7 @@ import scala.collection.mutable
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SessionTuning.shuffleIo(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.optimizer.excludedRules",
-        graft.functions.GraftExtensions.ExcludedOptimizerRules)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.queryPack(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // GRAFT_CONF="spark.sql.adaptive.advisoryPartitionSizeInBytes=4m;..." —
     // apply runtime confs for A/B experiments without recompiling
     sys.env.get("GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty).foreach { kv =>

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import scala.collection.mutable
 
@@ -53,24 +53,7 @@ object ScaleCheck {
     val big = sys.env.getOrElse("GRAFT_SCALEUP_OUT", "target/sf1.0")
     val iters = sys.env.getOrElse("GRAFT_BENCH_N", "3").toInt.max(2)
     val outFile = sys.env.getOrElse("GRAFT_SCALE_OUT", "SCALE_local.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SessionTuning.shuffleIo(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // DuckEnumRule + the duck_* registry ride the extensions — q96's
-      // enum DDL cannot even cast without it (the R16Probe lesson)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.locality.wait", "0s")
-      // match graft.Bench's session exactly so base walls are comparable
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.queryPack(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     var jobs = 0
     var spillMem = 0L

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1.0 rehearsal data generator: replicates the sf0.1 tables ~10× into
@@ -20,13 +20,7 @@ object ScaleUp {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("GRAFT_SCALEUP_OUT", "target/sf1.0")
     val factor = sys.env.getOrElse("GRAFT_SCALEUP_FACTOR", "10").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.queryPack(32)
 
     val alpha = "abcdefghijklmnopqrstuvwxyz"
     def rot(i: Int): String = alpha.drop(i % 26) + alpha.take(i % 26)

@@ -4,18 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide instance — Spark
-  * session startup dominates test wall-clock otherwise). */
+  * session startup dominates test wall-clock otherwise). It is the
+  * component session `component.Main` runs, so the tests certify the
+  * production configuration. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        graft.functions.GraftExtensions.ExcludedOptimizerRules)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.component(4, graft.component.SystemResources.DefaultMemoryMb)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

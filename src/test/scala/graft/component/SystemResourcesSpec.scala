@@ -53,6 +53,17 @@ class SystemResourcesSpec extends AnyFunSuite {
     assert(SystemResources.detectMemoryMb(unlimited.toString).isEmpty)
   }
 
+  test("cgroup v1 'unlimited' sentinel is no limit, not 8796093021951 MB") {
+    val sentinel = "memory/memory.limit_in_bytes" -> "9223372036854771712"
+    val v1 = cgroup(sentinel)
+    assert(SystemResources.detectMemoryMb(v1.toString).isEmpty)
+    assert(SystemResources.resolveMemoryMb(None, v1.toString) ==
+      SystemResources.DefaultMemoryMb)
+    // a real v2 limit next to the v1 sentinel still applies
+    val both = cgroup(sentinel, "memory.max" -> s"${1024L * 1048576}")
+    assert(SystemResources.detectMemoryMb(both.toString).contains(1024L))
+  }
+
   test("resolution order: config > detection > default") {
     val root = cgroup(
       "cpu.max" -> "800000 100000",

@@ -93,7 +93,8 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("enum plans (r17 pins of the r16 judge-verified shapes): index pushdown + one exchange") {
-    // the two plan shapes R16Probe audits, pinned so `sbt test` fails if
+    // the two plan shapes R16Probe audited (REMOVED_PROBES.md), pinned so
+    // `sbt test` fails if
     // the enum pushdown or exchange structure regresses (r16 verdict #2)
     import graft.component.{Dialect, DuckFunctions, Executor, TypeSql}
     TypeSql.reset()

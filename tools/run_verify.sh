@@ -2,6 +2,7 @@
 # Run graft.Verify against a scale-factor dir without sbt overhead.
 # Usage: tools/run_verify.sh [sfDir] [outDir]
 set -e
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 ADDOPENS=""
@@ -14,5 +15,5 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 exec java $ADDOPENS -Xmx8g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" \
   graft.Verify "$SF" "$OUT"
