@@ -48,25 +48,6 @@ object AsOfSql {
       // >= bound; SELECT * shows the using columns once (left's values)
       usingForm: Boolean = false)
 
-  /** Regex replacement that only fires OUTSIDE quoted regions/comments:
-    * matches are located on the masked text (where literals are blanked,
-    * so `'see q.bid'` can never match an alias pattern), and the output is
-    * spliced from the ORIGINAL string — safe because a match that lies
-    * outside quoted regions is textually identical in both. */
-  private def replaceUnquoted(s: String, re: scala.util.matching.Regex)(
-      repl: scala.util.matching.Regex.Match => String): String = {
-    val masked = Dialect.maskQuoted(s)
-    val sb = new StringBuilder
-    var last = 0
-    for (m <- re.findAllMatchIn(masked)) {
-      sb.append(s.substring(last, m.start))
-      sb.append(repl(m))
-      last = m.end
-    }
-    sb.append(s.substring(last))
-    sb.toString
-  }
-
   /** (source, alias) out of a FROM-item: trailing bare identifier (not
     * preceded by a dot) is the alias; `AS` is tolerated. */
   private def srcAlias(seg0: String): (String, String) = {
@@ -109,16 +90,7 @@ object AsOfSql {
         .find(m => dep(m.start) == 0 && m.start > asofM.end)
     if (onMOpt.isEmpty && usingMOpt.isEmpty) return None
     val usingClose = usingMOpt.map { m =>
-      val open = m.end - 1
-      var d = 0; var i = open; var found = -1
-      while (i < masked.length && found < 0) {
-        masked.charAt(i) match {
-          case '(' => d += 1
-          case ')' => d -= 1; if (d == 0) found = i
-          case _ =>
-        }
-        i += 1
-      }
+      val found = Dialect.matchingParen(masked, m.end - 1)
       if (found < 0) return None
       found
     }
@@ -269,23 +241,14 @@ object AsOfSql {
       def rewriteRefs(s0: String): String = {
         var s = s0
         if (p.rightAlias.nonEmpty)
-          s = replaceUnquoted(s,
+          s = Dialect.replaceUnquoted(s,
             ("(?i)\\b" + java.util.regex.Pattern.quote(p.rightAlias) + "\\.(\\w+)").r)(
             m => "`" + rightRef.getOrElse(m.group(1).toLowerCase, m.group(1)) + "`")
         if (p.leftAlias.nonEmpty)
-          s = replaceUnquoted(s,
+          s = Dialect.replaceUnquoted(s,
             ("(?i)\\b" + java.util.regex.Pattern.quote(p.leftAlias) + "\\.(\\w+)").r)(
             m => "`" + m.group(1) + "`")
         s
-      }
-      // depth-0 comma split helper (shared by select list and ORDER BY)
-      def splitTop(s: String): Seq[String] = {
-        val m = Dialect.maskQuoted(s)
-        val d = Dialect.depths(m)
-        val cutsAt = m.zipWithIndex.collect { case (',', i) if d(i) == 0 => i }
-        (Seq(-1) ++ cutsAt :+ s.length).sliding(2).map {
-          case Seq(a, b) => s.substring(a + 1, b).trim
-        }.filter(_.nonEmpty).toSeq
       }
       val afterWhere = p.where match {
         case Some(w) => cleaned.where(expr(rewriteRefs(w)))
@@ -309,11 +272,12 @@ object AsOfSql {
           // selectExpr over the rewritten list: no temp-view registration
           // per call (a long-lived session must not accumulate catalog
           // entries for every statement it ever executed)
-          afterWhere.selectExpr(splitTop(rewriteRefs(p.selList)): _*)
+          afterWhere.selectExpr(
+            Dialect.splitTop(rewriteRefs(p.selList)).filter(_.nonEmpty): _*)
         }
       val afterSort = p.orderBy match {
         case Some(ob) =>
-          val cols = splitTop(rewriteRefs(ob)).map { piece =>
+          val cols = Dialect.splitTop(rewriteRefs(ob)).filter(_.nonEmpty).map { piece =>
             val m = "(?is)^(.*?)(?:\\s+(ASC|DESC))?(?:\\s+NULLS\\s+(FIRST|LAST))?\\s*$".r
               .findFirstMatchIn(piece).get
             val base = expr(m.group(1))

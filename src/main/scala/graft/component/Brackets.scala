@@ -47,7 +47,7 @@ object Brackets {
     while (i < masked.length) {
       masked.charAt(i) match {
         case '[' =>
-          val close = matching(masked, i, '[', ']')
+          val close = Dialect.matchingParen(masked, i, '[', ']')
           if (close > 0 && innermost(masked, i, close)) {
             if (stmt.substring(i + 1, close).trim.isEmpty) {
               // empty pair: a trailing T[] after a type name is an ARRAY
@@ -74,7 +74,7 @@ object Brackets {
             }
           }
         case '{' =>
-          val close = matching(masked, i, '{', '}')
+          val close = Dialect.matchingParen(masked, i, '{', '}')
           if (close > 0 && innermost(masked, i, close)) {
             rewriteStruct(stmt, masked, i, close) match {
               case Some(out) => return out
@@ -94,18 +94,6 @@ object Brackets {
 
   private def innermost(masked: String, open: Int, close: Int): Boolean =
     !masked.substring(open + 1, close).exists(c => c == '[' || c == '{')
-
-  private def matching(masked: String, open: Int, oc: Char, cc: Char): Int = {
-    var d = 0
-    var i = open
-    while (i < masked.length) {
-      val c = masked.charAt(i)
-      if (c == oc) d += 1
-      else if (c == cc) { d -= 1; if (d == 0) return i }
-      i += 1
-    }
-    -1
-  }
 
   /** SQL keywords that can directly precede a literal — a bracket after
     * one starts a list, not a subscript (`SELECT [1,2]`, `WHEN [..]`). */
@@ -147,16 +135,9 @@ object Brackets {
       stmt.charAt(j) match {
         case ')' | ']' =>
           // matching opener in masked (quotes blanked, parens structural)
-          val oc = if (stmt.charAt(j) == ')') '(' else '['
-          var d = 0
-          var k = j
-          var found = -1
-          while (k >= 0 && found < 0) {
-            val mc = masked.charAt(k)
-            if (mc == stmt.charAt(j)) d += 1
-            else if (mc == oc) { d -= 1; if (d == 0) found = k }
-            k -= 1
-          }
+          val found =
+            if (stmt.charAt(j) == ')') Dialect.openingParen(masked, j)
+            else Dialect.openingParen(masked, j, '[', ']')
           if (found < 0) { cont = false } else j = found - 1
         case '\'' | '"' | '`' =>
           val q = stmt.charAt(j)
@@ -201,18 +182,8 @@ object Brackets {
     if (j < 0) return None
     // consume one trailing group: (p, s) args or an ARRAY<...> wrap
     stmt.charAt(j) match {
-      case ')' | '>' =>
-        val cc = stmt.charAt(j)
-        val oc = if (cc == ')') '(' else '<'
-        var d = 0
-        var k = j
-        var found = -1
-        while (k >= 0 && found < 0) {
-          val mc = masked.charAt(k)
-          if (mc == cc) d += 1
-          else if (mc == oc) { d -= 1; if (d == 0) found = k }
-          k -= 1
-        }
+      case cc @ (')' | '>') =>
+        val found = Dialect.openingParen(masked, j, if (cc == ')') '(' else '<', cc)
         if (found < 0) return None
         j = found - 1
         while (j >= 0 && stmt.charAt(j).isWhitespace) j -= 1
@@ -379,27 +350,9 @@ object Brackets {
 
   private def rewriteStruct(stmt: String, masked: String,
                             open: Int, close: Int): Option[String] = {
-    val body = stmt.substring(open + 1, close)
-    val mbody = masked.substring(open + 1, close)
-    val cuts = {
-      val b = scala.collection.mutable.ArrayBuffer[Int]()
-      var d = 0
-      var k = 0
-      while (k < mbody.length) {
-        mbody.charAt(k) match {
-          case '(' => d += 1
-          case ')' => d -= 1
-          case ',' if d == 0 => b += k
-          case _ =>
-        }
-        k += 1
-      }
-      b.toSeq
-    }
-    val entries = (Seq(-1) ++ cuts :+ body.length).sliding(2).map {
-      case Seq(a, b) => (body.substring(a + 1, b), mbody.substring(a + 1, b))
-      case _ => ("", "")
-    }.filter(_._1.trim.nonEmpty).toSeq
+    // innermost: no `[` or `{` inside, so the shared split nests parens only
+    val entries = Dialect.splitTop(stmt.substring(open + 1, close))
+      .filter(_.nonEmpty).map(e => (e, Dialect.maskQuoted(e)))
     // a `MAP` keyword immediately before the brace makes this a MAP
     // literal (probed v1.0: `MAP {'a': 1}`) — Spark spells it
     // map(k1, v1, ...) and the keys stay EXPRESSIONS (numeric keys keep

@@ -61,7 +61,7 @@ object ColumnsSql {
         val wCalls = callRe.findAllMatchIn(wMasked).toList
         if (wCalls.nonEmpty) {
           val spans = wCalls.map { c =>
-            val cl = matching(wMasked, c.end - 1)
+            val cl = Dialect.matchingParen(wMasked, c.end - 1)
             if (cl < 0) throw new UserException(
               s"unbalanced COLUMNS(...) in WHERE: ${wTxt.trim}")
             (c.start, c.end - 1, cl)
@@ -101,27 +101,8 @@ object ColumnsSql {
       bodyDf(s"SELECT * $probeTail").schema.map(_.name)
 
     // depth-0 comma split of the select list
-    val selList = body.substring(selM.end, fromM.start)
-    val mSel = masked.substring(selM.end, fromM.start)
-    val cuts = {
-      val b = scala.collection.mutable.ArrayBuffer[Int]()
-      var d = 0
-      var i = 0
-      while (i < mSel.length) {
-        mSel.charAt(i) match {
-          case '(' | '[' => d += 1
-          case ')' | ']' => d -= 1
-          case ',' if d == 0 => b += i
-          case _ =>
-        }
-        i += 1
-      }
-      b.toSeq
-    }
-    val items = (Seq(-1) ++ cuts :+ selList.length).sliding(2).map {
-      case Seq(a, b) => (selList.substring(a + 1, b), mSel.substring(a + 1, b))
-      case _ => ("", "")
-    }.filter(_._1.trim.nonEmpty).toSeq
+    val items = Dialect.splitTop(body.substring(selM.end, fromM.start))
+      .filter(_.nonEmpty).map(i => (i, Dialect.maskQuoted(i)))
     // the call sits deeper (subquery, FROM item): unsupported — return
     // None so the statement fails loudly at parse instead of looping
     // through an expansion that changes nothing
@@ -132,7 +113,7 @@ object ColumnsSql {
       if (calls.isEmpty) Seq(item.trim)
       else {
         val spans = calls.map { c =>
-          val cl = matching(mItem, c.end - 1)
+          val cl = Dialect.matchingParen(mItem, c.end - 1)
           if (cl < 0)
             throw new UserException(s"unbalanced COLUMNS(...): ${item.trim}")
           (c.start, c.end - 1, cl)
@@ -320,7 +301,7 @@ object ColumnsSql {
       case None => stmt
       case Some(m) =>
         val repl = if (calls.length > 1 || m.start > firstFrom) "1" else "*"
-        val close = matching(masked, m.end - 1)
+        val close = Dialect.matchingParen(masked, m.end - 1)
         if (close < 0) stmt
         else unpackSpan(masked, m.start, close) match {
           case Some((us, ue)) =>
@@ -330,19 +311,4 @@ object ColumnsSql {
         }
     }
   }
-
-  private def matching(masked: String, open: Int): Int = {
-    var d = 0
-    var i = open
-    while (i < masked.length) {
-      masked.charAt(i) match {
-        case '(' => d += 1
-        case ')' => d -= 1; if (d == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
 }

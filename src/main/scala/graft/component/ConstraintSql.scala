@@ -53,7 +53,7 @@ object ConstraintSql {
     def onePrimary(): Unit = {
       val c = item.charAt(i)
       if (masked.charAt(i) != c) { // quoted literal
-        if (c == '\'') i = Dialect.quotedEnd(item, i)
+        if (c == '\'') i = Dialect.spanEnd(item, i)
         else i += 1
       } else if (c == '(') {
         val close = Dialect.matchingParen(masked, i)

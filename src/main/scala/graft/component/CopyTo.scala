@@ -94,22 +94,11 @@ object CopyTo {
   private[component] def parseOptions(rest: String): Option[Map[String, String]] =
     if (rest.isEmpty) Some(Map.empty)
     else if (rest.startsWith("(") && rest.endsWith(")")) {
-      val inner = rest.substring(1, rest.length - 1)
-      val innerMasked = Dialect.maskQuoted(inner)
-      val innerDep = Dialect.depths(innerMasked)
-      val cuts = innerMasked.zipWithIndex.collect {
-        case (',', i) if innerDep(i) == 0 => i }
-      Some((Seq(-1) ++ cuts :+ inner.length).sliding(2).flatMap {
-        case Seq(a, b) =>
-          val piece = inner.substring(a + 1, b).trim
-          if (piece.isEmpty) None
-          else {
-            val sp = piece.split("\\s+", 2)
-            Some(sp(0).toUpperCase ->
-              (if (sp.length > 1) sp(1).trim else "true"))
-          }
-        case _ => None
-      }.toMap)
+      Some(Dialect.splitTop(rest.substring(1, rest.length - 1))
+        .filter(_.nonEmpty).map { piece =>
+          val sp = piece.split("\\s+", 2)
+          sp(0).toUpperCase -> (if (sp.length > 1) sp(1).trim else "true")
+        }.toMap)
     } else None
 
   private[component] def unquote(s: String): String =
@@ -265,18 +254,7 @@ object CopyFrom {
     val stmt = stmt0.trim.stripSuffix(";")
     val masked = Dialect.maskQuoted(stmt)
     if (!"(?is)^\\s*COPY\\b".r.findFirstIn(masked).isDefined) return None
-    val dep = {
-      val out = new Array[Int](masked.length)
-      var d = 0; var i = 0
-      while (i < masked.length) {
-        val c = masked.charAt(i)
-        if (c == '(') { out(i) = d; d += 1 }
-        else if (c == ')') { d -= 1; out(i) = d }
-        else out(i) = d
-        i += 1
-      }
-      out
-    }
+    val dep = Dialect.depths(masked)
     // a COPY ... TO is the export statement, not this one
     if ("(?is)\\bTO\\b".r.findAllMatchIn(masked).exists(m => dep(m.start) == 0))
       return None

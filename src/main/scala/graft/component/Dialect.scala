@@ -74,31 +74,17 @@ object Dialect {
     * `spark.sql` is single-statement). */
   def splitStatements(script: String): List[String] = {
     val out = ListBuffer[String]()
-    val cur = new StringBuilder
+    var from = 0
     var i = 0
-    var state: Char = ' ' // ' ' normal, '\'' single, '"' double, '`' tick, '-' line comment, '*' block comment
     while (i < script.length) {
-      val c = script.charAt(i)
-      state match {
-        case ' ' =>
-          if (c == ';') { out += cur.toString; cur.clear() }
-          else {
-            cur.append(c)
-            if (c == '\'' || c == '"' || c == '`') state = c
-            else if (c == '-' && i + 1 < script.length && script.charAt(i + 1) == '-') state = '-'
-            else if (c == '/' && i + 1 < script.length && script.charAt(i + 1) == '*') state = '*'
-          }
-        case '\'' | '"' | '`' =>
-          cur.append(c); if (c == state) state = ' '
-        case '-' =>
-          cur.append(c); if (c == '\n') state = ' '
-        case '*' =>
-          cur.append(c)
-          if (c == '/' && cur.length >= 2 && cur.charAt(cur.length - 2) == '*') state = ' '
+      val e = spanEnd(script, i)
+      if (e >= 0) i = e
+      else {
+        if (script.charAt(i) == ';') { out += script.substring(from, i); from = i + 1 }
+        i += 1
       }
-      i += 1
     }
-    out += cur.toString
+    out += script.substring(from)
     out.toList.map(_.trim).filter(_.nonEmpty)
   }
 
@@ -129,20 +115,6 @@ object Dialect {
     "from", "lateral", "window", "positional", "asof", "tablesample",
     "pivot", "unpivot", "when", "then", "else", "end", "set", "returning")
     .contains _
-
-  /** Scan past a single-quoted token starting at `start` (which must point
-    * at the opening quote), honoring `''` escapes; returns the index just
-    * AFTER the closing quote (or length if unterminated). */
-  private[component] def quotedEnd(stmt: String, start: Int): Int = {
-    var i = start + 1
-    while (i < stmt.length) {
-      if (stmt.charAt(i) == '\'') {
-        if (i + 1 < stmt.length && stmt.charAt(i + 1) == '\'') i += 2 // escape
-        else return i + 1
-      } else i += 1
-    }
-    stmt.length
-  }
 
   /** `CREATE TABLE t AS <query> WITH NO DATA` — schema-only CTAS
     * (probed v1.0) → the query wrapped under `WHERE 1 = 0` (appending
@@ -184,16 +156,7 @@ object Dialect {
       throw new UserException(
         "UPDATE SET (cols) = (SELECT ...): row-subquery assignment is " +
           "not supported — use UPDATE ... FROM with per-column SETs")
-    def split(a: Int, b: Int): Seq[String] = {
-      val txt = stmt.substring(a, b)
-      val dp = depths(masked.substring(a, b))
-      val cuts = masked.substring(a, b).zipWithIndex.collect {
-        case (',', j) if dp(j) == 0 => j }
-      (Seq(-1) ++ cuts :+ txt.length).sliding(2).map {
-        case Seq(x, y) => txt.substring(x + 1, y).trim
-        case _ => ""
-      }.filter(_.nonEmpty).toSeq
-    }
+    def split(a: Int, b: Int) = splitTop(stmt.substring(a, b)).filter(_.nonEmpty)
     val names = split(open + 1, close)
     val values = split(vOpen + 1, vClose)
     if (names.length != values.length)
@@ -243,16 +206,7 @@ object Dialect {
       val it = "(?i)\\bORDER\\s+BY\\b".r.findAllMatchIn(masked).iterator
       while (replaced.isEmpty && it.hasNext) {
         val ob = it.next()
-        // innermost enclosing '(' of this ORDER BY
-        var depth = 0; var j = ob.start - 1; var open = -1
-        while (j >= 0 && open < 0) {
-          masked.charAt(j) match {
-            case ')' => depth += 1
-            case '(' => if (depth == 0) open = j else depth -= 1
-            case _ => ()
-          }
-          j -= 1
-        }
+        val open = openingParen(masked, ob.start) // innermost enclosing '('
         if (open >= 0) {
           var k = open - 1
           while (k >= 0 && masked.charAt(k).isWhitespace) k -= 1
@@ -270,7 +224,7 @@ object Dialect {
               !Set("over", "group", "filter", "as")(fn)) {
             if (orderedAggFns(fn))
               replaced = Some(lowerOrderedAgg(
-                stmt, masked, fn, k + 1, open, ob.start, ob.end, close))
+                stmt, fn, k + 1, open, ob.start, ob.end, close))
             else if (orderNoopAggFns(fn))
               // order-insensitive: the modifier is a documented no-op —
               // strip it (keep the argument list)
@@ -295,19 +249,10 @@ object Dialect {
     stmt
   }
 
-  private def lowerOrderedAgg(stmt: String, masked: String, fn: String,
-                              fnStart: Int, open: Int, obStart: Int,
-                              obEnd: Int, close: Int): String = {
-    def splitSeg(a: Int, b: Int): Seq[String] = {
-      val txt = stmt.substring(a, b)
-      val dp = depths(masked.substring(a, b))
-      val cuts = masked.substring(a, b).zipWithIndex.collect {
-        case (',', j) if dp(j) == 0 => j }
-      (Seq(-1) ++ cuts :+ txt.length).sliding(2).map {
-        case Seq(x, y) => txt.substring(x + 1, y).trim
-        case _ => ""
-      }.filter(_.nonEmpty).toSeq
-    }
+  private def lowerOrderedAgg(stmt: String, fn: String, fnStart: Int,
+                              open: Int, obStart: Int, obEnd: Int,
+                              close: Int): String = {
+    def splitSeg(a: Int, b: Int) = splitTop(stmt.substring(a, b)).filter(_.nonEmpty)
     val args = splitSeg(open + 1, obStart)
     val keySpecs = splitSeg(obEnd, close).map { piece =>
       val m = "(?is)^(.*?)(?:\\s+(ASC|DESC))?(?:\\s+NULLS\\s+(FIRST|LAST))?$".r
@@ -453,15 +398,7 @@ object Dialect {
     val appendAt = scala.collection.mutable.ListBuffer[Int]()
     for (m <- "(?i)\\bORDER\\s+BY\\b".r.findAllMatchIn(masked)) {
       // innermost enclosing '(' of this ORDER BY (-1 = top level)
-      var depth = 0; var j = m.start - 1; var open = -1
-      while (j >= 0 && open < 0) {
-        masked.charAt(j) match {
-          case ')' => depth += 1
-          case '(' => if (depth == 0) open = j else depth -= 1
-          case _ => ()
-        }
-        j -= 1
-      }
+      val open = openingParen(masked, m.start)
       val owner = if (open < 0) "" else {
         var k = open - 1
         while (k >= 0 && masked.charAt(k).isWhitespace) k -= 1
@@ -506,27 +443,12 @@ object Dialect {
               // a masked span: a QUOTED literal is item text (the append
               // must land AFTER it, not inside); a COMMENT is neither
               // item text nor an append target
-              val och = stmt0.charAt(i)
-              if (och == '\'') {
-                val e2 = quotedEnd(stmt0, i)
+              val e2 = spanEnd(stmt0, i)
+              if (e2 >= 0 && "-/".indexOf(stmt0.charAt(i)) >= 0) i = e2
+              else {
                 if (itemStart < 0) itemStart = i
-                lastNonWs = e2 - 1; i = e2
-              } else if (och == '"' || och == '`') {
-                val p = stmt0.indexOf(och, i + 1)
-                val e2 = if (p < 0) stmt0.length else p + 1
-                if (itemStart < 0) itemStart = i
-                lastNonWs = e2 - 1; i = e2
-              } else if (och == '-' && i + 1 < stmt0.length &&
-                  stmt0.charAt(i + 1) == '-') {
-                val p = stmt0.indexOf('\n', i)
-                i = if (p < 0) stmt0.length else p + 1
-              } else if (och == '/' && i + 1 < stmt0.length &&
-                  stmt0.charAt(i + 1) == '*') {
-                val p = stmt0.indexOf("*/", i + 2)
-                i = if (p < 0) stmt0.length else p + 2
-              } else {
-                if (itemStart < 0) itemStart = i
-                lastNonWs = i; i += 1
+                lastNonWs = if (e2 >= 0) e2 - 1 else i
+                i = if (e2 >= 0) e2 else i + 1
               }
             } else {
               if (!ch.isWhitespace) {
@@ -576,8 +498,7 @@ object Dialect {
     val out = new StringBuilder
     val plain = new StringBuilder // non-quoted text pending regex rewrites
     // all non-quoted, non-comment text seen so far — table-position
-    // detection must survive flushes and skip comments, mirroring
-    // splitStatements' state machine
+    // detection must survive flushes and skip comments ([[spanEnd]])
     val context = new StringBuilder
     // `COPY <t> FROM '<path>'`: the quoted token after a DEPTH-0 FROM is
     // a FILE PATH, not a table identifier — sanitizing it would destroy
@@ -688,30 +609,33 @@ object Dialect {
     var i = 0
     while (i < stmt.length) {
       val c = stmt.charAt(i)
-      if (c == '"') {
-        val end = stmt.indexOf('"', i + 1)
-        if (end < 0) { plain.append(stmt.substring(i)); i = stmt.length }
-        else {
-          val name = stmt.substring(i + 1, end)
-          val inTablePos = tableKeyword.findFirstIn(context.toString).isDefined
-          flushPlain()
-          // table names must be sanitized (temp views reject dots); quoted
-          // COLUMN names are backticked verbatim — they exist as-is in the
-          // DataFrame schema. A path-shaped name in table position is
-          // DuckDB's bare-filename shorthand (`FROM "data.csv"`) — a lazy
-          // file view, exactly like the read_csv(...) rewrite
-          (if (inTablePos) FileReads.pathView(name) else None) match {
-            case Some(view) =>
-              out.append(fileViewRef(view, name, stmt.substring(end + 1)))
-            case None =>
-              val ident = if (inTablePos) Names.view(name) else name
-              out.append('`').append(ident).append('`')
-          }
-          context.append('x') // the identifier reads as one plain token
-          i = end + 1
+      val end = spanEnd(stmt, i)
+      if (end < 0) {
+        if (c == '(') parenDepth += 1
+        else if (c == ')') parenDepth -= 1
+        plain.append(c); context.append(c); i += 1
+      } else if (c == '"' && (end - 1 == i || stmt.charAt(end - 1) != '"')) {
+        // unterminated: plain text for the regex rewrites
+        plain.append(stmt.substring(i)); i = stmt.length
+      } else if (c == '"') {
+        val name = stmt.substring(i + 1, end - 1)
+        val inTablePos = tableKeyword.findFirstIn(context.toString).isDefined
+        flushPlain()
+        // table names must be sanitized (temp views reject dots); quoted
+        // COLUMN names are backticked verbatim — they exist as-is in the
+        // DataFrame schema. A path-shaped name in table position is
+        // DuckDB's bare-filename shorthand (`FROM "data.csv"`) — a lazy
+        // file view, exactly like the read_csv(...) rewrite
+        (if (inTablePos) FileReads.pathView(name) else None) match {
+          case Some(view) =>
+            out.append(fileViewRef(view, name, stmt.substring(end)))
+          case None =>
+            val ident = if (inTablePos) Names.view(name) else name
+            out.append('`').append(ident).append('`')
         }
+        context.append('x') // the identifier reads as one plain token
+        i = end
       } else if (c == '\'') {
-        val end = quotedEnd(stmt, i)
         val body = stmt.substring(i + 1, math.max(i + 1, end - 1))
         val isIdentifier = !body.contains("''") &&
           tableKeyword.findFirstIn(context.toString).isDefined &&
@@ -727,35 +651,14 @@ object Dialect {
         else out.append(stmt.substring(i, end)) // literal, verbatim
         context.append('x')
         i = end
-      } else if (c == '`') {
-        // backtick-quoted identifier: verbatim, shielded from the regex
-        // rewrites (a ::VARCHAR inside one is part of the name)
-        val end = stmt.indexOf('`', i + 1)
-        val stop = if (end < 0) stmt.length else end + 1
-        flushPlain()
-        out.append(stmt.substring(i, stop))
-        context.append('x')
-        i = stop
-      } else if (c == '-' && i + 1 < stmt.length && stmt.charAt(i + 1) == '-') {
-        val end = stmt.indexOf('\n', i)
-        val stop = if (end < 0) stmt.length else end + 1
-        flushPlain()
-        out.append(stmt.substring(i, stop))
-        context.append(' ')
-        i = stop
-      } else if (c == '/' && i + 1 < stmt.length && stmt.charAt(i + 1) == '*') {
-        // block comment: verbatim, invisible to rewrites and to the
-        // table-position / quote state (a quote inside one is not SQL)
-        val end = stmt.indexOf("*/", i + 2)
-        val stop = if (end < 0) stmt.length else end + 2
-        flushPlain()
-        out.append(stmt.substring(i, stop))
-        context.append(' ')
-        i = stop
       } else {
-        if (c == '(') parenDepth += 1
-        else if (c == ')') parenDepth -= 1
-        plain.append(c); context.append(c); i += 1
+        // backtick identifiers and comments: verbatim, shielded from the
+        // regex rewrites (a ::VARCHAR inside one is part of the name); a
+        // comment is invisible to the table-position state too
+        flushPlain()
+        out.append(stmt.substring(i, end))
+        context.append(if (c == '-' || c == '/') ' ' else 'x')
+        i = end
       }
     }
     flushPlain()
@@ -780,26 +683,177 @@ object Dialect {
     rest.substring(0, header.end) + withPart + "\n" + rest.substring(header.end)
   }
 
-  /** Index of the ')' balancing the '(' at `open` in masked text, or -1.
-    * The ONE paren matcher for the statement-rewrite family — operate on
-    * [[maskQuoted]] output so quoted/commented parens don't count. */
-  private[component] def matchingParen(masked: String, open: Int): Int = {
+  // ── DuckDB's lexical rules, written once ───────────────────────────
+  // Every scanner of the dialect layer reads quotes, comments and
+  // brackets through these helpers: one span rule ([[spanEnd]]), its
+  // mask, one forward and one backward bracket matcher, one depth array,
+  // one depth-0 comma split and one mask-aware regex replace. The
+  // bracket helpers read [[maskQuoted]] output, so quoted and commented
+  // brackets never count.
+
+  /** End of the `'…'` literal opening at `start`: `''` is an escape. */
+  private def quotedEnd(s: String, start: Int): Int = {
+    var i = start + 1
+    while (i < s.length) {
+      if (s.charAt(i) != '\'') i += 1
+      else if (i + 1 < s.length && s.charAt(i + 1) == '\'') i += 2
+      else return i + 1
+    }
+    s.length
+  }
+
+  /** End (exclusive) of the quoted span or comment that opens at `i`, or
+    * -1 when none opens there. The spans: `'…'` with `''` escapes; `"…"`
+    * and `` `…` `` (no escapes); `--` through its newline; a block
+    * comment through the first closer after its two-char opener (so a
+    * slash-star-slash does not close itself); and the dollar string
+    * `$tag$…$tag$` (tag optional), a span only when its closing
+    * delimiter exists — `$1`/`$name` parameters are plain text. A span
+    * opening with `-` or `/` is a comment. Unterminated quotes and
+    * comments run to the end. */
+  private[component] def spanEnd(s: String, i: Int): Int = {
+    val n = s.length
+    def through(at: Int, len: Int): Int = if (at < 0) n else at + len
+    s.charAt(i) match {
+      case '\'' => quotedEnd(s, i)
+      case q @ ('"' | '`') => through(s.indexOf(q, i + 1), 1)
+      case '-' if i + 1 < n && s.charAt(i + 1) == '-' => through(s.indexOf('\n', i), 1)
+      case '/' if i + 1 < n && s.charAt(i + 1) == '*' => through(s.indexOf("*/", i + 2), 2)
+      case '$' =>
+        def letter(c: Char) = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || c == '_'
+        def tagChar(c: Char) = letter(c) || (c >= '0' && c <= '9')
+        var j = i + 1
+        if (j < n && letter(s.charAt(j))) {
+          j += 1
+          while (j < n && tagChar(s.charAt(j))) j += 1
+        }
+        if (j >= n || s.charAt(j) != '$') -1
+        else {
+          val close = s.indexOf(s.substring(i, j + 1), j + 1)
+          if (close < 0) -1 else close + j + 1 - i
+        }
+      case _ => -1
+    }
+  }
+
+  /** Start of the span (see [[spanEnd]]) containing index `pos`, or -1. */
+  private[component] def spanAt(s: String, pos: Int): Int = {
+    var i = 0
+    while (i <= pos) {
+      val e = spanEnd(s, i)
+      if (e < 0) i += 1
+      else if (pos < e) return i
+      else i = e
+    }
+    -1
+  }
+
+  /** The statement with quoted regions and comments blanked — the text
+    * every textual heuristic scans, so literal content never matches. */
+  def maskQuoted(stmt: String): String = {
+    val out = stmt.toCharArray
+    var i = 0
+    while (i < out.length) {
+      val e = spanEnd(stmt, i)
+      if (e < 0) i += 1
+      else { java.util.Arrays.fill(out, i, e, ' '); i = e }
+    }
+    new String(out)
+  }
+
+  /** `stmt` without its leading whitespace and comments. */
+  private[component] def stripLeadingComments(stmt: String): String = {
+    val t = stmt.dropWhile(_.isWhitespace)
+    if (t.startsWith("--") || t.startsWith("/*"))
+      stripLeadingComments(t.substring(spanEnd(t, 0)))
+    else t
+  }
+
+  /** `s` with every comment replaced by one space. */
+  private[component] def dropComments(s: String): String = {
+    val sb = new StringBuilder
+    var i = 0
+    while (i < s.length) {
+      val e = spanEnd(s, i)
+      if (e < 0) { sb.append(s.charAt(i)); i += 1 }
+      else {
+        sb.append(if ("-/".indexOf(s.charAt(i)) >= 0) " " else s.substring(i, e))
+        i = e
+      }
+    }
+    sb.toString
+  }
+
+  /** Index of the closer balancing the opener at `open` in masked text,
+    * or -1. Counts the one bracket pair `oc`/`cc` (parens by default). */
+  private[component] def matchingParen(masked: String, open: Int,
+      oc: Char = '(', cc: Char = ')'): Int = {
     var d = 0
     var i = open
     while (i < masked.length) {
-      masked.charAt(i) match {
-        case '(' => d += 1
-        case ')' => d -= 1; if (d == 0) return i
-        case _ =>
-      }
+      val c = masked.charAt(i)
+      if (c == oc) d += 1
+      else if (c == cc) { d -= 1; if (d == 0) return i }
       i += 1
     }
     -1
   }
 
+  /** Index of the innermost unclosed opener before `pos` in masked text,
+    * or -1: the opener of a closer at `pos`, or the group enclosing a
+    * token that starts there. Counts the one pair `oc`/`cc`. */
+  private[component] def openingParen(masked: String, pos: Int,
+      oc: Char = '(', cc: Char = ')'): Int = {
+    var d = 0
+    var j = pos - 1
+    while (j >= 0) {
+      val c = masked.charAt(j)
+      if (c == cc) d += 1
+      else if (c == oc) { if (d == 0) return j; d -= 1 }
+      j -= 1
+    }
+    -1
+  }
+
+  /** Depth-0 comma split of `text`, quotes and comments masked; `(` and
+    * `[` both nest. Every segment comes back trimmed (empty ones too —
+    * callers that drop them filter), and blank input gives Nil. */
+  private[component] def splitTop(text: String): List[String] = {
+    if (text.trim.isEmpty) return Nil
+    val masked = maskQuoted(text)
+    val out = ListBuffer[String]()
+    var d = 0
+    var from = 0
+    var i = 0
+    while (i < masked.length) {
+      masked.charAt(i) match {
+        case '(' | '[' => d += 1
+        case ')' | ']' => d -= 1
+        case ',' if d == 0 => out += text.substring(from, i).trim; from = i + 1
+        case _ =>
+      }
+      i += 1
+    }
+    (out += text.substring(from).trim).toList
+  }
+
+  /** Every match of `re` on the masked text replaced by `repl`, spliced
+    * into the ORIGINAL string: quoted spans and comments never match
+    * (`'see q.bid'` cannot match an alias pattern), and a match outside
+    * them reads the same in both texts. */
+  private[component] def replaceUnquoted(s: String, re: scala.util.matching.Regex)(
+      repl: scala.util.matching.Regex.Match => String): String = {
+    val sb = new StringBuilder
+    var last = 0
+    for (m <- re.findAllMatchIn(maskQuoted(s))) {
+      sb.append(s.substring(last, m.start)).append(repl(m))
+      last = m.end
+    }
+    sb.append(s.substring(last)).toString
+  }
+
   /** Paren depth at every masked-text position (the paren chars
-    * themselves report the OUTER depth). The ONE depth scanner for the
-    * statement-rewrite family. */
+    * themselves report the OUTER depth). */
   private[component] def depths(masked: String): Array[Int] = {
     val out = new Array[Int](masked.length)
     var d = 0
@@ -831,15 +885,10 @@ object Dialect {
         .getOrElse(return stmt)
       val blockDepth = dep(m.start)
       // key list: balanced parens from the opening paren
-      var d = 1
-      var i = m.end
-      while (i < stmt.length && d > 0) {
-        val c = masked.charAt(i)
-        if (c == '(') d += 1 else if (c == ')') d -= 1
-        i += 1
-      }
-      if (d != 0) return stmt
-      val keys = stmt.substring(m.end, i - 1).trim
+      val close = matchingParen(masked, m.end - 1)
+      if (close < 0) return stmt
+      val keys = stmt.substring(m.end, close).trim
+      val i = close + 1
       // block extent: until depth drops below blockDepth (closing paren of
       // the enclosing subquery/view body) or end of statement
       var blockEnd = i
@@ -905,33 +954,6 @@ object Dialect {
         stmt.substring(tailStart)
     }
     stmt
-  }
-
-  /** The statement with quoted regions and comments blanked — for textual
-    * heuristics (lint) that must not see literal content. */
-  def maskQuoted(stmt: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < stmt.length) {
-      val c = stmt.charAt(i)
-      if (c == '\'') {
-        val end = quotedEnd(stmt, i)
-        sb.append(" " * (end - i)); i = end
-      } else if (c == '"' || c == '`') {
-        val end = stmt.indexOf(c, i + 1)
-        val stop = if (end < 0) stmt.length else end + 1
-        sb.append(" " * (stop - i)); i = stop
-      } else if (c == '-' && i + 1 < stmt.length && stmt.charAt(i + 1) == '-') {
-        val end = stmt.indexOf('\n', i)
-        val stop = if (end < 0) stmt.length else end + 1
-        sb.append(" " * (stop - i)); i = stop
-      } else if (c == '/' && i + 1 < stmt.length && stmt.charAt(i + 1) == '*') {
-        val end = stmt.indexOf("*/", i + 2)
-        val stop = if (end < 0) stmt.length else end + 2
-        sb.append(" " * (stop - i)); i = stop
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
   }
 
   /** DuckDB's `//` operator → the registry's `divide()` (integer division
@@ -1230,16 +1252,9 @@ object Dialect {
       val open = from + m.end - 1
       val close = matchingParen(masked, open)
       if (close < 0) return stmt
-      var commas = 0
-      var d = 0
-      var i = open + 1
-      while (i < close) {
-        val c = masked.charAt(i)
-        if (c == '(') d += 1 else if (c == ')') d -= 1
-        else if (c == ',' && d == 0) commas += 1
-        i += 1
-      }
-      if (commas > 0) {
+      val dep = depths(masked) // a depth-0 comma inside the parens
+      if ((open + 1 until close).exists(j =>
+          masked.charAt(j) == ',' && dep(j) == dep(open) + 1)) {
         stmt = stmt.substring(0, nStart) + "grouping_id" +
           stmt.substring(nStart + "grouping".length)
         from = nStart + "grouping_id".length
@@ -1359,13 +1374,7 @@ object Dialect {
       var ok = isWindow && k >= 0 && masked.charAt(k) == ')'
       var cOpen = -1
       if (ok) {
-        var d = 0; var q = k
-        while (q >= 0 && cOpen < 0) {
-          val mc = masked.charAt(q)
-          if (mc == ')') d += 1
-          else if (mc == '(') { d -= 1; if (d == 0) cOpen = q }
-          q -= 1
-        }
+        cOpen = openingParen(masked, k)
         ok = cOpen >= 0
       }
       var nStart = -1
@@ -1502,34 +1511,6 @@ object Dialect {
     "intersect", "except", "cross", "natural", "lateral", "exists",
     "escape", "qualify", "window", "over", "partition").contains _
 
-  /** Opening-position map for quoted spans and comments: for every index
-    * inside one (quote chars included), the span's start; -1 elsewhere.
-    * Lets the operand scanners treat a string literal as one primary. */
-  private def quoteSpanStarts(stmt: String): Array[Int] = {
-    val out = Array.fill(stmt.length)(-1)
-    var i = 0
-    while (i < stmt.length) {
-      val c = stmt.charAt(i)
-      if (c == '\'') {
-        val end = quotedEnd(stmt, i)
-        java.util.Arrays.fill(out, i, end, i)
-        i = end
-      } else if (c == '"' || c == '`') {
-        val e = stmt.indexOf(c, i + 1)
-        val stop = if (e < 0) stmt.length else e + 1
-        java.util.Arrays.fill(out, i, stop, i)
-        i = stop
-      } else if (c == '-' && i + 1 < stmt.length && stmt.charAt(i + 1) == '-') {
-        val e = stmt.indexOf('\n', i)
-        i = if (e < 0) stmt.length else e + 1
-      } else if (c == '/' && i + 1 < stmt.length && stmt.charAt(i + 1) == '*') {
-        val e = stmt.indexOf("*/", i + 2)
-        i = if (e < 0) stmt.length else e + 2
-      } else i += 1
-    }
-    out
-  }
-
   /** Back-scan: start of the operand chain ending just before the
     * operator at `op`. `additive = false` consumes a multiplicative
     * chain (the `//` level); `additive = true` also crosses binary
@@ -1538,7 +1519,6 @@ object Dialect {
   private def intDivLeftStart(stmt: String, masked: String,
                               op: Int, additive: Boolean = false,
                               chain: Boolean = true): Option[Int] = {
-    val spans = quoteSpanStarts(stmt)
     var i = op - 1
     var start = -1
     def skipWs(): Unit = { while (i >= 0 && masked.charAt(i) == ' ' &&
@@ -1552,13 +1532,7 @@ object Dialect {
     def consumeCallBack(): Boolean = {
       skipWs()
       if (i < 0 || masked.charAt(i) != ')') return false
-      var d = 0; var j = i; var open = -1
-      while (j >= 0 && open < 0) {
-        val mc = masked.charAt(j)
-        if (mc == ')') d += 1
-        else if (mc == '(') { d -= 1; if (d == 0) open = j }
-        j -= 1
-      }
+      val open = openingParen(masked, i)
       if (open < 0) return false
       i = open - 1
       skipWs() // the spaced spelling: `FILTER (WHERE ...)`, `count (*)`
@@ -1608,21 +1582,16 @@ object Dialect {
       if (masked.charAt(i) != c) {
         // a quoted span is one primary (string literal / quoted ident);
         // a comment is not an operand
-        if ((c == '\'' || c == '"' || c == '`') && spans(i) >= 0 && spans(i) < i) {
-          start = spans(i)
+        val span = if ("'\"`".indexOf(c) >= 0) spanAt(stmt, i) else -1
+        if (span >= 0 && span < i && stmt.charAt(span) == c) {
+          start = span
           i = start - 1
           return true
         }
         return false
       }
       if (c == ')') {
-        var d = 0; var j = i; var open = -1
-        while (j >= 0 && open < 0) {
-          val mc = masked.charAt(j)
-          if (mc == ')') d += 1
-          else if (mc == '(') { d -= 1; if (d == 0) open = j }
-          j -= 1
-        }
+        val open = openingParen(masked, i)
         if (open < 0) return false
         start = open; i = open - 1
         // a function name before the paren belongs to the primary (the
@@ -1755,7 +1724,7 @@ object Dialect {
     if (masked.charAt(i) != c) {
       // quoted span = one primary (string literal / quoted identifier —
       // the usual shape of a regex/glob pattern operand)
-      if (c == '\'') return Some(postfix(stmt, masked, quotedEnd(stmt, i)))
+      if (c == '\'') return Some(postfix(stmt, masked, spanEnd(stmt, i)))
       if (c == '"' || c == '`') {
         val e = stmt.indexOf(c, i + 1)
         return if (e < 0) None else Some(postfix(stmt, masked, e + 1))
@@ -1883,18 +1852,7 @@ object Dialect {
       case None => stmt
       case Some(m) =>
         val open = m.end - 1
-        val close = {
-          var d = 0; var i = open; var found = -1
-          while (i < masked.length && found < 0) {
-            masked.charAt(i) match {
-              case '(' => d += 1
-              case ')' => d -= 1; if (d == 0) found = i
-              case _ =>
-            }
-            i += 1
-          }
-          found
-        }
+        val close = matchingParen(masked, open)
         if (close < 0) stmt
         else {
           val fn = m.group(2).toLowerCase
@@ -1904,7 +1862,7 @@ object Dialect {
           // explode(sequence(...)) would materialize the whole series
           // as one array in one task. Both bounds-adjustments stay in
           // SQL so non-literal args work.
-          val parts = splitTop(args)
+          val parts = splitTop(args).filter(_.nonEmpty)
           val rangeArgs = fn match {
             case "generate_series" => // inclusive stop → exclusive
               parts.length match {
@@ -1924,26 +1882,6 @@ object Dialect {
             rewriteSeriesTableFns(stmt.substring(close + 1))
         }
     }
-  }
-
-  private def splitTop(args: String): Array[String] = {
-    val masked = maskQuoted(args)
-    val cuts = scala.collection.mutable.ArrayBuffer[Int]()
-    var d = 0
-    var i = 0
-    while (i < masked.length) {
-      masked.charAt(i) match {
-        case '(' | '[' => d += 1
-        case ')' | ']' => d -= 1
-        case ',' if d == 0 => cuts += i
-        case _ =>
-      }
-      i += 1
-    }
-    ((Seq(-1) ++ cuts.toSeq) :+ args.length).sliding(2).map {
-      case Seq(a, b) => args.substring(a + 1, b).trim
-      case _ => ""
-    }.filter(_.nonEmpty).toArray
   }
 
   /** DuckDB `USING SAMPLE` — `FROM <rels> USING SAMPLE <spec>` samples
@@ -2149,19 +2087,7 @@ object Dialect {
     val stmt = stmt0.trim
     val masked = maskQuoted(stmt)
     if (!"(?is)^\\s*FROM\\b".r.findFirstIn(masked).isDefined) return stmt0
-    val dep = {
-      val out = new Array[Int](masked.length)
-      var d = 0
-      var i = 0
-      while (i < masked.length) {
-        val c = masked.charAt(i)
-        if (c == '(') { out(i) = d; d += 1 }
-        else if (c == ')') { d -= 1; out(i) = d }
-        else out(i) = d
-        i += 1
-      }
-      out
-    }
+    val dep = depths(masked)
     "(?is)\\bSELECT\\b".r.findAllMatchIn(masked).find(m => dep(m.start) == 0) match {
       case None => "SELECT * " + stmt
       case Some(sel) =>
@@ -2179,12 +2105,6 @@ object Dialect {
     }
   }
 
-  /** Session-free shims for forms only the EXECUTOR evaluates, so static
-    * analysis (parsePlan for deps/classification, syntax check) sees a
-    * Catalyst-parseable twin with the same dependency set:
-    * `INSERT INTO t BY NAME ...` drops the modifier, and FROM-first
-    * bodies (`AS FROM t`, `INSERT INTO t FROM y`) gain `SELECT *`.
-    * Matches are located on the quote-masked text — literals survive. */
   /** Analysis stub for the ALTER TABLE column forms (r16 — ADD/DROP/
     * RENAME COLUMN, ALTER COLUMN): Spark cannot parse them (USING,
     * IF EXISTS on a column, ...), and even the parseable ones reference
@@ -2204,39 +2124,33 @@ object Dialect {
     }
   }
 
+  /** Session-free shims for forms only the EXECUTOR evaluates, so static
+    * analysis (parsePlan for deps/classification, syntax check) sees a
+    * Catalyst-parseable twin with the same dependency set:
+    * `INSERT INTO t BY NAME ...` drops the modifier, and FROM-first
+    * bodies (`AS FROM t`, `INSERT INTO t FROM y`) gain `SELECT *`.
+    * Matches are located on the quote-masked text — literals survive. */
   def analysisStub(stmt: String): String = {
-    def sub(s: String, re: scala.util.matching.Regex)(
-        repl: (String, scala.util.matching.Regex.Match) => String): String = {
-      val masked = maskQuoted(s)
-      val sb = new StringBuilder
-      var last = 0
-      for (m <- re.findAllMatchIn(masked)) {
-        sb.append(s.substring(last, m.start)).append(repl(s, m))
-        last = m.end
-      }
-      sb.append(s.substring(last))
-      sb.toString
-    }
     var s = stmt
-    s = sub(s, "(?is)^(\\s*INSERT\\s+INTO\\s+`?[^`\\s(]+`?\\s+)BY\\s+(?:NAME|POSITION)\\b".r)(
-      (src, m) => src.substring(m.start(1), m.end(1)))
-    s = sub(s, "(?is)\\bAS\\s+FROM\\b".r)((_, _) => "AS SELECT * FROM")
-    s = sub(s, "(?is)^(\\s*INSERT\\s+INTO\\s+`?[^`\\s(]+`?\\s+)FROM\\b".r)(
-      (src, m) => src.substring(m.start(1), m.end(1)) + "SELECT * FROM")
+    s = replaceUnquoted(s, "(?is)^(\\s*INSERT\\s+INTO\\s+`?[^`\\s(]+`?\\s+)BY\\s+(?:NAME|POSITION)\\b".r)(
+      m => s.substring(m.start(1), m.end(1)))
+    s = replaceUnquoted(s, "(?is)\\bAS\\s+FROM\\b".r)(_ => "AS SELECT * FROM")
+    s = replaceUnquoted(s, "(?is)^(\\s*INSERT\\s+INTO\\s+`?[^`\\s(]+`?\\s+)FROM\\b".r)(
+      m => s.substring(m.start(1), m.end(1)) + "SELECT * FROM")
     // Spark's parser rejects CREATE TEMP TABLE ... AS outright; the
     // executor handles the TEMP spelling itself (run scope == session
     // scope), so the stub analyzes the plain CREATE with identical deps
-    s = sub(s, "(?is)^(\\s*CREATE\\s+(?:OR\\s+REPLACE\\s+)?)TEMP(?:ORARY)?\\s+(?=TABLE\\b)".r)(
-      (src, m) => src.substring(m.start(1), m.end(1)))
+    s = replaceUnquoted(s, "(?is)^(\\s*CREATE\\s+(?:OR\\s+REPLACE\\s+)?)TEMP(?:ORARY)?\\s+(?=TABLE\\b)".r)(
+      m => s.substring(m.start(1), m.end(1)))
     // percent LIMIT parses nowhere in Spark; a LIMIT 1 stand-in keeps
     // the dependency set
-    s = sub(s, "(?is)\\bLIMIT\\s+[0-9.]+\\s*(?:%|PERCENT\\b)(\\s+OFFSET\\s+[0-9]+)?".r)(
-      (_, _) => "LIMIT 1")
+    s = replaceUnquoted(s, "(?is)\\bLIMIT\\s+[0-9.]+\\s*(?:%|PERCENT\\b)(\\s+OFFSET\\s+[0-9]+)?".r)(
+      _ => "LIMIT 1")
     // SET/RESET VARIABLE: executor state with no relation deps — an
     // inert SET parses everywhere (Spark's own SET VARIABLE needs a
     // DECLARE'd variable at analysis)
-    s = sub(s, "(?is)^\\s*(?:SET|RESET)\\s+VARIABLE\\b.*$".r)(
-      (_, _) => "SET __graft_inert_variable = 1")
+    s = replaceUnquoted(s, "(?is)^\\s*(?:SET|RESET)\\s+VARIABLE\\b.*$".r)(
+      _ => "SET __graft_inert_variable = 1")
     // star REPLACE parses nowhere in Spark; the except-form has the
     // identical dependency set (expressions kept, order moot here)
     if (StarReplaceSql.has(s)) s = StarReplaceSql.except(s)
@@ -2250,7 +2164,6 @@ object Dialect {
     s
   }
 
-  /** Full script → rewritten single statements. */
   /** Dollar-quoted strings (`$$...$$`, `$tag$...$tag$` — probed v1.0:
     * tags nest nothing, backslash is not an escape) convert to standard
     * single-quoted literals with `''` doubling. Runs on the WHOLE script
@@ -2264,44 +2177,22 @@ object Dialect {
     if (script.indexOf('$') < 0) return script
     val sb = new StringBuilder
     var i = 0
-    val n = script.length
-    val openRe = "^\\$([A-Za-z_]\\w*)?\\$".r
-    while (i < n) {
-      val c = script.charAt(i)
-      if (c == '\'') {
-        val end = quotedEnd(script, i)
-        sb.append(script.substring(i, end)); i = end
-      } else if (c == '"' || c == '`') {
-        val end = script.indexOf(c, i + 1)
-        val stop = if (end < 0) n else end + 1
-        sb.append(script.substring(i, stop)); i = stop
-      } else if (c == '-' && i + 1 < n && script.charAt(i + 1) == '-') {
-        val end = script.indexOf('\n', i)
-        val stop = if (end < 0) n else end + 1
-        sb.append(script.substring(i, stop)); i = stop
-      } else if (c == '/' && i + 1 < n && script.charAt(i + 1) == '*') {
-        val end = script.indexOf("*/", i + 2)
-        val stop = if (end < 0) n else end + 2
-        sb.append(script.substring(i, stop)); i = stop
-      } else if (c == '$') {
-        openRe.findFirstMatchIn(script.substring(i)) match {
-          case Some(m) =>
-            val delim = m.matched
-            val bodyStart = i + delim.length
-            val close = script.indexOf(delim, bodyStart)
-            if (close < 0) { sb.append(c); i += 1 } // unterminated: leave
-            else {
-              val body = script.substring(bodyStart, close)
-              sb.append("'").append(body.replace("'", "''")).append("'")
-              i = close + delim.length
-            }
-          case None => sb.append(c); i += 1
-        }
-      } else { sb.append(c); i += 1 }
+    while (i < script.length) {
+      val end = spanEnd(script, i)
+      if (end < 0) { sb.append(script.charAt(i)); i += 1 }
+      else {
+        if (script.charAt(i) == '$') {
+          val tag = script.indexOf('$', i + 1) + 1 - i // delimiter length
+          sb.append('\'').append(script.substring(i + tag, end - tag).replace("'", "''"))
+            .append('\'')
+        } else sb.append(script.substring(i, end))
+        i = end
+      }
     }
     sb.toString
   }
 
+  /** Full script → rewritten single statements. */
   def prepare(script: String): List[String] =
     splitStatements(rewriteDollarStrings(script)).map(s => rewrite(fromFirst(s)))
 }

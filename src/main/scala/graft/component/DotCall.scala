@@ -76,16 +76,7 @@ object DotCall {
           start = openQ; i = openQ - 1
         } else return None
       } else if (c == ')' || c == ']') {
-        val openCh = if (c == ')') '(' else '['
-        var d = 0
-        var j = i
-        var open = -1
-        while (j >= 0 && open < 0) {
-          val mc = masked.charAt(j)
-          if (mc == c) d += 1
-          else if (mc == openCh) { d -= 1; if (d == 0) open = j }
-          j -= 1
-        }
+        val open = Dialect.openingParen(masked, i, if (c == ')') '(' else '[', c)
         if (open < 0) return None
         start = open; i = open - 1
         // a call's name (or an array base) belongs to the receiver — but

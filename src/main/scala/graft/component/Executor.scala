@@ -235,34 +235,15 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     ExecutionStats(timings.toList)
   }
 
-  /** Leading `--` / block comments stripped, so statement CLASSIFICATION
-    * sees the first keyword (the corpus habitually titles scripts with a
-    * comment line: `-- Export sliced as one table\nCREATE VIEW ...`). */
-  private def stripLeadingComments(stmt: String): String = {
-    var s = stmt
-    var changed = true
-    while (changed) {
-      val t = s.dropWhile(_.isWhitespace)
-      val next =
-        if (t.startsWith("--")) {
-          val nl = t.indexOf('\n')
-          if (nl < 0) "" else t.substring(nl + 1)
-        } else if (t.startsWith("/*")) {
-          val end = t.indexOf("*/", 2)
-          if (end < 0) "" else t.substring(end + 2)
-        } else t
-      changed = next != s
-      s = next
-    }
-    s
-  }
-
   /** Run one rewritten statement against the session catalog. Returns the
     * RETURNING projection over the DML's affected-row delta when the
     * statement carries one (None otherwise) — the reference exposes
     * RETURNING rows as the statement's result set the same way. */
   def runStatement(stmt0: String): Option[DataFrame] = {
-    val stmtFull = stripLeadingComments(stmt0)
+    // leading comments stripped, so statement CLASSIFICATION sees the
+    // first keyword (the corpus habitually titles scripts with a comment
+    // line: `-- Export sliced as one table\nCREATE VIEW ...`)
+    val stmtFull = Dialect.stripLeadingComments(stmt0)
     // ROLLBACK reaches execution as the dialect's sentinel (static
     // analysis lists it; a RUN must fail loudly — the user asked for
     // work to be undone and statements here commit as they run)
@@ -324,16 +305,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         // they feed the upsert surface (INSERT ... ON CONFLICT /
         // OR REPLACE / OR IGNORE — DuckDB requires the declared key).
         // Both spellings: `k INT PRIMARY KEY` and `PRIMARY KEY (a, b)`.
-        val items = {
-          val masked = Dialect.maskQuoted(colDefs)
-          val dep = Dialect.depths(masked)
-          val cuts = masked.zipWithIndex.collect {
-            case (',', i) if dep(i) == 0 => i }
-          (Seq(-1) ++ cuts :+ colDefs.length).sliding(2).map {
-            case Seq(a, b) => colDefs.substring(a + 1, b).trim
-            case _ => ""
-          }.filter(_.nonEmpty).toList
-        }
+        val items = Dialect.splitTop(colDefs).filter(_.nonEmpty)
         val pkCols = items.flatMap { it =>
           "(?is)^PRIMARY\\s+KEY\\s*\\((.*)\\)\\s*$".r.findFirstMatchIn(it) match {
             case Some(m) => m.group(1).split(",").map(_.trim
@@ -957,25 +929,6 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       }
   }
 
-  /** Index of the ')' matching the '(' at `open`, skipping quoted regions. */
-  private def matchingParen(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    var quote: Char = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' => quote = c
-        case '('         => depth += 1
-        case ')'         => depth -= 1; if (depth == 0) return i
-        case _           =>
-      }
-      i += 1
-    }
-    throw new UserException(s"unbalanced parentheses in INSERT: $s")
-  }
-
   private def targetName(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): String =
     plan.collectFirst {
       case r: UnresolvedRelation => r.multipartIdentifier.mkString(".")
@@ -1109,12 +1062,19 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       "(?is)^BY\\s+NAME\\s*".r.replaceFirstIn(rest2, "") else rest2
     val (colList, body) =
       if (rest.startsWith("(")) {
-        val close = matchingParen(rest, 0)
+        val close = Dialect.matchingParen(Dialect.maskQuoted(rest), 0)
+        if (close < 0)
+          throw new UserException(s"unbalanced parentheses in INSERT: $rest")
         val inner = rest.substring(1, close).trim
         val firstWord = inner.split("[\\s(]", 2).head.toUpperCase
         if (Set("SELECT", "WITH", "VALUES", "FROM", "TABLE")(firstWord)) (null, rest)
         else (inner, rest.substring(close + 1).trim)
       } else (null, rest)
+    // the column list's names: depth-0 split, comments dropped, unquoted
+    val colNames = Option(colList)
+      .map(Dialect.splitTop(_).map(Dialect.dropComments(_).trim
+        .stripPrefix("`").stripSuffix("`")))
+      .filter(_.nonEmpty)
     val existing = spark.table(s"`${Names.view(name)}`")
     val defaults = tableDefaults.getOrElse(Names.view(name).toLowerCase,
       Map.empty[String, String])
@@ -1125,9 +1085,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       if (!"(?is)^\\s*VALUES\\b".r.findFirstIn(body).isDefined ||
           !"(?i)\\bDEFAULT\\b".r.findFirstIn(Dialect.maskQuoted(body)).isDefined) body
       else {
-        val order: Array[String] = Option(colList).filter(_.trim.nonEmpty)
-          .map(_.split(",").map(_.trim.stripPrefix("`").stripSuffix("`")))
-          .getOrElse(existing.columns)
+        val order = colNames.getOrElse(existing.columns.toSeq)
         val masked = Dialect.maskQuoted(body)
         val dep = Dialect.depths(masked)
         val sb = new StringBuilder(body)
@@ -1152,8 +1110,8 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         sb.toString
       }
     val added0 = bodyDf(body1)
-    val added = Option(colList).filter(_.trim.nonEmpty) match {
-      case Some(cs) => added0.toDF(cs.split(",").map(_.trim.stripPrefix("`").stripSuffix("`")): _*)
+    val added = colNames match {
+      case Some(cs) => added0.toDF(cs: _*)
       case None if byName =>
         // DuckDB errors on source columns absent from the target —
         // silently dropping them would lose a typoed column's data

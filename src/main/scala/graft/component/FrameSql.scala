@@ -83,11 +83,8 @@ object FrameSql {
       frameEnd: Int, // end of the bounds text (exclusive)
       exclude: Option[(String, Int, Int)]) // kind (upper), start, end
 
-  private def specDepths(specMasked: String): Array[Int] =
-    Dialect.depths(specMasked)
-
   private def parseSpec(spec: String, specMasked: String): Option[Spec] = {
-    val dep = specDepths(specMasked)
+    val dep = Dialect.depths(specMasked)
     def top(re: String): List[scala.util.matching.Regex.Match] =
       re.r.findAllMatchIn(specMasked).filter(m => dep(m.start) == 0).toList
     val modeM = top("(?i)\\b(ROWS|RANGE|GROUPS)\\b").headOption
@@ -144,15 +141,7 @@ object FrameSql {
     while (i >= 0 && masked.charAt(i).isWhitespace) i -= 1
     if (i < 0 || masked.charAt(i) != ')') return None
     val close = i
-    var depth = 0
-    var open = -1
-    var j = close
-    while (j >= 0 && open < 0) {
-      val c = masked.charAt(j)
-      if (c == ')') depth += 1
-      else if (c == '(') { depth -= 1; if (depth == 0) open = j }
-      j -= 1
-    }
+    val open = Dialect.openingParen(masked, close)
     if (open < 0) return None
     var k = open - 1
     while (k >= 0 && masked.charAt(k).isWhitespace) k -= 1
@@ -187,7 +176,7 @@ object FrameSql {
       val hit = overSpans(masked).flatMap { case (kw, open, close) =>
         val spec = stmt.substring(open + 1, close)
         val specMasked = masked.substring(open + 1, close)
-        val dep = specDepths(specMasked)
+        val dep = Dialect.depths(specMasked)
         "(?i)\\bEXCLUDE\\s+(CURRENT\\s+ROW|GROUP|TIES)\\b".r
           .findAllMatchIn(specMasked)
           .find(m => dep(m.start) == 0)
@@ -282,7 +271,7 @@ object FrameSql {
       val masked = Dialect.maskQuoted(stmt)
       val spans = overSpans(masked).filter { case (_, open, close) =>
         val specMasked = masked.substring(open + 1, close)
-        val dep = specDepths(specMasked)
+        val dep = Dialect.depths(specMasked)
         "(?i)\\bGROUPS\\b".r.findAllMatchIn(specMasked)
           .exists(m => dep(m.start) == 0)
       }
@@ -349,7 +338,7 @@ object FrameSql {
     case class G(kw: Int, open: Int, close: Int, sp: Spec, spec: String)
     val candidates = overSpans(masked).filter { case (okw, o, c) =>
       val sm = masked.substring(o + 1, c)
-      val sdep = specDepths(sm)
+      val sdep = Dialect.depths(sm)
       "(?i)\\bGROUPS\\b".r.findAllMatchIn(sm)
         .exists(m => sdep(m.start) == 0) && owningSelect(okw).contains(selKw)
     }

@@ -99,7 +99,7 @@ object JsonArrows {
     if (i >= stmt.length) return None
     val c = stmt.charAt(i)
     if (c == '\'') {
-      val end = Dialect.quotedEnd(stmt, i)
+      val end = Dialect.spanEnd(stmt, i)
       Some((stmt.substring(i, end), end))
     } else if (c.isDigit) {
       var j = i
@@ -135,16 +135,7 @@ object JsonArrows {
           start = openQ; i = openQ - 1
         } else return None
       } else if (c == ')' || c == ']') {
-        val openCh = if (c == ')') '(' else '['
-        var d = 0
-        var j = i
-        var open = -1
-        while (j >= 0 && open < 0) {
-          val mc = masked.charAt(j)
-          if (mc == c) d += 1
-          else if (mc == openCh) { d -= 1; if (d == 0) open = j }
-          j -= 1
-        }
+        val open = Dialect.openingParen(masked, i, if (c == ')') '(' else '[', c)
         if (open < 0) return None
         start = open; i = open - 1
         if (i >= 0 && isIdentChar(masked.charAt(i))) {
@@ -169,41 +160,25 @@ object JsonArrows {
   }
 
   /** Opening quote of the string literal whose CLOSING quote is at
-    * `close` — forward re-scan (doubled '' escapes make a back-scan
-    * ambiguous). */
+    * `close`, or -1 — a forward span scan (doubled '' escapes make a
+    * back-scan ambiguous). */
   private def literalStart(stmt: String, close: Int): Int = {
-    var i = 0
-    while (i <= close) {
-      if (stmt.charAt(i) == '\'') {
-        val end = Dialect.quotedEnd(stmt, i)
-        if (end - 1 == close) return i
-        i = end
-      } else i += 1
-    }
-    -1
+    val open = Dialect.spanAt(stmt, close)
+    if (open >= 0 && stmt.charAt(open) == '\'' &&
+        Dialect.spanEnd(stmt, open) == close + 1) open
+    else -1
   }
 
   /** Lowercased name of the innermost call enclosing position `pos`,
     * or "" when `pos` is not inside any call's argument list. */
   private def enclosingCall(masked: String, pos: Int): String = {
-    var d = 0
-    var j = pos - 1
-    while (j >= 0) {
-      val c = masked.charAt(j)
-      if (c == ')') d += 1
-      else if (c == '(') {
-        if (d == 0) {
-          var e = j - 1
-          while (e >= 0 && masked.charAt(e).isWhitespace) e -= 1
-          val stop = e
-          while (e >= 0 && isIdentChar(masked.charAt(e))) e -= 1
-          return masked.substring(e + 1, stop + 1).toLowerCase
-        }
-        d -= 1
-      }
-      j -= 1
-    }
-    ""
+    val open = Dialect.openingParen(masked, pos)
+    if (open < 0) return ""
+    var e = open - 1
+    while (e >= 0 && masked.charAt(e).isWhitespace) e -= 1
+    val stop = e
+    while (e >= 0 && isIdentChar(masked.charAt(e))) e -= 1
+    masked.substring(e + 1, stop + 1).toLowerCase
   }
 
   private def isIdentChar(c: Char): Boolean =

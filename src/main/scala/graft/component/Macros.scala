@@ -78,7 +78,7 @@ object Macros {
             s"unsupported CREATE MACRO form for $name — expected " +
               s"`AS <expression>` after the parameter list, got: " +
               s"'${rest.trim.take(60)}'"))
-        val items = splitTop(trimmed.substring(open + 1, close))
+        val items = Dialect.splitTop(trimmed.substring(open + 1, close))
           .filter(_.nonEmpty)
         val (defItems, posItems) = items.partition(_.contains(":="))
         val params = posItems.map(_.trim)
@@ -135,7 +135,7 @@ object Macros {
         val close = Dialect.matchingParen(masked, open)
         if (close > open) {
           val argsStr = stmt.substring(open + 1, close)
-          val args = splitTop(argsStr)
+          val args = Dialect.splitTop(argsStr)
           // probed v1.0 binding: named `k := v` arguments bind ONLY to
           // default parameters (unknown name is a binder error);
           // positionals must cover exactly the non-default parameters
@@ -175,39 +175,8 @@ object Macros {
     for ((p, a) <- (mac.params ++ mac.defaults.map(_._1)).zip(args)) {
       val re = ("(?i)(?<![\\w.])" + java.util.regex.Pattern.quote(p) + "\\b").r
       // mask-aware: a parameter name inside a string literal stays put
-      val masked = Dialect.maskQuoted(body)
-      val sb = new StringBuilder
-      var last = 0
-      for (m <- re.findAllMatchIn(masked)) {
-        sb.append(body.substring(last, m.start))
-        sb.append("(").append(a.trim).append(")")
-        last = m.end
-      }
-      sb.append(body.substring(last))
-      body = sb.toString
+      body = Dialect.replaceUnquoted(body, re)(_ => "(" + a.trim + ")")
     }
     body
   }
-
-  private def splitTop(s: String): Seq[String] = {
-    if (s.trim.isEmpty) return Nil
-    val masked = Dialect.maskQuoted(s)
-    var depth = 0
-    val cuts = scala.collection.mutable.ArrayBuffer[Int]()
-    var i = 0
-    while (i < masked.length) {
-      masked.charAt(i) match {
-        case '(' | '[' => depth += 1
-        case ')' | ']' => depth -= 1
-        case ',' if depth == 0 => cuts += i
-        case _ =>
-      }
-      i += 1
-    }
-    (Seq(-1) ++ cuts :+ s.length).sliding(2).map {
-      case Seq(a, b) => s.substring(a + 1, b).trim
-      case _ => ""
-    }.toSeq
-  }
-
 }

@@ -142,7 +142,7 @@ object MergeSql {
     if ("(?is)^UPDATE\\s+SET\\s".r.findFirstIn(masked).isDefined) {
       val setsTxt = txt.substring(
         "(?is)^UPDATE\\s+SET\\s".r.findFirstMatchIn(masked).get.end - 1)
-      val sets = splitTop(setsTxt).map { a =>
+      val sets = Dialect.splitTop(setsTxt).filter(_.nonEmpty).map { a =>
         val eq = Dialect.maskQuoted(a).indexOf('=')
         if (eq < 0) throw new UserException(
           s"MERGE INTO: UPDATE SET needs col = expr: $a")
@@ -196,7 +196,8 @@ object MergeSql {
         if (tail.nonEmpty) throw new UserException(
           "MERGE INTO: INSERT takes ONE VALUES row per source row " +
             s"(unexpected trailing text: ${afterIns.substring(close + 1).trim})")
-        val values = splitTop(afterIns.substring(open + 1, close))
+        val values =
+          Dialect.splitTop(afterIns.substring(open + 1, close)).filter(_.nonEmpty)
         cols.foreach { cs =>
           if (cs.length != values.length) throw new UserException(
             s"MERGE INTO: INSERT column list has ${cs.length} names but " +
@@ -227,18 +228,6 @@ object MergeSql {
         case _ => ()
       }
     }
-
-  private def splitTop(s: String): Seq[String] = {
-    val masked = Dialect.maskQuoted(s)
-    val dep = Dialect.depths(masked)
-    val cuts = masked.zipWithIndex.collect {
-      case (',', i) if dep(i) == 0 => i
-    }
-    (Seq(-1) ++ cuts :+ s.length).sliding(2).collect {
-      case Seq(a, b) if s.substring(a + 1, b).trim.nonEmpty =>
-        s.substring(a + 1, b).trim
-    }.toSeq
-  }
 
   /** When the ON condition is a pure conjunction of `t.a = s.b` equi
     * pairs (bare identifiers, each side qualified by one alias), the

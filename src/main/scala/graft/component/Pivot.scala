@@ -56,14 +56,7 @@ object Pivot {
     while (i < stmt.length && stmt.charAt(i).isWhitespace) i += 1
     val srcEnd =
       if (i < stmt.length && stmt.charAt(i) == '(') {
-        // matching close paren for the '(' at i, over the masked text
-        var d = 0; var k = i; var close = -1
-        while (k < masked.length && close < 0) {
-          val c = masked.charAt(k)
-          if (c == '(') d += 1
-          else if (c == ')') { d -= 1; if (d == 0) close = k }
-          k += 1
-        }
+        val close = Dialect.matchingParen(masked, i)
         if (close < 0) return None
         close + 1
       } else {
@@ -100,16 +93,9 @@ object Pivot {
   private def unwrap(stmt0: String): String = {
     val s = stmt0.trim
     if (!s.startsWith("(") || !s.endsWith(")")) return s
-    val masked = Dialect.maskQuoted(s)
-    var d = 0
-    var i = 0
-    while (i < masked.length) {
-      val c = masked.charAt(i)
-      if (c == '(') d += 1
-      else if (c == ')') { d -= 1; if (d == 0 && i < masked.length - 1) return s }
-      i += 1
-    }
-    unwrap(s.substring(1, s.length - 1))
+    val close = Dialect.matchingParen(Dialect.maskQuoted(s), 0)
+    if (close >= 0 && close < s.length - 1) s
+    else unwrap(s.substring(1, s.length - 1))
   }
 
   /** Execute a simplified-PIVOT body on the live session; None when the
@@ -158,13 +144,7 @@ object Pivot {
     val parenStart = Option(asM.group(1)).map(_ => masked.indexOf('(', asM.start))
     val (bodyStart, bodyEnd) = parenStart match {
       case Some(open) =>
-        var d = 0; var k = open; var close = -1
-        while (k < masked.length && close < 0) {
-          val c = masked.charAt(k)
-          if (c == '(') d += 1
-          else if (c == ')') { d -= 1; if (d == 0) close = k }
-          k += 1
-        }
+        val close = Dialect.matchingParen(masked, open)
         if (close < 0) return stmt
         (open, close + 1)
       case None => (masked.toUpperCase.indexOf("PIVOT", asM.start), stmt.length)

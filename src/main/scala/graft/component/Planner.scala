@@ -31,10 +31,14 @@ class UserException(msg: String) extends RuntimeException(msg)
 
 object Planner {
 
+  /** One prepare per script: the rewrite is not pure (CREATE/DROP MACRO
+    * edit the run's macro registry), so analysis reads the statements
+    * the executor will run. */
   def analyze(spark: SparkSession, config: Config): List[Query] =
     config.namedScripts.map { s =>
-      val a = SqlAnalyzer.analyzeScript(spark, s.sql)
-      Query(s.blockIdx, s.block, s.code, s.name, s.sql, Dialect.prepare(s.sql),
+      val stmts = Dialect.prepare(s.sql)
+      val a = SqlAnalyzer.analyzeStatements(spark, stmts)
+      Query(s.blockIdx, s.block, s.code, s.name, s.sql, stmts,
         a.dependencies, a.outputs, a.statementType)
     }
 

@@ -107,15 +107,7 @@ object PositionalSql {
     if (i >= stmt.length) return None
     val (src, end) =
       if (stmt.charAt(i) == '(') {
-        var d = 0; var j = i; var close = -1
-        while (j < masked.length && close < 0) {
-          masked.charAt(j) match {
-            case '(' => d += 1
-            case ')' => d -= 1; if (d == 0) close = j
-            case _ =>
-          }
-          j += 1
-        }
+        val close = Dialect.matchingParen(masked, i)
         if (close < 0) return None
         (stmt.substring(i, close + 1), close + 1)
       } else if (stmt.charAt(i) == '`') {

@@ -48,7 +48,7 @@ object PrepareSql {
         t.substring(1, t.length - 1)
       case _ => ""
     }
-    val parts = splitTop(argsTxt)
+    val parts = Dialect.splitTop(argsTxt).filter(_.nonEmpty)
     val (namedParts, posParts) = parts.partition(p =>
       "(?is)^\\s*[A-Za-z_]\\w*\\s*:=".r.findFirstIn(
         Dialect.maskQuoted(p)).isDefined)
@@ -123,15 +123,4 @@ object PrepareSql {
     out.toString
   }
 
-  private def splitTop(s: String): Seq[String] = {
-    val masked = Dialect.maskQuoted(s)
-    val dep = Dialect.depths(masked)
-    val cuts = masked.zipWithIndex.collect {
-      case (',', i) if dep(i) == 0 => i
-    }
-    (Seq(-1) ++ cuts :+ s.length).sliding(2).collect {
-      case Seq(a, b) if s.substring(a + 1, b).trim.nonEmpty =>
-        s.substring(a + 1, b).trim
-    }.toSeq
-  }
 }

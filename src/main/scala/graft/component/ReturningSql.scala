@@ -66,15 +66,8 @@ object ReturningSql {
 
   /** Depth-0 comma split of the projection list (selectExpr takes one
     * string per output column). */
-  def projExprs(proj: String): Seq[String] = {
-    val masked = Dialect.maskQuoted(proj)
-    val dep = Dialect.depths(masked)
-    val cuts = masked.zipWithIndex.collect { case (',', i) if dep(i) == 0 => i }
-    (Seq(-1) ++ cuts :+ proj.length).sliding(2).map {
-      case Seq(a, b) => proj.substring(a + 1, b).trim
-      case _ => ""
-    }.filter(_.nonEmpty).toSeq
-  }
+  def projExprs(proj: String): Seq[String] =
+    Dialect.splitTop(proj).filter(_.nonEmpty)
 
   /** Analyzer stub: the DML core carries all relation dependencies; the
     * RETURNING projection only references the target's columns. */

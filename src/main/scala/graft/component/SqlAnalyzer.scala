@@ -57,10 +57,14 @@ object SqlAnalyzer {
         else a.copy(dependencies = a.dependencies ++ extra)
     }
 
-  /** Analyze a full (multi-statement) script: union of per-statement sets;
+  /** Analyze a full (multi-statement) script. */
+  def analyzeScript(spark: SparkSession, script: String): Analysis =
+    analyzeStatements(spark, Dialect.prepare(script))
+
+  /** Analyze a script's prepared statements: union of per-statement sets;
     * script type = CREATE/INSERT if any statement is. */
-  def analyzeScript(spark: SparkSession, script: String): Analysis = {
-    val per = Dialect.prepare(script).map(analyzeStatement(spark, _))
+  def analyzeStatements(spark: SparkSession, stmts: List[String]): Analysis = {
+    val per = stmts.map(analyzeStatement(spark, _))
     val outs = per.flatMap(_.outputs).toSet
     val deps = per.flatMap(_.dependencies).toSet -- outs
     val tpe =

@@ -94,28 +94,9 @@ object StarReplaceSql {
     * the LAST depth-0 AS binds the name (`CAST(x AS INT) AS c` has one
     * inside the call). Loud on a missing alias: silently passing the
     * entry through would project an unnamed duplicate column. */
-  private def items(stmt: String, masked: String, o: Occ): Seq[(String, String)] = {
-    val body = stmt.substring(o.listOpen + 1, o.listClose)
-    val mb = masked.substring(o.listOpen + 1, o.listClose)
-    val cuts = {
-      val b = scala.collection.mutable.ArrayBuffer[Int]()
-      var d = 0
-      var i = 0
-      while (i < mb.length) {
-        mb.charAt(i) match {
-          case '(' | '[' => d += 1
-          case ')' | ']' => d -= 1
-          case ',' if d == 0 => b += i
-          case _ =>
-        }
-        i += 1
-      }
-      b.toSeq
-    }
-    val pieces = (Seq(-1) ++ cuts :+ body.length).sliding(2).map {
-      case Seq(a, b) => (body.substring(a + 1, b), mb.substring(a + 1, b))
-      case _ => ("", "")
-    }.filter(_._1.trim.nonEmpty).toSeq
+  private def items(stmt: String, o: Occ): Seq[(String, String)] = {
+    val pieces = Dialect.splitTop(stmt.substring(o.listOpen + 1, o.listClose))
+      .filter(_.nonEmpty).map(p => (p, Dialect.maskQuoted(p)))
     pieces.map { case (piece, pieceMasked) =>
       var lastAs = -1
       "(?is)\\bAS\\b".r.findAllMatchIn(pieceMasked).foreach { m =>
@@ -143,7 +124,7 @@ object StarReplaceSql {
     occurrences(stmt, masked).sortBy(-_.starIdx).foldLeft(stmt) { (acc, o) =>
       val inner = o.exceptSpan.map { case (open, close) =>
         stmt.substring(open + 1, close) } // the qualifier (t.) sits BEFORE starIdx, kept
-      acc.substring(0, o.starIdx) + render(o, items(stmt, masked, o), inner) +
+      acc.substring(0, o.starIdx) + render(o, items(stmt, o), inner) +
         acc.substring(o.listClose + 1)
     }
   }
@@ -207,7 +188,7 @@ object StarReplaceSql {
         (opM, qStartOpt) match {
           case (Some(m), Some(qStart)) if qStart < stmt.length &&
               stmt.charAt(qStart) == '\'' =>
-            val qEnd = Dialect.quotedEnd(stmt, qStart)
+            val qEnd = Dialect.spanEnd(stmt, qStart)
             val raw = stmt.substring(qStart + 1, qEnd - 1).replace("''", "'")
             val core = m.group(2).toUpperCase.replaceAll("\\s+", " ") match {
               case "SIMILAR TO" => s"(?:$raw)"
@@ -295,7 +276,7 @@ object StarReplaceSql {
                 if (q < stmt.length && stmt.charAt(q) == '\'')
                   return Some(QLike(k + 1, j, i, m.group(1) != null,
                     m.group(2).toUpperCase.replaceAll("\\s+", " "),
-                    q, Dialect.quotedEnd(stmt, q)))
+                    q, Dialect.spanEnd(stmt, q)))
               case None => ()
             }
           }

@@ -123,16 +123,7 @@ object UnionByNameSql {
       case Some(ob) =>
         // depth-0 comma split: a bare split(",") would break
         // `ORDER BY coalesce(a, b)` at the call's comma
-        val obMasked = Dialect.maskQuoted(ob)
-        val obDep = Dialect.depths(obMasked)
-        val cuts = obMasked.zipWithIndex.collect {
-          case (',', i) if obDep(i) == 0 => i
-        }
-        val pieces = (Seq(-1) ++ cuts :+ ob.length).sliding(2).map {
-          case Seq(a, b) => ob.substring(a + 1, b).trim
-          case _ => ""
-        }.filter(_.nonEmpty).toSeq
-        val cols: Seq[Column] = pieces.map { piece =>
+        val cols: Seq[Column] = Dialect.splitTop(ob).filter(_.nonEmpty).map { piece =>
           // ASC/DESC and the NULLS qualifier (rewriteNullsLast appends
           // one) split off — Column sort modifiers, not expression text
           val m = "(?is)^(.*?)(?:\\s+(ASC|DESC))?(?:\\s+NULLS\\s+(FIRST|LAST))?\\s*$".r

@@ -63,25 +63,13 @@ object UpdateFromSql {
         s"UPDATE $target ... FROM: only one source relation is supported " +
           "(pre-join multiple sources in a subquery)")
     val where = afterFrom.substring(wm.end).trim
-    val sets = splitTop(setsTxt).map { a =>
+    val sets = Dialect.splitTop(setsTxt).filter(_.nonEmpty).map { a =>
       val eq = Dialect.maskQuoted(a).indexOf('=')
       if (eq < 0) return None
       (unq(a.substring(0, eq).trim.split("\\.").last), a.substring(eq + 1).trim)
     }
     if (sets.isEmpty) return None
     Some(Parsed(target, alias, sets, fromText, where))
-  }
-
-  private def splitTop(s: String): Seq[String] = {
-    val masked = Dialect.maskQuoted(s)
-    val dep = Dialect.depths(masked)
-    val cuts = masked.zipWithIndex.collect {
-      case (',', i) if dep(i) == 0 => i
-    }
-    (Seq(-1) ++ cuts :+ s.length).sliding(2).collect {
-      case Seq(a, b) if s.substring(a + 1, b).trim.nonEmpty =>
-        s.substring(a + 1, b).trim
-    }.toSeq
   }
 
   /** The source relation split into (text-to-run, alias): a bare name

@@ -88,7 +88,7 @@ object UpsertSql {
             (rest.substring(0, w.start), Some(rest.substring(w.end).trim))
           case None => (rest, None)
         }
-        val sets = splitTop(setsTxt).map { a =>
+        val sets = Dialect.splitTop(setsTxt).filter(_.nonEmpty).map { a =>
           val am = Dialect.maskQuoted(a)
           val eq = am.indexOf('=')
           if (eq < 0) return None
@@ -101,19 +101,6 @@ object UpsertSql {
         Update(sets, whereTxt)
       }
     Some(Parsed(head, target, keyCols, action))
-  }
-
-  /** Depth-0 comma split (assignment lists may carry calls). */
-  private def splitTop(s: String): Seq[String] = {
-    val masked = Dialect.maskQuoted(s)
-    val dep = Dialect.depths(masked)
-    val cuts = masked.zipWithIndex.collect {
-      case (',', i) if dep(i) == 0 => i
-    }
-    (Seq(-1) ++ cuts :+ s.length).sliding(2).collect {
-      case Seq(a, b) if s.substring(a + 1, b).trim.nonEmpty =>
-        s.substring(a + 1, b).trim
-    }.toSeq
   }
 
   /** Static-analysis twin: the plain INSERT head has the identical

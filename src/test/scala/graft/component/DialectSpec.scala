@@ -17,6 +17,12 @@ class DialectSpec extends AnyFunSuite {
     assert(stmts(1).startsWith("--"))
   }
 
+  test("splitStatements: a block comment opening with /*/ stays open") {
+    // the star of the opener never closes the comment (maskQuoted's rule)
+    val stmts = Dialect.splitStatements("SELECT 1 /*/ ; */ AS a; SELECT 2")
+    assert(stmts == List("SELECT 1 /*/ ; */ AS a", "SELECT 2"))
+  }
+
   test("double-quoted names become backticked identifiers everywhere") {
     assert(Dialect.rewrite("""select "t1"."c" from "t1"""") ==
       "select `t1`.`c` from `t1`")

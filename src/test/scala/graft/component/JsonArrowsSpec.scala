@@ -30,6 +30,9 @@ class JsonArrowsSpec extends SparkSpec {
       == """SELECT json_extract("J col", 'a') FROM t""")
     assert(JsonArrows.rewrite("""SELECT '{"a":1}' -> 'a'""")
       == """SELECT json_extract('{"a":1}', 'a')""")
+    // an apostrophe inside an earlier quoted identifier is no quote
+    assert(JsonArrows.rewrite("""SELECT "it's" AS n, '{"a":1}' -> 'a'""")
+      == """SELECT "it's" AS n, json_extract('{"a":1}', 'a')""")
   }
 
   test("lambda arrows survive: HOF params, tuples, string-literal bodies") {

@@ -63,6 +63,23 @@ class PlannerSpec extends SparkSpec {
     assert(e.getMessage.toLowerCase.contains("circular"))
   }
 
+  test("each script is prepared once: a later DROP MACRO plans cleanly") {
+    // the rewrite edits the macro registry, so a second prepare of the
+    // same script would drop the macro twice
+    Macros.clear()
+    try {
+      val qs = Planner.plan(spark, cfg(
+        "mk" -> "CREATE MACRO plus1(x) AS x + 1",
+        "use" -> "CREATE TABLE m_use AS SELECT plus1(1) AS y",
+        "rm" -> "DROP MACRO plus1")).blocks.flatMap(_.batches).flatMap(_.queries)
+      val byName = qs.map(q => q.name -> q).toMap
+      assert(byName("use").statements ==
+        List("CREATE TABLE m_use AS SELECT ((1) + 1) AS y"))
+      assert(byName("use").outputs == Set("m_use"))
+      assert(byName("rm").statements.head.contains("__graft_macro_dropped"))
+    } finally Macros.clear()
+  }
+
   test("unparseable scripts degrade to no dependencies") {
     val a = SqlAnalyzer.analyzeScript(spark, "THIS IS NOT SQL AT ALL (")
     assert(a.dependencies.isEmpty && a.outputs.isEmpty)

@@ -340,6 +340,27 @@ class StatementSurfaceSpec extends SparkSpec {
     assert(a.outputs == Set("ibn_t") && a.dependencies == Set("orders"))
   }
 
+  test("INSERT column lists: quoted parens, comments and DEFAULT") {
+    val dir = Files.createTempDirectory("graft_icl_")
+    val ex = new Executor(spark, dir.toString)
+    def run(sql: String): Unit = Dialect.prepare(sql).foreach(ex.runStatement)
+    def rows(t: String) = spark.table(t).collect()
+      .map(r => (0 until r.length).map(r.get).toList).toList
+    // a ')' inside a quoted column name does not close the list
+    run("CREATE TABLE icl_t AS SELECT 0 AS \"a)b\", 0 AS c WHERE false")
+    run("INSERT INTO icl_t (\"a)b\", c) VALUES (1, 2)")
+    assert(rows("icl_t") == List(List(1, 2)))
+    // nor does one inside a comment, and the comment is no column name
+    run("CREATE TABLE icl_u AS SELECT 0 AS a, 0 AS c WHERE false")
+    run("INSERT INTO icl_u (a /* ) */, c) VALUES (1, 2)")
+    run("INSERT INTO icl_u (c /* , */, a) VALUES (3, 4)")
+    assert(rows("icl_u").sortBy(_.head.toString) == List(List(1, 2), List(4, 3)))
+    // DEFAULT maps through a column list split at depth 0 only
+    run("CREATE TABLE icl_d (\"x,y\" INT DEFAULT 7, z INT)")
+    run("INSERT INTO icl_d (z, \"x,y\") VALUES (1, DEFAULT)")
+    assert(rows("icl_d") == List(List(7, 1)))
+  }
+
   // ── UNION BY NAME ──────────────────────────────────────────────────
 
   test("UNION BY NAME matches columns by name, NULL-fills, dedups without ALL") {
