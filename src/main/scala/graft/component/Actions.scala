@@ -28,12 +28,7 @@ object Actions {
             Dialect.RejectMessages(Dialect.rejectedKind(stmt).get)))
         else {
           val parseIssue = Try(spark.sessionState.sqlParser
-              .parsePlan(PositionalSql.stub(AsOfSql.stub(Pivot.staticStub(
-                CopyFrom.stub(CopyTo.stub(UnionByNameSql.stub(DescribeSql.stub(
-                  SequenceSql.stub(ExportDb.stub(UpsertSql.stub(MergeSql.stub(
-                    UpdateFromSql.stub(IndexSql.stub(PrepareSql.stub(
-                      ReturningSql.stub(
-                        Dialect.analysisStub(stmt)))))))))))))))))) match {
+              .parsePlan(SqlAnalyzer.stub(stmt))) match {
             case Failure(e) => List(ValidationIssue(name, s"parse error: ${e.getMessage}"))
             case Success(_) => Nil
           }

@@ -320,15 +320,24 @@ object Dialect {
     * Spark re-parses whatever the scan could not). */
   private val intCastTargets =
     "TINYINT|INT1|SMALLINT|INT2|SHORT|INTEGER|INT4|SIGNED|BIGINT|INT8|LONG|HUGEINT|INT"
+  private val castCall = "(?i)\\b(TRY_)?CAST\\s*\\(".r
+  private val colonCast = s"(?i)::\\s*($intCastTargets)\\b".r
   private[component] def rewriteIntCasts(stmt0: String): String = {
     var stmt = stmt0
-    var guard = 0
-    while (guard < 256) {
-      guard += 1
+    // each step rewrites one cast site into a duck_icast call (its type
+    // slot becomes a quoted literal), so the statement's cast-site count
+    // bounds the loop
+    val sites = {
+      val masked = maskQuoted(stmt0)
+      castCall.findAllMatchIn(masked).size + colonCast.findAllMatchIn(masked).size
+    }
+    var step = 0
+    while (step < sites) {
+      step += 1
       val masked = maskQuoted(stmt)
       var replaced: Option[String] = None
       // 1) CAST / TRY_CAST type slot
-      val castIt = "(?i)\\b(TRY_)?CAST\\s*\\(".r.findAllMatchIn(masked)
+      val castIt = castCall.findAllMatchIn(masked)
       while (replaced.isEmpty && castIt.hasNext) {
         val m = castIt.next()
         val open = m.end - 1
@@ -351,7 +360,7 @@ object Dialect {
       }
       // 2) :: spelling — one LEFT primary binds (:: is tightest)
       if (replaced.isEmpty) {
-        val ccIt = s"(?i)::\\s*($intCastTargets)\\b".r.findAllMatchIn(masked)
+        val ccIt = colonCast.findAllMatchIn(masked)
         while (replaced.isEmpty && ccIt.hasNext) {
           val m = ccIt.next()
           intDivLeftStart(stmt, masked, m.start, chain = false).foreach { ls =>
@@ -1966,7 +1975,7 @@ object Dialect {
     // the executor surfaces it loudly. CHECKPOINT/VACUUM/ANALYZE are
     // DuckDB storage maintenance with no Spark meaning: inert, like the
     // PRAGMA knobs.
-    val txn = "(?is)^\\s*(BEGIN(?:\\s+TRANSACTION)?|COMMIT|END\\s+TRANSACTION|CHECKPOINT|FORCE\\s+CHECKPOINT|VACUUM(?:\\s+ANALYZE)?|ANALYZE)\\s*;?\\s*$".r
+    val txn = "(?is)^\\s*(BEGIN(?:\\s+TRANSACTION)?|COMMIT|END(?:\\s+TRANSACTION)?|CHECKPOINT|FORCE\\s+CHECKPOINT|VACUUM(?:\\s+ANALYZE)?|ANALYZE)\\s*;?\\s*$".r
     txn.findFirstMatchIn(stmt).foreach { m =>
       val kw = m.group(1).toUpperCase.replaceAll("\\s+", "_")
       return s"SET __graft_inert_$kw = true"
@@ -1981,15 +1990,6 @@ object Dialect {
     // ABORT is DuckDB's ROLLBACK alias (probed v1.0) — same loud path
     if ("(?is)^\\s*ABORT\\s*;?\\s*$".r.findFirstIn(stmt).isDefined)
       return Dialect.RollbackSentinel
-    // transaction & storage-maintenance statements (probed v1.0: all
-    // accepted): this executor commits as it runs and has no WAL, so
-    // BEGIN/COMMIT/END and VACUUM/ANALYZE/CHECKPOINT are inert — the
-    // semantics match because ROLLBACK/ABORT, the only statements that
-    // could observe a difference, reject loudly above
-    if (("(?is)^\\s*(BEGIN(\\s+TRANSACTION)?|COMMIT|END(\\s+TRANSACTION)?|" +
-        "VACUUM(\\s+ANALYZE)?|ANALYZE|(FORCE\\s+)?CHECKPOINT)\\s*;?\\s*$").r
-        .findFirstIn(stmt).isDefined)
-      return "SET __graft_inert_txn_maintenance = true"
     // TRUNCATE [TABLE] t ≡ DELETE FROM t: the executor's DELETE path
     // without a condition already re-materializes the empty state
     // atomically (both spellings probed on DuckDB v1.0)
@@ -2038,9 +2038,14 @@ object Dialect {
           if (close > 0) Some((m.end, close)) else None
         }
       if (overSpans.nonEmpty) {
-        def inOver(re: scala.util.matching.Regex) =
-          re.findAllMatchIn(masked).find(m =>
-            overSpans.exists { case (s, e) => m.start >= s && m.end <= e })
+        // (start, end) of the first match inside an OVER span; the
+        // regex runs on each span alone, so a long statement outside the
+        // spans never reaches the recursive lazy alternation below
+        def inOver(re: scala.util.matching.Regex): Option[(Int, Int)] =
+          overSpans.iterator.flatMap { case (s, e) =>
+            re.findFirstMatchIn(masked.substring(s, e))
+              .map(m => (s + m.start, s + m.end))
+          }.nextOption()
         // frame-position GROUPS: BETWEEN/UNBOUNDED/CURRENT ROW heads, or
         // the single-bound form `GROUPS <expr> PRECEDING|FOLLOWING` —
         // tempered so a COLUMN named `groups` (e.g. in PARTITION BY,
@@ -2057,10 +2062,9 @@ object Dialect {
             .isDefined)
           return FrameSql.rewriteExclude(stmt).map(rewritePragma)
             .getOrElse(rejectSentinel("FRAME_EXCLUDE"))
-        val hit = inOver("(?i)\\bEXCLUDE\\s+NO\\s+OTHERS".r)
-        if (hit.isDefined)
-          return rewritePragma(
-            stmt.substring(0, hit.get.start) + stmt.substring(hit.get.end))
+        inOver("(?i)\\bEXCLUDE\\s+NO\\s+OTHERS".r).foreach { case (s, e) =>
+          return rewritePragma(stmt.substring(0, s) + stmt.substring(e))
+        }
       }
     }
     val m = "(?is)^\\s*PRAGMA\\s+([A-Za-z_][A-Za-z0-9_]*)\\s*(?:=\\s*(.+?)|\\(\\s*(.+?)\\s*\\))?\\s*;?\\s*$".r

@@ -28,6 +28,37 @@ final case class ExecutionStats(timings: List[QueryTiming]) {
   def total: Double = timings.map(_.seconds).sum
 }
 
+/** A table's declared state. `pk` is the DDL PRIMARY KEY, kept
+  * SEPARATE from index-contributed keys: DROP INDEX must never retract
+  * a PRIMARY KEY that happens to share its column set. `defaults` maps
+  * a lowercased column to its DEFAULT expression text (partial-column
+  * INSERTs and the DEFAULT keyword draw from it — probed v1.0).
+  * `notNull` and `checks` are enforced on every write of the table. */
+private[component] final case class TableMeta(
+    pk: Seq[String] = Nil,
+    defaults: Map[String, String] = Map.empty,
+    notNull: Seq[String] = Nil,
+    checks: Seq[String] = Nil) {
+  private def word(c: String) = ("(?i)\\b" + java.util.regex.Pattern.quote(c) + "\\b").r
+  /** Whether a CHECK expression reads column `c`. */
+  def checked(c: String): Boolean = checks.exists(word(c).findFirstIn(_).isDefined)
+  /** Every part follows a column rename (probed: a CHECK referencing
+    * the column renames WITH it; PK columns rename in place). */
+  def renameColumn(from: String, to: String): TableMeta = {
+    def ren(cols: Seq[String]) =
+      cols.map(k => if (k.equalsIgnoreCase(from)) to else k)
+    TableMeta(ren(pk),
+      defaults.get(from.toLowerCase).fold(defaults)(d =>
+        defaults - from.toLowerCase + (to.toLowerCase -> d)),
+      ren(notNull),
+      checks.map(ck => word(from).replaceAllIn(ck,
+        java.util.regex.Matcher.quoteReplacement(to))))
+  }
+  def dropColumn(c: String): TableMeta =
+    copy(defaults = defaults - c.toLowerCase,
+      notNull = notNull.filterNot(_.equalsIgnoreCase(c)))
+}
+
 class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
 
   // TEMP is accepted and treated like a regular object (the whole run is
@@ -70,11 +101,13 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
   private val createEmpty =
     """(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?`?([^`\s(]+)`?\s*\((.+)\)\s*;?\s*$""".r
 
-  /** The DDL-declared PRIMARY KEY per table (lowercased sanitized name).
-    * Kept SEPARATE from index-contributed keys: DROP INDEX must never
-    * retract a PRIMARY KEY that happens to share its column set. */
-  private val declaredPk =
-    scala.collection.concurrent.TrieMap[String, Seq[String]]()
+  /** Declared state per table (lowercased sanitized name); a table with
+    * no entry declares nothing. */
+  private val tableMeta = scala.collection.concurrent.TrieMap[String, TableMeta]()
+  private def metaOf(table: String): TableMeta =
+    tableMeta.getOrElse(table, TableMeta())
+  private def updateMeta(table: String)(f: TableMeta => TableMeta): Unit =
+    tableMeta.put(table, f(metaOf(table)))
 
   // Types ride the warehouse like DuckDB types ride the database file
   // (the reference's passthrough contract): a `.types.sql` snapshot is
@@ -98,20 +131,6 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     }
   }
 
-  /** Bare-DDL column DEFAULTs per table (lowercased sanitized name):
-    * column (lowercased) → default expression text. Partial-column
-    * INSERTs and the DEFAULT keyword draw from here (probed v1.0). */
-  private val tableDefaults =
-    scala.collection.concurrent.TrieMap[String, Map[String, String]]()
-
-  /** Bare-DDL NOT NULL columns and CHECK expressions per table —
-    * enforced on every materialization (assert_true filters riding the
-    * write pass; probed v1.0 raises constraint errors on violation). */
-  private val tableNotNull =
-    scala.collection.concurrent.TrieMap[String, Seq[String]]()
-  private val tableChecks =
-    scala.collection.concurrent.TrieMap[String, Seq[String]]()
-
   /** Index name → (table, cols); cols empty for a non-unique index. The
     * single source of truth for index-contributed upsert keys: DROP INDEX
     * removes its entry, [[keysetsFor]] derives the live key sets. */
@@ -123,7 +142,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     * SETS — a PK plus an identical UNIQUE index is ONE target, not a
     * "several key indexes" ambiguity. */
   private def keysetsFor(table: String): Vector[Seq[String]] = {
-    val all = declaredPk.get(table).toVector ++
+    val all = Some(metaOf(table).pk).filter(_.nonEmpty).toVector ++
       indexNames.values.collect { case (t, cols) if t == table && cols.nonEmpty => cols }
     all.foldLeft(Vector.empty[Seq[String]]) { (acc, ks) =>
       if (acc.exists(_.map(_.toLowerCase).toSet ==
@@ -132,16 +151,23 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     }
   }
 
+  /** Whether column `c` of `table` is in its PRIMARY KEY or a UNIQUE
+    * index key — a dependency that blocks a column drop or retype
+    * (probed v1.0), like a CHECK that reads it. */
+  private def inKey(table: String, c: String): Boolean =
+    metaOf(table).pk.exists(_.equalsIgnoreCase(c)) ||
+      indexNames.values.exists { case (t, cols) =>
+        t == table && cols.exists(_.equalsIgnoreCase(c)) }
+
   /** The constraint-registry window [[IntrospectSql]] reads through.
     * Catalog = the session's registered relations minus engine-internal
     * names; BASE TABLE = a warehouse directory exists (file-read helper
     * views registered by FileReads list as VIEWs — a documented
     * impurity vs DuckDB, whose table functions are not cataloged). */
   private lazy val introspectMeta: IntrospectSql.Meta = new IntrospectSql.Meta {
-    def pk(t: String): Seq[String] = declaredPk.getOrElse(t.toLowerCase, Nil)
-    def notNull(t: String): Seq[String] = tableNotNull.getOrElse(t.toLowerCase, Nil)
-    def defaults(t: String): Map[String, String] =
-      tableDefaults.getOrElse(t.toLowerCase, Map.empty)
+    def pk(t: String): Seq[String] = metaOf(t.toLowerCase).pk
+    def notNull(t: String): Seq[String] = metaOf(t.toLowerCase).notNull
+    def defaults(t: String): Map[String, String] = metaOf(t.toLowerCase).defaults
     def isBaseTable(n: String): Boolean =
       java.nio.file.Files.isDirectory(
         java.nio.file.Paths.get(warehouseDir, Names.view(n)))
@@ -151,10 +177,6 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         .sorted.toSeq
   }
 
-  /** Drop every piece of key metadata attached to `table` — called when
-    * the table object is dropped or replaced (DuckDB drops a table's
-    * indexes with it; a replacement table starts with no keys — stale
-    * keys surviving a CREATE OR REPLACE would mis-target later upserts). */
   /** One bare type text → Spark DataType (alias/enum names resolve
     * through the TypeSql store — the ALTER TABLE column paths sit
     * outside the statement positions TypeSql.substitute covers). */
@@ -163,23 +185,21 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       TypeSql.resolveTypeText(t)
         .replaceAll("(?i)\\bVARCHAR\\b(?!\\s*\\()", "STRING")).head.dataType
 
+  /** Drop every piece of metadata attached to `table` — called when
+    * the table object is dropped or replaced (DuckDB drops a table's
+    * indexes with it; a replacement table starts with no keys — stale
+    * keys surviving a CREATE OR REPLACE would mis-target later upserts). */
   private def clearTableMeta(table: String): Unit = {
-    declaredPk.remove(table)
-    tableDefaults.remove(table)
-    tableNotNull.remove(table)
-    tableChecks.remove(table)
+    tableMeta.remove(table)
     indexNames.filterInPlace { case (_, (t, _)) => t != table }
   }
 
-  /** Carry key metadata across ALTER ... RENAME: the table object moved,
-    * its PK and indexes move with it (anything previously on the target
-    * name was just replaced). */
+  /** Carry table metadata across ALTER ... RENAME: the table object
+    * moved, its declared state and indexes move with it (anything
+    * previously on the target name was just replaced). */
   private def renameTableMeta(from: String, to: String): Unit = {
     clearTableMeta(to)
-    declaredPk.remove(from).foreach(declaredPk.put(to, _))
-    tableDefaults.remove(from).foreach(tableDefaults.put(to, _))
-    tableNotNull.remove(from).foreach(tableNotNull.put(to, _))
-    tableChecks.remove(from).foreach(tableChecks.put(to, _))
+    tableMeta.remove(from).foreach(tableMeta.put(to, _))
     indexNames.mapValuesInPlace { case (_, (t, cols)) =>
       if (t == from) (to, cols) else (t, cols)
     }
@@ -291,8 +311,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
           spark.catalog.tableExists(s"`${Names.view(name)}`")) ()
       else {
         clearTableMeta(Names.view(name).toLowerCase) // CTAS declares no keys
-        register(name, materialize(name, bodyDf(body)))
-        rebind(Names.view(name).toLowerCase)
+        replace(name, bodyDf(body))
       }
 
     case createEmpty(ifNotExists, name, colDefs)
@@ -320,21 +339,18 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         }
         clearTableMeta(Names.view(name).toLowerCase) // replacement starts clean
         val key = Names.view(name).toLowerCase
-        if (pkCols.nonEmpty) declaredPk.put(key, pkCols)
         // column defs → StructType via [[ConstraintSql]]: constraints
         // are PARSED OUT and reproduced (DEFAULT fill on inserts,
         // NOT NULL / CHECK enforced at materialization, UNIQUE as an
         // upsert conflict target) instead of silently stripped
         val parsed = ConstraintSql.parse(items)
-        val defaults = parsed.cols.flatMap(c =>
-          c.default.map(d => c.name.toLowerCase -> d)).toMap
-        if (defaults.nonEmpty) tableDefaults.put(key, defaults)
-        val nn = parsed.cols.filter(_.notNull).map(_.name) ++
-          pkCols.filterNot(pc =>
-            parsed.cols.exists(c => c.notNull && c.name.equalsIgnoreCase(pc)))
-        if (nn.nonEmpty) tableNotNull.put(key, nn.distinct)
-        val cks = parsed.cols.flatMap(_.checks) ++ parsed.tableChecks
-        if (cks.nonEmpty) tableChecks.put(key, cks)
+        tableMeta.put(key, TableMeta(pkCols,
+          parsed.cols.flatMap(c =>
+            c.default.map(d => c.name.toLowerCase -> d)).toMap,
+          (parsed.cols.filter(_.notNull).map(_.name) ++
+            pkCols.filterNot(pc => parsed.cols.exists(c =>
+              c.notNull && c.name.equalsIgnoreCase(pc)))).distinct,
+          parsed.cols.flatMap(_.checks) ++ parsed.tableChecks))
         parsed.uniqueSets.zipWithIndex.foreach { case (cols, i) =>
           indexNames.put(s"__ddl_unique_${key}_${i + 1}", (key, cols))
         }
@@ -343,8 +359,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         val schema = org.apache.spark.sql.types.StructType.fromDDL(cleaned)
         val empty = spark.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-        register(name, materialize(name, empty))
-        rebind(Names.view(name).toLowerCase)
+        replace(name, empty)
       }
 
     case addPkStmt(name, colsTxt) =>
@@ -377,7 +392,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         throw new UserException(
           s"ALTER TABLE $name ADD PRIMARY KEY: NULL in key column(s) " +
             s"(${cols.mkString(", ")}) — PRIMARY KEY columns are NOT NULL")
-      declaredPk.put(sanitized.toLowerCase, pkCols)
+      updateMeta(sanitized.toLowerCase)(_.copy(pk = pkCols))
 
     // ---- ALTER TABLE column DDL (probed v1.0 semantics throughout) ----
     case addColStmt(name, ifNotExists, itemTxt0) =>
@@ -413,11 +428,10 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         val value = colP.default.map(d => expr(d).cast(dt))
           .getOrElse(lit(null).cast(dt))
         colP.default.foreach { d =>
-          tableDefaults.put(key, tableDefaults.getOrElse(key, Map.empty) +
-            (colP.name.toLowerCase -> d))
+          updateMeta(key)(t =>
+            t.copy(defaults = t.defaults + (colP.name.toLowerCase -> d)))
         }
-        register(name, materialize(name, existing.withColumn(colP.name, value)))
-        rebind(key)
+        replace(name, existing.withColumn(colP.name, value))
       }
 
     case dropColStmt(name, ifExists, colName0) =>
@@ -434,24 +448,15 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
               s"""with name "$colName0"""")
         case Some(c) =>
           // probed v1.0: PK/UNIQUE and CHECK dependencies block the drop
-          val inKey = declaredPk.get(key).exists(_.exists(_.equalsIgnoreCase(c))) ||
-            indexNames.values.exists { case (t, cols) =>
-              t == key && cols.exists(_.equalsIgnoreCase(c)) }
-          if (inKey) throw new UserException(
+          if (inKey(key, c)) throw new UserException(
             s"""Cannot drop column "$c" because there is a UNIQUE """ +
               "constraint that depends on it")
-          val depRe = ("(?i)\\b" + java.util.regex.Pattern.quote(c) + "\\b").r
-          if (tableChecks.getOrElse(key, Nil)
-              .exists(ck => depRe.findFirstIn(ck).isDefined))
+          if (metaOf(key).checked(c))
             throw new UserException(
               s"""Cannot drop column "$c" because there is a CHECK """ +
                 "constraint that depends on it")
-          tableDefaults.get(key).foreach(m =>
-            tableDefaults.put(key, m - c.toLowerCase))
-          tableNotNull.get(key).foreach(l =>
-            tableNotNull.put(key, l.filterNot(_.equalsIgnoreCase(c))))
-          register(name, materialize(name, existing.drop(c)))
-          rebind(key)
+          updateMeta(key)(_.dropColumn(c))
+          replace(name, existing.drop(c))
       }
 
     case renameColStmt(name, from, to) =>
@@ -468,27 +473,14 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       if (existing.columns.exists(_.equalsIgnoreCase(to)))
         throw new UserException(
           s"Catalog Error: Column with name $to already exists!")
-      // every registry follows the rename (probed: a CHECK referencing
-      // the column renames WITH it; PK columns rename in place)
-      declaredPk.get(key).foreach(ks => declaredPk.put(key,
-        ks.map(k => if (k.equalsIgnoreCase(c)) to else k)))
+      // every registry follows the rename
+      updateMeta(key)(_.renameColumn(c, to))
       indexNames.toSeq.foreach { case (n, (t, cols)) =>
         if (t == key && cols.exists(_.equalsIgnoreCase(c)))
           indexNames.put(n,
             (t, cols.map(k => if (k.equalsIgnoreCase(c)) to else k)))
       }
-      tableDefaults.get(key).foreach { m =>
-        m.get(c.toLowerCase).foreach(d =>
-          tableDefaults.put(key, m - c.toLowerCase + (to.toLowerCase -> d)))
-      }
-      tableNotNull.get(key).foreach(l => tableNotNull.put(key,
-        l.map(k => if (k.equalsIgnoreCase(c)) to else k)))
-      val renRe = ("(?i)\\b" + java.util.regex.Pattern.quote(c) + "\\b").r
-      tableChecks.get(key).foreach(l => tableChecks.put(key, l.map(ck =>
-        renRe.replaceAllIn(ck,
-          java.util.regex.Matcher.quoteReplacement(to)))))
-      register(name, materialize(name, existing.withColumnRenamed(c, to)))
-      rebind(key)
+      replace(name, existing.withColumnRenamed(c, to))
 
     case alterColStmt(name, colName0, action) =>
       val sanitized = Names.view(name)
@@ -506,40 +498,30 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         case typeRe(typeText, usingTxt) =>
           // probed v1.0: retype of a PK/UNIQUE or CHECK-referenced
           // column is a binder error; DEFAULT and NOT NULL survive
-          val inKey = declaredPk.get(key).exists(_.exists(_.equalsIgnoreCase(c))) ||
-            indexNames.values.exists { case (t, cols) =>
-              t == key && cols.exists(_.equalsIgnoreCase(c)) }
-          if (inKey) throw new UserException(
+          if (inKey(key, c)) throw new UserException(
             "Binder Error: Cannot change the type of a column that has " +
               "a UNIQUE or PRIMARY KEY constraint specified")
-          val depRe = ("(?i)\\b" + java.util.regex.Pattern.quote(c) + "\\b").r
-          if (tableChecks.getOrElse(key, Nil)
-              .exists(ck => depRe.findFirstIn(ck).isDefined))
+          if (metaOf(key).checked(c))
             throw new UserException(
               "Binder Error: Cannot change the type of a column that " +
                 "has a CHECK constraint specified")
           val dt = parseTypeText(typeText)
           val src = Option(usingTxt).map(expr).getOrElse(col(s"`$c`"))
-          register(name,
-            materialize(name, existing.withColumn(c, src.cast(dt))))
-          rebind(key)
+          replace(name, existing.withColumn(c, src.cast(dt)))
         case a if "(?is)^SET\\s+DEFAULT\\s+.+$".r.findFirstIn(a).isDefined =>
           val d = a.replaceFirst("(?is)^SET\\s+DEFAULT\\s+", "").trim
-          tableDefaults.put(key, tableDefaults.getOrElse(key, Map.empty) +
-            (c.toLowerCase -> d))
+          updateMeta(key)(t => t.copy(defaults = t.defaults + (c.toLowerCase -> d)))
         case a if "(?is)^DROP\\s+DEFAULT$".r.findFirstIn(a).isDefined =>
-          tableDefaults.get(key).foreach(m =>
-            tableDefaults.put(key, m - c.toLowerCase))
+          updateMeta(key)(t => t.copy(defaults = t.defaults - c.toLowerCase))
         case a if "(?is)^SET\\s+NOT\\s+NULL$".r.findFirstIn(a).isDefined =>
           // probed: existing NULLs fail the constraint at SET time
           if (existing.filter(col(s"`$c`").isNull).limit(1).collect().nonEmpty)
             throw new UserException(
               s"NOT NULL constraint failed: $sanitized.$c")
-          tableNotNull.put(key,
-            (tableNotNull.getOrElse(key, Nil) :+ c).distinct)
+          updateMeta(key)(t => t.copy(notNull = (t.notNull :+ c).distinct))
         case a if "(?is)^DROP\\s+NOT\\s+NULL$".r.findFirstIn(a).isDefined =>
-          tableNotNull.get(key).foreach(l =>
-            tableNotNull.put(key, l.filterNot(_.equalsIgnoreCase(c))))
+          updateMeta(key)(t =>
+            t.copy(notNull = t.notNull.filterNot(_.equalsIgnoreCase(c))))
         case other =>
           throw new UserException(
             s"unsupported ALTER COLUMN action: $other — supported: " +
@@ -613,15 +595,9 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       // which is exactly the pinned batch the upsert evaluated once
       delta = Some(upsert(UpsertSql.parse(stmt).get))
 
+    // MERGE INTO, and UPDATE ... FROM / DELETE ... USING lowered onto it
     case _ if MergeSql.parse(stmt).isDefined =>
       delta = executeMerge(MergeSql.parse(stmt).get, returning.isDefined)
-
-    case _ if UpdateFromSql.parse(stmt).isDefined =>
-      delta = updateFrom(UpdateFromSql.parse(stmt).get, returning.isDefined)
-
-    case _ if UpdateFromSql.parseDelete(stmt).isDefined =>
-      delta = deleteUsing(UpdateFromSql.parseDelete(stmt).get,
-        returning.isDefined)
 
     case _ if IndexSql.parseCreate(stmt).isDefined =>
       // a NON-unique index is a lookup accelerator with no semantic
@@ -651,8 +627,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       // (possibly nondeterministic) source to one evaluation
       val aligned = if (returning.isDefined) aligned0.localCheckpoint()
                     else aligned0
-      register(name, materialize(name, existing.unionByName(aligned)))
-      rebind(Names.view(name).toLowerCase)
+      replace(name, existing.unionByName(aligned))
       delta = Some(aligned)
 
     case _ if ExportDb.parseExport(stmt).isDefined =>
@@ -771,8 +746,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         if (addedCols(c.toLowerCase)) col(c).cast(existing.schema(c).dataType).as(c)
         else lit(null).cast(existing.schema(c).dataType).as(c)
       }: _*)
-      register(p.target, materialize(p.target, existing.unionByName(aligned)))
-      rebind(Names.view(p.target).toLowerCase)
+      replace(p.target, existing.unionByName(aligned))
 
     case _ if Pivot.parse(stmt).isDefined || AsOfSql.parse(stmt).isDefined ||
         UnionByNameSql.parse(stmt).isDefined || StarReplaceSql.has(stmt) ||
@@ -805,8 +779,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
               coalesce(GraftSqlBridge.column(e), lit(false))).getOrElse(lit(true))
             delta = Some(df.filter(hit).localCheckpoint())
           }
-          register(name, materialize(name, out))
-          rebind(Names.view(name).toLowerCase)
+          replace(name, out)
 
         case "UpdateTable" =>
           val name = targetName(plan)
@@ -840,11 +813,8 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
             val pinned = df.select(outCols :+ hit.as("__upd_ret_hit"): _*)
               .localCheckpoint()
             delta = Some(pinned.filter(col("__upd_ret_hit")).drop("__upd_ret_hit"))
-            register(name, materialize(name, pinned.drop("__upd_ret_hit")))
-          } else {
-            register(name, materialize(name, df.select(outCols: _*)))
-          }
-          rebind(Names.view(name).toLowerCase)
+            replace(name, pinned.drop("__upd_ret_hit"))
+          } else replace(name, df.select(outCols: _*))
 
         case _ =>
           // plain SELECT / SET / etc.: execute for effect + error surfacing
@@ -957,27 +927,22 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
 
   private val version = new java.util.concurrent.atomic.AtomicLong()
 
-  /** CREATE TABLE semantics: persist to the warehouse dir (parquet) and
-    * return the read-back frame — cuts lineage, survives into the next
-    * run's input (A11 database passthrough). Writes stage into a fresh
-    * directory and swap in afterwards: INSERT/UPDATE/DELETE re-derivations
-    * READ the current files of the same table while writing the new state,
-    * so an in-place overwrite would consume its own deletes. */
   /** NOT NULL / CHECK enforcement riding the write pass: assert_true
     * filters evaluate per row DURING materialization (no extra scan),
     * raising the DuckDB-shaped constraint message on violation. A NULL
     * check result passes (the standard's rule, probed v1.0). */
   private def enforced(name: String, df: DataFrame): DataFrame = {
     val key = Names.view(name).toLowerCase
+    val meta = metaOf(key)
     val present = df.columns.map(_.toLowerCase).toSet
     var out = df
-    tableNotNull.getOrElse(key, Nil)
+    meta.notNull
       .filter(c => present(c.toLowerCase)).foreach { c =>
         out = out.filter(expr(
           s"assert_true(`$c` IS NOT NULL, " +
             s"'NOT NULL constraint failed: $key.$c') IS NULL"))
       }
-    tableChecks.getOrElse(key, Nil).foreach { ck =>
+    meta.checks.foreach { ck =>
       out = out.filter(expr(
         s"assert_true(coalesce(CAST(($ck) AS BOOLEAN), true), " +
           s"'CHECK constraint failed: $key') IS NULL"))
@@ -985,16 +950,25 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     out
   }
 
-  private def materialize(name: String, df0: DataFrame): DataFrame = {
+  /** The one table-state swap (CREATE TABLE, INSERT, UPDATE, DELETE,
+    * MERGE, upsert, COPY FROM, ALTER TABLE): enforce `name`'s constraints
+    * on the write pass, persist to the warehouse dir (parquet), register
+    * the read-back — which cuts lineage and survives into the next run's
+    * input (A11 database passthrough) — and re-bind the views over it.
+    * Writes stage into a fresh directory and swap in afterwards:
+    * re-derivations READ the current files of the same table while
+    * writing the new state, so an in-place overwrite would consume its
+    * own deletes. */
+  private def replace(name: String, df: DataFrame): Unit = {
     import java.nio.file.{Files, Paths}
-    val df = enforced(name, df0)
     val dir = Paths.get(warehouseDir, Names.view(name))
     val staging = Paths.get(warehouseDir,
       s".staging_${Names.view(name)}_${version.incrementAndGet()}")
-    df.write.mode("overwrite").parquet(staging.toString)
+    enforced(name, df).write.mode("overwrite").parquet(staging.toString)
     if (Files.exists(dir)) deleteRecursively(dir) // replace previous state
     Files.move(staging, dir)
-    spark.read.parquet(dir.toString)
+    register(name, spark.read.parquet(dir.toString))
+    rebind(Names.view(name).toLowerCase)
   }
 
   /** Depth-first delete; the walk stream is CLOSED (an unclosed
@@ -1076,8 +1050,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         .stripPrefix("`").stripSuffix("`")))
       .filter(_.nonEmpty)
     val existing = spark.table(s"`${Names.view(name)}`")
-    val defaults = tableDefaults.getOrElse(Names.view(name).toLowerCase,
-      Map.empty[String, String])
+    val defaults = metaOf(Names.view(name).toLowerCase).defaults
     // the DEFAULT keyword inside VALUES rows draws the declared default
     // (NULL when none — probed v1.0); position maps through the column
     // list when present, table order otherwise
@@ -1137,102 +1110,25 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     (existing, aligned)
   }
 
-  /** `UPDATE ... FROM` re-derivation — one left join of the target
-    * against the source on the user's WHERE, one projection applying the
-    * SET expressions to matched rows. Multi-match keeps ONE arbitrary
-    * source row per target row (DuckDB does the same, probed — no
-    * error). Unqualified column references shared by both sides raise
-    * the analyzer's ambiguity error — qualify with the table/alias
-    * names, which this join exposes verbatim. */
-  private def updateFrom(u: UpdateFromSql.Parsed,
-                         wantDelta: Boolean): Option[DataFrame] = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{monotonically_increasing_id, row_number}
-    val sanitized = Names.view(u.target)
-    val existing = spark.table(s"`$sanitized`")
-    val tAlias = u.targetAlias.getOrElse(u.target)
-    val (srcSql, sAlias) = UpdateFromSql.sourceOf(u)
-    val src = bodyDf(srcSql).withColumn("__upd_hit", lit(true))
-    val joined = existing.withColumn("__upd_uid", monotonically_increasing_id())
-      .alias(tAlias)
-      .join(src.alias(sAlias), expr(u.where), "left_outer")
-    val one = joined.withColumn("__upd_rn",
-      row_number().over(Window.partitionBy(col("__upd_uid"))
-        .orderBy(col("__upd_hit").desc_nulls_last)))
-      .filter(col("__upd_rn") === 1)
-    val setMap = u.sets.map { case (c, e) => c.toLowerCase -> e }.toMap
-    val byLower = existing.columns.map(c => c.toLowerCase -> c).toMap
-    setMap.keys.foreach(c => if (!byLower.contains(c))
-      throw new UserException(
-        s"UPDATE ${u.target}: SET column $c does not exist"))
-    val projCols = existing.columns.map { c =>
-      setMap.get(c.toLowerCase) match {
-        case Some(e) => when(coalesce(col("__upd_hit"), lit(false)),
-          expr(e).cast(existing.schema(c).dataType))
-          .otherwise(expr(s"`$tAlias`.`$c`")).as(c)
-        case None => expr(s"`$tAlias`.`$c`").as(c)
-      }
-    }
-    // RETURNING delta: the matched rows with their post-SET values. ONE
-    // shared evaluation of the SET projection (checkpoint the hit-
-    // annotated frame, derive table and delta from it): a separate
-    // delta select would re-evaluate nondeterministic SETs (nextval(),
-    // uuidv7(), random()) and return rows that differ from the written
-    // ones — the same single-eval pin as INSERT/upsert/plain UPDATE.
-    // Also pinned BEFORE the swap deletes the old files it reads.
-    val delta = if (wantDelta) {
-      val pinned = one.select(projCols :+
-        coalesce(col("__upd_hit"), lit(false)).as("__upd_ret_hit"): _*)
-        .localCheckpoint()
-      register(u.target, materialize(u.target, pinned.drop("__upd_ret_hit")))
-      Some(pinned.filter(col("__upd_ret_hit")).drop("__upd_ret_hit"))
-    } else {
-      register(u.target, materialize(u.target, one.select(projCols: _*)))
-      None
-    }
-    rebind(sanitized.toLowerCase)
-    delta
-  }
-
-  /** `DELETE ... USING` re-derivation — an anti-join of the target
-    * against the source on the user's WHERE keeps exactly the rows with
-    * NO match (the deleted set is the matched one). Same parse/scope
-    * contract as [[updateFrom]]. */
-  private def deleteUsing(u: UpdateFromSql.Parsed,
-                          wantDelta: Boolean): Option[DataFrame] = {
-    val sanitized = Names.view(u.target)
-    val existing = spark.table(s"`$sanitized`")
-    val tAlias = u.targetAlias.getOrElse(u.target)
-    val (srcSql, sAlias) = UpdateFromSql.sourceOf(u)
-    val src = bodyDf(srcSql)
-    val kept = existing.alias(tAlias)
-      .join(src.alias(sAlias), expr(u.where), "left_anti")
-    // RETURNING delta: the DELETED rows (the semi-join complement of
-    // kept), old values, pinned before the swap
-    val delta = if (wantDelta)
-      Some(existing.alias(tAlias)
-        .join(src.alias(sAlias), expr(u.where), "left_semi").localCheckpoint())
-    else None
-    register(u.target, materialize(u.target, kept))
-    rebind(sanitized.toLowerCase)
-    delta
-  }
-
   /** MERGE INTO re-derivation (spec-pinned DuckDB 1.4 semantics —
-    * [[MergeSql]]; the local v1.0 oracle cannot parse the statement).
-    * Two distributed branches, no per-row path:
+    * [[MergeSql]]; the local v1.0 oracle cannot parse the statement),
+    * which also runs UPDATE ... FROM and DELETE ... USING as the
+    * one-clause merges [[MergeSql.parse]] lowers them to (their probed
+    * v1.0 rules). Two distributed branches, no per-row path:
     *
     *  - target side (WHEN MATCHED / NOT MATCHED BY SOURCE): ONE left
     *    join of the target against the source on the user's ON, a
     *    first-match-wins when() chain picks each row's clause, one
     *    projection applies the UPDATE SETs, a filter drops the DELETEs.
     *    Several source rows matching one target row keep ONE arbitrary
-    *    match — the documented UPDATE..FROM rule this engine already
-    *    pins (probed v1.0, no error). When the ON is a pure equi
-    *    conjunction and a cheap probe proves the source key-unique (the
-    *    common delta shape), the uid + row_number dedup — a full-target
-    *    shuffle — is SKIPPED entirely; otherwise the window path owns
-    *    correctness.
+    *    match — DuckDB's UPDATE ... FROM rule (probed v1.0, no error).
+    *    When the ON is a pure equi conjunction and a cheap probe proves
+    *    the source key-unique (the common delta shape), the uid +
+    *    row_number dedup — a full-target shuffle — is SKIPPED entirely;
+    *    otherwise the window path owns correctness. When the first
+    *    WHEN MATCHED clause is an unconditional DELETE and no BY SOURCE
+    *    clause exists, every matched row goes whichever match it keeps:
+    *    the branch is ONE left-anti join, with no probe and no dedup.
     *  - insert side (WHEN NOT MATCHED [BY TARGET]): one anti-join keeps
     *    the source rows with no target match, the clause chain picks an
     *    INSERT form, one projection aligns to the target schema.
@@ -1243,7 +1139,8 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     * partitions, no driver collect). Under RETURNING each branch's
     * annotated frame is checkpointed once and the written state AND the
     * delta derive from it (the single-eval contract), with the 1.4
-    * `merge_action` pseudo-column ('UPDATE'/'DELETE'/'INSERT') in scope.
+    * `merge_action` pseudo-column ('UPDATE'/'DELETE'/'INSERT') in scope
+    * for a MERGE (the lowered forms have none).
     * ERROR clauses run one limit(1) probe job per branch that carries
     * one. */
   private def executeMerge(m: MergeSql.Parsed,
@@ -1252,7 +1149,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     import org.apache.spark.sql.functions.{monotonically_increasing_id, row_number}
     val sanitized = Names.view(m.target)
     if (!spark.catalog.tableExists(s"`$sanitized`"))
-      throw new UserException(s"MERGE INTO: table ${m.target} does not exist")
+      throw new UserException(s"${m.verb}: table ${m.target} does not exist")
     val existing = spark.table(s"`$sanitized`")
     val tAlias = m.targetAlias.getOrElse(m.target)
     val (srcSql, sAlias) = MergeSql.sourceOf(m)
@@ -1262,6 +1159,11 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     val insClauses = clauses.filter(_.kind == MergeSql.NotMatchedByTarget)
     val needJoin = matchedClauses.nonEmpty || bySourceClauses.nonEmpty
     val needInsert = insClauses.nonEmpty
+    // MergeSql.validate keeps UPDATE / DELETE on the target branch and
+    // INSERT on the insert branch
+    val updClauses = clauses.filter(_.action.isInstanceOf[MergeSql.Update])
+    val delIdxs = clauses.collect { case MergeSql.Clause(i, _, _, MergeSql.Delete) => i }
+    val insActionClauses = clauses.filter(_.action.isInstanceOf[MergeSql.Insert])
     val src0 = bodyDf(srcSql).withColumn("__m_hit", lit(true))
     // both branches consume the source → pin ONE evaluation (a
     // nondeterministic source must propose the same rows to both)
@@ -1274,7 +1176,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       case MergeSql.Clause(_, _, _, MergeSql.Update(sets)) =>
         sets.foreach { case (k, _) => if (!byLower.contains(k.toLowerCase))
           throw new UserException(
-            s"MERGE INTO ${m.target}: SET column $k does not exist") }
+            s"${m.verb} ${m.target}: SET column $k does not exist") }
       case MergeSql.Clause(_, _, _, MergeSql.Insert(Some(cs), _)) =>
         cs.foreach(k => if (!byLower.contains(k.toLowerCase))
           throw new UserException(
@@ -1304,7 +1206,21 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       }
 
     // ---- target side: matched + not-matched-by-source ----
-    val (keptTgt, tgtAnnotated) = if (needJoin) {
+    val deletesEveryMatch = bySourceClauses.isEmpty &&
+      matchedClauses.headOption.exists(c =>
+        c.cond.isEmpty && c.action == MergeSql.Delete)
+    def againstSource(how: String): DataFrame =
+      existing.alias(tAlias).join(src.alias(sAlias), expr(m.on), how)
+    val (keptTgt, tgtAnnotated) = if (!needJoin) (existing, None)
+    else if (deletesEveryMatch) {
+      // the RETURNING delta is the left-semi complement: old values,
+      // pinned before the swap deletes the files they are read from
+      val deleted = if (!wantDelta) None
+        else Some(againstSource("left_semi")
+          .withColumn("__m_action", lit(matchedClauses.head.idx))
+          .localCheckpoint())
+      (againstSource("left_anti"), deleted)
+    } else {
       // SCALE fast path: the row_number dedup below shuffles the FULL
       // target by uid — the dominant MERGE cost at 100 TB. When the ON
       // is a pure equi conjunction AND one cheap probe job proves the
@@ -1321,8 +1237,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
           }
         }
       val one =
-        if (srcUnique)
-          existing.alias(tAlias).join(src.alias(sAlias), expr(m.on), "left_outer")
+        if (srcUnique) againstSource("left_outer")
         else existing.withColumn("__m_uid", monotonically_increasing_id())
           .alias(tAlias)
           .join(src.alias(sAlias), expr(m.on), "left_outer")
@@ -1333,9 +1248,6 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       val action = when(coalesce(col("__m_hit"), lit(false)),
         chain(matchedClauses)).otherwise(chain(bySourceClauses))
       val acted = one.withColumn("__m_action", action)
-      val updClauses = clauses.filter(c =>
-        c.kind != MergeSql.NotMatchedByTarget &&
-          c.action.isInstanceOf[MergeSql.Update])
       val projCols = existing.columns.map { c =>
         val old = expr(s"`$tAlias`.`$c`")
         updClauses.foldRight(old) { (cl, acc) =>
@@ -1365,14 +1277,11 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         if (wantDelta || tgtHasErr) annotated0.localCheckpoint()
         else annotated0
       checkErrors(annotated)
-      val delIdxs = clauses.collect {
-        case MergeSql.Clause(i, k, _, MergeSql.Delete)
-            if k != MergeSql.NotMatchedByTarget => i }
       val kept =
         if (delIdxs.isEmpty) annotated
         else annotated.filter(!col("__m_action").isin(delIdxs: _*))
       (kept.select(existing.columns.map(col): _*), Some(annotated))
-    } else (existing, None)
+    }
 
     // ---- insert side: not-matched-by-target ----
     val (insRows, insAnnotated) = if (needInsert) {
@@ -1380,8 +1289,6 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         .join(existing.alias(tAlias), expr(m.on), "left_anti")
       val acted = unmatched.withColumn("__m_action", chain(insClauses))
         .filter(col("__m_action") =!= -1)
-      val insActionClauses = insClauses.filter(
-        _.action.isInstanceOf[MergeSql.Insert])
       val projIns = existing.columns.zipWithIndex.map { case (c, ci) =>
         insActionClauses.foldRight(lit(null): Column) { (cl, acc) =>
           val value: Column = cl.action match {
@@ -1410,10 +1317,10 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         if (wantDelta || insHasErr) annotated0.localCheckpoint()
         else annotated0
       checkErrors(annotated)
-      val insIdxs = insActionClauses.map(_.idx)
       val rows =
-        if (insIdxs.isEmpty) None
-        else Some(annotated.filter(col("__m_action").isin(insIdxs: _*))
+        if (insActionClauses.isEmpty) None
+        else Some(annotated.filter(
+          col("__m_action").isin(insActionClauses.map(_.idx): _*))
           .select(existing.columns.map(col): _*))
       (rows, Some(annotated))
     } else (None, None)
@@ -1422,32 +1329,23 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       case Some(r) => keptTgt.unionByName(r)
       case None => keptTgt
     }
-    register(m.target, materialize(m.target, newState))
-    rebind(sanitized.toLowerCase)
+    replace(m.target, newState)
 
     if (!wantDelta) None
     else {
-      val updIdxs = clauses.collect {
-        case MergeSql.Clause(i, k, _, _: MergeSql.Update)
-            if k != MergeSql.NotMatchedByTarget => i }
-      val delIdxs = clauses.collect {
-        case MergeSql.Clause(i, k, _, MergeSql.Delete)
-            if k != MergeSql.NotMatchedByTarget => i }
-      val insIdxs = insClauses.collect {
-        case MergeSql.Clause(i, _, _, _: MergeSql.Insert) => i }
-      val tableCols = existing.columns.map(col)
+      val tableCols = existing.columns.map(col).toSeq
+      def tagged(act: String): Seq[Column] =
+        if (m.isMerge) tableCols :+ lit(act).as("merge_action") else tableCols
       def part(a: DataFrame, idxs: Seq[Int], act: String): Option[DataFrame] =
         if (idxs.isEmpty) None
         else Some(a.filter(col("__m_action").isin(idxs: _*))
-          .select(tableCols :+ lit(act).as("merge_action"): _*))
+          .select(tagged(act): _*))
       val parts =
-        tgtAnnotated.flatMap(part(_, updIdxs, "UPDATE")).toSeq ++
+        tgtAnnotated.flatMap(part(_, updClauses.map(_.idx), "UPDATE")).toSeq ++
           tgtAnnotated.flatMap(part(_, delIdxs, "DELETE")).toSeq ++
-          insAnnotated.flatMap(part(_, insIdxs, "INSERT")).toSeq
+          insAnnotated.flatMap(part(_, insActionClauses.map(_.idx), "INSERT")).toSeq
       Some(
-        if (parts.isEmpty)
-          existing.limit(0)
-            .select(tableCols :+ lit("").as("merge_action"): _*)
+        if (parts.isEmpty) existing.limit(0).select(tagged(""): _*)
         else parts.reduce(_ unionByName _))
     }
   }
@@ -1548,8 +1446,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
           }
         }: _*).unionByName(fresh)
     }
-    register(name, materialize(name, result))
-    rebind(sanitized.toLowerCase)
+    replace(name, result)
     aligned
   }
 
@@ -1593,9 +1490,9 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       val df = spark.read.parquet(Paths.get(warehouseDir, t).toString)
       // DEFAULT / NOT NULL ride the column defs so a replay keeps the
       // insert-time behavior, not just the shape
-      val defs = tableDefaults.getOrElse(t.toLowerCase, Map.empty)
-      val nns = tableNotNull.getOrElse(t.toLowerCase, Nil)
-        .map(_.toLowerCase).toSet
+      val meta = metaOf(t.toLowerCase)
+      val defs = meta.defaults
+      val nns = meta.notNull.map(_.toLowerCase).toSet
       val cols = df.schema.fields.map { f =>
         s"${ident(f.name)} ${sqlTypeOf(f.dataType)}" +
           defs.get(f.name.toLowerCase).map(v => s" DEFAULT $v").getOrElse("") +
@@ -1604,11 +1501,10 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       // the declared PRIMARY KEY is upsert-conflict-target state: it must
       // survive the replay (the table-level spelling, re-extracted by the
       // bare-DDL import path)
-      val pk = declaredPk.get(t.toLowerCase)
+      val pk = Some(meta.pk).filter(_.nonEmpty)
         .map(ks => s", PRIMARY KEY (${ks.map(ident).mkString(", ")})")
         .getOrElse("")
-      val cks = tableChecks.getOrElse(t.toLowerCase, Nil)
-        .map(c => s", CHECK ($c)").mkString
+      val cks = meta.checks.map(c => s", CHECK ($c)").mkString
       schema.append(s"CREATE TABLE ${ident(t)}($cols$pk$cks);\n")
       val dataPath = out.resolve(s"$t.${e.format.toLowerCase}").toString
       if (e.format == "PARQUET") {

@@ -21,10 +21,25 @@ package graft.component
   * NAME (missing target columns NULL-fill). `merge_action` in RETURNING
   * renders 'UPDATE' / 'DELETE' / 'INSERT' per affected row.
   *
+  * DuckDB's join-update and join-delete lower onto the same plan, as
+  * one-clause merges over their single source relation (probed v1.0,
+  * pinned in StatementSurfaceSpec; WHERE is required and comma-joined
+  * source lists reject loudly — pre-join them in a subquery):
+  * {{{
+  * UPDATE t [AS a] SET ... FROM src WHERE c  ≡ MERGE INTO t USING src ON c WHEN MATCHED THEN UPDATE SET ...
+  * DELETE FROM t [AS a] USING src WHERE c    ≡ MERGE INTO t USING src ON c WHEN MATCHED THEN DELETE
+  * }}}
+  * Several source rows matching one target row update from ONE
+  * arbitrary match (DuckDB does the same, no error). Column names that
+  * both sides carry must be qualified with the table or alias name.
+  * The lowered forms keep their own statement name in errors and have
+  * no `merge_action`.
+  *
   * Parsing only — [[Executor.executeMerge]] runs the plan: one
   * uid-annotated left join for the matched / not-matched-by-source
-  * branches, one anti-join for the insert branch (the distributed
-  * shuffle-on-key MERGE shape; no per-row path).
+  * branches (one anti-join when every match is deleted), one anti-join
+  * for the insert branch (the distributed shuffle-on-key MERGE shape;
+  * no per-row path).
   */
 object MergeSql {
 
@@ -50,32 +65,75 @@ object MergeSql {
   final case class Clause(idx: Int, kind: Kind, cond: Option[String],
                           action: Action)
 
+  /** `verb` is the statement the user wrote (`MERGE INTO`, or `UPDATE` /
+    * `DELETE FROM` for the lowered join forms): it names errors, and
+    * only a MERGE has the `merge_action` pseudo-column. */
   final case class Parsed(target: String, targetAlias: Option[String],
                           sourceText: String, on: String,
-                          clauses: Seq[Clause])
+                          clauses: Seq[Clause], verb: String = Merge) {
+    def isMerge: Boolean = verb == Merge
+  }
 
-  private val head =
-    ("(?is)^\\s*MERGE\\s+INTO\\s+(`[^`]+`|\"[^\"]+\"|[A-Za-z_][\\w.]*)" +
-      "(?:\\s+(?:AS\\s+)?(?!USING\\b)([A-Za-z_]\\w*))?\\s+USING\\s+").r
+  private val Merge = "MERGE INTO"
 
-  private def unq(s: String): String = {
+  /** `<lead> target [[AS] alias] <kw> ` — the alias may not be `kw`. */
+  private def head(lead: String, kw: String) =
+    (s"(?is)^\\s*$lead\\s+(`[^`]+`|\"[^\"]+\"|[A-Za-z_][\\w.]*)" +
+      s"(?:\\s+(?:AS\\s+)?(?!$kw\\b)([A-Za-z_]\\w*))?\\s+$kw\\s+").r
+  private val mergeHead = head("MERGE\\s+INTO", "USING")
+  private val updateHead = head("UPDATE", "SET")
+  private val deleteHead = head("DELETE\\s+FROM", "USING")
+
+  /** Strip one pair of identifier quotes (`"x"` / `` `x` ``). */
+  private[component] def unq(s: String): String = {
     val t = s.trim
     if ((t.startsWith("\"") && t.endsWith("\"")) ||
       (t.startsWith("`") && t.endsWith("`"))) t.substring(1, t.length - 1)
     else t
   }
 
+  private val lastNamePart = "(\"[^\"]*\"|`[^`]*`|[^.]*)$".r
+
+  /** A `col = expr, ...` SET list → (bare column, expression text) pairs;
+    * a qualified target (`t.col`, `t."a.b"`) keeps its last name part.
+    * None when an item has no `=` or the list is empty. */
+  private[component] def setList(txt: String): Option[Seq[(String, String)]] = {
+    val sets = Dialect.splitTop(txt).filter(_.nonEmpty).map { a =>
+      val eq = Dialect.maskQuoted(a).indexOf('=')
+      if (eq < 0) return None
+      (unq(lastNamePart.findFirstIn(a.substring(0, eq).trim).get),
+        a.substring(eq + 1).trim)
+    }
+    if (sets.isEmpty) None else Some(sets)
+  }
+
+  /** First depth-0 match of `re` in masked text. */
+  private def topLevel(re: String, masked: String) = {
+    val dep = Dialect.depths(masked)
+    re.r.findAllMatchIn(masked).find(m => dep(m.start) == 0)
+  }
+
   def parse(stmt0: String): Option[Parsed] = {
     val stmt = stmt0.trim.stripSuffix(";")
     val masked = Dialect.maskQuoted(stmt)
-    val hm = head.findFirstMatchIn(masked).getOrElse(return None)
+    mergeHead.findFirstMatchIn(masked) match {
+      case Some(hm) => Some(parseMerge(stmt, hm))
+      case None => parseUpdateFrom(stmt, masked)
+        .orElse(deleteHead.findFirstMatchIn(masked).map { hm =>
+          val target = unq(stmt.substring(hm.start(1), hm.end(1)))
+          joinForm("DELETE FROM", target, Option(hm.group(2)),
+            s"DELETE FROM $target USING", "delete empties the table on any " +
+              "non-empty source", stmt.substring(hm.end), Delete)
+        })
+    }
+  }
+
+  private def parseMerge(stmt: String, hm: scala.util.matching.Regex.Match): Parsed = {
     val target = unq(stmt.substring(hm.start(1), hm.end(1)))
     val alias = Option(hm.group(2))
     val rest = stmt.substring(hm.end)
-    val rm = Dialect.maskQuoted(rest)
-    val rd = Dialect.depths(rm)
-    val onM = "(?is)\\bON\\b".r.findAllMatchIn(rm)
-      .find(m => rd(m.start) == 0).getOrElse(throw new UserException(
+    val onM = topLevel("(?is)\\bON\\b", Dialect.maskQuoted(rest))
+      .getOrElse(throw new UserException(
         "MERGE INTO: an ON join condition is required"))
     val sourceText = rest.substring(0, onM.start).trim
     val afterOn = rest.substring(onM.end)
@@ -97,7 +155,39 @@ object MergeSql {
       parseClause(txt, i)
     }
     validate(target, clauses)
-    Some(Parsed(target, alias, sourceText, on, clauses))
+    Parsed(target, alias, sourceText, on, clauses)
+  }
+
+  /** `UPDATE t [AS a] SET ... FROM src WHERE c`; None without a depth-0
+    * FROM (the plain UPDATE path owns the statement) or without a
+    * parseable SET list. */
+  private def parseUpdateFrom(stmt: String, masked: String): Option[Parsed] = {
+    val hm = updateHead.findFirstMatchIn(masked).getOrElse(return None)
+    val target = unq(stmt.substring(hm.start(1), hm.end(1)))
+    val rest = stmt.substring(hm.end)
+    val fm = topLevel("(?is)\\bFROM\\b", masked.substring(hm.end))
+      .getOrElse(return None)
+    setList(rest.substring(0, fm.start)).map(sets =>
+      joinForm("UPDATE", target, Option(hm.group(2)),
+        s"UPDATE $target ... FROM", "update takes an arbitrary source row",
+        rest.substring(fm.end), Update(sets)))
+  }
+
+  /** The lowered join forms' shared tail `src WHERE c` → a one-clause
+    * WHEN MATCHED merge with `c` as its ON. */
+  private def joinForm(verb: String, target: String, alias: Option[String],
+                       what: String, crossJoin: String, body: String,
+                       action: Action): Parsed = {
+    val bm = Dialect.maskQuoted(body)
+    val wm = topLevel("(?is)\\bWHERE\\b", bm).getOrElse(throw new UserException(
+      s"$what: a WHERE join condition is required (an unconditioned " +
+        s"cross-join $crossJoin)"))
+    if (Dialect.splitTop(bm.substring(0, wm.start)).length > 1)
+      throw new UserException(
+        s"$what: only one source relation is supported " +
+          "(pre-join multiple sources in a subquery)")
+    Parsed(target, alias, body.substring(0, wm.start).trim,
+      body.substring(wm.end).trim, Seq(Clause(0, Matched, None, action)), verb)
   }
 
   private def parseClause(txt0: String, idx: Int): Clause = {
@@ -142,16 +232,8 @@ object MergeSql {
     if ("(?is)^UPDATE\\s+SET\\s".r.findFirstIn(masked).isDefined) {
       val setsTxt = txt.substring(
         "(?is)^UPDATE\\s+SET\\s".r.findFirstMatchIn(masked).get.end - 1)
-      val sets = Dialect.splitTop(setsTxt).filter(_.nonEmpty).map { a =>
-        val eq = Dialect.maskQuoted(a).indexOf('=')
-        if (eq < 0) throw new UserException(
-          s"MERGE INTO: UPDATE SET needs col = expr: $a")
-        (unq(a.substring(0, eq).trim.split("\\.").last),
-          a.substring(eq + 1).trim)
-      }
-      if (sets.isEmpty) throw new UserException(
-        "MERGE INTO: UPDATE SET list is empty")
-      Update(sets)
+      Update(setList(setsTxt).getOrElse(throw new UserException(
+        s"MERGE INTO: UPDATE SET needs a col = expr list: $setsTxt")))
     }
     else if ("(?is)^UPDATE\\s*$".r.findFirstIn(masked).isDefined) Update(Nil)
     else if ("(?is)^DELETE\\s*$".r.findFirstIn(masked).isDefined) Delete
@@ -264,16 +346,32 @@ object MergeSql {
     else None
   }
 
-  /** The source relation split into (text-to-run, alias) — same contract
-    * as [[UpdateFromSql.sourceOf]] (bare name with optional alias, or a
-    * parenthesized subquery with a required alias). */
-  def sourceOf(p: Parsed): (String, String) =
-    UpdateFromSql.sourceOf(
-      UpdateFromSql.Parsed(p.target, p.targetAlias, Nil, p.sourceText, ""))
+  /** The source relation split into (text-to-run, alias): a bare name
+    * (optionally aliased) or a parenthesized subquery (alias required —
+    * DuckDB requires one too). */
+  def sourceOf(p: Parsed): (String, String) = {
+    val t = p.sourceText.trim
+    if (t.startsWith("(")) {
+      val close = Dialect.matchingParen(Dialect.maskQuoted(t), 0)
+      val alias = "(?is)^\\s*(?:AS\\s+)?([A-Za-z_]\\w*)\\s*$".r
+        .findFirstMatchIn(t.substring(close + 1))
+        .map(_.group(1)).getOrElse(throw new UserException(
+          s"${p.verb} ${p.target}: a subquery source needs an alias"))
+      (t.substring(1, close), alias)
+    } else {
+      val m = "(?is)^(`[^`]+`|\"[^\"]+\"|[A-Za-z_][\\w.]*)(?:\\s+(?:AS\\s+)?([A-Za-z_]\\w*))?\\s*$".r
+        .findFirstMatchIn(t).getOrElse(throw new UserException(
+          s"${p.verb} ${p.target}: unrecognized source relation '$t'"))
+      val name = unq(m.group(1))
+      (s"SELECT * FROM `${Names.view(name)}`",
+        Option(m.group(2)).getOrElse(name))
+    }
+  }
 
-  /** Static-analysis twin (the [[UpdateFromSql.stub]] shape): an
-    * UpdateTable plan whose EXISTS subquery carries the source — target
-    * is output AND dependency, source is dependency. */
+  /** Static-analysis twin: an UpdateTable plan whose EXISTS subquery
+    * carries the source — target is output AND dependency (the DAG
+    * orders the statement after the target's producer), source is a
+    * dependency. */
   def stub(stmt: String): String =
     parse(stmt) match {
       case Some(p) =>

@@ -29,33 +29,33 @@ object SqlAnalyzer {
       outputs: Set[String],
       statementType: StatementType)
 
-  def analyzeStatement(spark: SparkSession, rewritten: String): Analysis =
-    Try {
-      // PIVOT / ASOF / COPY / CREATE SEQUENCE statements have no Catalyst
-      // spelling; their session-free stubs parse with the same dependency
-      // sets
-      val plan = spark.sessionState.sqlParser.parsePlan(
-        TypeSql.stub(PositionalSql.stub(AsOfSql.stub(Pivot.staticStub(CopyFrom.stub(
-          CopyTo.stub(UnionByNameSql.stub(DescribeSql.stub(SequenceSql.stub(
-            ExportDb.stub(UpsertSql.stub(MergeSql.stub(UpdateFromSql.stub(IndexSql.stub(
-              PrepareSql.stub(ReturningSql.stub(Dialect.alterColumnStub(
-                Dialect.analysisStub(rewritten)))))))))))))))))))
-      fromPlan(plan)
-    }.getOrElse(Analysis(Set.empty, Set.empty, OtherStmt)) match {
-      case a =>
-        // nextval('s')/currval('s') reference the sequence through a
-        // string literal the relation walk can't see — inject it as a
-        // dependency so the DAG orders value users after the CREATE
-        // SEQUENCE producer; user-type names in CAST position likewise
-        // order after CREATE TYPE. Injected OUTSIDE the parse Try: a
-        // cast to a not-yet-registered user type is a Spark PARSE error
-        // (analysis degrades to empty sets) but still needs its ordering
-        // edge — that is exactly the statement that must wait
-        val extra = (SequenceSql.valueDeps(rewritten) ++
-          TypeSql.typeDeps(rewritten)) -- a.outputs
-        if (extra.isEmpty) a
-        else a.copy(dependencies = a.dependencies ++ extra)
-    }
+  /** A rewritten statement's Catalyst-parseable twin: PIVOT / ASOF / COPY
+    * / CREATE SEQUENCE / MERGE / ... have no Catalyst spelling, and their
+    * session-free stubs parse with the same dependency sets. Static
+    * analysis and syntax_check both parse this. */
+  def stub(rewritten: String): String =
+    TypeSql.stub(PositionalSql.stub(AsOfSql.stub(Pivot.staticStub(CopyFrom.stub(
+      CopyTo.stub(UnionByNameSql.stub(DescribeSql.stub(SequenceSql.stub(
+        ExportDb.stub(UpsertSql.stub(MergeSql.stub(IndexSql.stub(
+          PrepareSql.stub(ReturningSql.stub(Dialect.alterColumnStub(
+            Dialect.analysisStub(rewritten)))))))))))))))))
+
+  def analyzeStatement(spark: SparkSession, rewritten: String): Analysis = {
+    val a = Try(fromPlan(spark.sessionState.sqlParser.parsePlan(stub(rewritten))))
+      .getOrElse(Analysis(Set.empty, Set.empty, OtherStmt))
+    // nextval('s')/currval('s') reference the sequence through a string
+    // literal the relation walk can't see — inject it as a dependency so
+    // the DAG orders value users after the CREATE SEQUENCE producer;
+    // user-type names in CAST position likewise order after CREATE TYPE.
+    // Injected OUTSIDE the parse Try: a cast to a not-yet-registered user
+    // type is a Spark PARSE error (analysis degrades to empty sets) but
+    // still needs its ordering edge — that is exactly the statement that
+    // must wait
+    val extra = (SequenceSql.valueDeps(rewritten) ++
+      TypeSql.typeDeps(rewritten)) -- a.outputs
+    if (extra.isEmpty) a
+    else a.copy(dependencies = a.dependencies ++ extra)
+  }
 
   /** Analyze a full (multi-statement) script. */
   def analyzeScript(spark: SparkSession, script: String): Analysis =

@@ -37,13 +37,6 @@ object UpsertSql {
   private val insertTarget =
     "(?is)^\\s*INSERT\\s+INTO\\s+`?([^`\\s(]+)`?".r
 
-  private def unq(s: String): String = {
-    val t = s.trim
-    if ((t.startsWith("\"") && t.endsWith("\"")) ||
-      (t.startsWith("`") && t.endsWith("`"))) t.substring(1, t.length - 1)
-    else t
-  }
-
   def parse(stmt0: String): Option[Parsed] = {
     val stmt = stmt0.trim.stripSuffix(";")
     val masked = Dialect.maskQuoted(stmt)
@@ -60,7 +53,7 @@ object UpsertSql {
       return Some(Parsed(head, target, None, action))
     }
     val target = insertTarget.findFirstMatchIn(masked)
-      .map(m => unq(stmt.substring(m.start(1), m.end(1)))).getOrElse(return None)
+      .map(m => MergeSql.unq(stmt.substring(m.start(1), m.end(1)))).getOrElse(return None)
     val dep = Dialect.depths(masked)
     val oc = "(?is)\\bON\\s+CONFLICT\\b".r.findAllMatchIn(masked)
       .find(m => dep(m.start) == 0).getOrElse(return None)
@@ -70,7 +63,7 @@ object UpsertSql {
       if (tail.startsWith("(")) {
         val close = Dialect.matchingParen(Dialect.maskQuoted(tail), 0)
         if (close < 0) return None
-        val cols = tail.substring(1, close).split(",").map(unq).toSeq
+        val cols = tail.substring(1, close).split(",").map(MergeSql.unq).toSeq
         tail = tail.substring(close + 1).trim
         Some(cols)
       } else None
@@ -88,17 +81,9 @@ object UpsertSql {
             (rest.substring(0, w.start), Some(rest.substring(w.end).trim))
           case None => (rest, None)
         }
-        val sets = Dialect.splitTop(setsTxt).filter(_.nonEmpty).map { a =>
-          val am = Dialect.maskQuoted(a)
-          val eq = am.indexOf('=')
-          if (eq < 0) return None
-          // SET lhs may carry the table qualifier — DuckDB resolves it
-          // to the target; only the bare column name matters here
-          val lhs = unq(a.substring(0, eq).trim).split("\\.").last
-          (unq(lhs), a.substring(eq + 1).trim)
-        }
-        if (sets.isEmpty) return None
-        Update(sets, whereTxt)
+        // SET lhs may carry the table qualifier — DuckDB resolves it to
+        // the target; only the bare column name matters here
+        Update(MergeSql.setList(setsTxt).getOrElse(return None), whereTxt)
       }
     Some(Parsed(head, target, keyCols, action))
   }

@@ -42,6 +42,10 @@ class DialectSpec extends AnyFunSuite {
     // non-integral casts pass through
     assert(Dialect.rewrite("SELECT b::DATE FROM t") ==
       "SELECT b::DATE FROM t")
+    // every cast site rewrites, however many the statement has
+    val wide = Dialect.rewrite(
+      (1 to 300).map(i => s"c$i::INTEGER").mkString("SELECT ", ", ", " FROM t"))
+    assert("duck_icast\\(".r.findAllIn(wide).length == 300, wide)
   }
 
   test("escaped quote inside string literal survives") {
@@ -323,4 +327,10 @@ class DialectSpec extends AnyFunSuite {
     assert(Names.original(v) == "out-table.csv")
   }
 
+  test("frame triage scans only OVER spans: a long statement after `groups` prepares") {
+    val sql = "SELECT row_number() OVER (ORDER BY a) AS rn FROM t WHERE groups = 1 AND " +
+      (1 to 1000).map(i => s"c$i = $i").mkString(" AND ")
+    val out = Dialect.prepare(sql)
+    assert(out.length == 1 && out.head.endsWith("c1000 = 1000"), out)
+  }
 }

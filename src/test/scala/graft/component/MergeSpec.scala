@@ -2,6 +2,11 @@ package graft.component
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+
 import graft.SparkSpec
 
 /** MERGE INTO — spec-pinned DuckDB 1.4 semantics ([[MergeSql]]; the
@@ -246,7 +251,7 @@ class MergeSpec extends SparkSpec {
       "MERGE INTO m_t USING m_s ON m_t.k = m_s.k " +
         "WHEN MATCHED THEN UPDATE SET v = m_s.v " +
         "WHEN NOT MATCHED THEN INSERT VALUES (m_s.k, m_s.v)"))
-    // the UpdateFromSql.stub convention: target is output AND dependency
+    // the MergeSql.stub convention: target is output AND dependency
     // (the DAG orders the MERGE after the target's producer)
     assert(an.outputs == Set("m_t") && an.dependencies == Set("m_t", "m_s"), an)
     val an2 = SqlAnalyzer.analyzeStatement(spark, Dialect.rewrite(
@@ -261,5 +266,108 @@ class MergeSpec extends SparkSpec {
         |]}]}, "storage": {}}""".stripMargin)
     assert(Actions.syntaxCheck(spark, cfg).isEmpty,
       Actions.syntaxCheck(spark, cfg))
+  }
+
+  /** The executed plans of every query `body` runs. Listener events
+    * arrive in order on one bus, so once a marker query run after `body`
+    * has been seen, every earlier one has too. */
+  private def executedPlans(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val marker = s"plans_done_${System.nanoTime()}"
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.sql(s"SELECT 1 AS $marker").collect()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(_.contains(marker)) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    val plans = seen.asScala.toSeq
+    assert(plans.exists(_.contains(marker)), "listener never saw the marker")
+    plans.filterNot(_.contains(marker))
+  }
+
+  test("UPDATE ... FROM runs on the MERGE plan: key-unique source skips the window") {
+    val ex = mkEx()
+    def run(sql: String) = ex.runStatement(Dialect.rewrite(sql))
+    run("CREATE TABLE uf_fast (k INT, v INT)")
+    run("INSERT INTO uf_fast VALUES (1, 10), (2, 20), (3, 30)")
+    run("CREATE TABLE uf_fast_s (k INT, nv INT)")
+    run("INSERT INTO uf_fast_s VALUES (2, 200), (3, 300)")
+    val plans = executedPlans(run("UPDATE uf_fast SET v = uf_fast_s.nv " +
+      "FROM uf_fast_s WHERE uf_fast.k = uf_fast_s.k"))
+    assert(rows("uf_fast") == Seq((1, 10), (2, 200), (3, 300)))
+    assert(plans.nonEmpty)
+    assert(!plans.exists("\\bWindow\\b".r.findFirstIn(_).isDefined),
+      plans.mkString("\n----\n"))
+    // a duplicate key on the source keeps the window dedup (one row out)
+    run("INSERT INTO uf_fast_s VALUES (3, 301)")
+    val dedup = executedPlans(run("UPDATE uf_fast SET v = uf_fast_s.nv " +
+      "FROM uf_fast_s WHERE uf_fast.k = uf_fast_s.k"))
+    assert(dedup.exists("\\bWindow\\b".r.findFirstIn(_).isDefined))
+    val got = rows("uf_fast")
+    assert(got.length == 3 && Set(300, 301)(got(2)._2), got)
+  }
+
+  test("DELETE ... USING and MATCHED THEN DELETE run as one left-anti join, no probe") {
+    val ex = mkEx()
+    def run(sql: String) = ex.runStatement(Dialect.rewrite(sql))
+    run("CREATE TABLE du_anti (k INT, v INT)")
+    run("INSERT INTO du_anti VALUES (1, 1), (2, 2), (3, 3), (4, 4)")
+    run("CREATE TABLE du_anti_s (k INT)")
+    run("INSERT INTO du_anti_s VALUES (2), (2), (4)")
+    def antiOnly(plans: Seq[String]): Unit = {
+      // an adaptive plan prints its final and initial forms: read the final
+      val all = plans.map(_.split("== Initial Plan ==").head).mkString("\n----\n")
+      // the write carries the only join; no aggregate = no uniqueness probe
+      assert("LeftAnti".r.findAllIn(all).length == 1, all)
+      assert(!all.contains("LeftOuter") && !all.contains("HashAggregate") &&
+        "\\bWindow\\b".r.findFirstIn(all).isEmpty, all)
+    }
+    antiOnly(executedPlans(run(
+      "DELETE FROM du_anti USING du_anti_s WHERE du_anti.k = du_anti_s.k")))
+    assert(rows("du_anti") == Seq((1, 1), (3, 3)))
+    antiOnly(executedPlans(run("MERGE INTO du_anti USING " +
+      "(SELECT 3 AS k) s ON du_anti.k = s.k WHEN MATCHED THEN DELETE")))
+    assert(rows("du_anti") == Seq((1, 1)))
+  }
+
+  test("UPDATE ... FROM / DELETE ... USING: RETURNING has no merge_action, errors name the statement") {
+    val ex = mkEx()
+    def run(sql: String) = ex.runStatement(Dialect.rewrite(sql))
+    run("CREATE TABLE lw_t (k INT, v INT)")
+    run("INSERT INTO lw_t VALUES (1, 1), (2, 2)")
+    run("CREATE TABLE lw_s (k INT, nv INT)")
+    run("INSERT INTO lw_s VALUES (1, 10)")
+    val ret = run("UPDATE lw_t SET v = lw_s.nv FROM lw_s WHERE lw_t.k = lw_s.k " +
+      "RETURNING *").get
+    assert(ret.columns.toSeq == Seq("k", "v"))
+    assert(ret.collect().map(r => (r.getInt(0), r.getInt(1))).toSeq == Seq((1, 10)))
+    val del = run("DELETE FROM lw_t USING lw_s WHERE lw_t.k = lw_s.k RETURNING *").get
+    assert(del.columns.toSeq == Seq("k", "v"))
+    assert(del.collect().map(r => (r.getInt(0), r.getInt(1))).toSeq == Seq((1, 10)))
+    intercept[Exception] {
+      run("UPDATE lw_t SET v = lw_s.nv FROM lw_s WHERE lw_t.k = lw_s.k " +
+        "RETURNING merge_action").get.collect()
+    }
+    intercept[Exception] {
+      run("DELETE FROM lw_t USING lw_s WHERE lw_t.k = lw_s.k " +
+        "RETURNING merge_action").get.collect()
+    }
+    def named(sql: String, verb: String): Unit = {
+      val msg = intercept[UserException](run(sql)).getMessage
+      assert(msg.startsWith(verb) && !msg.contains("MERGE"), msg)
+    }
+    named("UPDATE lw_t SET nope = lw_s.nv FROM lw_s WHERE lw_t.k = lw_s.k",
+      "UPDATE lw_t")
+    named("UPDATE lw_missing SET v = lw_s.nv FROM lw_s " +
+      "WHERE lw_missing.k = lw_s.k", "UPDATE")
+    named("DELETE FROM lw_missing USING lw_s WHERE lw_missing.k = lw_s.k",
+      "DELETE")
   }
 }

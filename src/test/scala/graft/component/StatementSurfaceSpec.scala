@@ -1951,4 +1951,17 @@ class StatementSurfaceSpec extends SparkSpec {
         |]}]}, "storage": {}}""".stripMargin)
     assert(Actions.syntaxCheck(spark, cfg).isEmpty)
   }
+
+  test("syntax_check parses what the executor runs: CREATE TYPE, ALTER COLUMN forms") {
+    val issues = Seq(
+        "CREATE TYPE mood AS ENUM ('a', 'b')",
+        "ALTER TABLE t ALTER COLUMN c TYPE BIGINT USING c * 2",
+        "ALTER TABLE t ADD COLUMN IF NOT EXISTS d INT DEFAULT 3").map { stmt =>
+      stmt -> Actions.syntaxCheck(spark, Config.parse(
+        s"""{"parameters": {"blocks": [{"name": "B", "codes": [
+           |  {"name": "q", "script": ["$stmt"]}
+           |]}]}, "storage": {}}""".stripMargin))
+    }.filter(_._2.nonEmpty)
+    assert(issues.isEmpty, issues.mkString("\n"))
+  }
 }
