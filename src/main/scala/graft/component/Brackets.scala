@@ -65,12 +65,15 @@ object Brackets {
                       stmt.substring(close + 1)
                 // else: leave for the parser; keep scanning past it
               }
-            } else return {
-              if (isSubscript(stmt, masked, i))
-                rewriteSubscript(stmt, masked, i, close)
-              else comprehension(stmt, masked, i, close).getOrElse(
+            } else if (!isSubscript(stmt, masked, i))
+              return comprehension(stmt, masked, i, close).getOrElse(
                 stmt.substring(0, i) + "array(" +
                   stmt.substring(i + 1, close) + ")" + stmt.substring(close + 1))
+            else Dialect.operandStart(stmt, masked, i, Dialect.Postfix) match {
+              case Some(start) => return rewriteSubscript(stmt, masked, start, i, close)
+              // no subscriptable base (a number, a keyword): leave the
+              // pair for Spark's parser; keep scanning past it
+              case None =>
             }
           }
         case '{' =>
@@ -124,43 +127,6 @@ object Brackets {
     !keywordBefore(word)
   }
 
-  /** Start index of the primary expression the subscript applies to:
-    * scan back over identifier chains (a.b.c), call/paren groups and
-    * earlier subscripts. */
-  private def baseStart(stmt: String, masked: String, open: Int): Int = {
-    var j = open - 1
-    while (j >= 0 && stmt.charAt(j).isWhitespace) j -= 1
-    var cont = true
-    while (cont && j >= 0) {
-      stmt.charAt(j) match {
-        case ')' | ']' =>
-          // matching opener in masked (quotes blanked, parens structural)
-          val found =
-            if (stmt.charAt(j) == ')') Dialect.openingParen(masked, j)
-            else Dialect.openingParen(masked, j, '[', ']')
-          if (found < 0) { cont = false } else j = found - 1
-        case '\'' | '"' | '`' =>
-          val q = stmt.charAt(j)
-          var k = j - 1
-          while (k >= 0 && stmt.charAt(k) != q) k -= 1
-          j = k - 1
-          cont = false // a literal/quoted name is the chain's head
-        case c if c.isLetterOrDigit || c == '_' =>
-          while (j >= 0 && {
-            val ch = stmt.charAt(j); ch.isLetterOrDigit || ch == '_'
-          }) j -= 1
-          // a dot continues the chain (qualified name / field access);
-          // an identifier head may also be a function name — the paren
-          // case above already consumed the call group, so here a bare
-          // identifier ends the chain unless a dot precedes it
-          if (j >= 0 && stmt.charAt(j) == '.') j -= 1 else cont = false
-        case '.' => j -= 1
-        case _ => cont = false
-      }
-    }
-    j + 1
-  }
-
   /** Type names whose trailing `[]` spells an ARRAY type in DuckDB. */
   private val typeWords = Set(
     "int", "integer", "bigint", "smallint", "tinyint", "hugeint",
@@ -206,9 +172,10 @@ object Brackets {
   private val nonNegIntLit = "^\\d+$".r
   private val negIntLit = "^-\\s*(\\d+)$".r
 
-  private def rewriteSubscript(stmt: String, masked: String,
+  /** The subscript or slice `[open, close]` over the base starting at
+    * `start` (the dialect's postfix operand, [[Dialect.operandStart]]). */
+  private def rewriteSubscript(stmt: String, masked: String, start: Int,
                                open: Int, close: Int): String = {
-    val start = baseStart(stmt, masked, open)
     val base = stmt.substring(start, open).trim
     val body = stmt.substring(open + 1, close)
     val mbody = masked.substring(open + 1, close)

@@ -2,7 +2,8 @@ package graft.component
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 
 /** The end-to-end transformation component over a Keboola-style data
   * directory (reference `src/component.py:36-56` lifecycle):
@@ -62,7 +63,11 @@ object Component {
           s"$resolved (running Spark ${spark.version})")
     // a registered temp function shadows the built-in version() for this
     // session; re-registered per run so each config's pick wins
-    spark.udf.register("version", () => Versions.reportedVersion(resolved))
+    GraftSqlBridge.registerFunction(spark, "version", args => {
+      if (args.nonEmpty)
+        throw new UserException(s"version() takes no arguments, got ${args.length}")
+      Literal(Versions.reportedVersion(resolved))
+    })
     // graft's native SQL functions (dot_f32, simhash64, ...) ride the
     // session's extensions (graft.GraftSession); the DuckDB names users
     // carry over from the reference (list_transform, epoch_us, ...) bind

@@ -46,10 +46,6 @@ object Dialect {
       "or a (tag VARCHAR, value VARCHAR) pair"),
     "ALTER_SEQUENCE" -> ("ALTER SEQUENCE is not supported: re-create the " +
       "sequence (CREATE OR REPLACE SEQUENCE) with the new parameters"),
-    "ARITH_LIMIT" -> ("statement exceeds the arithmetic-rewrite limit " +
-      "(512 `/`/`%` or 256 `//`/`^` operators in one statement): the " +
-      "engine refuses to run the tail with different division semantics " +
-      "— split the expression across intermediate columns or statements"),
     "FRAME_GROUPS" -> ("this window frame GROUPS form is not rewritable: " +
       "GROUPS executes via a dense_rank re-ordering (any function; " +
       "offset bounds need a plain SELECT block without GROUP BY / " +
@@ -90,6 +86,9 @@ object Dialect {
 
   private val tableKeyword =
     """(?is)\b(FROM|JOIN|INTO|UPDATE|TABLE|VIEW|PIVOT|UNPIVOT)\s*$""".r
+  /** MERGE's and DELETE's `USING <source>` is table position too; a
+    * JOIN's `USING (k)` never has a name right after the keyword. */
+  private val usingSource = """(?is)\bUSING\s*$""".r
 
   /** Emit a bare-filename file view with DuckDB's default alias (basename
     * up to the FIRST dot — probed: `FROM 'a.b.csv'` binds qualifier `a`,
@@ -363,7 +362,7 @@ object Dialect {
         val ccIt = colonCast.findAllMatchIn(masked)
         while (replaced.isEmpty && ccIt.hasNext) {
           val m = ccIt.next()
-          intDivLeftStart(stmt, masked, m.start, chain = false).foreach { ls =>
+          operandStart(stmt, masked, m.start, Primary).foreach { ls =>
             val exprTxt = stmt.substring(ls, m.start).trim
             replaced = Some(stmt.substring(0, ls) +
               s"duck_icast($exprTxt, '${m.group(1).toUpperCase}')" +
@@ -515,6 +514,12 @@ object Dialect {
     // position as usual.
     val isCopyStmt = "(?is)^\\s*COPY\\b".r.findFirstIn(stmt).isDefined
     val isExecuteStmt = "(?is)^\\s*EXECUTE\\b".r.findFirstIn(stmt).isDefined
+    val usingIsTable = "(?is)^\\s*(MERGE|DELETE)\\b".r.findFirstIn(stmt).isDefined
+    def inTablePosition: Boolean = {
+      val ctx = context.toString
+      tableKeyword.findFirstIn(ctx).isDefined ||
+        usingIsTable && usingSource.findFirstIn(ctx).isDefined
+    }
     // Plain column-definition DDL (`CREATE TABLE t (b BLOB, ...)`,
     // ALTER TABLE): every bare BLOB-family word is a TYPE there. In any
     // other statement the word only maps in cast positions — a COLUMN
@@ -628,7 +633,7 @@ object Dialect {
         plain.append(stmt.substring(i)); i = stmt.length
       } else if (c == '"') {
         val name = stmt.substring(i + 1, end - 1)
-        val inTablePos = tableKeyword.findFirstIn(context.toString).isDefined
+        val inTablePos = inTablePosition
         flushPlain()
         // table names must be sanitized (temp views reject dots); quoted
         // COLUMN names are backticked verbatim — they exist as-is in the
@@ -647,7 +652,7 @@ object Dialect {
       } else if (c == '\'') {
         val body = stmt.substring(i + 1, math.max(i + 1, end - 1))
         val isIdentifier = !body.contains("''") &&
-          tableKeyword.findFirstIn(context.toString).isDefined &&
+          inTablePosition &&
           !(isCopyStmt && parenDepth == 0)
         flushPlain()
         // a path-shaped quoted token in table position is the bare-filename
@@ -965,6 +970,52 @@ object Dialect {
     stmt
   }
 
+  /** The one lowering loop of the operator passes (`.f()`, `->`, `^`,
+    * `//`, `/`, `%`, the match operators). `site` finds the operators on
+    * the masked statement; `lower` answers the site found at or after a
+    * cursor with the `(from, to, text)` splice that replaces it, or None
+    * to skip past it. Every lowering is a call over operand text that
+    * already held its own sites, so each one removes a site and adds
+    * none at or after the cursor, and between lowerings the cursor only
+    * moves forward: the statement's site count bounds the loop, with no
+    * cap to fall off. Scanning resumes at the splice start, where the
+    * operands' own sites come next (a chain folds left: `a / b / c`). */
+  private[component] def lowerOperators(stmt0: String, site: scala.util.matching.Regex)(
+      lower: (String, String, java.util.regex.MatchResult) => Option[(Int, Int, String)])
+      : String = {
+    var stmt = stmt0
+    var masked = maskQuoted(stmt)
+    var m = site.pattern.matcher(masked)
+    var cursor = 0
+    while (m.find(cursor)) {
+      lower(stmt, masked, m) match {
+        case Some((from, to, text)) =>
+          stmt = stmt.substring(0, from) + text + stmt.substring(to)
+          masked = maskQuoted(stmt)
+          m = site.pattern.matcher(masked)
+          cursor = from
+        case None => cursor = m.end
+      }
+    }
+    stmt
+  }
+
+  /** Extents of the binary operator at `m`: the left operand at `level`,
+    * the right operand one primary ([[operandEnd]]). None = unparsable. */
+  private def operands(stmt: String, masked: String,
+      m: java.util.regex.MatchResult, level: Int): Option[(Int, Int)] =
+    for {
+      ls <- operandStart(stmt, masked, m.start, level)
+      re <- operandEnd(stmt, masked, m.end)
+    } yield (ls, re)
+
+  /** The splice `fn(left, right)` over the operands `[ls, op)` and
+    * `[op end, re)`. */
+  private def call(stmt: String, m: java.util.regex.MatchResult, ls: Int,
+      re: Int, fn: String): (Int, Int, String) =
+    (ls, re, s"$fn(${stmt.substring(ls, m.start).trim}, " +
+      s"${stmt.substring(m.end, re).trim})")
+
   /** DuckDB's `//` operator → the registry's `divide()` (integer division
     * on two integral operands, plain division otherwise — probed: 7//2=3,
     * 7.5//2=3.75). Spark's parser has no `//` spelling, and `DIV` would
@@ -972,30 +1023,15 @@ object Dialect {
     * lowering is a function call over scanned operand extents:
     * the LEFT extent greedily consumes a same-precedence multiplicative
     * chain (`a * b // c` is `(a*b)//c` — left-associative), the RIGHT
-    * extent exactly one primary (`a // b * c` is `(a//b)*c`). Leftmost
-    * `//` first, then rescan — a chain folds left. An extent the scanner
-    * cannot parse leaves the text for Spark's parser to reject loudly
-    * (never a silent mis-grouping). Runs after Brackets/DotCall/JsonArrows
-    * so subscripts and arrows are already plain calls. */
-  private[component] def rewriteIntDiv(stmt0: String): String = {
-    var stmt = stmt0
-    var guard = 0
-    while (guard < 256) {
-      guard += 1
-      val masked = maskQuoted(stmt)
-      val op = masked.indexOf("//")
-      if (op < 0) return stmt
-      (intDivLeftStart(stmt, masked, op), intDivRightEnd(stmt, masked, op + 2)) match {
-        case (Some(ls), Some(re)) =>
-          val left = stmt.substring(ls, op).trim
-          val right = stmt.substring(op + 2, re).trim
-          stmt = stmt.substring(0, ls) + s"divide($left, $right)" +
-            stmt.substring(re)
-        case _ => return stmt
-      }
+    * extent exactly one primary (`a // b * c` is `(a//b)*c`). An extent
+    * the scanner cannot parse skips that operator and leaves its text
+    * for Spark's parser to reject loudly (never a silent mis-grouping).
+    * Runs after Brackets/DotCall/JsonArrows so subscripts and arrows are
+    * already plain calls. */
+  private[component] def rewriteIntDiv(stmt: String): String =
+    lowerOperators(stmt, "//".r) { (stmt, masked, m) =>
+      operands(stmt, masked, m, Mul).map { case (ls, re) => call(stmt, m, ls, re, "divide") }
     }
-    rejectSentinel("ARITH_LIMIT") // guard exhausted: refuse, never a silent semantic tail
-  }
 
   /** DuckDB types ALL `/` division DOUBLE (probed v1.0:
     * `typeof(dec(10,2)/dec(10,2))` = DOUBLE; FLOAT/FLOAT stays FLOAT)
@@ -1012,6 +1048,13 @@ object Dialect {
     * every surviving `/` is single; comments and quoted regions are
     * masked. Statement-text-only by design: internal Column-API
     * division keeps Spark semantics (the duck_icast scope rule). */
+  private[component] def rewriteDiv(stmt: String): String =
+    lowerOperators(stmt, "(?<!/)/(?!/)".r) { (stmt, masked, m) =>
+      operands(stmt, masked, m, Mul).map { case (ls, re) =>
+        call(stmt, m, extendIntervalLiteral(stmt, masked, ls), re, "duck_div")
+      }
+    }
+
   /** The operand scanners see one PRIMARY, but `INTERVAL 2 DAY / 2`'s
     * left operand is the three-token interval literal — extend a left
     * extent backwards over `INTERVAL [<digits>]` so the literal travels
@@ -1040,38 +1083,6 @@ object Dialect {
     ls // no INTERVAL keyword: keep the plain extent
   }
 
-  private[component] def rewriteDiv(stmt0: String): String = {
-    var stmt = stmt0
-    var from = 0
-    var guard = 0
-    while (guard < 512) {
-      guard += 1
-      val masked = maskQuoted(stmt)
-      var op = -1
-      var i = math.max(from, 0)
-      while (op < 0 && i < masked.length) {
-        if (masked.charAt(i) == '/' &&
-            (i == 0 || masked.charAt(i - 1) != '/') &&
-            (i + 1 >= masked.length || masked.charAt(i + 1) != '/')) op = i
-        i += 1
-      }
-      if (op < 0) return stmt
-      (intDivLeftStart(stmt, masked, op), intDivRightEnd(stmt, masked, op + 1)) match {
-        case (Some(ls0), Some(re)) =>
-          val ls = extendIntervalLiteral(stmt, masked, ls0)
-          val left = stmt.substring(ls, op).trim
-          val right = stmt.substring(op + 1, re).trim
-          stmt = stmt.substring(0, ls) + s"duck_div($left, $right)" +
-            stmt.substring(re)
-          // text before ls is unchanged and already scanned; the
-          // replacement itself contains no bare '/'
-          from = ls
-        case _ => from = op + 1
-      }
-    }
-    rejectSentinel("ARITH_LIMIT") // guard exhausted: refuse, never a silent semantic tail
-  }
-
   /** DuckDB yields NULL on `x % 0` where Spark's ANSI mode raises
     * DIVIDE_BY_ZERO (probed v1.0) — `%` in statement text routes to the
     * registry's `duck_mod` ([[graft.functions.DuckMod]]: Spark-identical
@@ -1083,38 +1094,22 @@ object Dialect {
     * preceded by the LIMIT/SAMPLE keyword, which is exactly the guard
     * (a `%` whose right extent is unparsable — end of statement,
     * OFFSET, a sample-method paren — is also left alone). */
-  private[component] def rewriteMod(stmt0: String): String = {
-    var stmt = stmt0
-    var from = 0
-    var guard = 0
-    while (guard < 512) {
-      guard += 1
-      val masked = maskQuoted(stmt)
-      val op = masked.indexOf('%', math.max(from, 0))
-      if (op < 0) return stmt
-      def isPercentShorthand(ls: Int): Boolean = {
-        if (!stmt.substring(ls, op).trim.matches("[0-9]+(\\.[0-9]+)?"))
-          return false
-        var j = ls - 1
-        while (j >= 0 && stmt.charAt(j).isWhitespace) j -= 1
-        val e = j
-        while (j >= 0 && (stmt.charAt(j).isLetter || stmt.charAt(j) == '_')) j -= 1
-        val w = if (e > j) stmt.substring(j + 1, e + 1).toLowerCase else ""
-        w == "limit" || w == "sample" || w == "tablesample"
-      }
-      (intDivLeftStart(stmt, masked, op), intDivRightEnd(stmt, masked, op + 1)) match {
-        case (Some(ls0), Some(re)) if !isPercentShorthand(ls0) =>
-          val ls = extendIntervalLiteral(stmt, masked, ls0)
-          val left = stmt.substring(ls, op).trim
-          val right = stmt.substring(op + 1, re).trim
-          stmt = stmt.substring(0, ls) + s"duck_mod($left, $right)" +
-            stmt.substring(re)
-          from = ls
-        case _ => from = op + 1
-      }
+  private[component] def rewriteMod(stmt: String): String =
+    lowerOperators(stmt, "%".r) { (stmt, masked, m) =>
+      def isPercentShorthand(ls: Int): Boolean =
+        stmt.substring(ls, m.start).trim.matches("[0-9]+(\\.[0-9]+)?") && {
+          var j = ls - 1
+          while (j >= 0 && stmt.charAt(j).isWhitespace) j -= 1
+          val e = j
+          while (j >= 0 && (stmt.charAt(j).isLetter || stmt.charAt(j) == '_')) j -= 1
+          val w = if (e > j) stmt.substring(j + 1, e + 1).toLowerCase else ""
+          w == "limit" || w == "sample" || w == "tablesample"
+        }
+      operands(stmt, masked, m, Mul).filterNot { case (ls, _) => isPercentShorthand(ls) }
+        .map { case (ls, re) =>
+          call(stmt, m, extendIntervalLiteral(stmt, masked, ls), re, "duck_mod")
+        }
     }
-    rejectSentinel("ARITH_LIMIT") // guard exhausted: refuse, never a silent semantic tail
-  }
 
   /** DuckDB's POWER operators `^` and `**` → `power()` calls. This one
     * cannot ride the leave-alone contract: Spark parses `^` as bitwise
@@ -1129,41 +1124,15 @@ object Dialect {
     * replaced by an unresolvable identifier so analysis fails LOUDLY —
     * never left for Spark's XOR. `2^-3` is permissive here (v1.0's
     * parser fuses `^-` into an unknown operator and errors; `2**-3`
-    * works there — one rule serves both spellings). Runs BEFORE
+    * works there — one rule serves both spellings). `^@` is DuckDB's
+    * starts-with operator, left for rewriteMatchOps. Runs BEFORE
     * rewriteIntDiv so `2^3//2` folds as (2^3)//2, the probed grouping. */
-  private[component] def rewritePow(stmt0: String): String = {
-    var stmt = stmt0
-    var guard = 0
-    while (guard < 256) {
-      guard += 1
-      val masked = maskQuoted(stmt)
-      val star2 = masked.indexOf("**")
-      // `^@` is DuckDB's starts-with operator, not power — leave it for
-      // rewriteMatchOps (which runs after this pass)
-      val caret = {
-        var c = masked.indexOf("^")
-        while (c >= 0 && c + 1 < masked.length && masked.charAt(c + 1) == '@')
-          c = masked.indexOf("^", c + 2)
-        c
-      }
-      val (op, len) =
-        if (star2 >= 0 && (caret < 0 || star2 < caret)) (star2, 2)
-        else if (caret >= 0) (caret, 1)
-        else return stmt
-      (intDivLeftStart(stmt, masked, op, chain = false),
-        intDivRightEnd(stmt, masked, op + len)) match {
-        case (Some(ls), Some(re)) =>
-          val left = stmt.substring(ls, op).trim
-          val right = stmt.substring(op + len, re).trim
-          stmt = stmt.substring(0, ls) + s"power($left, $right)" +
-            stmt.substring(re)
-        case _ =>
-          stmt = stmt.substring(0, op) + " __graft_power_unparsable " +
-            stmt.substring(op + len)
-      }
+  private[component] def rewritePow(stmt: String): String =
+    lowerOperators(stmt, "\\*\\*|\\^(?!@)".r) { (stmt, masked, m) =>
+      Some(operands(stmt, masked, m, Primary)
+        .map { case (ls, re) => call(stmt, m, ls, re, "power") }
+        .getOrElse((m.start, m.end, " __graft_power_unparsable ")))
     }
-    rejectSentinel("ARITH_LIMIT") // guard exhausted: refuse, never a silent semantic tail
-  }
 
   /** Regex / glob MATCH operators with no Spark spelling — `~` / `!~`
     * (regexp FULL match, probed: 'abc' ~ 'b' is false), `~~~` / `!~~~`
@@ -1181,49 +1150,27 @@ object Dialect {
     ("(?i)~~~|!~(?!~)|(?<![~!])~(?![~*])|\\^@|" +
       "\\bNOT\\s+SIMILAR\\s+TO\\b|\\bSIMILAR\\s+TO\\b|\\bGLOB\\b").r
 
-  private[component] def rewriteMatchOps(stmt0: String): String = {
-    var stmt = stmt0
-    var guard = 0
-    var changed = true
-    while (changed && guard < 256) {
-      guard += 1
-      changed = false
-      val masked = maskQuoted(stmt)
-      val hit = matchOpRe.findAllMatchIn(masked).flatMap { m =>
-        val op: Option[(String, Boolean)] =
-          m.matched.toUpperCase.replaceAll("\\s+", " ") match {
-            case "~" | "SIMILAR TO" => Some(("regexp_full_match", false))
-            case "!~" | "NOT SIMILAR TO" => Some(("regexp_full_match", true))
-            // DuckDB's starts-with operator (probed v1.0: 'abc' ^@ 'ab');
-            // rewritePow skips `^@` so it survives to this pass
-            case "^@" => Some(("startswith", false))
-            // no negated glob spelling: DuckDB v1.0 has neither !~~~
-            // nor NOT GLOB (probed parse errors)
-            case "~~~" | "GLOB" => Some(("duck_glob", false))
-            case _ => None
-          }
-        // probed associativity: these operators sit at the arithmetic
-        // level, LEFT-associative — `'a' || 'bc' ~ 'abc'` matches the
-        // concat, but `'abc' ~ 'a' || 'bc'` is ('abc' ~ 'a') || 'bc'
-        // and `5 ~ 2 + 3` is (5 ~ 2) + 3. So the left extent crosses
-        // the chain, the right extent is ONE primary.
-        for {
-          (fn, negate) <- op
-          ls <- intDivLeftStart(stmt, masked, m.start, additive = true)
-          re <- intDivRightEnd(stmt, masked, m.end)
-        } yield (m, ls, re, fn, negate)
-      }.find(_ => true) // first occurrence whose extents parse
-      hit.foreach { case (m, ls, re, fn, negate) =>
-        val left = stmt.substring(ls, m.start).trim
-        val right = stmt.substring(m.end, re).trim
-        val call = s"$fn($left, $right)"
-        stmt = stmt.substring(0, ls) +
-          (if (negate) s"(NOT $call)" else call) + stmt.substring(re)
-        changed = true
+  private[component] def rewriteMatchOps(stmt: String): String =
+    lowerOperators(stmt, matchOpRe) { (stmt, masked, m) =>
+      val (fn, negate) = m.group.toUpperCase.replaceAll("\\s+", " ") match {
+        case "~" | "SIMILAR TO" => ("regexp_full_match", false)
+        case "!~" | "NOT SIMILAR TO" => ("regexp_full_match", true)
+        // DuckDB's starts-with operator (probed v1.0: 'abc' ^@ 'ab')
+        case "^@" => ("startswith", false)
+        // no negated glob spelling: DuckDB v1.0 has neither !~~~
+        // nor NOT GLOB (probed parse errors)
+        case _ => ("duck_glob", false) // ~~~ | GLOB
+      }
+      // probed associativity: these operators sit at the arithmetic
+      // level, LEFT-associative — `'a' || 'bc' ~ 'abc'` matches the
+      // concat, but `'abc' ~ 'a' || 'bc'` is ('abc' ~ 'a') || 'bc'
+      // and `5 ~ 2 + 3` is (5 ~ 2) + 3. So the left extent crosses
+      // the chain, the right extent is ONE primary.
+      operands(stmt, masked, m, Add).map { case (ls, re) =>
+        val (from, to, c) = call(stmt, m, ls, re, fn)
+        (from, to, if (negate) s"(NOT $c)" else c)
       }
     }
-    stmt
-  }
 
   /** DuckDB ≥1.4's `fill(expr) OVER ([PARTITION BY p] ORDER BY k)` —
     * linear interpolation of NULL values along the ORDER BY axis, the
@@ -1313,7 +1260,7 @@ object Dialect {
       val isQuery =
         "(?is)^\\s*(SELECT|WITH|VALUES)\\b".r.findFirstIn(sub).isDefined
       if (Set("=", "!=", "<>", "<", "<=", ">", ">=").contains(op) && isQuery) {
-        intDivLeftStart(stmt, masked, j + 1, additive = true) match {
+        operandStart(stmt, masked, j + 1, Add) match {
           case Some(ls) =>
             val left = stmt.substring(ls, j + 1).trim
             val cmp = s"(($left) $op __qv)"
@@ -1500,6 +1447,18 @@ object Dialect {
     stmt
   }
 
+  // ── The operand scanner ────────────────────────────────────────────
+  // Every operator lowering reads its operands through [[operandStart]]
+  // (back-scan, one binding level per operator family) and
+  // [[operandEnd]] (forward scan, one primary). `signKeyword` and
+  // `nonOperandParen` are the one "not an operand" word rule.
+
+  /** Binding levels of [[operandStart]], tightest first. */
+  private[component] final val Postfix = 0 // `.f()` receiver, `->` receiver, `[…]` base
+  private[component] final val Primary = 1 // `^`, `::`: a signed postfix chain with casts
+  private[component] final val Mul = 2 // `//`, `/`, `%`: a multiplicative chain
+  private[component] final val Add = 3 // match operators, quantified comparisons
+
   /** Words that make a preceding `-`/`+` UNARY (sign of the operand)
     * rather than a binary operator whose right side the extent must not
     * cross — and, symmetrically, words an operand back-scan must NOT
@@ -1518,18 +1477,31 @@ object Dialect {
     "limit", "offset", "set", "values",
     "from", "end", "join", "using", "into", "group", "order", "union",
     "intersect", "except", "cross", "natural", "lateral", "exists",
-    "escape", "qualify", "window", "over", "partition").contains _
+    "escape", "qualify", "window", "over", "partition",
+    "glob", "similar", "to").contains _
 
-  /** Back-scan: start of the operand chain ending just before the
-    * operator at `op`. `additive = false` consumes a multiplicative
-    * chain (the `//` level); `additive = true` also crosses binary
-    * `+`/`-` and `||` (the comparison level — `a || b ~ p` matches the
-    * concatenation). None = unparsable (leave the text alone). */
-  private def intDivLeftStart(stmt: String, masked: String,
-                              op: Int, additive: Boolean = false,
-                              chain: Boolean = true): Option[Int] = {
+  /** Keyword-paren forms where the paren group is NOT an operand
+    * (ADVICE r17: `y IN (1,2) / 2` mangled into `IN duck_div(...)`). */
+  private val nonOperandParen = Set("in", "all", "any", "some", "exists",
+    "using", "values", "window", "partition")
+
+  /** Back-scan: start of the operand ending just before the operator at
+    * `op`, at one binding level:
+    *  - [[Postfix]]: a chain of elements joined by `.` — identifiers,
+    *    quoted names and literals, call/paren/subscript results and
+    *    window or FILTER expressions (`f(x) OVER (...)`). No sign, no
+    *    cast, no numeric literal (`12.f()` lexes as the number `12.`);
+    *  - [[Primary]]: a postfix chain with its `::type` casts and unary
+    *    sign (numbers included);
+    *  - [[Mul]]: a `*`/`/`/`%` chain of primaries (`a * b // c`);
+    *  - [[Add]]: also crosses binary `+`/`-` and `||` (the comparison
+    *    level — `a || b ~ p` matches the concatenation).
+    * None = unparsable (the operator is left alone). */
+  private[component] def operandStart(stmt: String, masked: String,
+                                      op: Int, level: Int): Option[Int] = {
     var i = op - 1
     var start = -1
+    def word(j: Int): Boolean = { val c = masked.charAt(j); c.isLetterOrDigit || c == '_' }
     def skipWs(): Unit = { while (i >= 0 && masked.charAt(i) == ' ' &&
       stmt.charAt(i).isWhitespace) i -= 1 }
     // `name ( ... )` call ending at the current position — the window
@@ -1545,10 +1517,9 @@ object Dialect {
       if (open < 0) return false
       i = open - 1
       skipWs() // the spaced spelling: `FILTER (WHERE ...)`, `count (*)`
-      if (i < 0 || !(stmt.charAt(i).isLetterOrDigit || stmt.charAt(i) == '_'))
-        return false
+      if (i < 0 || !word(i)) return false
       val e = i
-      while (i >= 0 && (stmt.charAt(i).isLetterOrDigit || stmt.charAt(i) == '_')) i -= 1
+      while (i >= 0 && word(i)) i -= 1
       val nm = stmt.substring(i + 1, e + 1).toLowerCase
       if (nm == "filter") return consumeCallBack() // FILTER (WHERE ...) clause
       if (signKeyword(nm)) return false
@@ -1561,8 +1532,7 @@ object Dialect {
       var j = i
       while (j >= 0 && masked.charAt(j) == ' ' && stmt.charAt(j).isWhitespace) j -= 1
       val e = j
-      while (j >= 0 && masked.charAt(j) == stmt.charAt(j) &&
-        (stmt.charAt(j).isLetter || stmt.charAt(j) == '_')) j -= 1
+      while (j >= 0 && (masked.charAt(j).isLetter || masked.charAt(j) == '_')) j -= 1
       if (e > j) stmt.substring(j + 1, e + 1).toLowerCase else ""
     }
     // optional `IGNORE|RESPECT NULLS` tokens directly before an OVER
@@ -1572,82 +1542,98 @@ object Dialect {
       if (peekWordBack() == "nulls") {
         skipWs()
         val save = i
-        while (i >= 0 && (stmt.charAt(i).isLetter || stmt.charAt(i) == '_')) i -= 1
+        while (i >= 0 && word(i)) i -= 1
         val w = peekWordBack()
         if (w == "ignore" || w == "respect") {
           skipWs()
-          while (i >= 0 && (stmt.charAt(i).isLetter || stmt.charAt(i) == '_')) i -= 1
+          while (i >= 0 && word(i)) i -= 1
         } else i = save
       }
     }
-    // keyword-paren forms where the paren group is NOT an operand
-    // (ADVICE r17: `y IN (1,2) / 2` mangled into `IN duck_div(...)`)
-    val nonOperandParen = Set("in", "all", "any", "some", "exists",
-      "using", "values", "window", "partition")
-    def consumePrimary(): Boolean = {
+    // a name run (identifier chain or number: dots and exponents
+    // included — 1.5e3; validated loosely, Spark re-parses)
+    def consumeRun(): Unit =
+      while (i >= 0 && (word(i) || masked.charAt(i) == '.')) i -= 1
+    // one element of a postfix chain
+    def consumeElement(): Boolean = {
       skipWs()
       if (i < 0) return false
       val c = stmt.charAt(i)
       if (masked.charAt(i) != c) {
-        // a quoted span is one primary (string literal / quoted ident);
+        // a quoted span is one element (string literal / quoted ident);
         // a comment is not an operand
         val span = if ("'\"`".indexOf(c) >= 0) spanAt(stmt, i) else -1
         if (span >= 0 && span < i && stmt.charAt(span) == c) {
           start = span
           i = start - 1
-          return true
-        }
-        return false
-      }
-      if (c == ')') {
-        val open = openingParen(masked, i)
+          true
+        } else false
+      } else if (c == ')' || c == ']') {
+        val open = openingParen(masked, i, if (c == ')') '(' else '[', c)
         if (open < 0) return false
         start = open; i = open - 1
-        // a function name before the paren belongs to the primary (the
+        // a function name before the paren belongs to the element (the
         // space-separated call spelling too — `count (*)`, `OVER (spec)`:
         // without the ws skip a spaced OVER read as a bare paren primary,
         // the ADVICE r17 window mangling)
         skipWs()
-        if (i >= 0 && (stmt.charAt(i).isLetterOrDigit || stmt.charAt(i) == '_')) {
+        if (c == ']' && i >= 0 && !word(i) && (masked.charAt(i) == ')' ||
+            masked.charAt(i) == ']' || "'\"`".indexOf(stmt.charAt(i)) >= 0)) {
+          // a subscript of a call, paren, subscript or quoted result
+          if (!consumeElement()) return false
+        } else if (i < 0 || !word(i)) i = open - 1 // a bare paren: no name
+        else {
           val e = i
-          while (i >= 0 && (stmt.charAt(i).isLetterOrDigit || stmt.charAt(i) == '_')) i -= 1
+          consumeRun()
           val w = stmt.substring(i + 1, e + 1).toLowerCase
           if (w == "over") {
             // window expression (ADVICE r17: treating the OVER spec as
             // a paren primary mangled `sum(x) OVER (...) / 2`): the
             // operand is the whole `call [FILTER (...)] [IGNORE NULLS]
-            // OVER (spec)` — consume back to the call or skip
+            // OVER (spec)` — consume back to the call or fail
             consumeNullsModifier()
             if (!consumeCallBack()) return false
           } else if (w == "filter") {
-            // aggregate FILTER clause when a call precedes (the
-            // filter() HOF is never a numeric operand, so a failed
-            // call-consume just skips this operator — safe either way)
-            if (!consumeCallBack()) return false
+            // aggregate FILTER clause when a call precedes; otherwise the
+            // filter() HOF — a receiver or subscript base, never a
+            // numeric operand (failing just skips the operator)
+            val name = i
+            if (!consumeCallBack()) {
+              if (level != Postfix) return false
+              i = name; start = name + 1
+            }
           } else if (nonOperandParen(w)) return false
           else if (signKeyword(w)) i = e
+          // a number is no call name (`2 (x)`), though it is a base (`2[1]`)
+          else if (c == ')' && !w.exists(_.isLetter)) i = open - 1
           else start = i + 1
         }
         true
-      } else if (c.isLetterOrDigit || c == '_' || c == '.') {
-        // identifier chain, qualified name, or numeric literal (dots and
-        // exponents included — 1.5e3); validated loosely, Spark re-parses
+      } else if (word(i) || c == '.') {
         val e = i
-        while (i >= 0 && masked.charAt(i) == stmt.charAt(i) &&
-          (stmt.charAt(i).isLetterOrDigit ||
-            stmt.charAt(i) == '_' || stmt.charAt(i) == '.')) i -= 1
+        consumeRun()
         start = i + 1
-        if (signKeyword(stmt.substring(start, e + 1).toLowerCase)) false
-        // a bare name directly after OVER is a NAMED-WINDOW reference
-        // (`rank() OVER w / 2` pre-inline), not the operand — skip
-        else if (peekWordBack() == "over") false
-        else true
+        // a keyword is no operand; a bare name directly after OVER is a
+        // NAMED-WINDOW reference (`rank() OVER w / 2` pre-inline)
+        !signKeyword(stmt.substring(start, e + 1).toLowerCase) && peekWordBack() != "over"
       } else false
+    }
+    // elements joined by `.`: a name run carries its own dots, so a link
+    // is a dot right before a quoted/paren element (`"t"."c"`) or a run
+    // that starts with one after a paren or quote (`f(x).y`)
+    def consumePostfix(): Boolean = {
+      if (!consumeElement()) return false
+      while (i >= 0 && (masked.charAt(i) == '.' || stmt.charAt(start) == '.' &&
+          (masked.charAt(i) == ')' || masked.charAt(i) == ']' ||
+            "'\"`".indexOf(stmt.charAt(i)) >= 0))) {
+        if (masked.charAt(i) == '.') i -= 1
+        if (!consumeElement()) return false
+      }
+      true
     }
     def consumeSignIfUnary(): Unit = {
       skipWs()
-      if (i >= 0 && (stmt.charAt(i) == '-' || stmt.charAt(i) == '+') &&
-        masked.charAt(i) == stmt.charAt(i)) {
+      if (i >= 0 && (masked.charAt(i) == '-' || masked.charAt(i) == '+')) {
         val signAt = i
         i -= 1; skipWs()
         val unary =
@@ -1655,9 +1641,9 @@ object Dialect {
           else {
             val p = stmt.charAt(i)
             if ("(,=<>+-*/%|".indexOf(p) >= 0) true
-            else if (p.isLetterOrDigit || p == '_') {
+            else if (word(i)) {
               val e = i; var j = i
-              while (j >= 0 && (stmt.charAt(j).isLetterOrDigit || stmt.charAt(j) == '_')) j -= 1
+              while (j >= 0 && word(j)) j -= 1
               signKeyword(stmt.substring(j + 1, e + 1).toLowerCase)
             } else false
           }
@@ -1667,14 +1653,15 @@ object Dialect {
     }
     // `x::TYPE` binds tighter than `//`: a consumed primary preceded by
     // `::` is a cast's type — keep consuming down to the cast's base
-    def consumeCasts(): Boolean = {
+    def consumePrimary(): Boolean = {
+      if (!consumePostfix()) return false
       skipWs()
-      while (i >= 1 && masked.charAt(i) == ':' && stmt.charAt(i) == ':' &&
-        stmt.charAt(i - 1) == ':') {
+      while (i >= 1 && masked.charAt(i) == ':' && masked.charAt(i - 1) == ':') {
         i -= 2
-        if (!consumePrimary()) return false
+        if (!consumePostfix()) return false
         skipWs()
       }
+      consumeSignIfUnary()
       true
     }
     // a binary +/- has an operand before it; a unary sign has an
@@ -1685,30 +1672,31 @@ object Dialect {
       if (j < 0) return false
       val p = stmt.charAt(j)
       if (masked.charAt(j) != p) return p == '\'' || p == '"' || p == '`'
-      if (p.isLetterOrDigit || p == '_') {
+      if (word(j)) {
         val e = j
-        while (j >= 0 && (stmt.charAt(j).isLetterOrDigit || stmt.charAt(j) == '_')) j -= 1
+        while (j >= 0 && word(j)) j -= 1
         !signKeyword(stmt.substring(j + 1, e + 1).toLowerCase)
       } else p == ')' || p == ']'
     }
-    if (!consumePrimary() || !consumeCasts()) return None
-    consumeSignIfUnary()
-    if (!chain) return Some(start) // primary-level operand (power)
+    if (level == Postfix)
+      return if (consumePostfix() && !stmt.charAt(start).isDigit &&
+        stmt.charAt(start) != '.') Some(start) else None
+    if (!consumePrimary()) return None
+    if (level == Primary) return Some(start)
     var more = true
     while (more) {
       more = false
       skipWs()
-      if (i >= 0 && masked.charAt(i) == stmt.charAt(i)) {
-        val c = stmt.charAt(i)
+      if (i >= 0) {
+        val c = masked.charAt(i)
         val isDiv = c == '/' && (i == 0 || stmt.charAt(i - 1) != '/')
-        val isConcat = additive && c == '|' && i > 0 &&
-          stmt.charAt(i - 1) == '|' && masked.charAt(i - 1) == '|'
-        val isAddSub = additive && (c == '+' || c == '-') && signIsBinary(i)
+        val isConcat = level == Add && c == '|' && i > 0 && masked.charAt(i - 1) == '|'
+        val isAddSub = level == Add && (c == '+' || c == '-') && signIsBinary(i)
         if (c == '*' || c == '%' || isDiv || isConcat || isAddSub) {
-          val at = i
           i -= (if (isConcat) 2 else 1)
-          if (!consumePrimary() || !consumeCasts()) { i = at; return Some(start) }
-          consumeSignIfUnary()
+          // an operator whose left side is no operand (`CASE … END * 3`)
+          // leaves the whole chain unparsable
+          if (!consumePrimary()) return None
           more = true
         }
       }
@@ -1720,34 +1708,30 @@ object Dialect {
     * operator — the right side of a left-associative operator at the
     * arithmetic level (`a // b * c` is `(a//b)*c`; probed for the match
     * ops too: `5 ~ 2 + 3` is `(5 ~ 2) + 3`). None = unparsable. */
-  private def intDivRightEnd(stmt: String, masked: String,
-                             from: Int): Option[Int] = {
+  private def operandEnd(stmt: String, masked: String,
+                         from: Int): Option[Int] = {
     var i = from
     def skipWs(): Unit = { while (i < stmt.length && masked.charAt(i) == ' ' &&
       stmt.charAt(i).isWhitespace) i += 1 }
     skipWs()
-    while (i < stmt.length && (stmt.charAt(i) == '-' || stmt.charAt(i) == '+') &&
-      masked.charAt(i) == stmt.charAt(i)) { i += 1; skipWs() }
+    while (i < stmt.length && (masked.charAt(i) == '-' || masked.charAt(i) == '+')) {
+      i += 1; skipWs()
+    }
     if (i >= stmt.length) return None
     val c = stmt.charAt(i)
     if (masked.charAt(i) != c) {
       // quoted span = one primary (string literal / quoted identifier —
       // the usual shape of a regex/glob pattern operand)
-      if (c == '\'') return Some(postfix(stmt, masked, spanEnd(stmt, i)))
-      if (c == '"' || c == '`') {
-        val e = stmt.indexOf(c, i + 1)
-        return if (e < 0) None else Some(postfix(stmt, masked, e + 1))
-      }
-      return None
+      return if ("'\"`".indexOf(c) >= 0) Some(postfix(stmt, masked, spanEnd(stmt, i)))
+      else None
     }
     if (c == '(') {
       val close = matchingParen(masked, i)
       if (close < 0) None else Some(postfix(stmt, masked, close + 1))
     } else if (c.isLetterOrDigit || c == '_' || c == '.') {
       val tokenStart = i
-      while (i < stmt.length && masked.charAt(i) == stmt.charAt(i) &&
-        (stmt.charAt(i).isLetterOrDigit ||
-          stmt.charAt(i) == '_' || stmt.charAt(i) == '.')) i += 1
+      while (i < stmt.length && (masked.charAt(i).isLetterOrDigit ||
+          masked.charAt(i) == '_' || masked.charAt(i) == '.')) i += 1
       // exponent sign: 1e+3 — the +/- right after a trailing e of a number
       if (i < stmt.length && (stmt.charAt(i) == '+' || stmt.charAt(i) == '-') &&
         i > tokenStart && (stmt.charAt(i - 1) == 'e' || stmt.charAt(i - 1) == 'E') &&

@@ -76,10 +76,12 @@ object MergeSql {
 
   private val Merge = "MERGE INTO"
 
-  /** `<lead> target [[AS] alias] <kw> ` — the alias may not be `kw`. */
+  /** `<lead> target [[AS] alias] <kw>` — the alias may not be `kw`. The
+    * match ends at the keyword: it runs on masked text, where a quoted
+    * name right after the keyword (`USING "delta.csv" d`) reads as blanks. */
   private def head(lead: String, kw: String) =
     (s"(?is)^\\s*$lead\\s+(`[^`]+`|\"[^\"]+\"|[A-Za-z_][\\w.]*)" +
-      s"(?:\\s+(?:AS\\s+)?(?!$kw\\b)([A-Za-z_]\\w*))?\\s+$kw\\s+").r
+      s"(?:\\s+(?:AS\\s+)?(?!$kw\\b)([A-Za-z_]\\w*))?\\s+$kw(?=\\s)").r
   private val mergeHead = head("MERGE\\s+INTO", "USING")
   private val updateHead = head("UPDATE", "SET")
   private val deleteHead = head("DELETE\\s+FROM", "USING")

@@ -13,11 +13,19 @@ object GraftSqlBridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Register a SQL function on an ALREADY RUNNING session (extensions
-    * only apply at session construction). */
+    * only apply at session construction). An existing binding of the
+    * name (a Spark built-in the DuckDB name shadows, or an earlier run's
+    * registration) is dropped first, so the registry does not log a
+    * "replaced a previously registered function" warning per name; the
+    * registry's lock spans both steps, so no lookup sees the name unbound. */
   def registerFunction(spark: SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
+                       builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
+    registry.synchronized {
+      registry.dropFunction(catalyst.FunctionIdentifier(name))
+      registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
+  }
 
   /** DataFrame from a raw LogicalPlan (for custom plan nodes). */
   def ofRows(spark: SparkSession,

@@ -103,6 +103,8 @@ class BracketsSpec extends SparkSpec {
     assert(one("SELECT 'abc'[-1] AS c").getString(0) == "c")
     assert(one("SELECT 'abcd'[2:3] AS s").getString(0) == "bc")
     assert(one("SELECT 'abcd'[:-2] AS s").getString(0) == "abc")
+    // a '' escape is part of the literal base
+    assert(one("SELECT 'it''s'[1] AS c").getString(0) == "i")
   }
 
   test("struct literals become named_struct; bare and quoted keys") {

@@ -158,12 +158,17 @@ class DivSemanticsSpec extends SparkSpec {
     assert(r.forall(_.isNullAt(2))) // windowed /0 → NULL, probed
   }
 
-  test("guard exhaustion rejects loudly, never a silent semantic tail") {
+  test("600 `/`, 600 `%` and 300 `^` all lower, none left native") {
     val big = "SELECT " + (1 to 600).map(i => s"a$i / 2").mkString(", ") + " FROM t"
     val r = Dialect.rewriteDiv(big)
-    assert(Dialect.rejectedKind(r).contains("ARITH_LIMIT"))
+    assert(!Dialect.maskQuoted(r).contains("/"))
+    assert("duck_div\\(a\\d+, 2\\)".r.findAllIn(r).size == 600)
     val bigMod = "SELECT " + (1 to 600).map(i => s"a$i % 2").mkString(", ") + " FROM t"
-    assert(Dialect.rejectedKind(Dialect.rewriteMod(bigMod)).contains("ARITH_LIMIT"))
+    val m = Dialect.rewriteMod(bigMod)
+    assert(!m.contains("%") && "duck_mod\\(a\\d+, 2\\)".r.findAllIn(m).size == 600)
+    val bigPow = "SELECT " + (1 to 300).map(i => s"a$i ^ 2").mkString(", ") + " FROM t"
+    val p = Dialect.rewritePow(bigPow)
+    assert(!p.contains("^") && "power\\(a\\d+, 2\\)".r.findAllIn(p).size == 300)
   }
 
   test("alias over an integral base rounds through the execution-time recast") {

@@ -34,6 +34,18 @@ class DotCallSpec extends SparkSpec {
       "SELECT upper(concat(a, b)) FROM t")
   }
 
+  test("left/right calls and window expressions are whole receivers") {
+    assert(rw("SELECT left(s, 2).upper() FROM t") ==
+      "SELECT upper(left(s, 2)) FROM t")
+    assert(rw("SELECT right(s, 2).upper() FROM t") ==
+      "SELECT upper(right(s, 2)) FROM t")
+    assert(rw("SELECT sum(x) OVER (PARTITION BY g).abs() FROM t") ==
+      "SELECT abs(sum(x) OVER (PARTITION BY g)) FROM t")
+    // a keyword is no receiver
+    assert(rw("SELECT CASE WHEN a THEN s END.upper() FROM t") ==
+      "SELECT CASE WHEN a THEN s END.upper() FROM t")
+  }
+
   test("non-chainable shapes stay untouched") {
     // string literal receiver: a DuckDB parse error too
     assert(rw("SELECT 'AbC'.lower()") == "SELECT 'AbC'.lower()")

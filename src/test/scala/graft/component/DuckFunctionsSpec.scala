@@ -1,5 +1,10 @@
 package graft.component
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+
 import graft.SparkSpec
 
 /** The DuckDB-named function surface, end to end through spark.sql: each
@@ -687,5 +692,33 @@ class DuckFunctionsSpec extends SparkSpec {
     assert(one("substring('abcdef', 2, 3)").getString(0) == "bcd")
     assert(one("substring('abcdef', -2)").getString(0) == "ef")
     assert(one("substring('abcdef', 0)").getString(0) == "abcdef")
+  }
+
+  test("re-registering the surface logs no replaced-function warnings") {
+    session // every name already bound: the next pass replaces each one
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-register-warnings", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          warnings.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    // the session's registry logs through its class's logger; the test
+    // session runs at ERROR, so open WARN on that logger for the pass
+    val logger = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getLogger("org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry")
+    val level = logger.getLevel
+    logger.addAppender(capture) // re-derives the logger's level: set it after
+    logger.setLevel(Level.WARN)
+    try DuckFunctions.register(spark)
+    finally {
+      logger.removeAppender(capture)
+      logger.setLevel(level)
+      capture.stop()
+    }
+    val replaced = warnings.size
+    assert(replaced == 0, warnings.toArray.take(3).mkString("; "))
+    assert(one("SELECT list_sum(array(1, 2, 3))").toString == "6.0") // still bound
   }
 }

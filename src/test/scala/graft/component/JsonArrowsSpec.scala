@@ -35,6 +35,16 @@ class JsonArrowsSpec extends SparkSpec {
       == """SELECT "it's" AS n, json_extract('{"a":1}', 'a')""")
   }
 
+  test("window receivers travel whole; every arrow of a wide flatten lowers") {
+    assert(JsonArrows.rewrite("SELECT first(j) OVER (ORDER BY t) -> 'a' FROM t")
+      == "SELECT json_extract(first(j) OVER (ORDER BY t), 'a') FROM t")
+    val flat = "SELECT " + (1 to 300).map(k => s"j ->> 'k$k' AS k$k")
+      .mkString(", ") + " FROM t"
+    val out = JsonArrows.rewrite(flat)
+    assert(!JsonArrows.has(out))
+    assert("json_extract_string\\(j, 'k\\d+'\\)".r.findAllIn(out).size == 300)
+  }
+
   test("lambda arrows survive: HOF params, tuples, string-literal bodies") {
     val hof = "SELECT transform(l, x -> x + 1) FROM t"
     assert(JsonArrows.rewrite(hof) == hof)

@@ -193,6 +193,23 @@ class MergeSpec extends SparkSpec {
     assert(out == Seq((1, 20, Some("x")), (2, 40, None)))
   }
 
+  test("MERGE / DELETE ... USING a quoted input-table name read the sanitized table") {
+    val ex = mkEx()
+    def run(sql: String) = ex.runStatement(Dialect.rewrite(sql))
+    run("CREATE TABLE m_feed (k INT, v INT)")
+    run("INSERT INTO m_feed VALUES (1, 1), (2, 2), (3, 3)")
+    run("""CREATE TABLE "m_delta.csv" AS SELECT * FROM (VALUES (1, 10), (3, 300)) d(k, v)""")
+    run("""MERGE INTO m_feed USING "m_delta.csv" d ON m_feed.k = d.k """ +
+      "WHEN MATCHED THEN UPDATE SET v = d.v")
+    assert(rows("m_feed") == Seq((1, 10), (2, 2), (3, 300)))
+    run("""DELETE FROM m_feed USING "m_delta.csv" d WHERE m_feed.k = d.k AND d.v > 100""")
+    assert(rows("m_feed") == Seq((1, 10), (2, 2)))
+    // a JOIN's USING column list is no table position
+    assert(Dialect.rewrite(
+      """DELETE FROM m_feed USING a JOIN b USING ("k") WHERE m_feed.k = a.k""")
+      .contains("USING (`k`)"))
+  }
+
   test("MERGE: validation and loud rejects") {
     val ex = mkEx()
     def run(sql: String) = ex.runStatement(Dialect.rewrite(sql))
