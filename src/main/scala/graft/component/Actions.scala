@@ -1,7 +1,5 @@
 package graft.component
 
-import scala.util.{Failure, Success, Try}
-
 import org.apache.spark.sql.SparkSession
 
 /** Sync actions (reference A18–A22): pure static analysis over the config
@@ -15,32 +13,31 @@ object Actions {
   /** syntax_check (A18): every statement must parse; plus the reference's
     * heuristic lints that survive translation. */
   def syntaxCheck(spark: SparkSession, config: Config): List[ValidationIssue] =
-    config.namedScripts.flatMap { s =>
-      val name = s.name
-      Dialect.prepare(s.sql).flatMap { stmt =>
-        // the ROLLBACK sentinel parses cleanly by design — surface the
-        // executor's rejection as this statement's issue instead; the
-        // ATTACH/CREATE TYPE/... reject sentinels follow the same pattern
-        if (stmt.trim == Dialect.RollbackSentinel)
-          List(ValidationIssue(name, Dialect.RollbackMessage))
-        else if (Dialect.rejectedKind(stmt).isDefined)
-          List(ValidationIssue(name,
-            Dialect.RejectMessages(Dialect.rejectedKind(stmt).get)))
-        else {
-          val parseIssue = Try(spark.sessionState.sqlParser
-              .parsePlan(SqlAnalyzer.stub(stmt))) match {
-            case Failure(e) => List(ValidationIssue(name, s"parse error: ${e.getMessage}"))
-            case Success(_) => Nil
-          }
-          // the ASOF stub deletes the keyword, so a statement the executor
-          // can't actually run would otherwise validate cleanly — surface
-          // the clear unsupported-form message here instead of letting the
-          // user hit an opaque run-time parse error on 'ASOF'
-          val asofIssue = (AsOfSql.unsupportedForm(stmt) ++
-            PositionalSql.unsupportedForm(stmt))
-            .map(ValidationIssue(name, _)).toList
-          val lints = lint(stmt).map(ValidationIssue(name, _))
-          parseIssue ++ asofIssue ++ lints
+    syntaxCheck(spark, Planner.analyze(spark, config))
+
+  /** syntax_check over analyzed queries: each statement's verdict is the
+    * one its DAG contract came from ([[SqlAnalyzer.check]]). */
+  def syntaxCheck(spark: SparkSession, queries: List[Query]): List[ValidationIssue] =
+    queries.flatMap { q =>
+      val name = q.name
+      q.statements.flatMap { stmt =>
+        Stmt.parse(stmt) match {
+          // the reject sentinels (ROLLBACK, ATTACH, CREATE TYPE ... UNION,
+          // ...) parse cleanly by design: surface the executor's rejection
+          // as this statement's issue instead
+          case Stmt.Rejected(message) => List(ValidationIssue(name, message))
+          case parsed =>
+            val parseIssue = SqlAnalyzer.check(spark, parsed).failed.toOption
+              .map(e => ValidationIssue(name, s"parse error: ${e.getMessage}")).toList
+            // the ASOF stub deletes the keyword, so a statement the executor
+            // can't actually run would otherwise validate cleanly — surface
+            // the clear unsupported-form message here instead of letting
+            // the user hit an opaque run-time parse error on 'ASOF'
+            val asofIssue = (AsOfSql.unsupportedForm(stmt) ++
+              PositionalSql.unsupportedForm(stmt))
+              .map(ValidationIssue(name, _)).toList
+            val lints = lint(stmt).map(ValidationIssue(name, _))
+            parseIssue ++ asofIssue ++ lints
         }
       }
     }
@@ -114,23 +111,14 @@ object Actions {
   /** expected_input_tables (A19): external tables = all deps − all outputs;
     * reported under the user's original names. */
   def expectedInputTables(spark: SparkSession, config: Config): List[String] = {
-    val analyses = config.namedScripts.map(s => SqlAnalyzer.analyzeScript(spark, s.sql))
-    val outs = analyses.flatMap(_.outputs).toSet
-    (analyses.flatMap(_.dependencies).toSet -- outs)
+    val queries = Planner.analyze(spark, config)
+    val outs = queries.flatMap(_.outputs).toSet
+    (queries.flatMap(_.dependencies).toSet -- outs)
       .map(Names.original).toList.sorted
   }
 
   private def stripExt(n: String): String =
     n.replaceAll("(?i)\\.(csv|parquet|parq)$", "")
-
-  /** Diff report against the configured input mappings (suffix-insensitive,
-    * like the reference's `.csv/.parquet/.parq` strip). */
-  def expectedInputDiff(spark: SparkSession, config: Config)
-      : (List[String], List[String]) = { // (missing, unused)
-    val expected = expectedInputTables(spark, config).map(stripExt).toSet
-    val available = config.inputTables.map(t => stripExt(t.destination)).toSet
-    ((expected -- available).toList.sorted, (available -- expected).toList.sorted)
-  }
 
   /** expected_input_tables report, matching the reference action's output
     * (`src/actions/expected_input_tables.py:21-118`): without configured
@@ -229,9 +217,11 @@ object Actions {
     * (`src/actions/execution_plan_visualization.py:40-93`, pinned by
     * `tests/unit/test_execution_plan_visualization_action.py:48-62`). */
   def executionPlan(spark: SparkSession, config: Config): String = {
-    val plan = Planner.plan(spark, config)
-    val queries = plan.blocks.flatMap(_.batches).flatMap(_.queries)
+    // one analysis: the rewrite edits the macro registry, so a second
+    // prepare would report different statements than the plan batches
     val allInOrder = Planner.analyze(spark, config)
+    val plan = Planner.plan(allInOrder)
+    val queries = plan.blocks.flatMap(_.batches).flatMap(_.queries)
     val maxWorkers = SystemResources.resolveThreads(config.threads)
     val sb = new StringBuilder("# 🚀 Execution Plan Visualization\n\n")
     sb.append("## 📊 Execution Summary\n\n")

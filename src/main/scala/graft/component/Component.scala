@@ -13,8 +13,9 @@ import org.apache.spark.sql.catalyst.expressions.Literal
   *      `in/files/warehouse/<t>` re-register (the Spark analogue of the
   *      `.duck.db` file move, A11);
   *   3. ingest the input mappings as temp views (A1–A5, A12);
-  *   4. plan: dependency analysis → producer map → per-block Kahn batches
-  *      (A13–A16);
+  *   4. plan: producer map → per-block Kahn batches (A13–A16) over the
+  *      dependency analysis, which runs once, before step 2 (the startup
+  *      syntax check reads the same analysis);
   *   5. execute blocks sequentially, batches thread-parallel (A17) — new
   *      tables materialize into `out/files/warehouse/`;
   *   6. export each output mapping as single-file quoted CSV + manifest
@@ -92,8 +93,11 @@ object Component {
       case _ => // run
     }
 
+    // one prepare per script (the rewrite edits the macro registry): the
+    // startup syntax check and the plan read the same statements
+    val queries = Planner.analyze(spark, config)
     if (config.syntaxCheckOnStartup) {
-      val issues = Actions.syntaxCheck(spark, config)
+      val issues = Actions.syntaxCheck(spark, queries)
         .filter(_.message.startsWith("parse error"))
       if (issues.nonEmpty)
         throw new UserException("syntax check failed:\n" +
@@ -121,7 +125,7 @@ object Component {
     // 4-5. plan + execute
     val outWarehouse = Paths.get(dataDir, "out", "files", "warehouse")
     Files.createDirectories(outWarehouse)
-    val plan = Planner.plan(spark, config)
+    val plan = Planner.plan(queries)
     val threads = SystemResources.resolveThreads(config.threads)
     val stats = new Executor(spark, outWarehouse.toString, threads).execute(plan)
 

@@ -217,4 +217,29 @@ object ConstraintSql {
     }
     Parsed(cols.toList, tChecks.toList, uniques.toList)
   }
+
+  /** A bare-DDL column list as the executor declares it: the PRIMARY KEY
+    * columns (extracted before the constraint strip, in both spellings:
+    * `k INT PRIMARY KEY` and `PRIMARY KEY (a, b)` — they feed the upsert
+    * surface), the constraints, and the Spark schema. Static analysis
+    * parses the same list, so a column list this throws on is the
+    * statement's syntax_check error. */
+  final case class Table(pk: Seq[String], parsed: Parsed,
+                         schema: org.apache.spark.sql.types.StructType)
+
+  def table(colDefs: String): Table = {
+    val items = Dialect.splitTop(colDefs).filter(_.nonEmpty)
+    val pk = items.flatMap { it =>
+      "(?is)^PRIMARY\\s+KEY\\s*\\((.*)\\)\\s*$".r.findFirstMatchIn(it) match {
+        case Some(m) => m.group(1).split(",").map(c => stripQuotes(c.trim)).toSeq
+        case None if "(?is)\\bPRIMARY\\s+KEY\\b".r.findFirstIn(it).isDefined =>
+          Seq(stripQuotes(it.split("[\\s(]", 2).head))
+        case None => Nil
+      }
+    }
+    val parsed = parse(items)
+    val cleaned = parsed.cols.map(_.cleaned).mkString(", ")
+      .replaceAll("(?i)\\bVARCHAR\\b(?!\\s*\\()", "STRING")
+    Table(pk, parsed, org.apache.spark.sql.types.StructType.fromDDL(cleaned))
+  }
 }

@@ -32,52 +32,20 @@ object CopyTo {
                           nullStr: Option[String] = None)
 
   def parse(stmt0: String): Option[Parsed] = {
-    val stmt = stmt0.trim.stripSuffix(";")
-    val masked = Dialect.maskQuoted(stmt)
-    if (!"(?is)^\\s*COPY\\b".r.findFirstIn(masked).isDefined) return None
-    val dep = Dialect.depths(masked)
-    val toM = "(?is)\\bTO\\b".r.findAllMatchIn(masked)
-      .find(m => dep(m.start) == 0).getOrElse(return None)
-    // bare table sources may be quoted ('out.csv' / "T" / `t`) — COPY is
-    // not a Dialect table position, so unwrap here
-    val source0 = stmt.substring(4, toM.start).trim
-    val source =
-      if (source0.length >= 2 &&
-          ((source0.head == '\'' && source0.last == '\'') ||
-           (source0.head == '"' && source0.last == '"') ||
-           (source0.head == '`' && source0.last == '`')))
-        source0.substring(1, source0.length - 1)
-      else source0
+    val (source, after) = split(stmt0, "TO").getOrElse(return None)
     if (source.isEmpty) return None
-    val after = stmt.substring(toM.end).trim
-    val pathM = "(?s)^'((?:[^']|'')*)'".r.findFirstMatchIn(after).getOrElse(return None)
-    val path = pathM.group(1).replace("''", "'")
-    // tolerate the Postgres-compat `WITH (...)` spelling of the options
-    val rest = "(?is)^WITH\\s*".r
-      .replaceFirstIn(after.substring(pathM.end).trim, "")
-    val opts: Map[String, String] =
-      parseOptions(rest).getOrElse(return None)
-    def unq(s: String) =
-      s.stripPrefix("'").stripSuffix("'").replace("''", "'")
-    val fmt = opts.get("FORMAT").map(v => unq(v).toUpperCase)
-      .getOrElse {
-        val p = path.toLowerCase
-        if (p.endsWith(".parquet") || p.endsWith(".parq")) "PARQUET"
-        else if (p.endsWith(".json") || p.endsWith(".jsonl") || p.endsWith(".ndjson")) "JSON"
-        else "CSV"
-      }
-    if (!Set("CSV", "PARQUET", "JSON")(fmt)) return None
+    val (path, fmt, opts) = target(after).getOrElse(return None)
     Some(Parsed(
       source, path, fmt,
       header = opts.get("HEADER")
         .forall(v => !(v.equalsIgnoreCase("false") || v == "0")),
       delimiter = opts.get("DELIMITER").orElse(opts.get("DELIM"))
-        .orElse(opts.get("SEP")).map(unq).getOrElse(","),
-      quote = opts.get("QUOTE").map(unq).getOrElse("\""),
+        .orElse(opts.get("SEP")).map(unquote).getOrElse(","),
+      quote = opts.get("QUOTE").map(unquote).getOrElse("\""),
       forceQuote = opts.get("FORCE_QUOTE").isDefined,
       // DuckDB's NULL 'str' option: the written NULL sentinel (default
       // empty, DuckDB's own default)
-      nullStr = opts.get("NULL").orElse(opts.get("NULLSTR")).map(unq),
+      nullStr = opts.get("NULL").orElse(opts.get("NULLSTR")).map(unquote),
       partitionBy = opts.get("PARTITION_BY").toSeq.flatMap { v =>
         v.trim.stripPrefix("(").stripSuffix(")").split(",")
           .map(_.trim.stripPrefix("`").stripSuffix("`")
@@ -86,12 +54,41 @@ object CopyTo {
       }))
   }
 
+  /** `COPY <name> <kw> <after>` (kw TO or FROM, the first at depth 0) →
+    * (name, after). A bare name may be quoted ('out.csv' / "T" / `t`) —
+    * COPY is not a Dialect table position, so it is unwrapped here. */
+  private[component] def split(stmt0: String, kw: String): Option[(String, String)] = {
+    val stmt = stmt0.trim.stripSuffix(";")
+    val masked = Dialect.maskQuoted(stmt)
+    if (!"(?is)^\\s*COPY\\b".r.findFirstIn(masked).isDefined) return None
+    val dep = Dialect.depths(masked)
+    val m = s"(?is)\\b$kw\\b".r.findAllMatchIn(masked)
+      .find(m => dep(m.start) == 0).getOrElse(return None)
+    val name = stmt.substring(4, m.start).trim
+    val quoted = name.length >= 2 && "'\"`".contains(name.head) && name.last == name.head
+    Some((if (quoted) name.substring(1, name.length - 1) else name,
+      stmt.substring(m.end).trim))
+  }
+
+  /** `'<path>' [[WITH] (options)]` → (path, format, options); None when
+    * the text is no such target or the format is unsupported. */
+  private[component] def target(after: String): Option[(String, String, Map[String, String])] = {
+    val pathM = "(?s)^'((?:[^']|'')*)'".r.findFirstMatchIn(after).getOrElse(return None)
+    val path = pathM.group(1).replace("''", "'")
+    // tolerate the Postgres-compat `WITH (...)` spelling of the options
+    val rest = "(?is)^WITH\\s*".r
+      .replaceFirstIn(after.substring(pathM.end).trim, "")
+    val opts = parseOptions(rest).getOrElse(return None)
+    val fmt = formatOf(opts, path)
+    if (Set("CSV", "PARQUET", "JSON")(fmt)) Some((path, fmt, opts)) else None
+  }
+
   /** `(KEY [value], ...)` option list (also the `WITH (...)` spelling,
     * stripped by the caller) → upper-cased key → raw value text. Split
     * on depth-0 commas only: an option VALUE may itself be a list —
     * `PARTITION_BY (a, b)`. None = text after the path isn't an option
     * list (not a COPY statement we recognize). */
-  private[component] def parseOptions(rest: String): Option[Map[String, String]] =
+  private def parseOptions(rest: String): Option[Map[String, String]] =
     if (rest.isEmpty) Some(Map.empty)
     else if (rest.startsWith("(") && rest.endsWith(")")) {
       Some(Dialect.splitTop(rest.substring(1, rest.length - 1))
@@ -104,7 +101,7 @@ object CopyTo {
   private[component] def unquote(s: String): String =
     s.stripPrefix("'").stripSuffix("'").replace("''", "'")
 
-  private[component] def formatOf(opts: Map[String, String],
+  private def formatOf(opts: Map[String, String],
                                   path: String): String =
     opts.get("FORMAT").map(v => unquote(v).toUpperCase).getOrElse {
       val p = path.toLowerCase
@@ -112,16 +109,6 @@ object CopyTo {
       else if (p.endsWith(".json") || p.endsWith(".jsonl") ||
         p.endsWith(".ndjson")) "JSON"
       else "CSV"
-    }
-
-  /** Session-free stand-in for static analysis: the COPY source is the
-    * statement's only dependency, so `SELECT * FROM <source>` (or the
-    * inner query verbatim) has the identical dependency set. */
-  def stub(stmt: String): String =
-    parse(stmt) match {
-      case Some(p) if p.source.startsWith("(") => "SELECT * FROM " + p.source
-      case Some(p) => s"SELECT * FROM `${Names.view(p.source)}`"
-      case None => stmt
     }
 
   /** Execute against the live session. The source resolves like any
@@ -251,32 +238,11 @@ object CopyFrom {
                           nullStr: Option[String])
 
   def parse(stmt0: String): Option[Parsed] = {
-    val stmt = stmt0.trim.stripSuffix(";")
-    val masked = Dialect.maskQuoted(stmt)
-    if (!"(?is)^\\s*COPY\\b".r.findFirstIn(masked).isDefined) return None
-    val dep = Dialect.depths(masked)
     // a COPY ... TO is the export statement, not this one
-    if ("(?is)\\bTO\\b".r.findAllMatchIn(masked).exists(m => dep(m.start) == 0))
-      return None
-    val fromM = "(?is)\\bFROM\\b".r.findAllMatchIn(masked)
-      .find(m => dep(m.start) == 0).getOrElse(return None)
-    val target0 = stmt.substring(4, fromM.start).trim
-    val target =
-      if (target0.length >= 2 &&
-          ((target0.head == '\'' && target0.last == '\'') ||
-           (target0.head == '"' && target0.last == '"') ||
-           (target0.head == '`' && target0.last == '`')))
-        target0.substring(1, target0.length - 1)
-      else target0
+    if (CopyTo.split(stmt0, "TO").isDefined) return None
+    val (target, after) = CopyTo.split(stmt0, "FROM").getOrElse(return None)
     if (target.isEmpty || target.contains("(")) return None
-    val after = stmt.substring(fromM.end).trim
-    val pathM = "(?s)^'((?:[^']|'')*)'".r.findFirstMatchIn(after).getOrElse(return None)
-    val path = pathM.group(1).replace("''", "'")
-    val rest = "(?is)^WITH\\s*".r
-      .replaceFirstIn(after.substring(pathM.end).trim, "")
-    val opts = CopyTo.parseOptions(rest).getOrElse(return None)
-    val fmt = CopyTo.formatOf(opts, path)
-    if (!Set("CSV", "PARQUET", "JSON")(fmt)) return None
+    val (path, fmt, opts) = CopyTo.target(after).getOrElse(return None)
     Some(Parsed(
       target, path, fmt,
       // COPY FROM's HEADER default is FALSE (probed; COPY TO's is true)
@@ -290,14 +256,4 @@ object CopyFrom {
       nullStr = opts.get("NULL").orElse(opts.get("NULLSTR"))
         .map(CopyTo.unquote)))
   }
-
-  /** Static-analysis twin: COPY FROM both requires and mutates the
-    * target — exactly an INSERT's self-referential dependency shape. */
-  def stub(stmt: String): String =
-    parse(stmt) match {
-      case Some(p) =>
-        val t = s"`${Names.view(p.target)}`"
-        s"INSERT INTO $t SELECT * FROM $t"
-      case None => stmt
-    }
 }

@@ -42,26 +42,15 @@ object DescribeSql {
   }
 
   /** Session-free stand-in for static analysis: the dependency set is
-    * the target's. Handles both the bare statement and a CTAS body
-    * (`CREATE TABLE p AS DESCRIBE t`). */
-  def stub(stmt: String): String = {
-    def body(p: Parsed): String = {
+    * the target's. Reads a bare statement or a body
+    * (`CREATE TABLE p AS DESCRIBE t` hands it `DESCRIBE t`). */
+  def stub(stmt: String): String =
+    parse(stmt).map { p =>
       val t = p.target
       if ("(?is)^(SELECT|WITH|FROM|TABLE|\\()".r.findFirstIn(t).isDefined)
         Dialect.fromFirst(t.stripPrefix("(").stripSuffix(")"))
       else s"SELECT * FROM $t"
-    }
-    parse(stmt) match {
-      case Some(p) => body(p)
-      case None =>
-        // anchored on the CTAS header so a column alias that happens to
-        // be named `describe` can never trigger the rewrite
-        "(?is)^(\\s*CREATE\\s+(?:OR\\s+REPLACE\\s+)?(?:TABLE|VIEW)\\s+\\S+\\s+AS\\s+)(.+)$".r
-          .findFirstMatchIn(stmt)
-          .flatMap(m => parse(m.group(2)).map(p => m.group(1) + body(p)))
-          .getOrElse(stmt)
-    }
-  }
+    }.getOrElse(stmt)
 
   private def rel(spark: SparkSession, p: Parsed,
                   bodyDf: String => DataFrame): DataFrame = {

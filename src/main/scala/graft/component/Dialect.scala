@@ -2093,52 +2093,17 @@ object Dialect {
     }
   }
 
-  /** Analysis stub for the ALTER TABLE column forms (r16 — ADD/DROP/
-    * RENAME COLUMN, ALTER COLUMN): Spark cannot parse them (USING,
-    * IF EXISTS on a column, ...), and even the parseable ones reference
-    * the table through UnresolvedTable, invisible to the relation walk.
-    * `DELETE FROM t` carries exactly the mutation's DAG contract — the
-    * target is BOTH dependency and output. ADD PRIMARY KEY and
-    * RENAME TO keep their existing analysis. */
-  def alterColumnStub(stmt: String): String = {
-    val re = ("(?is)^\\s*ALTER\\s+TABLE\\s+(?:IF\\s+EXISTS\\s+)?" +
-      "[`\"]?([^`\"\\s;]+)[`\"]?\\s+(?:ADD|DROP|RENAME|ALTER)\\s+(.*)$").r
-    re.findFirstMatchIn(stmt) match {
-      case Some(m)
-          if "(?is)^(?:PRIMARY\\s+KEY\\b|TO\\b)".r
-            .findFirstIn(m.group(2)).isEmpty =>
-        s"DELETE FROM ${m.group(1)}"
-      case _ => stmt
-    }
-  }
-
-  /** Session-free shims for forms only the EXECUTOR evaluates, so static
-    * analysis (parsePlan for deps/classification, syntax check) sees a
-    * Catalyst-parseable twin with the same dependency set:
-    * `INSERT INTO t BY NAME ...` drops the modifier, and FROM-first
-    * bodies (`AS FROM t`, `INSERT INTO t FROM y`) gain `SELECT *`.
-    * Matches are located on the quote-masked text — literals survive. */
+  /** Session-free shims for query-body forms only the EXECUTOR
+    * evaluates, so static analysis (parsePlan for deps, syntax check)
+    * sees a Catalyst-parseable twin with the same dependency set — one
+    * link of [[SqlAnalyzer.bodyStub]]. Matches are located on the
+    * quote-masked text — literals survive. */
   def analysisStub(stmt: String): String = {
     var s = stmt
-    s = replaceUnquoted(s, "(?is)^(\\s*INSERT\\s+INTO\\s+`?[^`\\s(]+`?\\s+)BY\\s+(?:NAME|POSITION)\\b".r)(
-      m => s.substring(m.start(1), m.end(1)))
-    s = replaceUnquoted(s, "(?is)\\bAS\\s+FROM\\b".r)(_ => "AS SELECT * FROM")
-    s = replaceUnquoted(s, "(?is)^(\\s*INSERT\\s+INTO\\s+`?[^`\\s(]+`?\\s+)FROM\\b".r)(
-      m => s.substring(m.start(1), m.end(1)) + "SELECT * FROM")
-    // Spark's parser rejects CREATE TEMP TABLE ... AS outright; the
-    // executor handles the TEMP spelling itself (run scope == session
-    // scope), so the stub analyzes the plain CREATE with identical deps
-    s = replaceUnquoted(s, "(?is)^(\\s*CREATE\\s+(?:OR\\s+REPLACE\\s+)?)TEMP(?:ORARY)?\\s+(?=TABLE\\b)".r)(
-      m => s.substring(m.start(1), m.end(1)))
     // percent LIMIT parses nowhere in Spark; a LIMIT 1 stand-in keeps
     // the dependency set
     s = replaceUnquoted(s, "(?is)\\bLIMIT\\s+[0-9.]+\\s*(?:%|PERCENT\\b)(\\s+OFFSET\\s+[0-9]+)?".r)(
       _ => "LIMIT 1")
-    // SET/RESET VARIABLE: executor state with no relation deps — an
-    // inert SET parses everywhere (Spark's own SET VARIABLE needs a
-    // DECLARE'd variable at analysis)
-    s = replaceUnquoted(s, "(?is)^\\s*(?:SET|RESET)\\s+VARIABLE\\b.*$".r)(
-      _ => "SET __graft_inert_variable = 1")
     // star REPLACE parses nowhere in Spark; the except-form has the
     // identical dependency set (expressions kept, order moot here)
     if (StarReplaceSql.has(s)) s = StarReplaceSql.except(s)

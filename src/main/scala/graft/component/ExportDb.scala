@@ -39,12 +39,4 @@ object ExportDb {
 
   def parseImport(stmt: String): Option[String] =
     importRe.findFirstMatchIn(stmt).map(_.group(1).replace("''", "'"))
-
-  /** Static-analysis twin: parseable, inert for dependency purposes
-    * (EXPORT reads the whole catalog, IMPORT's outputs are unknowable
-    * before the scripts exist — both documented). */
-  def stub(stmt: String): String =
-    if (parseExport(stmt).isDefined) "SET __graft_inert_EXPORT_DATABASE = true"
-    else if (parseImport(stmt).isDefined) "SET __graft_inert_IMPORT_DATABASE = true"
-    else stmt
 }

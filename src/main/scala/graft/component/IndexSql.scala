@@ -24,12 +24,7 @@ object IndexSql {
   private val dropRe =
     "(?is)^\\s*DROP\\s+INDEX\\s+(IF\\s+EXISTS\\s+)?([A-Za-z_]\\w*|\"[^\"]+\"|`[^`]+`)\\s*;?\\s*$".r
 
-  private def unq(s: String): String = {
-    val t = s.trim
-    if ((t.startsWith("\"") && t.endsWith("\"")) ||
-      (t.startsWith("`") && t.endsWith("`"))) t.substring(1, t.length - 1)
-    else t
-  }
+  import MergeSql.unq
 
   def parseCreate(stmt: String): Option[Create] =
     createRe.findFirstMatchIn(stmt).map { m =>
@@ -42,14 +37,4 @@ object IndexSql {
   def parseDrop(stmt: String): Option[Drop] =
     dropRe.findFirstMatchIn(stmt).map(m =>
       Drop(unq(m.group(2)), ifExists = m.group(1) != null))
-
-  /** Static-analysis twin: parseable, inert (an index never changes a
-    * result set or the DAG). ALTER TABLE ... ADD PRIMARY KEY (DuckDB
-    * >= 1.4; key-registry mutation only) stubs the same way. */
-  def stub(stmt: String): String =
-    if (parseCreate(stmt).isDefined) "SET __graft_inert_CREATE_INDEX = true"
-    else if (parseDrop(stmt).isDefined) "SET __graft_inert_DROP_INDEX = true"
-    else if ("(?is)^\\s*ALTER\\s+TABLE\\s+\\S+\\s+ADD\\s+PRIMARY\\s+KEY\\s*\\(".r
-      .findFirstIn(stmt).isDefined) "SET __graft_inert_ADD_PK = true"
-    else stmt
 }

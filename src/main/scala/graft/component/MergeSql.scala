@@ -369,19 +369,4 @@ object MergeSql {
         Option(m.group(2)).getOrElse(name))
     }
   }
-
-  /** Static-analysis twin: an UpdateTable plan whose EXISTS subquery
-    * carries the source — target is output AND dependency (the DAG
-    * orders the statement after the target's producer), source is a
-    * dependency. */
-  def stub(stmt: String): String =
-    parse(stmt) match {
-      case Some(p) =>
-        val src =
-          if (p.sourceText.trim.startsWith("(")) p.sourceText.trim
-          else s"(SELECT * FROM ${p.sourceText.trim.split("\\s+").head}) __m"
-        s"UPDATE `${Names.view(p.target)}` SET __graft_stub = 1 " +
-          s"WHERE EXISTS (SELECT 1 FROM $src)"
-      case None => stmt
-    }
 }

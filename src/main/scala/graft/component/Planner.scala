@@ -56,8 +56,12 @@ object Planner {
     m.toMap
   }
 
-  def plan(spark: SparkSession, config: Config): ExecutionPlan = {
-    val queries = analyze(spark, config)
+  def plan(spark: SparkSession, config: Config): ExecutionPlan =
+    plan(analyze(spark, config))
+
+  /** Plan already-analyzed queries: a run analyzes once, and its syntax
+    * check and its plan read the same statements. */
+  def plan(queries: List[Query]): ExecutionPlan = {
     val prod = producers(queries)
     val byIdx = queries.groupBy(_.blockIdx)
     ExecutionPlan(

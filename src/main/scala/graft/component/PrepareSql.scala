@@ -74,20 +74,10 @@ object PrepareSql {
     result
   }
 
-  /** Session-free analysis stub: the PREPARE body with every slot as
-    * NULL carries the body's dependency/output sets (the EXECUTE in the
-    * same code inherits them at the code level); EXECUTE/DEALLOCATE
-    * themselves are inert for analysis. */
-  def stub(stmt: String): String =
-    parsePrepare(stmt) match {
-      case Some(p) =>
-        substituteWith(p.body, _ => Some("NULL"), _ => Some("NULL"),
-          _ => "NULL")
-      case None =>
-        if (parseExecute(stmt).isDefined || parseDeallocate(stmt).isDefined)
-          "SELECT 1"
-        else stmt
-    }
+  /** The template with every parameter slot as NULL: the statement static
+    * analysis classifies for a PREPARE. */
+  def nullBody(p: Prepared): String =
+    substituteWith(p.body, _ => Some("NULL"), _ => Some("NULL"), _ => "NULL")
 
   private def substituteWith(body: String,
                              pos: Int => Option[String],

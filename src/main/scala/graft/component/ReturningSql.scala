@@ -68,8 +68,4 @@ object ReturningSql {
     * string per output column). */
   def projExprs(proj: String): Seq[String] =
     Dialect.splitTop(proj).filter(_.nonEmpty)
-
-  /** Analyzer stub: the DML core carries all relation dependencies; the
-    * RETURNING projection only references the target's columns. */
-  def stub(stmt: String): String = split(stmt)._1
 }

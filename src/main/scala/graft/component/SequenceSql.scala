@@ -218,10 +218,7 @@ object SequenceSql {
   final case class CreateStmt(name: String, defn: SeqDef,
                               orReplace: Boolean, ifNotExists: Boolean)
 
-  private def unq(s: String): String =
-    if ((s.startsWith("\"") && s.endsWith("\"")) ||
-      (s.startsWith("`") && s.endsWith("`"))) s.substring(1, s.length - 1)
-    else s
+  import MergeSql.unq
 
   def parseCreate(stmt: String): Option[CreateStmt] =
     createRe.findFirstMatchIn(stmt).map { m =>
@@ -250,21 +247,6 @@ object SequenceSql {
   def parseDrop(stmt: String): Option[DropStmt] =
     dropRe.findFirstMatchIn(stmt).map(m =>
       DropStmt(unq(m.group(2)), ifExists = m.group(1) != null))
-
-  /** Static-analysis twin: CREATE SEQUENCE produces catalog object `name`
-    * (so the DAG orders nextval users after it); DROP SEQUENCE *reads*
-    * the object — the dependency orders it after the CREATE in a
-    * batch-parallel plan (without it the drop can land in batch 1 and
-    * delete the sequence before it exists). A drop can still race a
-    * same-block nextval READER — a write-after-read hazard no dependency
-    * DAG models (the reference's sqlglot DAG has the same gap); scripts
-    * should drop in a later block. Mirrors [[CopyFrom.stub]]'s role. */
-  def stub(stmt: String): String =
-    parseCreate(stmt).map(c =>
-      s"CREATE TABLE `${Names.view(c.name)}` AS SELECT 1 AS __seq")
-      .orElse(parseDrop(stmt).map(d =>
-        s"SELECT 1 AS __seq FROM `${Names.view(d.name)}`"))
-      .getOrElse(stmt)
 
   /** Sequence names a statement's nextval/currval calls reference —
     * injected as dependencies by [[SqlAnalyzer]] so the DAG runs the

@@ -6,16 +6,28 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedIdentifier, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Statement classification + dependency/output extraction via the Catalyst
-  * parser — the Spark-native replacement for the reference's sqlglot AST
-  * walk (`src/sql_parser.py:26-128`).
+/** Dependency/output extraction over the one statement model — the
+  * Spark-native replacement for the reference's sqlglot AST walk
+  * (`src/sql_parser.py:26-128`). [[Stmt.parse]] decides what a statement
+  * is; this object reads that decision into a DAG contract:
   *
-  * Works on *parsed but unresolved* plans: `UnresolvedRelation` names are
-  * dependencies, CTE names are excluded, DDL/DML targets are outputs, and
-  * outputs are subtracted from dependencies (self-reference exclusion, like
-  * the reference's create-output subtraction / INSERT-target exclusion).
-  * Parse failures degrade to empty sets (reference
-  * `src/query_orchestrator.py:203-214`).
+  *  - query bodies (a VIEW/CTAS body, an INSERT source, `COPY (query)`, a
+  *    MERGE source, a PREPARE body, a bare query) go through
+  *    [[bodyStub]] and Catalyst's parser: their `UnresolvedRelation`
+  *    names are dependencies, CTE names excluded;
+  *  - created and inserted objects are outputs, subtracted from the
+  *    dependencies (the reference's create-output subtraction /
+  *    INSERT-target exclusion);
+  *  - statements that mutate a table in place (UPDATE, DELETE, MERGE,
+  *    ALTER TABLE column DDL, ADD PRIMARY KEY, CREATE INDEX) keep it as
+  *    dependency AND output, so the DAG orders them after its producer;
+  *  - `ALTER ... RENAME TO u` reads the old name and produces `u`;
+  *  - DROP TABLE/VIEW/INDEX has no dependency: `DROP TABLE IF EXISTS x`
+  *    never makes `x` an expected input.
+  *
+  * A body that fails to parse degrades the statement to empty sets
+  * (reference `src/query_orchestrator.py:203-214`), and is the
+  * statement's syntax_check error.
   */
 object SqlAnalyzer {
 
@@ -29,20 +41,27 @@ object SqlAnalyzer {
       outputs: Set[String],
       statementType: StatementType)
 
-  /** A rewritten statement's Catalyst-parseable twin: PIVOT / ASOF / COPY
-    * / CREATE SEQUENCE / MERGE / ... have no Catalyst spelling, and their
-    * session-free stubs parse with the same dependency sets. Static
-    * analysis and syntax_check both parse this. */
-  def stub(rewritten: String): String =
-    TypeSql.stub(PositionalSql.stub(AsOfSql.stub(Pivot.staticStub(CopyFrom.stub(
-      CopyTo.stub(UnionByNameSql.stub(DescribeSql.stub(SequenceSql.stub(
-        ExportDb.stub(UpsertSql.stub(MergeSql.stub(IndexSql.stub(
-          PrepareSql.stub(ReturningSql.stub(Dialect.alterColumnStub(
-            Dialect.analysisStub(rewritten)))))))))))))))))
+  private val Empty = Analysis(Set.empty, Set.empty, OtherStmt)
+
+  /** A query body's Catalyst-parseable twin: PIVOT / ASOF / POSITIONAL /
+    * UNION BY NAME / DESCRIBE / star modifiers have no Catalyst spelling,
+    * and their session-free stand-ins parse with the same dependency
+    * set. The executor's `bodyDf` runs the real forms. */
+  def bodyStub(body: String): String =
+    PositionalSql.stub(AsOfSql.stub(Pivot.staticStub(UnionByNameSql.stub(
+      DescribeSql.stub(Dialect.analysisStub(Dialect.fromFirst(body)))))))
+
+  /** The DAG contract of one classified statement; a Failure is the
+    * statement's syntax_check error. File table-function views
+    * (read_csv/read_parquet rewrites) are not workspace tables: they never
+    * enter the DAG or expected_input_tables (the reference's DuckDB
+    * resolves the path internally, same effect). */
+  def check(spark: SparkSession, stmt: Stmt): Try[Analysis] =
+    Try(contract(spark, stmt)).map(a => a.copy(
+      dependencies = a.dependencies.filterNot(FileReads.isFileView)))
 
   def analyzeStatement(spark: SparkSession, rewritten: String): Analysis = {
-    val a = Try(fromPlan(spark.sessionState.sqlParser.parsePlan(stub(rewritten))))
-      .getOrElse(Analysis(Set.empty, Set.empty, OtherStmt))
+    val a = check(spark, Stmt.parse(rewritten)).getOrElse(Empty)
     // nextval('s')/currval('s') reference the sequence through a string
     // literal the relation walk can't see — inject it as a dependency so
     // the DAG orders value users after the CREATE SEQUENCE producer;
@@ -55,6 +74,70 @@ object SqlAnalyzer {
       TypeSql.typeDeps(rewritten)) -- a.outputs
     if (extra.isEmpty) a
     else a.copy(dependencies = a.dependencies ++ extra)
+  }
+
+  private def contract(spark: SparkSession, stmt: Stmt): Analysis = {
+    def parse(sql: String) = spark.sessionState.sqlParser.parsePlan(sql)
+    def reads(body: String): Set[String] = {
+      val plan = parse(bodyStub(body))
+      allRelations(plan) -- cteNames(plan)
+    }
+    // a name in a dialect table position arrives sanitized and keys as
+    // written, the way Catalyst reads its readers; COPY, MERGE, sequence
+    // and type names key through Names.view, like their readers
+    def name(n: String) = n.toLowerCase
+    def view(n: String) = Names.view(n).toLowerCase
+    def makes(out: String, deps: Set[String], tpe: StatementType) =
+      Analysis(deps - out, Set(out), tpe)
+    def mutates(t: String, deps: Set[String] = Set.empty) =
+      Analysis(deps + t, Set(t), OtherStmt)
+    stmt match {
+      case Stmt.Malformed(e) => throw e
+      case Stmt.CreateView(n, body, _) => makes(name(n), reads(body), CreateStmt)
+      case Stmt.CreateTableAs(n, body, _) => makes(name(n), reads(body), CreateStmt)
+      case Stmt.CreateEmpty(n, colDefs, _) =>
+        ConstraintSql.table(colDefs) // the column list parses as the executor reads it
+        makes(name(n), Set.empty, CreateStmt)
+      case Stmt.AddPrimaryKey(t, _) => mutates(name(t))
+      case Stmt.AddColumn(t, _, _) => mutates(name(t))
+      case Stmt.DropColumn(t, _, _) => mutates(name(t))
+      case Stmt.RenameColumn(t, _, _) => mutates(name(t))
+      case Stmt.AlterColumn(t, _, _) => mutates(name(t))
+      case Stmt.CreateIndex(c) => mutates(name(c.table))
+      case Stmt.Rename(from, to, _) => makes(name(to), Set(name(from)), OtherStmt)
+      case Stmt.Insert(t, tail) => makes(name(t), reads(Stmt.insertSource(tail)._3), InsertStmt)
+      // the plain INSERT head has the upsert's dependency/output sets
+      case Stmt.Upsert(u) => contract(spark, Stmt.parse(u.insertHead))
+      case Stmt.Merge(m) => mutates(view(m.target), reads(MergeSql.sourceOf(m)._1))
+      case Stmt.CopyToFile(p) =>
+        Analysis(
+          if (p.source.startsWith("(")) reads(p.source.substring(1, p.source.length - 1))
+          else Set(view(p.source)), Set.empty, OtherStmt)
+      // COPY FROM both requires and mutates the target: an INSERT's shape
+      case Stmt.CopyFromFile(p) => makes(view(p.target), Set.empty, InsertStmt)
+      // CREATE SEQUENCE / TYPE produce a catalog object, so the DAG orders
+      // the nextval / cast users after it ([[analyzeStatement]] injects
+      // those edges); DROP reads it, which orders the drop after the
+      // CREATE in a batch-parallel plan. A drop can still race a
+      // same-block READER — a write-after-read hazard no dependency DAG
+      // models (the reference's sqlglot DAG has the same gap); scripts
+      // should drop in a later block.
+      case Stmt.CreateSequence(c) => makes(view(c.name), Set.empty, CreateStmt)
+      case Stmt.DropSequence(d) => Analysis(Set(view(d.name)), Set.empty, OtherStmt)
+      case Stmt.CreateType(c) => makes(view(TypeSql.norm(c.name)), Set.empty, CreateStmt)
+      case Stmt.DropType(n, _) => Analysis(Set(view(TypeSql.norm(n))), Set.empty, OtherStmt)
+      // the body with every parameter slot NULL carries the template's
+      // sets (an EXECUTE in the same code inherits them at the code level)
+      case Stmt.Prepare(p) => contract(spark, Stmt.parse(PrepareSql.nullBody(p)))
+      case Stmt.EngineQuery(sql) => Analysis(reads(sql), Set.empty, OtherStmt)
+      case Stmt.Catalyst(sql) => fromPlan(parse(bodyStub(sql)))
+      // EXPORT reads the whole catalog and IMPORT's outputs are unknowable
+      // before its scripts exist (both documented); the rest name no table
+      case Stmt.Rejected(_) | Stmt.Drop(_, _, _) | Stmt.DropIndex(_) |
+          Stmt.ExportDatabase(_) | Stmt.ImportDatabase(_) |
+          Stmt.SetVariable(_, _) | Stmt.ResetVariable(_) |
+          Stmt.Deallocate(_) | Stmt.Execute(_) | Stmt.SequenceBlocks(_) => Empty
+    }
   }
 
   /** Analyze a full (multi-statement) script. */
@@ -155,11 +238,7 @@ object SqlAnalyzer {
     // UPDATE/DELETE keep their target as a dependency too: re-derivation
     // must run after whatever produced the current state of the table.
     val keepTargetDep = kind == "DeleteFromTable" || kind == "UpdateTable"
-    val deps0 = if (keepTargetDep) relations -- ctes else relations -- ctes -- outputs
-    // file table-function views (read_csv/read_parquet rewrites) are not
-    // workspace tables: they never enter the DAG or expected_input_tables
-    // (the reference's DuckDB resolves the path internally, same effect)
-    val deps = deps0.filterNot(FileReads.isFileView)
-    Analysis(deps, outputs, stmtType)
+    Analysis(if (keepTargetDep) relations -- ctes else relations -- ctes -- outputs,
+      outputs, stmtType)
   }
 }

@@ -38,7 +38,8 @@ import scala.collection.concurrent.TrieMap
   * The store is process-global like the sequence catalog — statements
   * in one code run in order, so a CREATE TYPE is visible to every later
   * statement; the DAG orders creators before users through
-  * [[typeDeps]]/[[stub]] (the nextval dependency-injection pattern).
+  * [[typeDeps]] and the CREATE TYPE contract in [[SqlAnalyzer]] (the
+  * nextval dependency-injection pattern).
   */
 object TypeSql {
 
@@ -60,7 +61,7 @@ object TypeSql {
     ("(?is)^\\s*DROP\\s+TYPE\\s+(IF\\s+EXISTS\\s+)?([A-Za-z_]\\w*|\"[^\"]+\")" +
       "\\s*(CASCADE|RESTRICT)?\\s*;?\\s*$").r
 
-  private def norm(name: String): String =
+  private[component] def norm(name: String): String =
     name.stripPrefix("\"").stripSuffix("\"").toLowerCase
 
   def parseCreate(stmt: String): Option[Create] =
@@ -335,15 +336,6 @@ object TypeSql {
     }
     stmt
   }
-
-  /** Parseable stand-ins for the DAG walk (the sequence-stub pattern):
-    * CREATE TYPE produces the type name as a node, DROP consumes it. */
-  def stub(stmt: String): String =
-    parseCreate(stmt).map(c =>
-      s"CREATE TABLE `${Names.view(norm(c.name))}` AS SELECT 1 AS __type")
-      .orElse(parseDrop(stmt).map(d =>
-        s"SELECT 1 AS __type FROM `${Names.view(norm(d._1))}`"))
-      .getOrElse(stmt)
 
   /** Words that are real type spellings — never type-alias candidates. */
   private val builtinTypes: Set[String] = Set(

@@ -87,9 +87,4 @@ object UpsertSql {
       }
     Some(Parsed(head, target, keyCols, action))
   }
-
-  /** Static-analysis twin: the plain INSERT head has the identical
-    * dependency/output sets (the clause only filters/edits rows). */
-  def stub(stmt: String): String =
-    parse(stmt).map(_.insertHead).getOrElse(stmt)
 }

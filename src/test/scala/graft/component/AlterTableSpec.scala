@@ -144,7 +144,7 @@ class AlterTableSpec extends SparkSpec {
     val b = SqlAnalyzer.analyzeStatement(spark,
       "ALTER TABLE mytab ALTER COLUMN x TYPE INT USING x + 1")
     assert(b.outputs.contains("mytab") && b.dependencies.contains("mytab"))
-    // ADD PRIMARY KEY / RENAME TO keep their existing analysis
+    // RENAME TO reads the old name and produces the new one
     val c = SqlAnalyzer.analyzeStatement(spark,
       "ALTER TABLE mytab RENAME TO other")
     assert(!c.outputs.contains("mytab") || c.outputs.contains("other") ||

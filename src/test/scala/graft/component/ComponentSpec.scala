@@ -379,6 +379,33 @@ class ComponentSpec extends SparkSpec {
       List("\"k\",\"v\",\"p\"", "\"1\",\"a\",\"20\"", "\"2\",\"c\",\"5\""))
   }
 
+  /** B1 reads a table macro that B2 defines: DuckDB fails on B1, and
+    * so must every path that prepares the config once, in order. */
+  private def macroLaterConfig(checkOnStartup: Boolean): String =
+    s"""{"parameters": {"syntax_check_on_startup": $checkOnStartup, "blocks": [
+       |  {"name": "B1", "codes": [{"name": "use", "script": ["CREATE TABLE ml_r AS SELECT * FROM tm(1)"]}]},
+       |  {"name": "B2", "codes": [{"name": "mk", "script": ["CREATE MACRO tm(x) AS TABLE SELECT x AS v FROM ml_src"]}]}
+       |]}, "storage": {}}""".stripMargin
+
+  test("execution_plan: the flow and the dependency analysis read one analysis") {
+    Macros.clear()
+    val md = Actions.executionPlan(spark, Config.parse(macroLaterConfig(false)))
+    val (flow, analysis) = md.splitAt(md.indexOf("## 🔍 Dependency Analysis"))
+    // `use` lists the same (no) dependencies in both sections
+    assert(flow.contains("ml_src") == analysis.contains("ml_src"), md)
+  }
+
+  test("syntax_check_on_startup plans the statements it checked") {
+    import spark.implicits._
+    Seq((1L, 2L)).toDF("a", "b").createOrReplaceTempView("ml_src")
+    def runError(check: Boolean): String = {
+      val dd = datadir()
+      write(dd.resolve("config.json"), macroLaterConfig(check))
+      intercept[Exception](Component.run(spark, dd.toString)).getMessage
+    }
+    assert(runError(check = true) == runError(check = false))
+  }
+
   test("version query shape works in Spark SQL") {
     val df = spark.sql("SELECT version() AS version")
     assert(df.collect().head.getString(0).nonEmpty)

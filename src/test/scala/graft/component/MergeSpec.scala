@@ -268,7 +268,7 @@ class MergeSpec extends SparkSpec {
       "MERGE INTO m_t USING m_s ON m_t.k = m_s.k " +
         "WHEN MATCHED THEN UPDATE SET v = m_s.v " +
         "WHEN NOT MATCHED THEN INSERT VALUES (m_s.k, m_s.v)"))
-    // the MergeSql.stub convention: target is output AND dependency
+    // the Stmt.Merge contract: target is output AND dependency
     // (the DAG orders the MERGE after the target's producer)
     assert(an.outputs == Set("m_t") && an.dependencies == Set("m_t", "m_s"), an)
     val an2 = SqlAnalyzer.analyzeStatement(spark, Dialect.rewrite(

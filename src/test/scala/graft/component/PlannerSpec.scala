@@ -80,6 +80,28 @@ class PlannerSpec extends SparkSpec {
     } finally Macros.clear()
   }
 
+  test("DDL contracts: TEMP VIEW, ADD PRIMARY KEY, CREATE INDEX and RENAME TO order after their table") {
+    val c = cfg(
+      "tv"  -> "CREATE TEMP VIEW dc_v AS SELECT * FROM dc_t",
+      "rv"  -> "CREATE TABLE dc_rv AS SELECT * FROM dc_v",
+      "pk"  -> "ALTER TABLE dc_t ADD PRIMARY KEY (k)",
+      "ix"  -> "CREATE UNIQUE INDEX dc_ix ON dc_t (k)",
+      "mk"  -> "CREATE TABLE dc_t AS SELECT 1 AS k",
+      "w"   -> "CREATE TABLE dc_w AS SELECT * FROM dc_u",
+      "rn"  -> "ALTER TABLE dc_t2 RENAME TO dc_u",
+      "mk2" -> "CREATE TABLE dc_t2 AS SELECT 1 AS k",
+      "dr"  -> "DROP TABLE IF EXISTS dc_x")
+    val batches = Planner.plan(spark, c).blocks.head.batches.map(_.queries.map(_.name))
+    def at(q: String) = batches.indexWhere(_.contains(q))
+    assert(at("tv") < at("rv"), batches)
+    assert(at("mk") < at("pk") && at("mk") < at("ix") && at("mk") < at("tv"), batches)
+    assert(at("mk2") < at("rn") && at("rn") < at("w"), batches)
+    assert(at("dr") == 0, batches)
+    // every read table is produced in the config: DROP ... IF EXISTS
+    // names no expected input
+    assert(Actions.expectedInputTables(spark, c).isEmpty)
+  }
+
   test("unparseable scripts degrade to no dependencies") {
     val a = SqlAnalyzer.analyzeScript(spark, "THIS IS NOT SQL AT ALL (")
     assert(a.dependencies.isEmpty && a.outputs.isEmpty)
