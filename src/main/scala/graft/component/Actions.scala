@@ -125,9 +125,12 @@ object Actions {
     * mappings a comma-separated list; with them the full validation
     * report (required/available sections + issues). */
   def expectedInputReport(spark: SparkSession, config: Config): String = {
-    val expected = expectedInputTables(spark, config).toSet
+    val tables = expectedInputTables(spark, config)
     if (config.inputTables.isEmpty)
-      return expected.toList.sorted.mkString(", ")
+      return tables.sorted.mkString(", ")
+    // the SQL's names and the mapping's destinations compare under one
+    // rule: `FROM 'days.csv'` reads the destination `days.csv`
+    val expected = tables.map(stripExt).toSet
     val available = config.inputTables.map(t => stripExt(t.destination)).toSet
     val missing = expected -- available
     val extra = available -- expected

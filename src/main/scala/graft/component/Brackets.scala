@@ -1,5 +1,9 @@
 package graft.component
 
+import java.util.regex.MatchResult
+
+import Dialect.{Sites, Skip, Splice, Step}
+
 /** DuckDB bracket syntax in user SQL — list literals `[1, 2, 3]`, struct
   * literals `{'k': v}`, 1-based subscripts `l[i]` and inclusive slices
   * `l[a:b]`. All legal in the reference (SQL goes to DuckDB verbatim,
@@ -26,73 +30,64 @@ object Brackets {
     * lambdas must not share a name). */
   private val sliceVar = new java.util.concurrent.atomic.AtomicLong(0)
 
-  def rewrite(stmt: String): String = {
-    var s = stmt
-    var guard = 0
-    // innermost-first, one bracket pair per pass — each pass strictly
-    // reduces the bracket count, so the fixpoint terminates; the guard
-    // only bounds pathological inputs
-    while (guard < 4096) {
-      val next = onePass(s)
-      if (next == s) return s
-      s = next
-      guard += 1
+  /** Innermost pairs first, left to right: an outer pair is skipped
+    * into, and a lowering re-splices from the opener enclosing it, so
+    * the scan resumes there and meets that pair again once it is
+    * innermost. Every pair the scan leaves is left for good (a pair it
+    * cannot lower stays for Spark's parser, with position info). */
+  private[component] val brackets = Sites("[\\[{]".r, lowerPair)
+
+  private def lowerPair(stmt: String, masked: String, m: MatchResult): Step = {
+    val i = m.start
+    val (oc, cc) = if (masked.charAt(i) == '[') ('[', ']') else ('{', '}')
+    val close = Dialect.matchingParen(masked, i, oc, cc)
+    if (close <= 0 || !innermost(masked, i, close)) return Skip(m.end)
+    val lowered: Option[(Int, String)] =
+      if (oc == '{') rewriteStruct(stmt, masked, i, close)
+      // not a struct literal (no key: value shape): the braces stay —
+      // throwing here would abort validation instead of listing the
+      // statement's issue
+      else if (stmt.substring(i + 1, close).trim.isEmpty)
+        // empty pair: a trailing T[] after a type name is an ARRAY
+        // type spelling (`x::INT[]`, `CAST(x AS VARCHAR[])`, bare
+        // DDL `a INT[]`), NOT a subscript — rewriting it to
+        // element_at(INT, ) would turn legal DuckDB into an opaque
+        // parse error. A non-type empty subscript stays untouched;
+        // an empty pair in literal position is the empty list.
+        typeSuffix(stmt, masked, i).orElse(
+          if (isSubscript(stmt, i)) None else Some((i, "array()")))
+      else if (!isSubscript(stmt, i))
+        comprehension(stmt, masked, i, close).orElse(
+          Some((i, "array(" + stmt.substring(i + 1, close) + ")")))
+      else Dialect.operandStart(stmt, masked, i, Dialect.Postfix) match {
+        // a slice form v1.0 itself rejects ends the pass
+        case Some(start) => Some(subscript(stmt, masked, start, i, close)
+          .map(start -> _).getOrElse(return Skip(stmt.length)))
+        // no subscriptable base (a number, a keyword): the pair stays
+        case None => None
+      }
+    lowered match {
+      case None => Skip(m.end)
+      case Some((from, text)) =>
+        val outer = enclosingOpener(masked, from)
+        if (outer < 0) Splice(from, close + 1, text)
+        else Splice(outer, close + 1, stmt.substring(outer, from) + text)
     }
-    s
   }
 
-  private def onePass(stmt: String): String = {
-    val masked = Dialect.maskQuoted(stmt)
-    var i = 0
-    while (i < masked.length) {
-      masked.charAt(i) match {
-        case '[' =>
-          val close = Dialect.matchingParen(masked, i, '[', ']')
-          if (close > 0 && innermost(masked, i, close)) {
-            if (stmt.substring(i + 1, close).trim.isEmpty) {
-              // empty pair: a trailing T[] after a type name is an ARRAY
-              // type spelling (`x::INT[]`, `CAST(x AS VARCHAR[])`, bare
-              // DDL `a INT[]`), NOT a subscript — rewriting it to
-              // element_at(INT, ) would turn legal DuckDB into an opaque
-              // parse error. A non-type empty subscript stays untouched
-              // (Spark's parser reports it with position info); an empty
-              // pair in literal position is the empty list.
-              typeSuffix(stmt, masked, i, close) match {
-                case Some(out) => return out
-                case None =>
-                  if (!isSubscript(stmt, masked, i))
-                    return stmt.substring(0, i) + "array()" +
-                      stmt.substring(close + 1)
-                // else: leave for the parser; keep scanning past it
-              }
-            } else if (!isSubscript(stmt, masked, i))
-              return comprehension(stmt, masked, i, close).getOrElse(
-                stmt.substring(0, i) + "array(" +
-                  stmt.substring(i + 1, close) + ")" + stmt.substring(close + 1))
-            else Dialect.operandStart(stmt, masked, i, Dialect.Postfix) match {
-              case Some(start) => return rewriteSubscript(stmt, masked, start, i, close)
-              // no subscriptable base (a number, a keyword): leave the
-              // pair for Spark's parser; keep scanning past it
-              case None =>
-            }
-          }
-        case '{' =>
-          val close = Dialect.matchingParen(masked, i, '{', '}')
-          if (close > 0 && innermost(masked, i, close)) {
-            rewriteStruct(stmt, masked, i, close) match {
-              case Some(out) => return out
-              // not a struct literal (no key: value shape): leave the
-              // braces for Spark's parser to reject with position info —
-              // throwing here would abort validation instead of listing
-              // the statement's issue
-              case None => ()
-            }
-          }
+  /** The innermost unclosed `[` or `{` before `pos`, or -1. */
+  private def enclosingOpener(masked: String, pos: Int): Int = {
+    var d = 0
+    var j = pos - 1
+    while (j >= 0) {
+      masked.charAt(j) match {
+        case ']' | '}' => d += 1
+        case '[' | '{' => if (d == 0) return j else d -= 1
         case _ =>
       }
-      i += 1
+      j -= 1
     }
-    stmt
+    -1
   }
 
   private def innermost(masked: String, open: Int, close: Int): Boolean =
@@ -113,7 +108,7 @@ object Brackets {
     * identifier before the bracket (masked to spaces) is a subscript
     * base too (`'abc'[2]`, `"col"[1]`). A keyword reads as a literal
     * context even though it ends in a letter. */
-  private def isSubscript(stmt: String, masked: String, open: Int): Boolean = {
+  private def isSubscript(stmt: String, open: Int): Boolean = {
     var j = open - 1
     while (j >= 0 && stmt.charAt(j).isWhitespace) j -= 1
     if (j < 0) return false
@@ -142,7 +137,7 @@ object Brackets {
     * prior pass) → `ARRAY<type>`; the later VARCHAR→STRING pass still sees
     * the inner name. None when the preceding token is not a type. */
   private def typeSuffix(stmt: String, masked: String,
-                         open: Int, close: Int): Option[String] = {
+                         open: Int): Option[(Int, String)] = {
     var j = open - 1
     while (j >= 0 && stmt.charAt(j).isWhitespace) j -= 1
     if (j < 0) return None
@@ -162,20 +157,17 @@ object Brackets {
       k -= 1
     val word = stmt.substring(k + 1, j + 1).toLowerCase
     if (!typeWords(word)) None
-    else {
-      val typeText = stmt.substring(k + 1, open).trim
-      Some(stmt.substring(0, k + 1) + "ARRAY<" + typeText + ">" +
-        stmt.substring(close + 1))
-    }
+    else Some((k + 1, "ARRAY<" + stmt.substring(k + 1, open).trim + ">"))
   }
 
   private val nonNegIntLit = "^\\d+$".r
   private val negIntLit = "^-\\s*(\\d+)$".r
 
   /** The subscript or slice `[open, close]` over the base starting at
-    * `start` (the dialect's postfix operand, [[Dialect.operandStart]]). */
-  private def rewriteSubscript(stmt: String, masked: String, start: Int,
-                               open: Int, close: Int): String = {
+    * `start` (the dialect's postfix operand, [[Dialect.operandStart]]),
+    * or None for a stepped slice v1.0 itself rejects. */
+  private def subscript(stmt: String, masked: String, start: Int,
+                        open: Int, close: Int): Option[String] = {
     val base = stmt.substring(start, open).trim
     val body = stmt.substring(open + 1, close)
     val mbody = masked.substring(open + 1, close)
@@ -240,7 +232,7 @@ object Brackets {
           val step = body.substring(colon2 + 1).trim
           // bail (text passes through, loud on both engines) for the
           // forms v1.0 itself rejects: string base, omitted hi, no step
-          if (stringBase || hi0.isEmpty || step.isEmpty) return stmt
+          if (stringBase || hi0.isEmpty || step.isEmpty) return None
           val lo = if (lo0.isEmpty) "1" else bound(lo0)
           val hi = bound(hi0)
           val v = s"__gs${Brackets.sliceVar.incrementAndGet()}"
@@ -249,15 +241,14 @@ object Brackets {
           // branch fires only for step=0 — sequence(2,1,0) errors, the
           // v1.0 behavior — but must still TYPE as array<T>, hence the
           // transform over the base
-          val repl =
+          return Some(
             s"(CASE WHEN ($step) > 0 THEN " +
               s"CASE WHEN greatest(1, $lo) > least($lenExpr, $hi) THEN slice($base, 1, 0) " +
               s"ELSE transform(sequence(greatest(1, $lo), least($lenExpr, $hi), $step), $v -> try_element_at($base, $v)) END " +
             s"WHEN ($step) < 0 THEN " +
               s"CASE WHEN least($lenExpr, $lo) < greatest(1, $hi) THEN slice($base, 1, 0) " +
               s"ELSE transform(sequence(least($lenExpr, $lo), greatest(1, $hi), $step), $v -> try_element_at($base, $v)) END " +
-            s"ELSE transform(sequence(2, 1, ($step)), $v -> try_element_at($base, $v)) END)"
-          return stmt.substring(0, start) + repl + stmt.substring(close + 1)
+            s"ELSE transform(sequence(2, 1, ($step)), $v -> try_element_at($base, $v)) END)")
         }
         val lo0 = body.substring(0, colon).trim
         val hi0 = body.substring(colon + 1).trim
@@ -272,7 +263,7 @@ object Brackets {
         if (stringBase) s"substr($base, $lo, greatest(0, $hi - $lo + 1))"
         else s"slice($base, $lo, greatest(0, $hi - $lo + 1))"
       }
-    stmt.substring(0, start) + repl + stmt.substring(close + 1)
+    Some(repl)
   }
 
   /** DuckDB list comprehension `[expr FOR x IN list [IF cond]]` — maps
@@ -281,7 +272,7 @@ object Brackets {
     * codegen'd Catalyst array operators; the lambda variable binds the
     * same way in both dialects. */
   private def comprehension(stmt: String, masked: String,
-                            open: Int, close: Int): Option[String] = {
+                            open: Int, close: Int): Option[(Int, String)] = {
     val body = stmt.substring(open + 1, close)
     val mbody = masked.substring(open + 1, close)
     def depth0(re: String): Option[Int] =
@@ -310,13 +301,12 @@ object Brackets {
         case Some(c) => s"filter($list, $variable -> $c)"
         case None => list
       }
-      stmt.substring(0, open) + s"transform($source, $variable -> $expr)" +
-        stmt.substring(close + 1)
+      (open, s"transform($source, $variable -> $expr)")
     }
   }
 
   private def rewriteStruct(stmt: String, masked: String,
-                            open: Int, close: Int): Option[String] = {
+                            open: Int, close: Int): Option[(Int, String)] = {
     // innermost: no `[` or `{` inside, so the shared split nests parens only
     val entries = Dialect.splitTop(stmt.substring(open + 1, close))
       .filter(_.nonEmpty).map(e => (e, Dialect.maskQuoted(e)))
@@ -365,7 +355,6 @@ object Brackets {
       s"$key, $value"
     }
     val fn = if (isMap) "map" else "named_struct"
-    Some(stmt.substring(0, start) + fn + "(" + parts.mkString(", ") +
-      ")" + stmt.substring(close + 1))
+    Some((start, fn + "(" + parts.mkString(", ") + ")"))
   }
 }

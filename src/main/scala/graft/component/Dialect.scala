@@ -1,6 +1,9 @@
 package graft.component
 
+import java.util.regex.MatchResult
+
 import scala.collection.mutable.ListBuffer
+import scala.util.matching.Regex
 
 /** DuckDB-SQL → Spark-SQL pre-parse rewriter + statement splitter
   * (SURVEY §7 module 4). Corpus-driven and minimal: everything the
@@ -118,8 +121,7 @@ object Dialect {
   /** `CREATE TABLE t AS <query> WITH NO DATA` — schema-only CTAS
     * (probed v1.0) → the query wrapped under `WHERE 1 = 0` (appending
     * LIMIT 0 would clash with a query-final ORDER BY/LIMIT). */
-  private def rewriteNoData(stmt: String): String = {
-    val masked = maskQuoted(stmt)
+  private def rewriteNoData(stmt: String, masked: String): String = {
     val m = ("(?is)^(\\s*CREATE\\s+(?:OR\\s+REPLACE\\s+)?" +
       "(?:TEMP(?:ORARY)?\\s+)?TABLE\\s+\\S+\\s+AS\\s+)(.*?)" +
       "\\s+WITH\\s+NO\\s+DATA\\s*;?\\s*$").r
@@ -133,23 +135,22 @@ object Dialect {
     * → the plain `SET a = e1, b = e2` list. A row-subquery RHS
     * (`= (SELECT ...)`) rejects loudly — no single-statement Spark
     * spelling. */
-  private def rewriteTupleSet(stmt: String): String = {
-    if ("(?is)^\\s*UPDATE\\b".r.findFirstIn(stmt).isEmpty) return stmt
-    val masked = maskQuoted(stmt)
-    val m = "(?is)\\bSET\\s*\\(".r.findFirstMatchIn(masked)
-      .getOrElse(return stmt)
+  private val tupleSet = Sites("(?is)\\bSET\\s*\\(".r, lowerTupleSet)
+
+  private def lowerTupleSet(stmt: String, masked: String, m: MatchResult): Step = {
+    if ("(?is)^\\s*UPDATE\\b".r.findFirstIn(stmt).isEmpty) return Skip(stmt.length)
     val open = m.end - 1
     val close = matchingParen(masked, open)
-    if (close < 0) return stmt
+    if (close < 0) return Skip(stmt.length)
     var i = close + 1
     while (i < masked.length && masked.charAt(i).isWhitespace) i += 1
-    if (i >= masked.length || masked.charAt(i) != '=') return stmt
+    if (i >= masked.length || masked.charAt(i) != '=') return Skip(stmt.length)
     i += 1
     while (i < masked.length && masked.charAt(i).isWhitespace) i += 1
-    if (i >= masked.length || masked.charAt(i) != '(') return stmt
+    if (i >= masked.length || masked.charAt(i) != '(') return Skip(stmt.length)
     val vOpen = i
     val vClose = matchingParen(masked, vOpen)
-    if (vClose < 0) return stmt
+    if (vClose < 0) return Skip(stmt.length)
     if ("(?is)^\\s*SELECT\\b".r
         .findFirstIn(masked.substring(vOpen + 1, vClose)).isDefined)
       throw new UserException(
@@ -162,10 +163,8 @@ object Dialect {
       throw new UserException(
         s"UPDATE SET (cols) = (values): ${names.length} columns but " +
           s"${values.length} values")
-    val assigns = names.zip(values)
-      .map { case (n, v) => s"$n = $v" }.mkString("SET ", ", ", "")
-    rewriteTupleSet(
-      stmt.substring(0, m.start) + assigns + stmt.substring(vClose + 1))
+    Splice(m.start, vClose + 1, names.zip(values)
+      .map { case (n, v) => s"$n = $v" }.mkString("SET ", ", ", ""))
   }
 
   private val orderedAggFns = Set("first", "last", "any_value", "arbitrary",
@@ -195,62 +194,44 @@ object Dialect {
     * silently dropping it would corrupt order-sensitive results.
     * Window `OVER (ORDER BY ...)`, `WITHIN GROUP (...)` and subquery
     * parens are skipped by construction. */
-  private def rewriteOrderedAgg(stmt0: String): String = {
-    var stmt = stmt0
-    var guard = 0
-    while (guard < 32) {
-      guard += 1
-      val masked = maskQuoted(stmt)
-      var replaced: Option[String] = None
-      val it = "(?i)\\bORDER\\s+BY\\b".r.findAllMatchIn(masked).iterator
-      while (replaced.isEmpty && it.hasNext) {
-        val ob = it.next()
-        val open = openingParen(masked, ob.start) // innermost enclosing '('
-        if (open >= 0) {
-          var k = open - 1
-          while (k >= 0 && masked.charAt(k).isWhitespace) k -= 1
-          val nameEnd = k
-          while (k >= 0 && (masked.charAt(k).isLetterOrDigit ||
-            masked.charAt(k) == '_')) k -= 1
-          val fn = if (nameEnd > k)
-            masked.substring(k + 1, nameEnd + 1).toLowerCase else ""
-          val close = matchingParen(masked, open)
-          val isSubquery = "(?is)^\\s*(?:SELECT|WITH|FROM|VALUES|TABLE)\\b".r
-            .findFirstIn(masked.substring(open + 1)).isDefined
-          // skipped paren owners: OVER (window spec), WITHIN GROUP,
-          // FILTER, and `WINDOW w AS (ORDER BY ...)` named-window specs
-          if (close > 0 && fn.nonEmpty && !isSubquery &&
-              !Set("over", "group", "filter", "as")(fn)) {
-            if (orderedAggFns(fn))
-              replaced = Some(lowerOrderedAgg(
-                stmt, fn, k + 1, open, ob.start, ob.end, close))
-            else if (orderNoopAggFns(fn))
-              // order-insensitive: the modifier is a documented no-op —
-              // strip it (keep the argument list)
-              replaced = Some(stmt.substring(0, ob.start).trim
-                .stripSuffix(",") + stmt.substring(close))
-            else
-              throw new UserException(
-                s"ORDER BY inside $fn(...): the ordered-aggregate " +
-                  "lowering maps first/last/any_value/arbitrary/" +
-                  "array_agg/list/string_agg/group_concat/listagg and " +
-                  "strips the no-op modifier from order-insensitive " +
-                  "aggregates (dropping it for an unknown function " +
-                  "could corrupt order-sensitive results)")
-          }
-        }
-      }
-      replaced match {
-        case Some(s2) => stmt = s2
-        case None => return stmt
-      }
-    }
-    stmt
+  private val orderedAgg = Sites("(?i)\\bORDER\\s+BY\\b".r, lowerOrderedAgg)
+
+  private def lowerOrderedAgg(stmt: String, masked: String, ob: MatchResult): Step = {
+    val open = openingParen(masked, ob.start) // innermost enclosing '('
+    if (open < 0) return Skip(ob.end)
+    var k = open - 1
+    while (k >= 0 && masked.charAt(k).isWhitespace) k -= 1
+    val nameEnd = k
+    while (k >= 0 && (masked.charAt(k).isLetterOrDigit ||
+      masked.charAt(k) == '_')) k -= 1
+    val fn = if (nameEnd > k)
+      masked.substring(k + 1, nameEnd + 1).toLowerCase else ""
+    val close = matchingParen(masked, open)
+    val isSubquery = "(?is)^\\s*(?:SELECT|WITH|FROM|VALUES|TABLE)\\b".r
+      .findFirstIn(masked.substring(open + 1)).isDefined
+    // skipped paren owners: OVER (window spec), WITHIN GROUP,
+    // FILTER, and `WINDOW w AS (ORDER BY ...)` named-window specs
+    if (close <= 0 || fn.isEmpty || isSubquery ||
+        Set("over", "group", "filter", "as")(fn)) Skip(ob.end)
+    else if (orderedAggFns(fn))
+      Splice(k + 1, close + 1, orderedAggCall(stmt, fn, open, ob.start, ob.end, close))
+    else if (orderNoopAggFns(fn))
+      // order-insensitive: the modifier is a documented no-op — strip it
+      // (keep the argument list); the head before it is trimmed whole
+      Splice(0, close, stmt.substring(0, ob.start).trim.stripSuffix(","))
+    else
+      throw new UserException(
+        s"ORDER BY inside $fn(...): the ordered-aggregate " +
+          "lowering maps first/last/any_value/arbitrary/" +
+          "array_agg/list/string_agg/group_concat/listagg and " +
+          "strips the no-op modifier from order-insensitive " +
+          "aggregates (dropping it for an unknown function " +
+          "could corrupt order-sensitive results)")
   }
 
-  private def lowerOrderedAgg(stmt: String, fn: String, fnStart: Int,
-                              open: Int, obStart: Int, obEnd: Int,
-                              close: Int): String = {
+  /** The lowered call text of an ordered aggregate. */
+  private def orderedAggCall(stmt: String, fn: String, open: Int,
+                             obStart: Int, obEnd: Int, close: Int): String = {
     def splitSeg(a: Int, b: Int) = splitTop(stmt.substring(a, b)).filter(_.nonEmpty)
     val args = splitSeg(open + 1, obStart)
     val keySpecs = splitSeg(obEnd, close).map { piece =>
@@ -278,7 +259,7 @@ object Dialect {
     // flip still lands nulls last.
     def flagged(kx: String): Seq[String] =
       Seq(s"(($kx) IS ${if (desc) "NOT " else ""}NULL)", kx)
-    val out = fn match {
+    fn match {
       case "first" | "any_value" | "arbitrary" | "last" =>
         if (args.length != 1) throw new UserException(
           s"ordered aggregate $fn takes one argument, got ${args.length}")
@@ -306,7 +287,6 @@ object Dialect {
           s"$k${if (desc) " DESC" else ""} NULLS LAST").mkString(", ")
         s"listagg(${args.head}, $sep) WITHIN GROUP (ORDER BY $ord)"
     }
-    stmt.substring(0, fnStart) + out + stmt.substring(close + 1)
   }
 
   /** DuckDB's numeric→integral casts ROUND where Spark's truncate
@@ -321,62 +301,37 @@ object Dialect {
     "TINYINT|INT1|SMALLINT|INT2|SHORT|INTEGER|INT4|SIGNED|BIGINT|INT8|LONG|HUGEINT|INT"
   private val castCall = "(?i)\\b(TRY_)?CAST\\s*\\(".r
   private val colonCast = s"(?i)::\\s*($intCastTargets)\\b".r
-  private[component] def rewriteIntCasts(stmt0: String): String = {
-    var stmt = stmt0
-    // each step rewrites one cast site into a duck_icast call (its type
-    // slot becomes a quoted literal), so the statement's cast-site count
-    // bounds the loop
-    val sites = {
-      val masked = maskQuoted(stmt0)
-      castCall.findAllMatchIn(masked).size + colonCast.findAllMatchIn(masked).size
-    }
-    var step = 0
-    while (step < sites) {
-      step += 1
-      val masked = maskQuoted(stmt)
-      var replaced: Option[String] = None
-      // 1) CAST / TRY_CAST type slot
-      val castIt = castCall.findAllMatchIn(masked)
-      while (replaced.isEmpty && castIt.hasNext) {
-        val m = castIt.next()
-        val open = m.end - 1
-        val close = matchingParen(masked, open)
-        if (close > 0) {
-          val inner = masked.substring(open + 1, close)
-          val dep = depths(inner)
-          "(?i)\\bAS\\b".r.findAllMatchIn(inner).toList.reverse
-            .find(a => dep(a.start) == 0).foreach { a =>
-              val slot = stmt.substring(open + 1 + a.end, close).trim
-              if (slot.matches(s"(?i)^(?:$intCastTargets)$$")) {
-                val exprTxt = stmt.substring(open + 1, open + 1 + a.start).trim
-                val lenient = if (m.group(1) != null) ", true" else ""
-                replaced = Some(stmt.substring(0, m.start) +
-                  s"duck_icast($exprTxt, '${slot.toUpperCase}'$lenient)" +
-                  stmt.substring(close + 1))
-              }
-            }
+  /** The CAST / TRY_CAST type slot. */
+  private val castSlots = Sites(castCall, { (stmt, masked, m) =>
+    val open = m.end - 1
+    val close = matchingParen(masked, open)
+    val lowered = if (close <= 0) None else {
+      val inner = masked.substring(open + 1, close)
+      val dep = depths(inner)
+      "(?i)\\bAS\\b".r.findAllMatchIn(inner).toList.reverse
+        .find(a => dep(a.start) == 0)
+        .map(a => stmt.substring(open + 1 + a.end, close).trim -> a.start)
+        .collect { case (slot, as) if slot.matches(s"(?i)^(?:$intCastTargets)$$") =>
+          val exprTxt = stmt.substring(open + 1, open + 1 + as).trim
+          val lenient = if (m.group(1) != null) ", true" else ""
+          Splice(m.start, close + 1,
+            s"duck_icast($exprTxt, '${slot.toUpperCase}'$lenient)")
         }
-      }
-      // 2) :: spelling — one LEFT primary binds (:: is tightest)
-      if (replaced.isEmpty) {
-        val ccIt = colonCast.findAllMatchIn(masked)
-        while (replaced.isEmpty && ccIt.hasNext) {
-          val m = ccIt.next()
-          operandStart(stmt, masked, m.start, Primary).foreach { ls =>
-            val exprTxt = stmt.substring(ls, m.start).trim
-            replaced = Some(stmt.substring(0, ls) +
-              s"duck_icast($exprTxt, '${m.group(1).toUpperCase}')" +
-              stmt.substring(m.end))
-          }
-        }
-      }
-      replaced match {
-        case Some(s2) => stmt = s2
-        case None => return stmt
-      }
     }
-    stmt
-  }
+    lowered.getOrElse(Skip(m.end))
+  })
+
+  /** The `::` spelling: one LEFT primary binds (`::` is tightest). */
+  private val colonCasts = Sites(colonCast, { (stmt, masked, m) =>
+    operandStart(stmt, masked, m.start, Primary).map { ls =>
+      Splice(ls, m.end,
+        s"duck_icast(${stmt.substring(ls, m.start).trim}, '${m.group(1).toUpperCase}')")
+    }.getOrElse(Skip(m.end))
+  })
+
+  /** Every CAST type slot lowers before the first `::` does. */
+  private[component] def rewriteIntCasts(stmt: String): String =
+    run(stmt, castSlots, colonCasts)
 
   /** DuckDB's DEFAULT null sort order is NULLS LAST for BOTH directions
     * (probed v1.0: `ORDER BY x` and `ORDER BY x DESC` both sort NULL
@@ -385,11 +340,13 @@ object Dialect {
     * functions, rank/range frames. Every ORDER BY item without an
     * explicit NULLS qualifier and not DESC-ended (the DESC defaults
     * agree) gains `NULLS LAST`. ORDER BYs inside plain function calls
-    * are left alone — [[rewriteOrderedAgg]]'s lowering owns those (its
+    * are left alone — [[orderedAgg]]'s lowering owns those (its
     * null-flag keys reproduce the same contract); OVER window specs and
     * subqueries in keyword positions (FROM/IN/EXISTS/...) rewrite. */
-  private[component] def rewriteNullsLast(stmt0: String): String = {
-    val masked = maskQuoted(stmt0)
+  private[component] def rewriteNullsLast(stmt: String): String =
+    run(stmt, Whole(nullsLast))
+
+  private def nullsLast(stmt0: String, masked: String): String = {
     val dep = depths(masked)
     // paren owners that are SQL keywords, not function names — their
     // parenthesized ORDER BYs are subqueries/window specs and rewrite
@@ -493,16 +450,46 @@ object Dialect {
         Option(m.group(2)).map(_.toLong).getOrElse(0L)))
   }
 
-  /** Rewrite one DuckDB statement into Spark SQL. Textual rewrites
-    * (`::VARCHAR`, `* EXCLUDE (`) apply only OUTSIDE quoted regions. */
-  def rewrite(stmt0: String): String = {
-    val stmt = rewriteNullsLast(rewriteIntCasts(rewriteNoData(rewriteTupleSet(rewriteOrderedAgg(rewriteQualify(rewriteDistinctOn(rewriteWithCreate(
-      Pivot.rewriteUnpivot(UnnestSql.rewrite(rewriteUsingSample(
-        rewriteSeriesTableFns(rewriteFill(rewriteQuantified(rewriteGroupingId(rewriteMatchOps(
-          StarReplaceSql.rewriteBareExclude(StarReplaceSql.rewriteLike(
-          rewriteMod(rewriteDiv(rewriteIntDiv(rewritePow(rewriteWindowFilter(JsonArrows.rewrite(DotCall.rewrite(Brackets.rewrite(
-          FileReads.rewriteTableFunctions(IntrospectSql.rewrite(
-            rewritePragma(WindowClauseSql.inline(Macros.rewrite(rewriteDollarStrings(stmt0))))))))))))))))))))))))))))))))
+  /** Rewrite one DuckDB statement into Spark SQL: [[chain]], folded by
+    * [[run]]. */
+  def rewrite(stmt: String): String = run(stmt, chain: _*)
+
+  /** The rewrite chain, in application order. Macros expand and named
+    * windows inline before any pass reads a call or a window; brackets,
+    * `.f()` chains and json arrows become plain calls before the operator
+    * lowerings scan operands; the clause lowerings (UNNEST, DISTINCT ON
+    * before QUALIFY, ordered aggregates) see operator-free text; the
+    * lexical walk ([[lexical]]) runs last. */
+  private lazy val chain: Seq[Pass] = Seq(
+    Whole((s, _) => rewriteDollarStrings(s)),
+    Whole(Macros.rewrite),
+    WindowClauseSql.inline,
+    Whole((s, _) => rewritePragma(s)),
+    Whole(FrameSql.rewrite),
+    Whole(IntrospectSql.rewrite),
+    FileReads.tableFunctions,
+    Brackets.brackets,
+    DotCall.chains,
+    JsonArrows.arrows,
+    windowFilter, pow, intDiv, div, mod,
+    StarReplaceSql.starLike, StarReplaceSql.bareExclude,
+    matchOps, groupingId, quantified, fill,
+    Whole(rewriteSeriesTableFns),
+    usingSample,
+    UnnestSql.fromPosition, UnnestSql.selectLists,
+    Whole(Pivot.rewriteUnpivot(_, _)),
+    Whole(rewriteWithCreate),
+    distinctOn, qualify, orderedAgg, tupleSet,
+    Whole(rewriteNoData),
+    castSlots, colonCasts,
+    Whole(nullsLast),
+    Whole((s, _) => lexical(s)))
+
+  /** The chain's last pass, one walk over the statement's lexical spans:
+    * quoted identifiers become backticks (sanitized, or a file view, in
+    * table position), and the regex rewrites (`::VARCHAR`, `* EXCLUDE (`,
+    * the duck_ routing, ...) apply only OUTSIDE quoted regions. */
+  private def lexical(stmt: String): String = {
     val out = new StringBuilder
     val plain = new StringBuilder // non-quoted text pending regex rewrites
     // all non-quoted, non-comment text seen so far — table-position
@@ -578,7 +565,7 @@ object Dialect {
         // `!~~` ≡ NOT LIKE, `*`-suffixed ≡ ILIKE — keyword swaps at the
         // same precedence, longest spelling first. Lookarounds refuse an
         // adjacent third tilde: a `~~~` (glob) whose operand extents
-        // rewriteMatchOps could not parse must pass through WHOLE, not
+        // [[matchOps]] could not parse must pass through WHOLE, not
         // decay to ` LIKE ~` (partial mangling)
         .replaceAll("(?<!~)!~~\\*(?!~)", " NOT ILIKE ")
         .replaceAll("(?<![~!])~~\\*(?!~)", " ILIKE ")
@@ -684,8 +671,7 @@ object Dialect {
     * shape sqlglot accepts and the reference's own lineage unit test uses
     * (`tests/unit/test_lineage_visualization_action.py:16-25`); Spark's
     * parser (like DuckDB's executor, in fact) wants the CTEs inside. */
-  private def rewriteWithCreate(stmt0: String): String = {
-    val masked = maskQuoted(stmt0)
+  private def rewriteWithCreate(stmt0: String, masked: String): String = {
     if (!"(?is)^\\s*WITH\\b".r.findFirstIn(masked).isDefined) return stmt0
     val dep = depths(masked)
     val create = "(?i)\\bCREATE\\b".r.findAllMatchIn(masked)
@@ -884,49 +870,42 @@ object Dialect {
 
   /** DuckDB `SELECT DISTINCT ON (keys) ...` (keep the first row per key
     * group under the block's ORDER BY) rewrites to a QUALIFY row_number
-    * filter, which [[rewriteQualify]] then lowers to a window subquery.
+    * filter, which [[qualify]] then lowers to a window subquery.
     * Block-scoped: a DISTINCT ON inside a subquery/CTE/parenthesized view
     * body is rewritten within ITS query block (depth-relative offsets),
     * iterating until none remain. */
-  private def rewriteDistinctOn(stmt0: String): String = {
-    var stmt = stmt0
-    var guard = 0
-    while (guard < 16) {
-      guard += 1
-      val masked = maskQuoted(stmt)
-      val dep = depths(masked)
-      val m = "(?is)\\bSELECT\\s+DISTINCT\\s+ON\\s*\\(".r.findFirstMatchIn(masked)
-        .getOrElse(return stmt)
-      val blockDepth = dep(m.start)
-      // key list: balanced parens from the opening paren
-      val close = matchingParen(masked, m.end - 1)
-      if (close < 0) return stmt
-      val keys = stmt.substring(m.end, close).trim
-      val i = close + 1
-      // block extent: until depth drops below blockDepth (closing paren of
-      // the enclosing subquery/view body) or end of statement
-      var blockEnd = i
-      while (blockEnd < stmt.length && dep(blockEnd) >= blockDepth) blockEnd += 1
-      def findAt(regex: String, from: Int): Option[Int] =
-        regex.r.findAllMatchIn(masked).map(_.start)
-          .find(p => p >= from && p < blockEnd && dep(p) == blockDepth)
-      val ob = findAt("(?i)\\bORDER\\s+BY\\b", i)
-      val lim = findAt("(?i)\\b(LIMIT|OFFSET)\\b", i)
-      val windowOrder = ob match {
-        case Some(p) =>
-          val obEnd = "(?i)\\bORDER\\s+BY\\b".r.findFirstMatchIn(masked.substring(p)).get.end + p
-          stmt.substring(obEnd, lim.getOrElse(blockEnd)).trim
-        case None => keys
-      }
-      val qualify =
-        s"QUALIFY ROW_NUMBER() OVER (PARTITION BY $keys ORDER BY $windowOrder) = 1"
-      // splice before ORDER BY if present, else before LIMIT/OFFSET, else
-      // at block end — the filter must precede the final LIMIT
-      val at = ob.orElse(lim).getOrElse(blockEnd)
-      stmt = stmt.substring(0, m.start) + "SELECT" + stmt.substring(i, at) +
-        s" $qualify " + stmt.substring(at)
+  private val distinctOn =
+    Sites("(?is)\\bSELECT\\s+DISTINCT\\s+ON\\s*\\(".r, lowerDistinctOn)
+
+  private def lowerDistinctOn(stmt: String, masked: String, m: MatchResult): Step = {
+    val dep = depths(masked)
+    val blockDepth = dep(m.start)
+    // key list: balanced parens from the opening paren
+    val close = matchingParen(masked, m.end - 1)
+    if (close < 0) return Skip(stmt.length)
+    val keys = stmt.substring(m.end, close).trim
+    val i = close + 1
+    // block extent: until depth drops below blockDepth (closing paren of
+    // the enclosing subquery/view body) or end of statement
+    var blockEnd = i
+    while (blockEnd < stmt.length && dep(blockEnd) >= blockDepth) blockEnd += 1
+    def findAt(regex: String, from: Int): Option[Int] =
+      regex.r.findAllMatchIn(masked).map(_.start)
+        .find(p => p >= from && p < blockEnd && dep(p) == blockDepth)
+    val ob = findAt("(?i)\\bORDER\\s+BY\\b", i)
+    val lim = findAt("(?i)\\b(LIMIT|OFFSET)\\b", i)
+    val windowOrder = ob match {
+      case Some(p) =>
+        val obEnd = "(?i)\\bORDER\\s+BY\\b".r.findFirstMatchIn(masked.substring(p)).get.end + p
+        stmt.substring(obEnd, lim.getOrElse(blockEnd)).trim
+      case None => keys
     }
-    stmt
+    val qualify =
+      s"QUALIFY ROW_NUMBER() OVER (PARTITION BY $keys ORDER BY $windowOrder) = 1"
+    // splice before ORDER BY if present, else before LIMIT/OFFSET, else
+    // at block end — the filter must precede the final LIMIT
+    val at = ob.orElse(lim).getOrElse(blockEnd)
+    Splice(m.start, at, "SELECT" + stmt.substring(i, at) + s" $qualify ")
   }
 
   /** DuckDB QUALIFY (filter on window-function results) has no Spark
@@ -937,73 +916,113 @@ object Dialect {
     * Block-scoped: each QUALIFY is rewritten within its own query block
     * (subqueries, CTE bodies, parenthesized view bodies), iterating until
     * none remain. */
-  private def rewriteQualify(stmt0: String): String = {
-    var stmt = stmt0
-    var guard = 0
-    while (guard < 16) {
-      guard += 1
-      val masked = maskQuoted(stmt)
-      val dep = depths(masked)
-      val q = "(?i)\\bQUALIFY\\b".r.findAllMatchIn(masked).map(_.start).toList
-        .headOption.getOrElse(return stmt)
-      val blockDepth = dep(q)
-      var blockEnd = q
-      while (blockEnd < stmt.length && dep(blockEnd) >= blockDepth) blockEnd += 1
-      def positions(regex: String): List[Int] =
-        regex.r.findAllMatchIn(masked).map(_.start)
-          .filter(p => p < blockEnd && dep(p) == blockDepth).toList
-      val selects = positions("(?i)\\bSELECT\\b").filter(_ < q)
-      val froms = positions("(?i)\\bFROM\\b").filter(_ < q)
-      if (selects.isEmpty || froms.isEmpty) return stmt
-      val selKw = selects.last // the block's own SELECT (closest before QUALIFY)
-      val selStart = selKw + "SELECT".length
-      val fromStart = froms.filter(_ > selKw).headOption.getOrElse(return stmt)
-      val tailStart = positions("(?i)\\b(ORDER|LIMIT|OFFSET)\\b")
-        .filter(_ > q).headOption.getOrElse(blockEnd)
-      val sel = stmt.substring(selStart, fromStart)
-      val rest = stmt.substring(fromStart, q)
-      val pred = stmt.substring(q + "QUALIFY".length, tailStart).trim
-      stmt = stmt.substring(0, selKw) +
-        s"SELECT * EXCEPT (__q) FROM (SELECT $sel, ($pred) AS __q $rest) WHERE __q " +
-        stmt.substring(tailStart)
-    }
-    stmt
+  private val qualify = Sites("(?i)\\bQUALIFY\\b".r, lowerQualify)
+
+  private def lowerQualify(stmt: String, masked: String, m: MatchResult): Step = {
+    val dep = depths(masked)
+    val q = m.start
+    val blockDepth = dep(q)
+    var blockEnd = q
+    while (blockEnd < stmt.length && dep(blockEnd) >= blockDepth) blockEnd += 1
+    def positions(regex: String): List[Int] =
+      regex.r.findAllMatchIn(masked).map(_.start)
+        .filter(p => p < blockEnd && dep(p) == blockDepth).toList
+    val selects = positions("(?i)\\bSELECT\\b").filter(_ < q)
+    val froms = positions("(?i)\\bFROM\\b").filter(_ < q)
+    if (selects.isEmpty || froms.isEmpty) return Skip(stmt.length)
+    val selKw = selects.last // the block's own SELECT (closest before QUALIFY)
+    val selStart = selKw + "SELECT".length
+    val fromStart = froms.find(_ > selKw).getOrElse(return Skip(stmt.length))
+    val tailStart = positions("(?i)\\b(ORDER|LIMIT|OFFSET)\\b")
+      .find(_ > q).getOrElse(blockEnd)
+    val sel = stmt.substring(selStart, fromStart)
+    val rest = stmt.substring(fromStart, q)
+    val pred = stmt.substring(q + "QUALIFY".length, tailStart).trim
+    Splice(selKw, tailStart,
+      s"SELECT * EXCEPT (__q) FROM (SELECT $sel, ($pred) AS __q $rest) WHERE __q ")
   }
 
-  /** The one lowering loop of the operator passes (`.f()`, `->`, `^`,
-    * `//`, `/`, `%`, the match operators). `site` finds the operators on
-    * the masked statement; `lower` answers the site found at or after a
-    * cursor with the `(from, to, text)` splice that replaces it, or None
-    * to skip past it. Every lowering is a call over operand text that
-    * already held its own sites, so each one removes a site and adds
-    * none at or after the cursor, and between lowerings the cursor only
-    * moves forward: the statement's site count bounds the loop, with no
-    * cap to fall off. Scanning resumes at the splice start, where the
-    * operands' own sites come next (a chain folds left: `a / b / c`). */
-  private[component] def lowerOperators(stmt0: String, site: scala.util.matching.Regex)(
-      lower: (String, String, java.util.regex.MatchResult) => Option[(Int, Int, String)])
-      : String = {
+  // ── The rewrite driver ─────────────────────────────────────────────
+  // [[rewrite]] folds one ordered list of passes ([[chain]]) over a
+  // statement and its mask. A find-and-splice pass is a [[Sites]] pass
+  // and runs on the one splice loop ([[splice]]); a [[Whole]] pass reads
+  // the statement with the mask it is handed. [[run]] re-masks only
+  // after a pass changed the text, so a pass that splices nothing hands
+  // its mask on to the next, and no pass masks the text it was given.
+
+  /** A lowering's answer for the site its pass found: replace
+    * `[from, to)` with `text`, or resume the scan at `at` — past the
+    * site; the statement's length ends the pass. */
+  private[component] sealed trait Step
+  private[component] final case class Splice(from: Int, to: Int, text: String) extends Step
+  private[component] final case class Skip(at: Int) extends Step
+
+  /** (statement, its mask, the site's match) => what to do there. */
+  private[component] type Lowering = (String, String, MatchResult) => Step
+
+  private[component] sealed trait Pass
+  /** A find-and-splice pass: `site` finds its sites on the mask and
+    * `lower` answers each one ([[splice]]). */
+  private[component] final case class Sites(site: Regex, lower: Lowering) extends Pass
+  /** A pass over the whole statement and its mask, answering the new
+    * text. */
+  private[component] final case class Whole(pass: (String, String) => String) extends Pass
+
+  /** `stmt` through `passes`, in order. */
+  private[component] def run(stmt: String, passes: Pass*): String = {
+    var s = stmt
+    var masked: String = null // computed when a pass first reads it
+    def mask: String = { if (masked == null) masked = maskQuoted(s); masked }
+    passes.foreach {
+      case Sites(site, lower) =>
+        val (s2, m2) = splice(s, mask, site)(lower)
+        s = s2; masked = m2
+      case Whole(pass) =>
+        val s2 = pass(s, mask)
+        if (s2 != s) { s = s2; masked = null }
+    }
+    s
+  }
+
+  /** The one splice loop: `site` finds sites on the mask from a cursor,
+    * and `lower` answers the site found at or after it. After a splice
+    * the statement is re-masked and the scan resumes at the splice
+    * start, where the lowered text's own sites come next (a chain folds
+    * left: `a / b / c`); a skip moves the cursor past the site.
+    *
+    * The contract that bounds the loop, in place of a step cap: a
+    * lowering replaces its site with text that holds no site it would
+    * lower again except copies of sites nested strictly inside the one
+    * it lowered (an operand, an argument, a subquery). Each splice thus
+    * trades one site for shallower ones, and between splices the cursor
+    * only moves forward, so the loop ends when every site is lowered or
+    * skipped, or when a lowering ends the pass on purpose
+    * (`Skip(stmt.length)`) — never at a step count. Macro expansion
+    * breaks the contract (a macro may call itself) and keeps a loud
+    * budget of its own. Returns the statement and its mask. */
+  private[component] def splice(stmt0: String, masked0: String, site: Regex)(
+      lower: Lowering): (String, String) = {
     var stmt = stmt0
-    var masked = maskQuoted(stmt)
+    var masked = masked0
     var m = site.pattern.matcher(masked)
     var cursor = 0
-    while (m.find(cursor)) {
+    while (cursor <= masked.length && m.find(cursor)) {
       lower(stmt, masked, m) match {
-        case Some((from, to, text)) =>
+        case Splice(from, to, text) =>
           stmt = stmt.substring(0, from) + text + stmt.substring(to)
           masked = maskQuoted(stmt)
           m = site.pattern.matcher(masked)
           cursor = from
-        case None => cursor = m.end
+        case Skip(at) => cursor = at
       }
     }
-    stmt
+    (stmt, masked)
   }
 
   /** Extents of the binary operator at `m`: the left operand at `level`,
     * the right operand one primary ([[operandEnd]]). None = unparsable. */
   private def operands(stmt: String, masked: String,
-      m: java.util.regex.MatchResult, level: Int): Option[(Int, Int)] =
+      m: MatchResult, level: Int): Option[(Int, Int)] =
     for {
       ls <- operandStart(stmt, masked, m.start, level)
       re <- operandEnd(stmt, masked, m.end)
@@ -1011,9 +1030,9 @@ object Dialect {
 
   /** The splice `fn(left, right)` over the operands `[ls, op)` and
     * `[op end, re)`. */
-  private def call(stmt: String, m: java.util.regex.MatchResult, ls: Int,
-      re: Int, fn: String): (Int, Int, String) =
-    (ls, re, s"$fn(${stmt.substring(ls, m.start).trim}, " +
+  private def call(stmt: String, m: MatchResult, ls: Int,
+      re: Int, fn: String): Splice =
+    Splice(ls, re, s"$fn(${stmt.substring(ls, m.start).trim}, " +
       s"${stmt.substring(m.end, re).trim})")
 
   /** DuckDB's `//` operator → the registry's `divide()` (integer division
@@ -1028,10 +1047,10 @@ object Dialect {
     * for Spark's parser to reject loudly (never a silent mis-grouping).
     * Runs after Brackets/DotCall/JsonArrows so subscripts and arrows are
     * already plain calls. */
-  private[component] def rewriteIntDiv(stmt: String): String =
-    lowerOperators(stmt, "//".r) { (stmt, masked, m) =>
-      operands(stmt, masked, m, Mul).map { case (ls, re) => call(stmt, m, ls, re, "divide") }
-    }
+  private val intDiv = Sites("//".r, { (stmt, masked, m) =>
+    operands(stmt, masked, m, Mul).map { case (ls, re) => call(stmt, m, ls, re, "divide") }
+      .getOrElse(Skip(m.end))
+  })
 
   /** DuckDB types ALL `/` division DOUBLE (probed v1.0:
     * `typeof(dec(10,2)/dec(10,2))` = DOUBLE; FLOAT/FLOAT stays FLOAT)
@@ -1041,19 +1060,20 @@ object Dialect {
     * DECIMAL columns. Every single `/` in statement text routes to the
     * registry's `duck_div` ([[graft.functions.DuckDiv]], which
     * dispatches on resolved operand types); operand extents are the
-    * same scans as [[rewriteIntDiv]] (left: a multiplicative chain;
+    * same scans as [[intDiv]] (left: a multiplicative chain;
     * right: one primary). An unparsable extent skips THAT operator and
     * scans on (Spark's own `/` keeps its semantics there — recorded
-    * residual, never a mis-grouping). Runs after rewriteIntDiv, so
+    * residual, never a mis-grouping). Runs after `//`, so
     * every surviving `/` is single; comments and quoted regions are
     * masked. Statement-text-only by design: internal Column-API
     * division keeps Spark semantics (the duck_icast scope rule). */
-  private[component] def rewriteDiv(stmt: String): String =
-    lowerOperators(stmt, "(?<!/)/(?!/)".r) { (stmt, masked, m) =>
-      operands(stmt, masked, m, Mul).map { case (ls, re) =>
-        call(stmt, m, extendIntervalLiteral(stmt, masked, ls), re, "duck_div")
-      }
-    }
+  private val div = Sites("(?<!/)/(?!/)".r, { (stmt, masked, m) =>
+    operands(stmt, masked, m, Mul).map { case (ls, re) =>
+      call(stmt, m, extendIntervalLiteral(stmt, masked, ls), re, "duck_div")
+    }.getOrElse(Skip(m.end))
+  })
+
+  private[component] def rewriteDiv(stmt: String): String = run(stmt, div)
 
   /** The operand scanners see one PRIMARY, but `INTERVAL 2 DAY / 2`'s
     * left operand is the three-token interval literal — extend a left
@@ -1094,22 +1114,23 @@ object Dialect {
     * preceded by the LIMIT/SAMPLE keyword, which is exactly the guard
     * (a `%` whose right extent is unparsable — end of statement,
     * OFFSET, a sample-method paren — is also left alone). */
-  private[component] def rewriteMod(stmt: String): String =
-    lowerOperators(stmt, "%".r) { (stmt, masked, m) =>
-      def isPercentShorthand(ls: Int): Boolean =
-        stmt.substring(ls, m.start).trim.matches("[0-9]+(\\.[0-9]+)?") && {
-          var j = ls - 1
-          while (j >= 0 && stmt.charAt(j).isWhitespace) j -= 1
-          val e = j
-          while (j >= 0 && (stmt.charAt(j).isLetter || stmt.charAt(j) == '_')) j -= 1
-          val w = if (e > j) stmt.substring(j + 1, e + 1).toLowerCase else ""
-          w == "limit" || w == "sample" || w == "tablesample"
-        }
-      operands(stmt, masked, m, Mul).filterNot { case (ls, _) => isPercentShorthand(ls) }
-        .map { case (ls, re) =>
-          call(stmt, m, extendIntervalLiteral(stmt, masked, ls), re, "duck_mod")
-        }
-    }
+  private val mod = Sites("%".r, { (stmt, masked, m) =>
+    def isPercentShorthand(ls: Int): Boolean =
+      stmt.substring(ls, m.start).trim.matches("[0-9]+(\\.[0-9]+)?") && {
+        var j = ls - 1
+        while (j >= 0 && stmt.charAt(j).isWhitespace) j -= 1
+        val e = j
+        while (j >= 0 && (stmt.charAt(j).isLetter || stmt.charAt(j) == '_')) j -= 1
+        val w = if (e > j) stmt.substring(j + 1, e + 1).toLowerCase else ""
+        w == "limit" || w == "sample" || w == "tablesample"
+      }
+    operands(stmt, masked, m, Mul).filterNot { case (ls, _) => isPercentShorthand(ls) }
+      .map { case (ls, re) =>
+        call(stmt, m, extendIntervalLiteral(stmt, masked, ls), re, "duck_mod")
+      }.getOrElse(Skip(m.end))
+  })
+
+  private[component] def rewriteMod(stmt: String): String = run(stmt, mod)
 
   /** DuckDB's POWER operators `^` and `**` → `power()` calls. This one
     * cannot ride the leave-alone contract: Spark parses `^` as bitwise
@@ -1125,14 +1146,15 @@ object Dialect {
     * never left for Spark's XOR. `2^-3` is permissive here (v1.0's
     * parser fuses `^-` into an unknown operator and errors; `2**-3`
     * works there — one rule serves both spellings). `^@` is DuckDB's
-    * starts-with operator, left for rewriteMatchOps. Runs BEFORE
-    * rewriteIntDiv so `2^3//2` folds as (2^3)//2, the probed grouping. */
-  private[component] def rewritePow(stmt: String): String =
-    lowerOperators(stmt, "\\*\\*|\\^(?!@)".r) { (stmt, masked, m) =>
-      Some(operands(stmt, masked, m, Primary)
-        .map { case (ls, re) => call(stmt, m, ls, re, "power") }
-        .getOrElse((m.start, m.end, " __graft_power_unparsable ")))
-    }
+    * starts-with operator, left for [[matchOps]]. Runs BEFORE `//`
+    * so `2^3//2` folds as (2^3)//2, the probed grouping. */
+  private val pow = Sites("\\*\\*|\\^(?!@)".r, { (stmt, masked, m) =>
+    operands(stmt, masked, m, Primary)
+      .map { case (ls, re) => call(stmt, m, ls, re, "power") }
+      .getOrElse(Splice(m.start, m.end, " __graft_power_unparsable "))
+  })
+
+  private[component] def rewritePow(stmt: String): String = run(stmt, pow)
 
   /** Regex / glob MATCH operators with no Spark spelling — `~` / `!~`
     * (regexp FULL match, probed: 'abc' ~ 'b' is false), `~~~` / `!~~~`
@@ -1150,43 +1172,27 @@ object Dialect {
     ("(?i)~~~|!~(?!~)|(?<![~!])~(?![~*])|\\^@|" +
       "\\bNOT\\s+SIMILAR\\s+TO\\b|\\bSIMILAR\\s+TO\\b|\\bGLOB\\b").r
 
-  private[component] def rewriteMatchOps(stmt: String): String =
-    lowerOperators(stmt, matchOpRe) { (stmt, masked, m) =>
-      val (fn, negate) = m.group.toUpperCase.replaceAll("\\s+", " ") match {
-        case "~" | "SIMILAR TO" => ("regexp_full_match", false)
-        case "!~" | "NOT SIMILAR TO" => ("regexp_full_match", true)
-        // DuckDB's starts-with operator (probed v1.0: 'abc' ^@ 'ab')
-        case "^@" => ("startswith", false)
-        // no negated glob spelling: DuckDB v1.0 has neither !~~~
-        // nor NOT GLOB (probed parse errors)
-        case _ => ("duck_glob", false) // ~~~ | GLOB
-      }
-      // probed associativity: these operators sit at the arithmetic
-      // level, LEFT-associative — `'a' || 'bc' ~ 'abc'` matches the
-      // concat, but `'abc' ~ 'a' || 'bc'` is ('abc' ~ 'a') || 'bc'
-      // and `5 ~ 2 + 3` is (5 ~ 2) + 3. So the left extent crosses
-      // the chain, the right extent is ONE primary.
-      operands(stmt, masked, m, Add).map { case (ls, re) =>
-        val (from, to, c) = call(stmt, m, ls, re, fn)
-        (from, to, if (negate) s"(NOT $c)" else c)
-      }
+  private val matchOps = Sites(matchOpRe, { (stmt, masked, m) =>
+    val (fn, negate) = m.group.toUpperCase.replaceAll("\\s+", " ") match {
+      case "~" | "SIMILAR TO" => ("regexp_full_match", false)
+      case "!~" | "NOT SIMILAR TO" => ("regexp_full_match", true)
+      // DuckDB's starts-with operator (probed v1.0: 'abc' ^@ 'ab')
+      case "^@" => ("startswith", false)
+      // no negated glob spelling: DuckDB v1.0 has neither !~~~
+      // nor NOT GLOB (probed parse errors)
+      case _ => ("duck_glob", false) // ~~~ | GLOB
     }
+    // probed associativity: these operators sit at the arithmetic
+    // level, LEFT-associative — `'a' || 'bc' ~ 'abc'` matches the
+    // concat, but `'abc' ~ 'a' || 'bc'` is ('abc' ~ 'a') || 'bc'
+    // and `5 ~ 2 + 3` is (5 ~ 2) + 3. So the left extent crosses
+    // the chain, the right extent is ONE primary.
+    operands(stmt, masked, m, Add).map { case (ls, re) =>
+      val c = call(stmt, m, ls, re, fn)
+      if (negate) c.copy(text = s"(NOT ${c.text})") else c
+    }.getOrElse(Skip(m.end))
+  })
 
-  /** DuckDB ≥1.4's `fill(expr) OVER ([PARTITION BY p] ORDER BY k)` —
-    * linear interpolation of NULL values along the ORDER BY axis, the
-    * time-series repair idiom (the reference pins 1.4.4/1.5.2; local
-    * v1.0 probes the name MISSING, so semantics follow the public 1.4
-    * docs, spec-pinned: interior NULLs interpolate between the previous
-    * and next non-NULL value weighted by the key distance; edge NULLs
-    * take the NEAREST non-NULL value; integer columns promote to DOUBLE
-    * through the fraction arithmetic — documented, not probed).
-    *
-    * Lowered textually onto four shared-window Spark primitives
-    * (last_value/first_value IGNORE NULLS over the preceding/following
-    * frames, positions via duck_fill_pos which maps numeric/DATE/
-    * TIMESTAMP keys onto one DOUBLE axis). Unsupported shapes — named
-    * windows, multi-key ORDER BY, explicit frames, missing OVER — leave
-    * the text whole for Spark's loud unresolved-function error. */
   /** Multi-argument `GROUPING(a, b, ...)` (r18 clause sweep): DuckDB's
     * GROUPING takes any number of grouped columns and returns the
     * bitmask (leftmost = highest bit, probed v1.0); Spark spells that
@@ -1194,30 +1200,18 @@ object Dialect {
     * same convention, different name. Multi-arg calls route to
     * grouping_id; unary stays native. `GROUPING SETS (...)` never
     * matches (the regex requires `(` directly after the name). */
-  private[component] def rewriteGroupingId(stmt0: String): String = {
-    var stmt = stmt0
-    var guard = 0
-    var from = 0
-    while (guard < 128) {
-      guard += 1
-      val masked = maskQuoted(stmt)
-      val m = "(?i)\\bGROUPING\\s*\\(".r.findFirstMatchIn(
-        masked.substring(math.min(from, masked.length)))
-        .getOrElse(return stmt)
-      val nStart = from + m.start
-      val open = from + m.end - 1
-      val close = matchingParen(masked, open)
-      if (close < 0) return stmt
+  private val groupingId = Sites("(?i)\\bGROUPING\\s*\\(".r, { (stmt, masked, m) =>
+    val open = m.end - 1
+    val close = matchingParen(masked, open)
+    if (close < 0) Skip(stmt.length)
+    else {
       val dep = depths(masked) // a depth-0 comma inside the parens
       if ((open + 1 until close).exists(j =>
-          masked.charAt(j) == ',' && dep(j) == dep(open) + 1)) {
-        stmt = stmt.substring(0, nStart) + "grouping_id" +
-          stmt.substring(nStart + "grouping".length)
-        from = nStart + "grouping_id".length
-      } else from = close + 1
+          masked.charAt(j) == ',' && dep(j) == dep(open) + 1))
+        Splice(m.start, m.start + "grouping".length, "grouping_id")
+      else Skip(close + 1)
     }
-    stmt
-  }
+  })
 
   /** Quantified comparisons over subqueries — `x op ANY|SOME|ALL
     * (SELECT ...)` — which Spark's grammar lacks entirely (parse error)
@@ -1233,57 +1227,41 @@ object Dialect {
     * SELECT/WITH/VALUES — DuckDB's array form `= ANY(array_col)` has no
     * subquery and stays untouched (loud). Operand extent is the
     * comparison-level left chain (the match-ops scanner). */
-  private[component] def rewriteQuantified(stmt0: String): String = {
-    var stmt = stmt0
-    var guard = 0
-    var from = 0
-    while (guard < 64) {
-      guard += 1
-      val masked = maskQuoted(stmt)
-      val m = "(?i)\\b(ANY|SOME|ALL)\\s*\\(".r.findFirstMatchIn(
-        masked.substring(math.min(from, masked.length)))
-        .getOrElse(return stmt)
-      val qStart = from + m.start
-      val quant = m.group(1).toLowerCase
-      val open = from + m.end - 1
-      val close = matchingParen(masked, open)
-      var advance = close + 1
-      var done = false
-      if (close < 0) return stmt
-      // the comparison operator directly before the quantifier
-      var j = qStart - 1
-      while (j >= 0 && stmt.charAt(j).isWhitespace) j -= 1
-      val opEnd = j + 1
-      while (j >= 0 && "=!<>".indexOf(stmt.charAt(j)) >= 0) j -= 1
-      val op = stmt.substring(j + 1, opEnd)
-      val sub = stmt.substring(open + 1, close).trim
-      val isQuery =
-        "(?is)^\\s*(SELECT|WITH|VALUES)\\b".r.findFirstIn(sub).isDefined
-      if (Set("=", "!=", "<>", "<", "<=", ">", ">=").contains(op) && isQuery) {
-        operandStart(stmt, masked, j + 1, Add) match {
-          case Some(ls) =>
-            val left = stmt.substring(ls, j + 1).trim
-            val cmp = s"(($left) $op __qv)"
-            val src = s"(SELECT 1 FROM ($sub) __qa(__qv) WHERE"
-            val rebuilt =
-              if (op == "=" && quant != "all") s"$left IN ($sub)"
-              else if ((op == "<>" || op == "!=") && quant == "all")
-                s"$left NOT IN ($sub)"
-              else if (quant == "all")
-                s"CASE WHEN EXISTS $src NOT $cmp) THEN false " +
-                  s"WHEN EXISTS $src ($cmp) IS NULL) THEN NULL ELSE true END"
-              else
-                s"CASE WHEN EXISTS $src $cmp) THEN true " +
-                  s"WHEN EXISTS $src ($cmp) IS NULL) THEN NULL ELSE false END"
-            stmt = stmt.substring(0, ls) + rebuilt + stmt.substring(close + 1)
-            from = 0 // rescan: the rebuilt text shifts every offset
-            done = true
-          case None => // unparsable left extent: leave loudly for Spark
-        }
-      }
-      if (!done) from = advance
-    }
-    stmt
+  private val quantified = Sites("(?i)\\b(ANY|SOME|ALL)\\s*\\(".r, lowerQuantified)
+
+  private def lowerQuantified(stmt: String, masked: String, m: MatchResult): Step = {
+    val quant = m.group(1).toLowerCase
+    val open = m.end - 1
+    val close = matchingParen(masked, open)
+    if (close < 0) return Skip(stmt.length)
+    // the comparison operator directly before the quantifier
+    var j = m.start - 1
+    while (j >= 0 && stmt.charAt(j).isWhitespace) j -= 1
+    val opEnd = j + 1
+    while (j >= 0 && "=!<>".indexOf(stmt.charAt(j)) >= 0) j -= 1
+    val op = stmt.substring(j + 1, opEnd)
+    val sub = stmt.substring(open + 1, close).trim
+    val isQuery =
+      "(?is)^\\s*(SELECT|WITH|VALUES)\\b".r.findFirstIn(sub).isDefined
+    // an unparsable left extent is left loudly for Spark, and so is the
+    // whole group: a quantifier nested in it is no comparison's operand
+    if (!Set("=", "!=", "<>", "<", "<=", ">", ">=").contains(op) || !isQuery)
+      return Skip(close + 1)
+    operandStart(stmt, masked, j + 1, Add).map { ls =>
+      val left = stmt.substring(ls, j + 1).trim
+      val cmp = s"(($left) $op __qv)"
+      val src = s"(SELECT 1 FROM ($sub) __qa(__qv) WHERE"
+      Splice(ls, close + 1,
+        if (op == "=" && quant != "all") s"$left IN ($sub)"
+        else if ((op == "<>" || op == "!=") && quant == "all")
+          s"$left NOT IN ($sub)"
+        else if (quant == "all")
+          s"CASE WHEN EXISTS $src NOT $cmp) THEN false " +
+            s"WHEN EXISTS $src ($cmp) IS NULL) THEN NULL ELSE true END"
+        else
+          s"CASE WHEN EXISTS $src $cmp) THEN true " +
+            s"WHEN EXISTS $src ($cmp) IS NULL) THEN NULL ELSE false END")
+    }.getOrElse(Skip(close + 1))
   }
 
   /** WINDOWED aggregate FILTER (r18 window sweep): DuckDB runs
@@ -1304,147 +1282,128 @@ object Dialect {
     "variance", "median", "bool_and", "bool_or", "product",
     "first", "last", "first_value", "last_value", "string_agg")
 
-  private[component] def rewriteWindowFilter(stmt0: String): String = {
-    var stmt = stmt0
-    var guard = 0
-    var from = 0
-    while (guard < 256) {
-      guard += 1
-      val masked = maskQuoted(stmt)
-      val m = "(?i)\\bFILTER\\s*\\(".r.findFirstMatchIn(
-        masked.substring(math.min(from, masked.length)))
-        .getOrElse(return stmt)
-      val fi = from + m.start
-      val fOpen = from + m.end - 1
-      val fClose = matchingParen(masked, fOpen)
-      if (fClose < 0) return stmt
-      // must be followed by OVER (a bare aggregate FILTER is native)
-      var j = fClose + 1
-      while (j < stmt.length && stmt.charAt(j).isWhitespace) j += 1
-      val e2 = j
-      while (j < stmt.length && stmt.charAt(j).isLetter) j += 1
-      val isWindow = j > e2 && stmt.substring(e2, j).equalsIgnoreCase("over")
-      // the call directly before FILTER
-      var k = fi - 1
-      while (k >= 0 && stmt.charAt(k).isWhitespace) k -= 1
-      var ok = isWindow && k >= 0 && masked.charAt(k) == ')'
-      var cOpen = -1
-      if (ok) {
-        cOpen = openingParen(masked, k)
-        ok = cOpen >= 0
+  private val windowFilter = Sites("(?i)\\bFILTER\\s*\\(".r, lowerWindowFilter)
+
+  private def lowerWindowFilter(stmt: String, masked: String, m: MatchResult): Step = {
+    val fi = m.start
+    val fOpen = m.end - 1
+    val fClose = matchingParen(masked, fOpen)
+    if (fClose < 0) return Skip(stmt.length)
+    // must be followed by OVER (a bare aggregate FILTER is native)
+    var j = fClose + 1
+    while (j < stmt.length && stmt.charAt(j).isWhitespace) j += 1
+    val e2 = j
+    while (j < stmt.length && stmt.charAt(j).isLetter) j += 1
+    val isWindow = j > e2 && stmt.substring(e2, j).equalsIgnoreCase("over")
+    // the call directly before FILTER
+    var k = fi - 1
+    while (k >= 0 && stmt.charAt(k).isWhitespace) k -= 1
+    if (!isWindow || k < 0 || masked.charAt(k) != ')') return Skip(m.end)
+    val cOpen = openingParen(masked, k)
+    if (cOpen < 0) return Skip(m.end)
+    var q = cOpen - 1
+    val e = q
+    while (q >= 0 && (stmt.charAt(q).isLetterOrDigit || stmt.charAt(q) == '_')) q -= 1
+    val nStart = q + 1
+    // not a null-ignoring aggregate: left for Spark's loud reject
+    if (e < nStart || !filterableAggs(stmt.substring(nStart, e + 1).toLowerCase))
+      return Skip(m.end)
+    val name = stmt.substring(nStart, cOpen).trim
+    val args = stmt.substring(cOpen + 1, k).trim
+    val cond = stmt.substring(fOpen + 1, fClose).trim
+      .replaceFirst("(?is)^WHERE\\b\\s*", "")
+    if (args.toLowerCase.startsWith("distinct")) return Skip(m.end)
+    // top-level comma split: only string_agg keeps a tail (its
+    // separator); other multi-arg shapes stay loud
+    val depth0Comma = {
+      var d = 0; var idx = -1; var q2 = 0
+      while (q2 < args.length && idx < 0) {
+        val c = masked.charAt(cOpen + 1 + q2)
+        if (c == '(') d += 1 else if (c == ')') d -= 1
+        else if (c == ',' && d == 0) idx = q2
+        q2 += 1
       }
-      var nStart = -1
-      if (ok) {
-        var q = cOpen - 1
-        val e = q
-        while (q >= 0 && (stmt.charAt(q).isLetterOrDigit || stmt.charAt(q) == '_')) q -= 1
-        nStart = q + 1
-        ok = e >= nStart &&
-          filterableAggs(stmt.substring(nStart, e + 1).toLowerCase)
-      }
-      if (!ok) { from = fOpen + 1 } // leave for Spark's loud reject
-      else {
-        val name = {
-          var q = cOpen - 1
-          while (q >= 0 && (stmt.charAt(q).isLetterOrDigit || stmt.charAt(q) == '_')) q -= 1
-          stmt.substring(q + 1, cOpen).trim
-        }
-        val args = stmt.substring(cOpen + 1, k).trim
-        val cond = stmt.substring(fOpen + 1, fClose).trim
-          .replaceFirst("(?is)^WHERE\\b\\s*", "")
-        if (args.toLowerCase.startsWith("distinct")) { from = fOpen + 1 }
-        else {
-          // top-level comma split: only string_agg keeps a tail (its
-          // separator); other multi-arg shapes stay loud
-          val depth0Comma = {
-            var d = 0; var idx = -1; var q2 = 0
-            while (q2 < args.length && idx < 0) {
-              val c = masked.charAt(cOpen + 1 + q2)
-              if (c == '(') d += 1 else if (c == ')') d -= 1
-              else if (c == ',' && d == 0) idx = q2
-              q2 += 1
-            }
-            idx
-          }
-          val rebuilt =
-            if (args == "*") // count(*): count a guarded constant
-              s"$name(CASE WHEN ($cond) THEN 1 END)"
-            else if (depth0Comma < 0)
-              s"$name(CASE WHEN ($cond) THEN $args END)"
-            else if (name.equalsIgnoreCase("string_agg"))
-              s"$name(CASE WHEN ($cond) THEN ${args.substring(0, depth0Comma).trim} END,${args.substring(depth0Comma + 1)})"
-            else null
-          if (rebuilt == null) { from = fOpen + 1 }
-          else {
-            stmt = stmt.substring(0, nStart) + rebuilt + stmt.substring(fClose + 1)
-            from = nStart
-          }
-        }
-      }
+      idx
     }
-    stmt // residual FILTER+OVER shapes fail loudly downstream
+    if (args == "*") // count(*): count a guarded constant
+      Splice(nStart, fClose + 1, s"$name(CASE WHEN ($cond) THEN 1 END)")
+    else if (depth0Comma < 0)
+      Splice(nStart, fClose + 1, s"$name(CASE WHEN ($cond) THEN $args END)")
+    else if (name.equalsIgnoreCase("string_agg"))
+      Splice(nStart, fClose + 1, s"$name(CASE WHEN ($cond) THEN " +
+        s"${args.substring(0, depth0Comma).trim} END,${args.substring(depth0Comma + 1)})")
+    else Skip(m.end) // residual FILTER+OVER shapes fail loudly downstream
   }
 
-  private[component] def rewriteFill(stmt0: String): String = {
-    var stmt = stmt0
-    var guard = 0
-    while (guard < 64) {
-      guard += 1
-      val masked = maskQuoted(stmt)
-      val m = "(?i)\\bfill\\s*\\(".r.findFirstMatchIn(masked)
-        .getOrElse(return stmt)
-      val argOpen = m.end - 1
-      val argClose = matchingParen(masked, argOpen)
-      if (argClose < 0) return stmt
-      val v = stmt.substring(argOpen + 1, argClose).trim
-      val overM = "(?is)^\\s*OVER\\s*\\(".r
-        .findFirstMatchIn(masked.substring(argClose + 1)).getOrElse(return stmt)
-      val overOpen = argClose + 1 + overM.end - 1
-      val overClose = matchingParen(masked, overOpen)
-      if (overClose < 0) return stmt
-      val spec = stmt.substring(overOpen + 1, overClose)
-      val specMasked = masked.substring(overOpen + 1, overClose)
-      val obM = "(?is)\\bORDER\\s+BY\\b".r.findFirstMatchIn(specMasked)
-        .getOrElse(return stmt)
-      val partClause = {
-        val head = spec.substring(0, obM.start).trim
-        if (head.isEmpty) ""
-        else if ("(?is)^PARTITION\\s+BY\\b".r.findFirstIn(head).isDefined)
-          head + " "
-        else return stmt // named window / stray text: leave for the parser
-      }
-      val orderFull = spec.substring(obM.end).trim
-      val orderMasked = specMasked.substring(obM.end)
-      // single key, no explicit frame (DuckDB's fill has the same rules)
-      if (depths(orderMasked).zip(orderMasked).exists {
-            case (0, ',') => true
-            case _ => false
-          }) return stmt
-      if ("(?is)\\b(ROWS|RANGE|GROUPS)\\b".r.findFirstIn(orderMasked).isDefined)
-        return stmt
-      if (orderFull.isEmpty) return stmt
-      val orderKey = "(?is)\\s+(ASC|DESC)(\\s+NULLS\\s+(FIRST|LAST))?\\s*$".r
-        .replaceAllIn(orderFull, "").trim
-      val pos = s"duck_fill_pos($orderKey)"
-      val winPrev = s"OVER (${partClause}ORDER BY $orderFull " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
-      val winNext = s"OVER (${partClause}ORDER BY $orderFull " +
-        "ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)"
-      val pv = s"last_value(($v), true) $winPrev"
-      val po = s"last_value(CASE WHEN ($v) IS NOT NULL THEN $pos END, true) $winPrev"
-      val nv = s"first_value(($v), true) $winNext"
-      val no = s"first_value(CASE WHEN ($v) IS NOT NULL THEN $pos END, true) $winNext"
-      // the $no = $po guard: duplicate ORDER BY keys would divide by
-      // zero (an ANSI-mode runtime error, NULL otherwise) — the
-      // bracketing values sit at one position, take the preceding one
-      val repl = s"(CASE WHEN ($v) IS NOT NULL THEN ($v) " +
-        s"WHEN $pv IS NULL THEN $nv " +
-        s"WHEN $nv IS NULL THEN $pv " +
-        s"WHEN $no = $po THEN $pv " +
-        s"ELSE $pv + ($nv - $pv) * (($pos - $po) / ($no - $po)) END)"
-      stmt = stmt.substring(0, m.start) + repl + stmt.substring(overClose + 1)
+  /** DuckDB ≥1.4's `fill(expr) OVER ([PARTITION BY p] ORDER BY k)` —
+    * linear interpolation of NULL values along the ORDER BY axis, the
+    * time-series repair idiom (the reference pins 1.4.4/1.5.2; local
+    * v1.0 probes the name MISSING, so semantics follow the public 1.4
+    * docs, spec-pinned: interior NULLs interpolate between the previous
+    * and next non-NULL value weighted by the key distance; edge NULLs
+    * take the NEAREST non-NULL value; integer columns promote to DOUBLE
+    * through the fraction arithmetic — documented, not probed).
+    *
+    * Lowered textually onto four shared-window Spark primitives
+    * (last_value/first_value IGNORE NULLS over the preceding/following
+    * frames, positions via duck_fill_pos which maps numeric/DATE/
+    * TIMESTAMP keys onto one DOUBLE axis). Unsupported shapes — named
+    * windows, multi-key ORDER BY, explicit frames, missing OVER — end
+    * the pass, leaving the text whole for Spark's loud
+    * unresolved-function error. */
+  private val fill = Sites("(?i)\\bfill\\s*\\(".r, lowerFill)
+
+  private def lowerFill(stmt: String, masked: String, m: MatchResult): Step = {
+    val stop = Skip(stmt.length)
+    val argOpen = m.end - 1
+    val argClose = matchingParen(masked, argOpen)
+    if (argClose < 0) return stop
+    val v = stmt.substring(argOpen + 1, argClose).trim
+    val overM = "(?is)^\\s*OVER\\s*\\(".r
+      .findFirstMatchIn(masked.substring(argClose + 1)).getOrElse(return stop)
+    val overOpen = argClose + 1 + overM.end - 1
+    val overClose = matchingParen(masked, overOpen)
+    if (overClose < 0) return stop
+    val spec = stmt.substring(overOpen + 1, overClose)
+    val specMasked = masked.substring(overOpen + 1, overClose)
+    val obM = "(?is)\\bORDER\\s+BY\\b".r.findFirstMatchIn(specMasked)
+      .getOrElse(return stop)
+    val partClause = {
+      val head = spec.substring(0, obM.start).trim
+      if (head.isEmpty) ""
+      else if ("(?is)^PARTITION\\s+BY\\b".r.findFirstIn(head).isDefined)
+        head + " "
+      else return stop // named window / stray text: leave for the parser
     }
-    stmt
+    val orderFull = spec.substring(obM.end).trim
+    val orderMasked = specMasked.substring(obM.end)
+    // single key, no explicit frame (DuckDB's fill has the same rules)
+    if (depths(orderMasked).zip(orderMasked).exists {
+          case (0, ',') => true
+          case _ => false
+        }) return stop
+    if ("(?is)\\b(ROWS|RANGE|GROUPS)\\b".r.findFirstIn(orderMasked).isDefined)
+      return stop
+    if (orderFull.isEmpty) return stop
+    val orderKey = "(?is)\\s+(ASC|DESC)(\\s+NULLS\\s+(FIRST|LAST))?\\s*$".r
+      .replaceAllIn(orderFull, "").trim
+    val pos = s"duck_fill_pos($orderKey)"
+    val winPrev = s"OVER (${partClause}ORDER BY $orderFull " +
+      "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
+    val winNext = s"OVER (${partClause}ORDER BY $orderFull " +
+      "ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)"
+    val pv = s"last_value(($v), true) $winPrev"
+    val po = s"last_value(CASE WHEN ($v) IS NOT NULL THEN $pos END, true) $winPrev"
+    val nv = s"first_value(($v), true) $winNext"
+    val no = s"first_value(CASE WHEN ($v) IS NOT NULL THEN $pos END, true) $winNext"
+    // the $no = $po guard: duplicate ORDER BY keys would divide by
+    // zero (an ANSI-mode runtime error, NULL otherwise) — the
+    // bracketing values sit at one position, take the preceding one
+    Splice(m.start, overClose + 1, s"(CASE WHEN ($v) IS NOT NULL THEN ($v) " +
+      s"WHEN $pv IS NULL THEN $nv " +
+      s"WHEN $nv IS NULL THEN $pv " +
+      s"WHEN $no = $po THEN $pv " +
+      s"ELSE $pv + ($nv - $pv) * (($pos - $po) / ($no - $po)) END)")
   }
 
   // ── The operand scanner ────────────────────────────────────────────
@@ -1837,44 +1796,42 @@ object Dialect {
     * spelling — both map to explode(sequence(...)) subqueries carrying
     * DuckDB's column names, so scripts that reference them migrate
     * unchanged. The SCALAR generate_series (list-returning, outside
-    * FROM) binds separately in [[DuckFunctions]]. */
-  private def rewriteSeriesTableFns(stmt: String): String = {
-    val re = "(?is)\\b(FROM|JOIN)\\s+(generate_series|range)\\s*\\(".r
-    val masked = maskQuoted(stmt)
-    re.findFirstMatchIn(masked) match {
-      case None => stmt
-      case Some(m) =>
-        val open = m.end - 1
-        val close = matchingParen(masked, open)
-        if (close < 0) stmt
-        else {
-          val fn = m.group(2).toLowerCase
-          val args = stmt.substring(open + 1, close).trim
-          // Spark's native range() is LAZY AND DISTRIBUTED (splits the
-          // interval across tasks) — the right 100-TB mapping; an
-          // explode(sequence(...)) would materialize the whole series
-          // as one array in one task. Both bounds-adjustments stay in
-          // SQL so non-literal args work.
-          val parts = splitTop(args).filter(_.nonEmpty)
-          val rangeArgs = fn match {
-            case "generate_series" => // inclusive stop → exclusive
-              parts.length match {
-                case 1 => s"0, ($args) + 1"
-                case 2 => s"${parts(0)}, (${parts(1)}) + 1"
-                case _ =>
-                  s"${parts(0)}, (${parts(1)}) + (CASE WHEN (${parts(2)}) < 0 " +
-                    s"THEN -1 ELSE 1 END), ${parts(2)}"
-              }
-            case _ => args // DuckDB range() is end-exclusive, like Spark's
+    * FROM) binds separately in [[DuckFunctions]]. One forward scan that
+    * resumes PAST each replacement: the replacement holds a
+    * `FROM range(` site itself, so this pass cannot resume at the
+    * splice start the way [[splice]] does. */
+  private def rewriteSeriesTableFns(stmt: String, masked: String): String = {
+    val re = "(?is)\\b(FROM|JOIN)\\s+(generate_series|range)\\s*\\(".r.pattern.matcher(masked)
+    val out = new StringBuilder
+    var last = 0
+    while (re.find(last)) {
+      val open = re.end - 1
+      val close = matchingParen(masked, open)
+      if (close < 0) return out.append(stmt.substring(last)).toString
+      val fn = re.group(2).toLowerCase
+      val args = stmt.substring(open + 1, close).trim
+      // Spark's native range() is LAZY AND DISTRIBUTED (splits the
+      // interval across tasks) — the right 100-TB mapping; an
+      // explode(sequence(...)) would materialize the whole series
+      // as one array in one task. Both bounds-adjustments stay in
+      // SQL so non-literal args work.
+      val parts = splitTop(args).filter(_.nonEmpty)
+      val rangeArgs = fn match {
+        case "generate_series" => // inclusive stop → exclusive
+          parts.length match {
+            case 1 => s"0, ($args) + 1"
+            case 2 => s"${parts(0)}, (${parts(1)}) + 1"
+            case _ =>
+              s"${parts(0)}, (${parts(1)}) + (CASE WHEN (${parts(2)}) < 0 " +
+                s"THEN -1 ELSE 1 END), ${parts(2)}"
           }
-          val repl = s"${m.group(1)} (SELECT id AS $fn FROM range($rangeArgs))"
-          // recurse on the TAIL only — the replacement itself contains
-          // `FROM range(`, which a whole-string rescan would re-wrap
-          // forever
-          stmt.substring(0, m.start) + repl +
-            rewriteSeriesTableFns(stmt.substring(close + 1))
-        }
+        case _ => args // DuckDB range() is end-exclusive, like Spark's
+      }
+      out.append(stmt.substring(last, re.start))
+        .append(s"${re.group(1)} (SELECT id AS $fn FROM range($rangeArgs))")
+      last = close + 1
     }
+    out.append(stmt.substring(last)).toString
   }
 
   /** DuckDB `USING SAMPLE` — `FROM <rels> USING SAMPLE <spec>` samples
@@ -1895,51 +1852,44 @@ object Dialect {
     * runs are deterministic per engine but differ BETWEEN engines
     * (sampling never oracle-matches; the spec pins counts/determinism).
     */
-  private def rewriteUsingSample(stmt0: String): String = {
-    var stmt = stmt0
-    var guard = 0
-    while (guard < 16) {
-      guard += 1
-      val masked = maskQuoted(stmt)
-      val dep = depths(masked)
-      val m = "(?is)\\bUSING\\s+SAMPLE\\s+".r.findFirstMatchIn(masked)
-        .getOrElse(return stmt)
-      val spec =
-        ("(?is)^(?:(reservoir|bernoulli|system)\\s*\\(\\s*([0-9.]+)\\s*(ROWS|%|PERCENT)?\\s*\\)" +
-          "|([0-9.]+)\\s*(%|PERCENT|ROWS)?\\s*(?:\\(\\s*(reservoir|bernoulli|system)\\s*(?:,\\s*([0-9]+))?\\s*\\))?)" +
-          "(?:\\s*REPEATABLE\\s*\\(\\s*([0-9]+)\\s*\\))?").r
-          .findFirstMatchIn(masked.substring(m.end)).getOrElse(return stmt)
-      val size = Option(spec.group(2)).getOrElse(spec.group(4))
-      val unit = Option(spec.group(3)).orElse(Option(spec.group(5)))
-        .map(_.toUpperCase).getOrElse("ROWS") // bare number = rows (DuckDB)
-      val seed = Option(spec.group(7)).orElse(Option(spec.group(8)))
-      val specEnd = m.end + spec.end
-      // the sampled relation: everything from the block's last FROM
-      val bd = dep(m.start)
-      val fromM = "(?i)\\bFROM\\b".r.findAllMatchIn(masked)
-        .filter(f => f.start < m.start && dep(f.start) == bd)
-        .toList.lastOption.getOrElse(return stmt)
-      val rels = stmt.substring(fromM.end, m.start).trim
-      val rnd = seed.map(s => s"rand($s)").getOrElse("rand()")
-      // single-relation segment: alias the wrapper back to the visible
-      // name so qualified refs (`t.x`, `a.x` with an alias) still bind;
-      // multi-relation segments get a fresh name (qualify inside a
-      // subquery instead — documented)
-      val outAlias =
-        "(?is)^(?:[A-Za-z_][A-Za-z0-9_]*|`[^`]*`)(?:\\s+(?:AS\\s+)?([A-Za-z_][A-Za-z0-9_]*))?$".r
-          .findFirstMatchIn(rels) match {
-          case Some(a) => Option(a.group(1)).getOrElse(rels.split("\\s+").head)
-          case None => "__sample"
-        }
-      val sampled =
-        if (unit == "ROWS")
-          s"(SELECT * FROM $rels ORDER BY $rnd LIMIT $size) $outAlias"
-        else
-          s"(SELECT * FROM $rels WHERE $rnd < ($size) / 100.0) $outAlias"
-      stmt = stmt.substring(0, fromM.start) + "FROM " + sampled + " " +
-        stmt.substring(specEnd)
-    }
-    stmt
+  private val usingSample = Sites("(?is)\\bUSING\\s+SAMPLE\\s+".r, lowerUsingSample)
+
+  /** An unparsable spec or a missing FROM ends the pass. */
+  private def lowerUsingSample(stmt: String, masked: String, m: MatchResult): Step = {
+    val spec =
+      ("(?is)^(?:(reservoir|bernoulli|system)\\s*\\(\\s*([0-9.]+)\\s*(ROWS|%|PERCENT)?\\s*\\)" +
+        "|([0-9.]+)\\s*(%|PERCENT|ROWS)?\\s*(?:\\(\\s*(reservoir|bernoulli|system)\\s*(?:,\\s*([0-9]+))?\\s*\\))?)" +
+        "(?:\\s*REPEATABLE\\s*\\(\\s*([0-9]+)\\s*\\))?").r
+        .findFirstMatchIn(masked.substring(m.end)).getOrElse(return Skip(stmt.length))
+    val size = Option(spec.group(2)).getOrElse(spec.group(4))
+    val unit = Option(spec.group(3)).orElse(Option(spec.group(5)))
+      .map(_.toUpperCase).getOrElse("ROWS") // bare number = rows (DuckDB)
+    val seed = Option(spec.group(7)).orElse(Option(spec.group(8)))
+    val specEnd = m.end + spec.end
+    // the sampled relation: everything from the block's last FROM
+    val dep = depths(masked)
+    val bd = dep(m.start)
+    val fromM = "(?i)\\bFROM\\b".r.findAllMatchIn(masked)
+      .filter(f => f.start < m.start && dep(f.start) == bd)
+      .toList.lastOption.getOrElse(return Skip(stmt.length))
+    val rels = stmt.substring(fromM.end, m.start).trim
+    val rnd = seed.map(s => s"rand($s)").getOrElse("rand()")
+    // single-relation segment: alias the wrapper back to the visible
+    // name so qualified refs (`t.x`, `a.x` with an alias) still bind;
+    // multi-relation segments get a fresh name (qualify inside a
+    // subquery instead — documented)
+    val outAlias =
+      "(?is)^(?:[A-Za-z_][A-Za-z0-9_]*|`[^`]*`)(?:\\s+(?:AS\\s+)?([A-Za-z_][A-Za-z0-9_]*))?$".r
+        .findFirstMatchIn(rels) match {
+        case Some(a) => Option(a.group(1)).getOrElse(rels.split("\\s+").head)
+        case None => "__sample"
+      }
+    val sampled =
+      if (unit == "ROWS")
+        s"(SELECT * FROM $rels ORDER BY $rnd LIMIT $size) $outAlias"
+      else
+        s"(SELECT * FROM $rels WHERE $rnd < ($size) / 100.0) $outAlias"
+    Splice(fromM.start, specEnd, "FROM " + sampled + " ")
   }
 
   /** DuckDB engine-tuning statements: `PRAGMA x[=v|(v)]` and
@@ -2002,55 +1952,6 @@ object Dialect {
     }
     if ("(?is)^\\s*ALTER\\s+SEQUENCE\\b".r.findFirstIn(stmt).isDefined)
       return rejectSentinel("ALTER_SEQUENCE")
-    // window-frame triage (probed v1.0: GROUPS mode is a parse error
-    // even there; EXCLUDE works in DuckDB but Spark frames have no
-    // exclusion). EXCLUDE NO OTHERS restates the default — strip it;
-    // the other EXCLUDE forms and GROUPS mode EXECUTE via [[FrameSql]]'s
-    // frame re-expression where provably exact, and reject loudly (never
-    // an opaque Spark parse error) where not. Scoped to statements that
-    // actually carry a window (OVER () — masked scan, so literals with
-    // these words never trigger.
-    locally {
-      val masked = maskQuoted(stmt)
-      // scan only INSIDE each OVER (...) paren span: a column named
-      // `groups` in a WHERE (`groups BETWEEN 1 AND 5`) or a column
-      // `exclude` before a GROUP BY are valid identifiers outside the
-      // frame clause and must not be mistaken for frame keywords
-      val overSpans: Seq[(Int, Int)] =
-        "(?i)\\bOVER\\s*\\(".r.findAllMatchIn(masked).toSeq.flatMap { m =>
-          val close = matchingParen(masked, m.end - 1)
-          if (close > 0) Some((m.end, close)) else None
-        }
-      if (overSpans.nonEmpty) {
-        // (start, end) of the first match inside an OVER span; the
-        // regex runs on each span alone, so a long statement outside the
-        // spans never reaches the recursive lazy alternation below
-        def inOver(re: scala.util.matching.Regex): Option[(Int, Int)] =
-          overSpans.iterator.flatMap { case (s, e) =>
-            re.findFirstMatchIn(masked.substring(s, e))
-              .map(m => (s + m.start, s + m.end))
-          }.nextOption()
-        // frame-position GROUPS: BETWEEN/UNBOUNDED/CURRENT ROW heads, or
-        // the single-bound form `GROUPS <expr> PRECEDING|FOLLOWING` —
-        // tempered so a COLUMN named `groups` (e.g. in PARTITION BY,
-        // where ORDER/ROWS/RANGE intervenes before any PRECEDING) never
-        // false-positives into the reject (r16 ADVICE: the digit-only
-        // bound pattern let expression bounds die as opaque parse errors)
-        if (inOver(("(?i)\\bGROUPS\\s+(?:BETWEEN\\b|UNBOUNDED\\b|CURRENT\\s+ROW|" +
-            "(?:\\([^()]*\\)|(?!\\b(?:ORDER|ROWS|RANGE|PARTITION|EXCLUDE|OVER)\\b)[^()])*?" +
-            "\\b(?:PRECEDING|FOLLOWING)\\b)").r)
-            .isDefined)
-          return FrameSql.rewriteGroups(stmt).map(rewritePragma)
-            .getOrElse(rejectSentinel("FRAME_GROUPS"))
-        if (inOver("(?i)\\bEXCLUDE\\s+(CURRENT\\s+ROW|GROUP\\b|TIES\\b)".r)
-            .isDefined)
-          return FrameSql.rewriteExclude(stmt).map(rewritePragma)
-            .getOrElse(rejectSentinel("FRAME_EXCLUDE"))
-        inOver("(?i)\\bEXCLUDE\\s+NO\\s+OTHERS".r).foreach { case (s, e) =>
-          return rewritePragma(stmt.substring(0, s) + stmt.substring(e))
-        }
-      }
-    }
     val m = "(?is)^\\s*PRAGMA\\s+([A-Za-z_][A-Za-z0-9_]*)\\s*(?:=\\s*(.+?)|\\(\\s*(.+?)\\s*\\))?\\s*;?\\s*$".r
       .findFirstMatchIn(stmt)
     m match {

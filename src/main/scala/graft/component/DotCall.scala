@@ -19,25 +19,23 @@ object DotCall {
   private val callRe = "\\.\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*\\(".r
   private val tablePosition = "(?is)\\b(FROM|JOIN|INTO|UPDATE|TABLE|VIEW)\\s*$".r
 
-  def has(stmt: String): Boolean =
-    callRe.findFirstIn(Dialect.maskQuoted(stmt)).isDefined
+  private[component] val chains = Dialect.Sites(callRe, { (stmt, masked, m) =>
+    (for {
+      rs <- Dialect.operandStart(stmt, masked, m.start, Dialect.Postfix)
+      if stmt.charAt(rs) != '\''
+      // not a qualified table(-function) ref in table position —
+      // `FROM main.range(3)`, `INSERT INTO out.csv (a, b)`
+      if tablePosition.findFirstIn(masked.substring(0, rs)).isEmpty
+      close = Dialect.matchingParen(masked, m.end - 1)
+      if close >= 0
+    } yield {
+      val receiver = stmt.substring(rs, m.start).trim
+      val args = stmt.substring(m.end, close).trim
+      Dialect.Splice(rs, close + 1,
+        if (args.isEmpty) s"${m.group(1)}($receiver)"
+        else s"${m.group(1)}($receiver, $args)")
+    }).getOrElse(Dialect.Skip(m.end))
+  })
 
-  def rewrite(stmt: String): String =
-    Dialect.lowerOperators(stmt, callRe) { (stmt, masked, m) =>
-      for {
-        rs <- Dialect.operandStart(stmt, masked, m.start, Dialect.Postfix)
-        if stmt.charAt(rs) != '\''
-        // not a qualified table(-function) ref in table position —
-        // `FROM main.range(3)`, `INSERT INTO out.csv (a, b)`
-        if tablePosition.findFirstIn(masked.substring(0, rs)).isEmpty
-        close = Dialect.matchingParen(masked, m.end - 1)
-        if close >= 0
-      } yield {
-        val receiver = stmt.substring(rs, m.start).trim
-        val args = stmt.substring(m.end, close).trim
-        (rs, close + 1,
-          if (args.isEmpty) s"${m.group(1)}($receiver)"
-          else s"${m.group(1)}($receiver, $args)")
-      }
-    }
+  def rewrite(stmt: String): String = Dialect.run(stmt, chains)
 }

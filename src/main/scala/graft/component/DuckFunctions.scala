@@ -1934,7 +1934,7 @@ object DuckFunctions {
       arity("uuid_extract_timestamp", 1)(a =>
         graft.functions.UuidExtractTimestamp(a.head)),
 
-      // fill()'s interpolation axis (emitted by Dialect.rewriteFill —
+      // fill()'s interpolation axis (emitted by Dialect's fill lowering —
       // never user-spelled): numeric/DATE/TIMESTAMP keys → one DOUBLE
       arity("duck_fill_pos", 1)(a => graft.functions.FillPos(a.head)),
 

@@ -63,28 +63,17 @@ object FileReads {
     * (after FROM / JOIN / a FROM-list comma): the same spelling with an
     * operand before it is the GLOB match OPERATOR with a parenthesized
     * pattern, owned by the dialect's operand-extent scanner. */
-  def rewriteTableFunctions(stmt: String): String = {
-    val masked = Dialect.maskQuoted(stmt)
-    val hit = fnRe.findAllMatchIn(masked).find { m =>
-      m.group(1).toLowerCase != "glob" ||
-        "(?is)(?:\\bfrom|\\bjoin|,)\\s*$".r
-          .findFirstIn(masked.substring(0, m.start)).isDefined
-    }
-    hit match {
-      case None => stmt
-      case Some(m) =>
-        val open = m.end - 1
-        val close = Dialect.matchingParen(masked, open)
-        if (close < 0) stmt
-        else {
-          val view = register(m.group(1).toLowerCase,
-            stmt.substring(open + 1, close))
-          // recurse: later calls sit in the suffix of the rewritten text
-          rewriteTableFunctions(
-            stmt.substring(0, m.start) + s"`$view`" + stmt.substring(close + 1))
-        }
-    }
-  }
+  def rewriteTableFunctions(stmt: String): String = Dialect.run(stmt, tableFunctions)
+
+  /** An unbalanced call ends the pass. */
+  private[component] val tableFunctions = Dialect.Sites(fnRe, { (stmt, masked, m) =>
+    val close = Dialect.matchingParen(masked, m.end - 1)
+    if (m.group(1).toLowerCase == "glob" && "(?is)(?:\\bfrom|\\bjoin|,)\\s*$".r
+        .findFirstIn(masked.substring(0, m.start)).isEmpty) Dialect.Skip(m.end)
+    else if (close < 0) Dialect.Skip(stmt.length)
+    else Dialect.Splice(m.start, close + 1,
+      s"`${register(m.group(1).toLowerCase, stmt.substring(m.end, close))}`")
+  })
 
   private def unquote(s0: String): String = {
     val s = s0.trim

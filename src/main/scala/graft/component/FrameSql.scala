@@ -1,5 +1,9 @@
 package graft.component
 
+import scala.util.matching.Regex
+
+import Dialect.{Skip, Splice}
+
 /** Executes DuckDB window-frame EXCLUDE and GROUPS modes on Spark.
   *
   * Spark's frame grammar has neither (`SpecifiedWindowFrame` knows ROWS
@@ -29,19 +33,97 @@ package graft.component
   *    bounds map in place (RANGE's CURRENT ROW bounds are already
   *    peer-group bounds); numeric offsets inject the dense_rank as a
   *    helper column through a subquery wrap of the owning SELECT block
-  *    (the rewriteQualify technique). Works for EVERY window function —
+  *    (the QUALIFY lowering's technique). Works for EVERY window function —
   *    it is pure frame re-expression — and composes with EXCLUDE (the
   *    rewritten frame is RANGE over a single integer key, which passes
   *    the exclusion gate).
   *
   * All-or-nothing per statement: any occurrence this pass cannot prove
-  * rewritable returns None and the dialect keeps its loud reject —
-  * never a partial rewrite, never a silent wrong answer.
+  * rewritable rejects the statement loudly ([[Dialect.rejectSentinel]])
+  * — never a partial rewrite, never a silent wrong answer.
   *
   * Reference surface: keboola/component-duckdb-transformation pins DuckDB
   * 1.4.4/1.5.2 (src/versions.py:19-22) where both spellings run verbatim.
   */
 object FrameSql {
+
+  /** The dialect chain's window-frame pass (probed v1.0: GROUPS mode is
+    * a parse error even there; EXCLUDE works in DuckDB but Spark frames
+    * have no exclusion): GROUPS frames re-express first, then EXCLUDE
+    * CURRENT ROW / GROUP / TIES execute, each where provably exact and
+    * as the FRAME_GROUPS / FRAME_EXCLUDE reject sentinel where not
+    * (never an opaque Spark parse error); EXCLUDE NO OTHERS restates
+    * the default and is stripped. Scoped to the text INSIDE each
+    * `OVER (...)` span, masked: a column named `groups` in a WHERE
+    * (`groups BETWEEN 1 AND 5`) or `exclude` before a GROUP BY is a
+    * valid identifier outside the frame clause, and literals with these
+    * words never trigger. */
+  def rewrite(stmt: String, masked: String): String = {
+    if (overSpans(masked).isEmpty) return stmt
+    var s = stmt
+    var m = masked
+    if (inOver(m, groupsFrame))
+      lowerFrames(s, m, groupsMode)(lowerGroups) match {
+        case Some((s2, m2)) => s = s2; m = m2
+        case None => return Dialect.rejectSentinel("FRAME_GROUPS")
+      }
+    if (inOver(m, excludeFrame))
+      lowerFrames(s, m, excludeMode)(lowerExclude) match {
+        case Some((s2, m2)) => s = s2; m = m2
+        case None => return Dialect.rejectSentinel("FRAME_EXCLUDE")
+      }
+    Dialect.splice(s, m, noOthers) { (_, masked, n) =>
+      if (overSpans(masked).exists { case (_, open, close) => open < n.start && n.start < close })
+        Splice(n.start, n.end, "")
+      else Skip(n.end)
+    }._1
+  }
+
+  /** Frame-position GROUPS: BETWEEN/UNBOUNDED/CURRENT ROW heads, or the
+    * single-bound form `GROUPS <expr> PRECEDING|FOLLOWING` — tempered so
+    * a COLUMN named `groups` (e.g. in PARTITION BY, where
+    * ORDER/ROWS/RANGE intervenes before any PRECEDING) never
+    * false-positives into the reject (r16 ADVICE: the digit-only bound
+    * pattern let expression bounds die as opaque parse errors). */
+  private val groupsFrame =
+    ("(?i)\\bGROUPS\\s+(?:BETWEEN\\b|UNBOUNDED\\b|CURRENT\\s+ROW|" +
+      "(?:\\([^()]*\\)|(?!\\b(?:ORDER|ROWS|RANGE|PARTITION|EXCLUDE|OVER)\\b)[^()])*?" +
+      "\\b(?:PRECEDING|FOLLOWING)\\b)").r
+  private val excludeFrame = "(?i)\\bEXCLUDE\\s+(CURRENT\\s+ROW|GROUP\\b|TIES\\b)".r
+  /** The frame modes [[lowerExclude]] and [[lowerGroups]] lower, at a
+    * spec's depth 0. */
+  private val groupsMode = "(?i)\\bGROUPS\\b".r
+  private val excludeMode = "(?i)\\bEXCLUDE\\s+(CURRENT\\s+ROW|GROUP|TIES)\\b".r
+  private val noOthers = "(?i)\\bEXCLUDE\\s+NO\\s+OTHERS".r
+  private val overSite = "(?i)\\bOVER\\s*\\(".r
+
+  /** Does `re` match inside some OVER span? It runs on each span alone,
+    * so a long statement outside the spans never reaches the tempered
+    * lazy alternation of [[groupsFrame]]. */
+  private def inOver(masked: String, re: Regex): Boolean =
+    overSpans(masked).exists { case (_, open, close) =>
+      re.findFirstIn(masked.substring(open + 1, close)).isDefined
+    }
+
+  /** Every OVER span whose spec carries `mode` at its own depth 0,
+    * lowered by `lower(stmt, masked, overKw, open, close)`; None when one
+    * resists (all-or-nothing). */
+  private def lowerFrames(stmt: String, masked: String, mode: Regex)(
+      lower: (String, String, Int, Int, Int) => Option[Splice]): Option[(String, String)] = {
+    var resisted = false
+    val out = Dialect.splice(stmt, masked, overSite) { (stmt, masked, o) =>
+      val open = o.end - 1
+      val close = Dialect.matchingParen(masked, open)
+      val spec = if (close > 0) masked.substring(open + 1, close) else ""
+      val dep = Dialect.depths(spec)
+      if (close <= 0 || !mode.findAllMatchIn(spec).exists(m => dep(m.start) == 0)) Skip(o.end)
+      else lower(stmt, masked, o.start, open, close).getOrElse {
+        resisted = true
+        Skip(stmt.length)
+      }
+    }
+    if (resisted) None else Some(out)
+  }
 
   /** One frame bound. `side` is the bound's position relative to the
     * current row: -1 PRECEDING, 0 CURRENT ROW (or a literal 0 offset),
@@ -158,7 +240,7 @@ object FrameSql {
 
   /** All OVER ( ... ) spans: (overKwStart, openParen, closeParen). */
   private def overSpans(masked: String): List[(Int, Int, Int)] =
-    "(?i)\\bOVER\\s*\\(".r.findAllMatchIn(masked).toList.flatMap { m =>
+    overSite.findAllMatchIn(masked).toList.flatMap { m =>
       val open = m.end - 1
       val close = Dialect.matchingParen(masked, open)
       if (close > 0) Some((m.start, open, close)) else None
@@ -166,41 +248,16 @@ object FrameSql {
 
   // ---------------------------------------------------------------- EXCLUDE
 
-  /** Rewrite every frame-EXCLUDE occurrence, or None if any resists. */
-  def rewriteExclude(stmt0: String): Option[String] = {
-    var stmt = stmt0
-    var guard = 0
-    while (guard < 32) {
-      guard += 1
-      val masked = Dialect.maskQuoted(stmt)
-      val hit = overSpans(masked).flatMap { case (kw, open, close) =>
-        val spec = stmt.substring(open + 1, close)
-        val specMasked = masked.substring(open + 1, close)
-        val dep = Dialect.depths(specMasked)
-        "(?i)\\bEXCLUDE\\s+(CURRENT\\s+ROW|GROUP|TIES)\\b".r
-          .findAllMatchIn(specMasked)
-          .find(m => dep(m.start) == 0)
-          .map(_ => (kw, open, close, spec, specMasked))
-      }.headOption
-      hit match {
-        case None => return Some(stmt)
-        case Some((kw, open, close, spec, specMasked)) =>
-          stmt = rewriteOneExclude(stmt, masked, kw, open, close, spec,
-            specMasked).getOrElse(return None)
-      }
-    }
-    None
-  }
-
-  private def rewriteOneExclude(stmt: String, masked: String, overKw: Int,
-      open: Int, close: Int, spec: String, specMasked: String)
-      : Option[String] = {
-    val sp = parseSpec(spec, specMasked).getOrElse(return None)
+  /** The splice that executes the EXCLUDE frame of the OVER span at
+    * `overKw`, or None when it cannot be proved exact. */
+  private def lowerExclude(stmt: String, masked: String, overKw: Int,
+      open: Int, close: Int): Option[Splice] = {
+    val spec = stmt.substring(open + 1, close)
+    val sp = parseSpec(spec, masked.substring(open + 1, close)).getOrElse(return None)
     val (kind, exS, _) = sp.exclude.getOrElse(return None)
-    if (kind == "NO OTHERS") { // default restated — strip in place
-      return Some(stmt.substring(0, open + 1 + exS) + stmt.substring(close))
-    }
-    if (sp.mode == "GROUPS") return None // rewriteGroups must run first
+    if (kind == "NO OTHERS") // default restated — strip in place
+      return Some(Splice(open + 1 + exS, close, ""))
+    if (sp.mode == "GROUPS") return None // the GROUPS lowering runs first
     val inFrame = currentInFrame(sp).getOrElse(return None)
     if (kind == "CURRENT ROW" && !inFrame) {
       // current row provably outside the frame. Probed v1.0: for a
@@ -209,8 +266,7 @@ object FrameSql {
       // down by one (2F..4F EXCLUDE CURRENT ROW returns 1F..4F — an
       // engine quirk diverging from the standard's no-op), so that form
       // stays a loud reject rather than picking either behavior
-      if (sp.end.side < 0)
-        return Some(stmt.substring(0, open + 1 + exS) + stmt.substring(close))
+      if (sp.end.side < 0) return Some(Splice(open + 1 + exS, close, ""))
       return None
     }
     val (fnStart, fnName, args) = fnBefore(stmt, masked, overKw)
@@ -245,13 +301,12 @@ object FrameSql {
           s"${sum(wf)} - COALESCE(${sum(wg)}, 0) + $curSum")
       case _ => return None
     }
-    val repl = fn match {
+    Some(Splice(fnStart, close + 1, fn match {
       case "count" => cntE
       case "sum" => s"(CASE WHEN $cntE = 0 THEN NULL ELSE $sumE END)"
       case "avg" =>
         s"(CASE WHEN $cntE = 0 THEN NULL ELSE CAST($sumE AS DOUBLE) / $cntE END)"
-    }
-    Some(stmt.substring(0, fnStart) + repl + stmt.substring(close + 1))
+    }))
   }
 
   // ----------------------------------------------------------------- GROUPS
@@ -262,47 +317,31 @@ object FrameSql {
   private def rangeBound(b: Bound): String =
     if (b.side == 0) "CURRENT ROW" else b.text
 
-  /** Rewrite every GROUPS-mode frame, or None if any resists. */
-  def rewriteGroups(stmt0: String): Option[String] = {
-    var stmt = stmt0
-    var guard = 0
-    while (guard < 16) {
-      guard += 1
-      val masked = Dialect.maskQuoted(stmt)
-      val spans = overSpans(masked).filter { case (_, open, close) =>
-        val specMasked = masked.substring(open + 1, close)
-        val dep = Dialect.depths(specMasked)
-        "(?i)\\bGROUPS\\b".r.findAllMatchIn(specMasked)
-          .exists(m => dep(m.start) == 0)
-      }
-      if (spans.isEmpty) return Some(stmt)
-      val (kw, open, close) = spans.head
-      val spec = stmt.substring(open + 1, close)
-      val specMasked = masked.substring(open + 1, close)
-      val sp = parseSpec(spec, specMasked).getOrElse(return None)
-      if (sp.mode != "GROUPS" || !sp.hasOrder) return None
-      // Spark RANGE frame offsets must be foldable — expression-valued
-      // GROUPS offsets stay a loud reject
-      if (!sp.start.definite || !sp.end.definite) return None
-      if (boundKeyworded(sp.start) && boundKeyworded(sp.end)) {
-        // RANGE's CURRENT ROW bounds ARE peer-group bounds: a direct
-        // mode swap is exact, no helper column needed
-        val newFrame =
-          s"RANGE BETWEEN ${rangeBound(sp.start)} AND ${rangeBound(sp.end)}"
-        stmt = stmt.substring(0, open + 1 + sp.modeStart) + newFrame +
-          spec.substring(sp.frameEnd) + stmt.substring(close)
-      } else {
-        stmt = rewriteGroupsBlock(stmt, masked, kw).getOrElse(return None)
-      }
-    }
-    None
+  /** The splice that re-expresses the GROUPS frame of the OVER span at
+    * `kw` (or its whole block, for offset bounds), or None when it
+    * cannot be proved exact. */
+  private def lowerGroups(stmt: String, masked: String, kw: Int, open: Int,
+      close: Int): Option[Splice] = {
+    val spec = stmt.substring(open + 1, close)
+    val sp = parseSpec(spec, masked.substring(open + 1, close)).getOrElse(return None)
+    if (sp.mode != "GROUPS" || !sp.hasOrder) return None
+    // Spark RANGE frame offsets must be foldable — expression-valued
+    // GROUPS offsets stay a loud reject
+    if (!sp.start.definite || !sp.end.definite) return None
+    if (boundKeyworded(sp.start) && boundKeyworded(sp.end))
+      // RANGE's CURRENT ROW bounds ARE peer-group bounds: a direct
+      // mode swap is exact, no helper column needed
+      Some(Splice(open + 1 + sp.modeStart, close,
+        s"RANGE BETWEEN ${rangeBound(sp.start)} AND ${rangeBound(sp.end)}" +
+          spec.substring(sp.frameEnd)))
+    else rewriteGroupsBlock(stmt, masked, kw)
   }
 
   /** Offset-bounded GROUPS: wrap the owning SELECT block in a subquery
     * that adds one DENSE_RANK helper per distinct window ordering, and
     * re-frame each GROUPS window as RANGE over its helper. */
   private def rewriteGroupsBlock(stmt: String, masked: String,
-      anchorKw: Int): Option[String] = {
+      anchorKw: Int): Option[Splice] = {
     val dep = Dialect.depths(masked)
     def owningSelect(pos: Int): Option[Int] = {
       val selects = "(?i)\\bSELECT\\b".r.findAllMatchIn(masked)
@@ -398,8 +437,6 @@ object FrameSql {
     val rest = stmt.substring(fromStart, tailStart)
     val helpers = keys.map(k =>
       s"DENSE_RANK() OVER ($k) AS ${helper(k)}").mkString(", ")
-    Some(stmt.substring(0, selKw) +
-      s"SELECT $sel FROM (SELECT *, $helpers $rest) " + tail +
-      stmt.substring(effEnd))
+    Some(Splice(selKw, effEnd, s"SELECT $sel FROM (SELECT *, $helpers $rest) " + tail))
   }
 }

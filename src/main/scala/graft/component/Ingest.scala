@@ -78,18 +78,21 @@ object Ingest {
       .option("sep", m.delimiter)
       .option("quote", m.enclosure)
       .option("header", !sliced) // non-sliced exports always carry a header
+    // a sliced table is a directory of slices; reading the directory
+    // through a file-name filter (not a `dir/*.csv` glob path) keeps
+    // Spark's streaming-sink probe from logging a FileNotFoundException
+    val sliceReader = if (sliced) reader.option("pathGlobFilter", "*.csv") else reader
     val schema = Manifest.declaredSchema(m, dtypesInfer)
-    val target = if (sliced) s"$path/*.csv" else path.toString
     schema match {
-      case Some(st) => reader.schema(st).csv(target)
+      case Some(st) => sliceReader.schema(st).csv(path.toString)
       case None =>
-        val df = reader.option("inferSchema", "true").csv(target)
+        val df = sliceReader.option("inferSchema", "true").csv(path.toString)
         if (m.columns.nonEmpty) df.toDF(m.columns: _*) else df
     }
   }
 
   private def loadParquet(spark: SparkSession, path: Path, m: InManifest): DataFrame = {
-    val df = spark.read.parquet(s"$path/*.parquet")
+    val df = spark.read.option("pathGlobFilter", "*.parquet").parquet(path.toString)
     val toCast = m.columnTypes.collect {
       case (c, t) if t.equalsIgnoreCase("INTEGER") => c
     }.toSet

@@ -32,8 +32,7 @@ object IntrospectSql {
   private val ptiRe = "(?i)\\bpragma_table_info\\s*\\(\\s*'([^']*)'\\s*\\)".r
   private val isRe = "(?i)\\binformation_schema\\s*\\.\\s*(tables|columns)\\b".r
 
-  def rewrite(stmt: String): String = {
-    val masked = Dialect.maskQuoted(stmt)
+  def rewrite(stmt: String, masked: String): String = {
     // information_schema names are unquoted (masked text carries them)
     var out = stmt
     val edits = scala.collection.mutable.ListBuffer[(Int, Int, String)]()

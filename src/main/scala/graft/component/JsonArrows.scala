@@ -42,18 +42,19 @@ object JsonArrows {
   private val idTuple =
     "^\\(\\s*[A-Za-z_][A-Za-z0-9_]*(\\s*,\\s*[A-Za-z_][A-Za-z0-9_]*)*\\s*\\)$".r
 
-  def rewrite(stmt: String): String =
-    Dialect.lowerOperators(stmt, arrowRe) { (stmt, masked, m) =>
-      for {
-        (path, end) <- rhsLiteral(stmt, masked, m.end)
-        rs <- Dialect.operandStart(stmt, masked, m.start, Dialect.Postfix)
-        receiver = stmt.substring(rs, m.start).trim
-        if !lambdaParams(stmt, masked, rs, receiver)
-      } yield {
-        val fn = if (m.end - m.start == 3) "json_extract_string" else "json_extract"
-        (rs, end, s"$fn($receiver, $path)")
-      }
-    }
+  private[component] val arrows = Dialect.Sites(arrowRe, { (stmt, masked, m) =>
+    (for {
+      (path, end) <- rhsLiteral(stmt, masked, m.end)
+      rs <- Dialect.operandStart(stmt, masked, m.start, Dialect.Postfix)
+      receiver = stmt.substring(rs, m.start).trim
+      if !lambdaParams(stmt, masked, rs, receiver)
+    } yield {
+      val fn = if (m.end - m.start == 3) "json_extract_string" else "json_extract"
+      Dialect.Splice(rs, end, s"$fn($receiver, $path)")
+    }).getOrElse(Dialect.Skip(m.end))
+  })
+
+  def rewrite(stmt: String): String = Dialect.run(stmt, arrows)
 
   /** A lambda parameter list is a bare identifier (or identifier tuple)
     * sitting at the START of an argument of a known HOF — `filter`/

@@ -55,7 +55,7 @@ object Macros {
 
   /** Register a definition (→ inert SELECT), drop one, or expand call
     * sites. */
-  def rewrite(stmt: String): String = {
+  def rewrite(stmt: String, masked: String): String = {
     dropRe.findFirstMatchIn(stmt).foreach { m =>
       val had = defs.remove(m.group(2).toLowerCase).isDefined
       if (!had && m.group(1) == null)
@@ -67,9 +67,10 @@ object Macros {
     createHeadRe.findFirstMatchIn(trimmed) match {
       case Some(h) =>
         val name = h.group(1)
-        val masked = Dialect.maskQuoted(trimmed)
+        val lead = stmt.indexWhere(_ > ' ')
         val open = h.end - 1
-        val close = Dialect.matchingParen(masked, open)
+        val close = Dialect.matchingParen(
+          masked.substring(lead, lead + trimmed.length), open)
         if (close < 0) throw new UserException(
           s"unbalanced parameter list in CREATE MACRO $name")
         val rest = trimmed.substring(close + 1)
@@ -101,73 +102,74 @@ object Macros {
         val body = bodyM.group(1).trim.replaceFirst("(?is)^TABLE\\s+", "")
         defs.put(name.toLowerCase, Macro(params, defaults, body))
         s"SELECT '$name' AS __graft_macro_registered"
-      case None => expand(stmt)
+      case None => expand(stmt, masked)
     }
   }
 
   /** Expand every registered macro call in `stmt` (outside quoted
-    * regions), repeatedly so macros may call macros; leftmost call
-    * first, one at a time (offsets stay trivially correct under nested
-    * calls). Bounded by a REPLACEMENT budget, not a round count — a
-    * statement with many independent calls is legitimate; only a
-    * recursive macro (ever-growing text) trips the guards. */
-  private[component] def expand(stmt0: String): String = {
+    * regions), leftmost call first, the expansion's own calls next, so
+    * macros may call macros. A macro calling itself adds sites without
+    * end, so the pass keeps a loud bound: a REPLACEMENT budget, not a
+    * round count — a statement with many independent calls is
+    * legitimate; only a recursive macro (ever-growing text) trips it. */
+  private[component] def expand(stmt: String): String =
+    Dialect.run(stmt, Dialect.Whole(expand(_, _)))
+
+  private def expand(stmt0: String, masked: String): String = {
     if (defs.isEmpty) return stmt0
-    var stmt = stmt0
     var replacements = 0
-    var changed = true
-    while (changed) {
-      changed = false
+    def budget(stmt: String): Unit =
       if (replacements > 10000 || stmt.length > 1000000)
         throw new UserException(
           s"macro expansion did not terminate (recursive macro?): $stmt0")
-      val masked = Dialect.maskQuoted(stmt)
-      // leftmost registered call expands; binder-rule violations throw
-      // the probed DuckDB messages (r15 — was leave-alone); qualified
-      // names (a.f()) are column/struct accesses, not macros
-      val calls = "(?i)(?<![\\w.])([A-Za-z_][A-Za-z0-9_]*)\\s*\\(".r
-        .findAllMatchIn(masked)
-        .filter(m => defs.contains(m.group(1).toLowerCase))
-      while (!changed && calls.hasNext) {
-        val m = calls.next()
-        val mac = defs(m.group(1).toLowerCase)
-        val open = m.end - 1
-        val close = Dialect.matchingParen(masked, open)
-        if (close > open) {
-          val argsStr = stmt.substring(open + 1, close)
-          val args = Dialect.splitTop(argsStr)
-          // probed v1.0 binding: named `k := v` arguments bind ONLY to
-          // default parameters (unknown name is a binder error);
-          // positionals must cover exactly the non-default parameters
-          val namedRe = "(?s)^\\s*([A-Za-z_]\\w*)\\s*:=\\s*(.*)$".r
-          val (named0, positional) = args.partition(a =>
-            namedRe.findFirstIn(a).isDefined)
-          val named = named0.map { a =>
-            val mm = namedRe.findFirstMatchIn(a).get
-            (mm.group(1), mm.group(2))
-          }
-          val defNames = mac.defaults.map(_._1.toLowerCase).toSet
-          named.find(n => !defNames(n._1.toLowerCase)).foreach(n =>
-            throw new UserException(
-              s"Macro ${m.group(1)} does not have default parameter ${n._1}!"))
-          if (positional.length != mac.params.length)
-            throw new UserException(
-              s"Macro function '${m.group(1)}(${mac.params.mkString(", ")})' " +
-                s"requires ${mac.params.length} positional argument(s), but " +
-                s"${positional.length} were provided")
-          val namedMap = named.map { case (k, v) => k.toLowerCase -> v }.toMap
-          val defaultArgs = mac.defaults.map { case (n, dflt) =>
-            namedMap.getOrElse(n.toLowerCase, dflt)
-          }
-          val expanded = substitute(mac, positional ++ defaultArgs)
-          stmt = stmt.substring(0, m.start) + "(" + expanded + ")" +
-            stmt.substring(close + 1)
-          replacements += 1
-          changed = true
-        }
+    // binder-rule violations throw the probed DuckDB messages (r15 —
+    // was leave-alone); qualified names (a.f()) are column/struct
+    // accesses, not macros
+    val (out, _) = Dialect.splice(stmt0, masked, callRe) { (stmt, masked, m) =>
+      budget(stmt)
+      val mac = defs.get(m.group(1).toLowerCase)
+      val close = if (mac.isEmpty) -1 else Dialect.matchingParen(masked, m.end - 1)
+      if (close < m.end) Dialect.Skip(m.end)
+      else {
+        replacements += 1
+        Dialect.Splice(m.start, close + 1,
+          "(" + call(mac.get, m.group(1), stmt.substring(m.end, close)) + ")")
       }
     }
-    stmt
+    budget(out)
+    out
+  }
+
+  private val callRe = "(?i)(?<![\\w.])([A-Za-z_][A-Za-z0-9_]*)\\s*\\(".r
+
+  /** The body of one call of `mac` (named `name` at the call site) with
+    * its argument text bound. */
+  private def call(mac: Macro, name: String, argsStr: String): String = {
+    val args = Dialect.splitTop(argsStr)
+    // probed v1.0 binding: named `k := v` arguments bind ONLY to
+    // default parameters (unknown name is a binder error);
+    // positionals must cover exactly the non-default parameters
+    val namedRe = "(?s)^\\s*([A-Za-z_]\\w*)\\s*:=\\s*(.*)$".r
+    val (named0, positional) = args.partition(a =>
+      namedRe.findFirstIn(a).isDefined)
+    val named = named0.map { a =>
+      val mm = namedRe.findFirstMatchIn(a).get
+      (mm.group(1), mm.group(2))
+    }
+    val defNames = mac.defaults.map(_._1.toLowerCase).toSet
+    named.find(n => !defNames(n._1.toLowerCase)).foreach(n =>
+      throw new UserException(
+        s"Macro $name does not have default parameter ${n._1}!"))
+    if (positional.length != mac.params.length)
+      throw new UserException(
+        s"Macro function '$name(${mac.params.mkString(", ")})' " +
+          s"requires ${mac.params.length} positional argument(s), but " +
+          s"${positional.length} were provided")
+    val namedMap = named.map { case (k, v) => k.toLowerCase -> v }.toMap
+    val defaultArgs = mac.defaults.map { case (n, dflt) =>
+      namedMap.getOrElse(n.toLowerCase, dflt)
+    }
+    substitute(mac, positional ++ defaultArgs)
   }
 
   private def substitute(mac: Macro, args: Seq[String]): String = {

@@ -161,8 +161,10 @@ object Pivot {
     * `UNPIVOT <src> ON c1, c2 INTO NAME n VALUE v` becomes Spark
     * `SELECT * FROM <src> UNPIVOT (v FOR n IN (c1, c2))`. Applies at the
     * statement head or after a CREATE ... AS; other text is untouched. */
-  def rewriteUnpivot(stmt: String): String = {
-    val masked = Dialect.maskQuoted(stmt)
+  def rewriteUnpivot(stmt: String): String =
+    Dialect.run(stmt, Dialect.Whole(rewriteUnpivot(_, _)))
+
+  def rewriteUnpivot(stmt: String, masked: String): String = {
     val m = "(?is)(^\\s*|\\bAS\\s+)UNPIVOT\\b".r.findFirstMatchIn(masked)
       .getOrElse(return stmt)
     val dep = Dialect.depths(masked)

@@ -130,12 +130,14 @@ object SqlAnalyzer {
       // sets (an EXECUTE in the same code inherits them at the code level)
       case Stmt.Prepare(p) => contract(spark, Stmt.parse(PrepareSql.nullBody(p)))
       case Stmt.EngineQuery(sql) => Analysis(reads(sql), Set.empty, OtherStmt)
+      // a variable's value expression may read tables (`SET VARIABLE x =
+      // (SELECT max(k) FROM src)`): the DAG orders it after their producers
+      case Stmt.SetVariable(_, expr) => Analysis(reads(s"SELECT $expr"), Set.empty, OtherStmt)
       case Stmt.Catalyst(sql) => fromPlan(parse(bodyStub(sql)))
       // EXPORT reads the whole catalog and IMPORT's outputs are unknowable
       // before its scripts exist (both documented); the rest name no table
       case Stmt.Rejected(_) | Stmt.Drop(_, _, _) | Stmt.DropIndex(_) |
-          Stmt.ExportDatabase(_) | Stmt.ImportDatabase(_) |
-          Stmt.SetVariable(_, _) | Stmt.ResetVariable(_) |
+          Stmt.ExportDatabase(_) | Stmt.ImportDatabase(_) | Stmt.ResetVariable(_) |
           Stmt.Deallocate(_) | Stmt.Execute(_) | Stmt.SequenceBlocks(_) => Empty
     }
   }

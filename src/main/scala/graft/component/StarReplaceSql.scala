@@ -159,57 +159,49 @@ object StarReplaceSql {
     * it; DuckDB's own RE2 does not — this regex never reaches another
     * engine). Post-1.0 surface: the reference pins DuckDB 1.4.4/1.5.2,
     * local v1.0 probes a binder error — semantics from the public docs,
-    * spec-pinned (no oracle row possible). Runs BEFORE rewriteMatchOps
+    * spec-pinned (no oracle row possible). Runs BEFORE the match operators
     * so `* SIMILAR TO` is consumed as a star filter, not scanned as the
     * match operator. */
-  def rewriteLike(stmt: String): String = {
-    val masked = Dialect.maskQuoted(stmt)
-    def qualified(idx: Int): Boolean = { // t.* — COLUMNS cannot carry the
-      var j = idx - 1                    // qualifier; leave for a loud error
+  private[component] val starLike = Dialect.Sites("\\*".r, { (stmt, masked, star) =>
+    val i = star.start
+    def qualified: Boolean = { // t.* — COLUMNS cannot carry the
+      var j = i - 1            // qualifier; leave for a loud error
       while (j >= 0 && stmt.charAt(j).isWhitespace) j -= 1
       j >= 0 && stmt.charAt(j) == '.'
     }
-    var i = 0
-    while (i < masked.length) {
-      if (masked.charAt(i) == '*' && isStar(stmt, i) && !qualified(i)) {
-        var j = i + 1
-        while (j < masked.length && masked.charAt(j).isWhitespace) j += 1
-        // no trailing \s* in the regex: maskQuoted blanks the LITERAL
-        // (quotes included), so \s* would eat into it — skip only true
-        // whitespace (same char in masked and original) by hand
-        val opM = "(?is)^(NOT\\s+)?(LIKE|ILIKE|SIMILAR\\s+TO|GLOB)(?=[\\s'])".r
-          .findFirstMatchIn(masked.substring(j))
-        val qStartOpt = opM.map { m =>
-          var k = j + m.end
-          while (k < masked.length && masked.charAt(k) == stmt.charAt(k) &&
-            stmt.charAt(k).isWhitespace) k += 1
-          k
-        }
-        (opM, qStartOpt) match {
-          case (Some(m), Some(qStart)) if qStart < stmt.length &&
-              stmt.charAt(qStart) == '\'' =>
-            val qEnd = Dialect.spanEnd(stmt, qStart)
-            val raw = stmt.substring(qStart + 1, qEnd - 1).replace("''", "'")
-            val core = m.group(2).toUpperCase.replaceAll("\\s+", " ") match {
-              case "SIMILAR TO" => s"(?:$raw)"
-              case "GLOB" => graft.functions.GapKernels.globToRegex(raw)
-                .stripPrefix("^").stripSuffix("$")
-              case _ => likeToRegex(raw)
-            }
-            val ci = if (m.group(2).equalsIgnoreCase("ilike")) "(?i)" else ""
-            val re =
-              if (m.group(1) != null) s"$ci^(?!$core$$).*$$"
-              else s"$ci^$core$$"
-            val quoted = re.replace("'", "''")
-            return rewriteLike(stmt.substring(0, i) +
-              s"COLUMNS('$quoted')" + stmt.substring(qEnd))
-          case _ => ()
-        }
-      }
-      i += 1
+    var j = i + 1
+    while (j < masked.length && masked.charAt(j).isWhitespace) j += 1
+    // no trailing \s* in the regex: maskQuoted blanks the LITERAL
+    // (quotes included), so \s* would eat into it — skip only true
+    // whitespace (same char in masked and original) by hand
+    val opM = if (!isStar(stmt, i) || qualified) None
+      else "(?is)^(NOT\\s+)?(LIKE|ILIKE|SIMILAR\\s+TO|GLOB)(?=[\\s'])".r
+        .findFirstMatchIn(masked.substring(j))
+    val qStartOpt = opM.map { m =>
+      var k = j + m.end
+      while (k < masked.length && masked.charAt(k) == stmt.charAt(k) &&
+        stmt.charAt(k).isWhitespace) k += 1
+      k
     }
-    stmt
-  }
+    (opM, qStartOpt) match {
+      case (Some(m), Some(qStart)) if qStart < stmt.length &&
+          stmt.charAt(qStart) == '\'' =>
+        val qEnd = Dialect.spanEnd(stmt, qStart)
+        val raw = stmt.substring(qStart + 1, qEnd - 1).replace("''", "'")
+        val core = m.group(2).toUpperCase.replaceAll("\\s+", " ") match {
+          case "SIMILAR TO" => s"(?:$raw)"
+          case "GLOB" => graft.functions.GapKernels.globToRegex(raw)
+            .stripPrefix("^").stripSuffix("$")
+          case _ => likeToRegex(raw)
+        }
+        val ci = if (m.group(2).equalsIgnoreCase("ilike")) "(?i)" else ""
+        val re =
+          if (m.group(1) != null) s"$ci^(?!$core$$).*$$"
+          else s"$ci^$core$$"
+        Dialect.Splice(i, qEnd, s"COLUMNS('${re.replace("'", "''")}')")
+      case _ => Dialect.Skip(star.end)
+    }
+  })
 
   /** Paren-less `* EXCLUDE col` / `t.* EXCLUDE col` → the `* EXCEPT(col)`
     * group form the Spark parser knows. DuckDB takes exactly ONE bare
@@ -219,27 +211,18 @@ object StarReplaceSql {
     * [[isStar]] — `price * exclude_col` multiplication never rewrites —
     * and clause keywords after EXCLUDE pass through to a loud parse
     * error rather than swallowing the next clause. */
-  def rewriteBareExclude(stmt: String): String = {
-    val masked = Dialect.maskQuoted(stmt)
-    var i = 0
-    while (i < masked.length) {
-      if (masked.charAt(i) == '*' && isStar(stmt, i)) {
-        var j = i + 1
-        while (j < masked.length && masked.charAt(j) == stmt.charAt(j) &&
-          stmt.charAt(j).isWhitespace) j += 1
-        val m = "(?is)^EXCLUDE\\s+([A-Za-z_][A-Za-z0-9_]*)".r
-          .findFirstMatchIn(masked.substring(j))
-        m match {
-          case Some(g) if !clauseWords(g.group(1).toLowerCase) =>
-            return rewriteBareExclude(stmt.substring(0, j) +
-              s"EXCEPT(${g.group(1)})" + stmt.substring(j + g.end))
-          case _ => ()
-        }
-      }
-      i += 1
+  private[component] val bareExclude = Dialect.Sites("\\*".r, { (stmt, masked, star) =>
+    var j = star.end
+    while (j < masked.length && masked.charAt(j) == stmt.charAt(j) &&
+      stmt.charAt(j).isWhitespace) j += 1
+    (if (isStar(stmt, star.start))
+      "(?is)^EXCLUDE\\s+([A-Za-z_][A-Za-z0-9_]*)".r.findFirstMatchIn(masked.substring(j))
+    else None) match {
+      case Some(g) if !clauseWords(g.group(1).toLowerCase) =>
+        Dialect.Splice(j, j + g.end, s"EXCEPT(${g.group(1)})")
+      case _ => Dialect.Skip(star.end)
     }
-    stmt
-  }
+  })
 
   private val clauseWords = Set("from", "where", "group", "order", "having",
     "limit", "qualify", "window", "union", "intersect", "except", "join",
@@ -288,7 +271,7 @@ object StarReplaceSql {
   }
 
   /** Does the statement carry a QUALIFIED star name-filter? The
-    * unqualified form lowers textually onto COLUMNS in [[rewriteLike]];
+    * unqualified form lowers textually onto COLUMNS in [[starLike]];
     * the qualified form needs the QUALIFIER's schema, so
     * [[expandQualifiedLike]] runs in the executor's bodyDf chain.
     * DuckDB ≥ 1.4 surface (v1.0 probes a binder error: "STAR expression

@@ -21,7 +21,8 @@ object Stmt {
 
   /** ROLLBACK and the unmappable families (ATTACH, DETACH, UNION types,
     * ALTER SEQUENCE, untranslatable frames) arrive as the dialect's
-    * reject sentinels: syntax_check lists `message`, a run throws it. */
+    * reject sentinels; `CREATE TABLE t (query)` without AS is one too.
+    * syntax_check lists `message`, a run throws it. */
   final case class Rejected(message: String) extends Stmt
   /** A statement whose own parser refused it (a MERGE without ON, an
     * UPDATE ... FROM without WHERE, ...): a run throws `error`, analysis
@@ -128,6 +129,15 @@ object Stmt {
     case tableAs(ifNot, name, body) => CreateTableAs(name, unwrap(body), ifNot != null)
     case tableCols(ifNot, name, cols) if queryStart.findFirstIn(cols).isEmpty =>
       CreateEmpty(name, cols, ifNot != null)
+    // `CREATE TABLE t (SELECT ...)` without AS: DuckDB's parser rejects
+    // it (probed v1.0: syntax error at or near "SELECT"), where Spark
+    // would run it as a CTAS into a managed catalog table that never
+    // reaches the warehouse
+    case tableCols(_, name, cols) =>
+      val word = queryStart.findFirstMatchIn(cols).get.group(1).toUpperCase
+      Rejected(s"CREATE TABLE $name ($word ...) without AS is not a table " +
+        s"definition: DuckDB rejects it (syntax error at or near \"$word\"); " +
+        s"write CREATE TABLE $name AS $word ...")
     case addPk(t, cols) =>
       AddPrimaryKey(t, cols.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")
         .stripPrefix("`").stripSuffix("`")).toSeq)

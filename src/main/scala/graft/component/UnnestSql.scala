@@ -1,6 +1,10 @@
 package graft.component
 
+import java.util.regex.MatchResult
+
 import scala.collection.mutable.ArrayBuffer
+
+import Dialect.{Sites, Skip, Splice, Step}
 
 /** DuckDB `UNNEST` — array expansion in the select list and in FROM
   * position. Legal in the reference because user SQL goes to its engine
@@ -36,12 +40,7 @@ object UnnestSql {
 
   private val callRe = "(?i)\\bunnest\\s*\\(".r
 
-  def has(stmt: String): Boolean =
-    callRe.findFirstIn(Dialect.maskQuoted(stmt)).isDefined
-
-  def rewrite(stmt: String): String =
-    if (!has(stmt)) stmt
-    else rewriteSelectLists(rewriteFromPosition(stmt))
+  def rewrite(stmt: String): String = Dialect.run(stmt, fromPosition, selectLists)
 
   // ---------------------------------------------------------------- FROM
 
@@ -58,28 +57,26 @@ object UnnestSql {
     *    (probed DuckDB: per-row expansion, cross-product when repeated,
     *    row dropped on empty array) → ` LATERAL VIEW explode(e) t AS c`,
     *    which has exactly those semantics in Spark.
-    * Replacements contain no `unnest(` trigger, so recursion on the tail
-    * is for additional occurrences only. */
-  private def rewriteFromPosition(stmt: String): String = {
-    val masked = Dialect.maskQuoted(stmt)
-    val re = "(?is)(\\bFROM\\s+|\\bJOIN\\s+|,\\s*)unnest\\s*\\(".r
-    val m = re.findAllMatchIn(masked).find { m =>
-      val lead = m.group(1).trim
-      if (lead != ",") true
-      else {
-        // a comma introduces a lateral unnest only in a FROM list: the
-        // last same-depth clause keyword before it must be FROM
-        val dep = Dialect.depths(masked)
-        val dc = dep(m.start)
+    * An unbalanced call ends the pass. */
+  private[component] val fromPosition =
+    Sites("(?is)(\\bFROM\\s+|\\bJOIN\\s+|,\\s*)unnest\\s*\\(".r, lowerFrom)
+
+  private def lowerFrom(stmt: String, masked: String, m: MatchResult): Step = {
+    if (m.group(1).trim == ",") {
+      // a comma introduces a lateral unnest only in a FROM list: the
+      // last same-depth clause keyword before it must be FROM
+      val dep = Dialect.depths(masked)
+      val dc = dep(m.start)
+      val inFromList =
         "(?is)\\b(SELECT|FROM|WHERE|GROUP|HAVING|QUALIFY|WINDOW|ORDER|LIMIT|SET|VALUES|USING|ON)\\b".r
           .findAllMatchIn(masked.substring(0, m.start))
           .filter(k => dep(k.start) == dc)
           .toList.lastOption.exists(_.group(1).equalsIgnoreCase("FROM"))
-      }
-    }.getOrElse(return stmt)
+      if (!inFromList) return Skip(m.end)
+    }
     val open = m.end - 1
     val close = Dialect.matchingParen(masked, open)
-    if (close < 0) return stmt
+    if (close < 0) return Skip(stmt.length)
     val arg = stmt.substring(open + 1, close).trim
     // optional alias: AS t(c) | AS t | t(c) | t  (never a keyword)
     val tail = stmt.substring(close + 1)
@@ -90,15 +87,9 @@ object UnnestSql {
         (a.group(1), Option(a.group(2)).getOrElse("unnest"), a.end)
       case _ => ("__unnest_t", "unnest", 0)
     }
-    val repl =
-      if (m.group(1).trim == ",")
-        s" LATERAL VIEW explode($arg) $tbl AS $colName"
-      else s"${m.group(1)}(SELECT explode($arg) AS $colName) $tbl"
-    // recurse on the WHOLE rewritten statement: the comma form's context
-    // check needs the text before the match, and each pass removes one
-    // `unnest(` occurrence, so this terminates
-    rewriteFromPosition(
-      stmt.substring(0, m.start) + repl + tail.substring(consumed))
+    Splice(m.start, close + 1 + consumed,
+      if (m.group(1).trim == ",") s" LATERAL VIEW explode($arg) $tbl AS $colName"
+      else s"${m.group(1)}(SELECT explode($arg) AS $colName) $tbl")
   }
 
   // -------------------------------------------------------- select list
@@ -106,102 +97,94 @@ object UnnestSql {
   private val clauseKw =
     "(?is)\\b(WHERE|GROUP\\s+BY|HAVING|QUALIFY|WINDOW|ORDER\\s+BY|LIMIT|OFFSET)\\b"
 
-  /** Rewrite one select block per iteration (innermost blocks surface
-    * first because their `unnest` occurrence IS the first remaining
-    * match), until none remain. */
-  private def rewriteSelectLists(stmt0: String): String = {
-    var stmt = stmt0
-    var guard = 0
-    while (guard < 32) {
-      guard += 1
-      val masked = Dialect.maskQuoted(stmt)
-      val dep = Dialect.depths(masked)
-      val u = callRe.findFirstMatchIn(masked).getOrElse(return stmt)
-      // owning SELECT: walking left from the call, the first SELECT seen
-      // at the running minimum depth — closer SELECTs at deeper depths
-      // belong to sibling subqueries already closed before the call
-      val selects = "(?i)\\bSELECT\\b".r.findAllMatchIn(masked)
-        .map(_.start).toArray
-      var owner = -1
-      var minDep = dep(u.start)
-      var i = u.start
-      while (i >= 0 && owner < 0) {
-        if (dep(i) < minDep) minDep = dep(i)
-        if (dep(i) == minDep && selects.contains(i)) owner = i
-        i -= 1
-      }
-      // a call with no owning SELECT (or outside any select list) is left
-      // verbatim: this runs inside Dialect.prepare, the front door of every
-      // static-analysis action, which must LIST problems, not crash (the
-      // ROLLBACK lesson) — Actions.lint flags the residual unnest, and at
-      // run time Spark rejects the unregistered function by name
-      if (owner < 0) return stmt
-      val bd = dep(owner)
-      var blockEnd = owner
-      while (blockEnd < stmt.length && dep(blockEnd) >= bd) blockEnd += 1
-      def firstAt(re: String, from: Int): Option[Int] =
-        re.r.findAllMatchIn(masked).map(_.start)
-          .find(p => p >= from && p < blockEnd && dep(p) == bd)
-      val selStart = owner + "SELECT".length
-      val fromPos = firstAt("(?i)\\bFROM\\b", selStart)
-      val listEnd = fromPos
-        .orElse(firstAt(clauseKw, selStart))
-        .getOrElse(blockEnd)
+  /** Select-list unnest: one select block per splice, innermost blocks
+    * first (their `unnest` occurrence IS the first remaining site). A
+    * call with no owning SELECT, or outside any select list, or
+    * unbalanced, ends the pass and stays verbatim: this runs inside
+    * Dialect.prepare, the front door of every static-analysis action,
+    * which must LIST problems, not crash (the ROLLBACK lesson) —
+    * Actions.lint flags the residual unnest, and at run time Spark
+    * rejects the unregistered function by name. */
+  private[component] val selectLists = Sites(callRe, lowerSelectList)
 
-      // collect this block's calls within its select list
-      final case class Call(start: Int, end: Int, arg: String)
-      val calls = ArrayBuffer[Call]()
-      for (m <- callRe.findAllMatchIn(masked)
-             if m.start >= selStart && m.start < listEnd) {
-        // owned by this block: depth never dips below bd on the way back
-        var j = m.start; var mn = dep(m.start); var own = -1
-        while (j >= 0 && own < 0) {
-          if (dep(j) < mn) mn = dep(j)
-          if (dep(j) == mn && selects.contains(j)) own = j
-          j -= 1
-        }
-        if (own == owner) {
-          val close = Dialect.matchingParen(masked, m.end - 1)
-          if (close < 0) return stmt // unbalanced: leave for the lint/parser
-          calls += Call(m.start, close + 1, stmt.substring(m.end, close).trim)
-        }
-      }
-      if (calls.isEmpty) return stmt // e.g. unnest in WHERE — lint flags it
-
-      val distinctArgs = calls.map(_.arg).distinct
-      val colOf = distinctArgs.zipWithIndex.toMap.map {
-        case (a, k) => (a, s"__un$k") }
-
-      // splice replacements right-to-left; a bare unaliased `unnest(e)`
-      // select item keeps a user-facing name
-      val sb = new java.lang.StringBuilder(stmt)
-      for (c <- calls.sortBy(-_.start)) {
-        val repl =
-          if (isBareItem(stmt, masked, dep, bd, selStart, listEnd, c.start, c.end))
-            s"${colOf(c.arg)} AS unnest"
-          else colOf(c.arg)
-        sb.replace(c.start, c.end, repl)
-      }
-      // lateral view after the FROM segment (or a one-row FROM if absent)
-      val lateral =
-        if (distinctArgs.length == 1)
-          s" LATERAL VIEW explode(${distinctArgs.head}) __unnest AS __un0 "
-        else {
-          val cols = distinctArgs.indices.map(k => s"__un$k").mkString(", ")
-          s" LATERAL VIEW inline(arrays_zip(${distinctArgs.mkString(", ")})) __unnest AS $cols "
-        }
-      val insertAt = fromPos match {
-        case Some(f) => firstAt(clauseKw, f).getOrElse(blockEnd)
-        case None    => listEnd
-      }
-      val prefix = if (fromPos.isEmpty) " FROM (SELECT 1)" else ""
-      // positions shift only BEFORE insertAt if replacements shrank text;
-      // recompute insert point on the edited buffer by delta
-      val delta = sb.length - stmt.length
-      sb.insert(insertAt + delta, prefix + lateral)
-      stmt = sb.toString
+  private def lowerSelectList(stmt: String, masked: String, u: MatchResult): Step = {
+    val stop = Skip(stmt.length)
+    val dep = Dialect.depths(masked)
+    // owning SELECT: walking left from the call, the first SELECT seen
+    // at the running minimum depth — closer SELECTs at deeper depths
+    // belong to sibling subqueries already closed before the call
+    val selects = "(?i)\\bSELECT\\b".r.findAllMatchIn(masked)
+      .map(_.start).toArray
+    var owner = -1
+    var minDep = dep(u.start)
+    var i = u.start
+    while (i >= 0 && owner < 0) {
+      if (dep(i) < minDep) minDep = dep(i)
+      if (dep(i) == minDep && selects.contains(i)) owner = i
+      i -= 1
     }
-    stmt
+    if (owner < 0) return stop
+    val bd = dep(owner)
+    var blockEnd = owner
+    while (blockEnd < stmt.length && dep(blockEnd) >= bd) blockEnd += 1
+    def firstAt(re: String, from: Int): Option[Int] =
+      re.r.findAllMatchIn(masked).map(_.start)
+        .find(p => p >= from && p < blockEnd && dep(p) == bd)
+    val selStart = owner + "SELECT".length
+    val fromPos = firstAt("(?i)\\bFROM\\b", selStart)
+    val listEnd = fromPos
+      .orElse(firstAt(clauseKw, selStart))
+      .getOrElse(blockEnd)
+
+    // collect this block's calls within its select list
+    final case class Call(start: Int, end: Int, arg: String)
+    val calls = ArrayBuffer[Call]()
+    for (m <- callRe.findAllMatchIn(masked)
+           if m.start >= selStart && m.start < listEnd) {
+      // owned by this block: depth never dips below bd on the way back
+      var j = m.start; var mn = dep(m.start); var own = -1
+      while (j >= 0 && own < 0) {
+        if (dep(j) < mn) mn = dep(j)
+        if (dep(j) == mn && selects.contains(j)) own = j
+        j -= 1
+      }
+      if (own == owner) {
+        val close = Dialect.matchingParen(masked, m.end - 1)
+        if (close < 0) return stop // unbalanced: leave for the lint/parser
+        calls += Call(m.start, close + 1, stmt.substring(m.end, close).trim)
+      }
+    }
+    if (calls.isEmpty) return stop // e.g. unnest in WHERE — lint flags it
+
+    val distinctArgs = calls.map(_.arg).distinct
+    val colOf = distinctArgs.zipWithIndex.toMap.map {
+      case (a, k) => (a, s"__un$k") }
+    // lateral view after the FROM segment (or a one-row FROM if absent)
+    val lateral =
+      if (distinctArgs.length == 1)
+        s" LATERAL VIEW explode(${distinctArgs.head}) __unnest AS __un0 "
+      else {
+        val cols = distinctArgs.indices.map(k => s"__un$k").mkString(", ")
+        s" LATERAL VIEW inline(arrays_zip(${distinctArgs.mkString(", ")})) __unnest AS $cols "
+      }
+    val insertAt = fromPos match {
+      case Some(f) => firstAt(clauseKw, f).getOrElse(blockEnd)
+      case None    => listEnd
+    }
+    val prefix = if (fromPos.isEmpty) " FROM (SELECT 1)" else ""
+    // one splice from the first call to the insert point: each call
+    // becomes its column (a bare unaliased `unnest(e)` select item keeps
+    // a user-facing name), the lateral view lands at the end
+    val from = calls.head.start
+    val sb = new java.lang.StringBuilder(stmt.substring(from, insertAt))
+    for (c <- calls.reverseIterator) {
+      val repl =
+        if (isBareItem(stmt, masked, dep, bd, selStart, listEnd, c.start, c.end))
+          s"${colOf(c.arg)} AS unnest"
+        else colOf(c.arg)
+      sb.replace(c.start - from, c.end - from, repl)
+    }
+    Splice(from, insertAt, sb.append(prefix + lateral).toString)
   }
 
   /** Is [start,end) exactly one whole select item (no wrapping

@@ -1,5 +1,9 @@
 package graft.component
 
+import java.util.regex.MatchResult
+
+import Dialect.{Sites, Skip, Splice, Step}
+
 /** Named-window (`WINDOW w AS (...)`) INLINING.
   *
   * Spark parses the plain reference form (`sum(x) OVER w ... WINDOW w AS
@@ -20,16 +24,19 @@ package graft.component
   * owning-SELECT scope walk, so a subquery's same-named window shadows
   * correctly. Invalid extension combos (e.g. adding PARTITION BY to a
   * spec that has one) inline to text Spark rejects loudly — the binder
-  * error DuckDB would raise, never a silent re-interpretation. */
+  * error DuckDB would raise, never a silent re-interpretation.
+  *
+  * One splice per WINDOW clause, over the owning block from its first
+  * edit to its last; a clause that does not parse, has no owning
+  * SELECT, or names an unresolvable chain ends the pass (loud later). */
 object WindowClauseSql {
 
   private case class Clause(start: Int, end: Int, // [WINDOW .. last ')')
       defs: Seq[(String, String)]) // name (lower) -> raw spec text
 
-  /** Parse the first WINDOW clause at or after `from`. */
-  private def parseClause(stmt: String, masked: String): Option[Clause] = {
-    val head = "(?i)\\bWINDOW\\s+[A-Za-z_]\\w*\\s+AS\\s*\\(".r
-      .findFirstMatchIn(masked).getOrElse(return None)
+  /** Parse the WINDOW clause whose head is `head`. */
+  private def parseClause(stmt: String, masked: String,
+      head: MatchResult): Option[Clause] = {
     var pos = head.start + "WINDOW".length
     val defs = scala.collection.mutable.ListBuffer[(String, String)]()
     var done = false
@@ -73,57 +80,49 @@ object WindowClauseSql {
         (s until pos).forall(dep(_) >= d)
       }
 
-  def inline(stmt0: String): String = {
-    var stmt = stmt0
-    var guard = 0
-    while (guard < 16) {
-      guard += 1
-      val masked = Dialect.maskQuoted(stmt)
-      val cl = parseClause(stmt, masked).getOrElse(return stmt)
-      val dep = Dialect.depths(masked)
-      val defMap = cl.defs.toMap
-      val resolved = cl.defs.map(_._1)
-        .map(n => n -> resolve(n, defMap, Set.empty)).toMap
-      val clauseSel = owningSelect(masked, dep, cl.start)
-      // block extent of the clause's SELECT: usages live inside it
-      val blockStart = clauseSel.getOrElse(return stmt)
-      val d = dep(blockStart)
-      var blockEnd = blockStart
-      while (blockEnd < stmt.length && dep(blockEnd) >= d) blockEnd += 1
-      val edits = scala.collection.mutable.ListBuffer[(Int, Int, String)]()
-      // the clause itself goes away (plus one separating space)
-      edits += ((cl.start, cl.end, ""))
-      // usages: OVER name | OVER ( name [extras] ) owned by this SELECT
-      "(?i)\\bOVER\\s*(\\()?\\s*([A-Za-z_]\\w*)\\b".r
-        .findAllMatchIn(masked).foreach { m =>
-          val nm = m.group(2).toLowerCase
-          val inBlock = m.start >= blockStart && m.start < blockEnd &&
-            (m.start >= cl.end || m.end <= cl.start)
-          if (inBlock && defMap.contains(nm) &&
-              owningSelect(masked, dep, m.start) == clauseSel) {
-            resolved(nm) match {
-              case Some(spec) if m.group(1) != null =>
-                // parenthesized: splice the spec over the name token
-                edits += ((m.start(2), m.end(2), spec))
-              case Some(spec) =>
-                // bare: OVER name -> OVER (spec)
-                edits += ((m.start(2), m.end(2), s"($spec)"))
-              case None => return stmt // unresolvable chain: loud later
-            }
+  private[component] val inline =
+    Sites("(?i)\\bWINDOW\\s+[A-Za-z_]\\w*\\s+AS\\s*\\(".r, lowerClause)
+
+  private def lowerClause(stmt: String, masked: String, head: MatchResult): Step = {
+    val stop = Skip(stmt.length)
+    val cl = parseClause(stmt, masked, head).getOrElse(return stop)
+    val dep = Dialect.depths(masked)
+    val defMap = cl.defs.toMap
+    val resolved = cl.defs.map(_._1)
+      .map(n => n -> resolve(n, defMap, Set.empty)).toMap
+    val clauseSel = owningSelect(masked, dep, cl.start)
+    // block extent of the clause's SELECT: usages live inside it
+    val blockStart = clauseSel.getOrElse(return stop)
+    val d = dep(blockStart)
+    var blockEnd = blockStart
+    while (blockEnd < stmt.length && dep(blockEnd) >= d) blockEnd += 1
+    // the clause itself goes away; a clause with zero usages in scope
+    // goes too (DuckDB accepts an unused definition; Spark would too,
+    // but the clause may carry EXCLUDE/GROUPS text Spark cannot parse)
+    val edits = scala.collection.mutable.ListBuffer((cl.start, cl.end, ""))
+    // usages: OVER name | OVER ( name [extras] ) owned by this SELECT
+    "(?i)\\bOVER\\s*(\\()?\\s*([A-Za-z_]\\w*)\\b".r
+      .findAllMatchIn(masked).foreach { m =>
+        val nm = m.group(2).toLowerCase
+        val inBlock = m.start >= blockStart && m.start < blockEnd &&
+          (m.start >= cl.end || m.end <= cl.start)
+        if (inBlock && defMap.contains(nm) &&
+            owningSelect(masked, dep, m.start) == clauseSel) {
+          resolved(nm) match {
+            case Some(spec) if m.group(1) != null =>
+              // parenthesized: splice the spec over the name token
+              edits += ((m.start(2), m.end(2), spec))
+            case Some(spec) =>
+              // bare: OVER name -> OVER (spec)
+              edits += ((m.start(2), m.end(2), s"($spec)"))
+            case None => return stop // unresolvable chain: loud later
           }
         }
-      if (edits.size == 1) {
-        // clause with zero usages in scope: still remove it (DuckDB
-        // accepts an unused definition; Spark would too, but the clause
-        // may carry EXCLUDE/GROUPS text Spark cannot parse)
       }
-      var out = stmt
-      edits.sortBy(-_._1).foreach { case (s, e, r) =>
-        out = out.substring(0, s) + r + out.substring(e)
-      }
-      // tidy doubled spaces where the clause was removed
-      stmt = out
-    }
-    stmt
+    val from = edits.map(_._1).min
+    val to = edits.map(_._2).max
+    val sb = new java.lang.StringBuilder(stmt.substring(from, to))
+    edits.sortBy(-_._1).foreach { case (s, e, r) => sb.replace(s - from, e - from, r) }
+    Splice(from, to, sb.toString)
   }
 }

@@ -70,7 +70,7 @@ case class UuidExtractVersion(child: Expression) extends UuidExtract {
 /** The interpolation POSITION of a fill() ORDER BY key — numeric, DATE
   * (days) and TIMESTAMP (micros) keys all become a DOUBLE axis for the
   * linear-interpolation arithmetic the dialect's fill() lowering emits
-  * ([[graft.component.Dialect]] rewriteFill). Internal: user SQL never
+  * ([[graft.component.Dialect]]'s fill lowering). Internal: user SQL never
   * spells it. */
 case class FillPos(child: Expression) extends UnaryExpression {
   override def dataType: DataType = org.apache.spark.sql.types.DoubleType

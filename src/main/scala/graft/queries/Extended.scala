@@ -429,7 +429,7 @@ object Extended {
     // ordered aggregates (IDENTICAL text both engines, probed v1.0):
     // first/last pick the key-extreme row (min_by/max_by lowering),
     // string_agg rides listagg WITHIN GROUP, array_agg sorts by the key
-    // via the struct transform — all through Dialect.rewriteOrderedAgg.
+    // via the struct transform — all through the dialect's ordered-aggregate lowering.
     "q85_ordered_agg" -> ((s, d) => {
       graft.component.DuckFunctions.register(s)
       T.documents(s, d).createOrReplaceTempView("documents")

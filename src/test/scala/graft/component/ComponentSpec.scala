@@ -406,6 +406,18 @@ class ComponentSpec extends SparkSpec {
     assert(runError(check = true) == runError(check = false))
   }
 
+  test("expected_input_tables report: SQL names and destinations compare under one rule") {
+    val config = Config(
+      blocks = List(Block("b", List(Code("q", List(
+        "CREATE TABLE out AS SELECT * FROM 'days.csv' JOIN \"hours.parquet\" USING (id)"))))),
+      inputTables = List(InputTable("in.c-x.days", "days.csv"),
+        InputTable("in.c-x.hours", "hours.parquet", "parquet")),
+      outputTables = Nil)
+    val report = Actions.expectedInputReport(spark, config)
+    assert(report.contains("✅ **All required tables are available!**"), report)
+    assert(!report.contains("Missing") && !report.contains("Extra"), report)
+  }
+
   test("version query shape works in Spark SQL") {
     val df = spark.sql("SELECT version() AS version")
     assert(df.collect().head.getString(0).nonEmpty)

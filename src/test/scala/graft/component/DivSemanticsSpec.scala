@@ -34,7 +34,7 @@ class DivSemanticsSpec extends SparkSpec {
   test("rewrite text: percent-LIMIT and sample percentages survive untouched") {
     assert(Dialect.rewrite("SELECT * FROM t LIMIT 10%").contains("LIMIT 10%"))
     assert(Dialect.rewrite("SELECT * FROM t LIMIT 2.5% OFFSET 3").contains("2.5%"))
-    // sample percents reach rewriteUsingSample intact (it runs AFTER the
+    // sample percents reach the USING SAMPLE lowering intact (it runs AFTER the
     // mod pass and lowers them itself — a duck_mod here would break it)
     val smp = Dialect.rewrite("SELECT * FROM t USING SAMPLE 10%")
     assert(smp.contains("rand()") && !smp.contains("duck_mod"))

@@ -54,6 +54,15 @@ class PlannerSpec extends SparkSpec {
     assert(order.indexOf("filler") < order.indexOf("reader"))
   }
 
+  test("SET VARIABLE reads its value expression's tables: batched after their producer") {
+    val plan = Planner.plan(spark, cfg(
+      "var" -> "SET VARIABLE top_k = (SELECT max(k) FROM src)",
+      "src" -> "CREATE TABLE src AS SELECT 1 AS k"))
+    assert(plan.blocks.head.batches.map(_.queries.map(_.name)) ==
+      List(List("src"), List("var")))
+    assert(SqlAnalyzer.analyzeScript(spark, "SET VARIABLE x = 1 + 2").dependencies.isEmpty)
+  }
+
   test("cycles raise a user error") {
     val e = intercept[UserException] {
       Planner.plan(spark, cfg(

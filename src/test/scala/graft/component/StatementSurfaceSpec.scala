@@ -100,6 +100,15 @@ class StatementSurfaceSpec extends SparkSpec {
     assert(Files.readString(deFile).linesIterator.next() == "id,v")
   }
 
+  test("CREATE TABLE t (query) without AS fails loudly and leaves no catalog table") {
+    val ex = new Executor(spark, Files.createTempDirectory("graft_ct_paren_").toString)
+    val e = intercept[UserException] {
+      Dialect.prepare("CREATE TABLE ct_paren (SELECT 1 AS a)").foreach(ex.runStatement)
+    }
+    assert(e.getMessage.contains("without AS"), e.getMessage)
+    assert(!spark.catalog.tableExists("ct_paren"))
+  }
+
   test("COPY FROM appends a file into an existing table (positional)") {
     val dir = Files.createTempDirectory("graft_copy_from_")
     val ex = new Executor(spark, dir.resolve("wh").toString)

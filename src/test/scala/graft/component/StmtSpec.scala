@@ -72,7 +72,7 @@ class StmtSpec extends AnyFunSuite {
     is("ALTER TABLE t ADD PRIMARY KEY (k)") { case Stmt.AddPrimaryKey("t", Seq("k")) => true }
     // a CTAS with a parenthesized query body is never an empty-table DDL
     is("CREATE TABLE t AS (SELECT 1 AS a)") { case Stmt.CreateTableAs("t", "SELECT 1 AS a", _) => true }
-    is("CREATE TABLE t (SELECT 1 AS a)") { case Stmt.Catalyst(_) => true }
+    is("CREATE TABLE t (SELECT 1 AS a)") { case Stmt.Rejected(_) => true }
     // a body's own parentheses stay when they do not wrap it whole
     is("CREATE VIEW v AS (SELECT 1) UNION (SELECT 2)") {
       case Stmt.CreateView("v", "(SELECT 1) UNION (SELECT 2)", _) => true }
@@ -98,6 +98,17 @@ class StmtSpec extends AnyFunSuite {
     // leading comments and a trailing RETURNING do not change the answer
     is("-- title\nINSERT INTO t VALUES (1) RETURNING *") {
       case Stmt.Insert("t", "VALUES (1)") => true }
+  }
+
+  test("CREATE TABLE t (query) without AS is rejected, as DuckDB rejects it") {
+    is("CREATE TABLE t (SELECT 1 AS a)") {
+      case Stmt.Rejected(m) => m.contains("without AS") && m.contains("near \"SELECT\"") }
+    is("CREATE OR REPLACE TABLE t (WITH c AS (SELECT 1) SELECT * FROM c)") {
+      case Stmt.Rejected(m) => m.contains("CREATE TABLE t AS WITH") }
+    is("CREATE TABLE IF NOT EXISTS t (FROM s)") { case Stmt.Rejected(_) => true }
+    // a column list stays a table definition
+    is("CREATE TABLE t (selected INT, v VARCHAR)") {
+      case Stmt.CreateEmpty("t", "selected INT, v VARCHAR", false) => true }
   }
 
   test("parse is total: a parser's refusal is Malformed, never a throw") {

@@ -9,7 +9,7 @@ import graft.SparkSpec
   * frames over numeric and DATE keys all hash-matched v1.0 already).
   * The one FIXED gap: windowed aggregate FILTER, which Spark's planner
   * rejects ("filter predicate is not supported yet") — rewritten to
-  * the null-ignoring CASE form by [[Dialect.rewriteWindowFilter]].
+  * the null-ignoring CASE form by `Dialect.windowFilter`.
   * Every expectation below is a probed DuckDB v1.0 value. */
 class WindowSemanticsSpec extends SparkSpec {
 

@@ -2,8 +2,9 @@
 
 Prints every input whose Dialect.prepare output differs, grouped by the
 first operator at or after the first differing character, then sorts the
-same inputs into change classes of the operand scanner (keyword operands
-left whole, mangled postfix operands repaired, ...) with a count each.
+same inputs into change classes (a clause pass stopped part way by its
+old step cap, keyword operands left whole, mangled postfix operands
+repaired, ...) with a count each.
 The classes are text patterns on the two outputs, checked in order; the
 first that matches wins, and `other` lists every input none matched.
 
@@ -83,9 +84,23 @@ created = re.compile(r"\.\s+[A-Za-z_]\w*\(")
 site = re.compile(r"\.\s*[A-Za-z_]\w*\s*\(")
 
 
+# what a clause pass leaves when a step cap stops it part way: its own
+# sites, one pattern per pass, or a statement-wide FRAME_* reject for a
+# frame the pass executes
+capped = [re.compile(p, re.I) for p in (
+    r"\bQUALIFY\b", r"\bDISTINCT\s+ON\s*\(", r"\bGROUPING\s*\([^()]*,",
+    r"(?:=|<>|!=|<|>)\s*(?:ANY|SOME|ALL)\s*\(\s*SELECT\b", r"\bUSING\s+SAMPLE\b",
+    r"\bfill\s*\(", r"\b(?!(?:over|group|filter|as|from|join)\b)\w+\s*\((?!\s*SELECT\b)[^()]*\bORDER\s+BY\b",
+    r"\bunnest\s*\(", r"\bWINDOW\s+\w+\s+AS\s*\(", r"\bFILTER\s*\([^()]*\)\s*OVER\b",
+    r"\bGROUPS\s+BETWEEN\b", r"\bEXCLUDE\s+(?:CURRENT\s+ROW|GROUP|TIES|NO\s+OTHERS)\b")]
+frame_reject = re.compile(r"__graft_rejected_FRAME_")
+
+
 def cls(inp, old, new):
     mo, mn = mask(old), mask(new)
     n = lambda r, t: len(r.findall(t))
+    if any(n(c, mo) > n(c, mn) for c in capped) or n(frame_reject, old) > n(frame_reject, new):
+        return "past a parent cap: the old pass stopped with clause sites left"
     if mo.count("//") > mn.count("//") and new.count("divide(") > old.count("divide("):
         return "statements past an unparsable //"
     if n(glued, old) > n(glued, new) or old.startswith("ERROR") and not new.startswith("ERROR"):
