@@ -27,17 +27,14 @@ object Actions {
           // as this statement's issue instead
           case Stmt.Rejected(message) => List(ValidationIssue(name, message))
           case parsed =>
-            val parseIssue = SqlAnalyzer.check(spark, parsed).failed.toOption
-              .map(e => ValidationIssue(name, s"parse error: ${e.getMessage}")).toList
-            // the ASOF stub deletes the keyword, so a statement the executor
-            // can't actually run would otherwise validate cleanly — surface
-            // the clear unsupported-form message here instead of letting
-            // the user hit an opaque run-time parse error on 'ASOF'
-            val asofIssue = (AsOfSql.unsupportedForm(stmt) ++
-              PositionalSql.unsupportedForm(stmt))
-              .map(ValidationIssue(name, _)).toList
-            val lints = lint(stmt).map(ValidationIssue(name, _))
-            parseIssue ++ asofIssue ++ lints
+            // an unsupported body form (an ASOF join in a CTE, chained
+            // POSITIONAL JOINs, ...) fails its analysis with the message a
+            // run throws
+            val parseIssue = SqlAnalyzer.check(spark, parsed).failed.toOption.map {
+              case e: Body.UnsupportedBody => ValidationIssue(name, e.getMessage)
+              case e => ValidationIssue(name, s"parse error: ${e.getMessage}")
+            }.toList
+            parseIssue ++ lint(stmt).map(ValidationIssue(name, _))
         }
       }
     }

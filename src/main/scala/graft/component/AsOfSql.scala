@@ -28,16 +28,12 @@ import org.apache.spark.sql.functions._
   * at or before the left timestamp. Plain ASOF JOIN drops unmatched
   * left rows; ASOF LEFT JOIN keeps them with NULL payload. Trailing
   * `WHERE` / `ORDER BY` / `LIMIT` are applied after the join;
-  * GROUP BY / HAVING / QUALIFY after an ASOF join are rejected with a
-  * clear validation issue ([[unsupportedForm]]) instead of an opaque
-  * Spark parse error on the ASOF token.
-  *
-  * For session-free analysis (DAG deps, syntax check), [[stub]] simply
-  * deletes the ASOF keyword: the remaining plain JOIN with the same ON
-  * clause parses in Spark and has the identical dependency set. */
+  * GROUP BY / HAVING / QUALIFY after an ASOF join make the body
+  * [[Body.Unsupported]], a clear message instead of an opaque Spark
+  * parse error on the ASOF token. */
 object AsOfSql {
 
-  private[component] final case class Parsed(
+  final case class Parsed(
       selList: String, leftSrc: String, leftAlias: String,
       rightSrc: String, rightAlias: String,
       keys: Seq[(String, String)], // (left col, right col)
@@ -71,14 +67,15 @@ object AsOfSql {
     else ("", term)
   }
 
-  private[component] def parse(stmt0: String): Option[Parsed] = {
-    val stmt = stmt0.trim
-    val masked = Dialect.maskQuoted(stmt)
+  /** Parse a normalized body ([[Body.parse]]) and its mask as a
+    * supported ASOF JOIN query. */
+  private[component] def parse(stmt: String, masked: String): Option[Parsed] = {
+    val selM = "(?is)^\\s*SELECT\\b".r.findFirstMatchIn(masked).getOrElse(return None)
+    if ("(?i)\\bASOF\\b".r.findFirstIn(masked).isEmpty) return None
     val dep = Dialect.depths(masked)
     def kwAt(re: String): Option[scala.util.matching.Regex.Match] =
       ("(?is)" + re).r.findAllMatchIn(masked).find(m => dep(m.start) == 0)
     val asofM = kwAt("\\bASOF\\s+(LEFT\\s+)?JOIN\\b").getOrElse(return None)
-    val selM = kwAt("^\\s*SELECT\\b").getOrElse(return None)
     val fromM = kwAt("\\bFROM\\b").getOrElse(return None)
     val onMOpt = ("(?is)\\bON\\b").r.findAllMatchIn(masked)
       .find(m => dep(m.start) == 0 && m.start > asofM.end)
@@ -97,7 +94,7 @@ object AsOfSql {
     val condEnd = onMOpt.map(_.end).getOrElse(usingClose.get + 1)
     // trailing clauses: WHERE / ORDER BY / LIMIT are carried and applied
     // after the join; GROUP BY / HAVING / QUALIFY are NOT supported (the
-    // caller surfaces a clear "unsupported ASOF form" instead)
+    // body model calls the body Unsupported, with a clear message)
     val tailKws = ("(?is)\\b(WHERE|GROUP\\s+BY|ORDER\\s+BY|LIMIT|HAVING|QUALIFY)\\b").r
       .findAllMatchIn(masked)
       .filter(m => dep(m.start) == 0 && m.start > condEnd).toList
@@ -141,8 +138,8 @@ object AsOfSql {
     }
     val onM = onMOpt.get
     // conjunct split at depth 0
-    val condStr = stmt.substring(onM.end, tailStart).trim.stripSuffix(";")
-    val condMasked = Dialect.maskQuoted(condStr)
+    val condStr = stmt.substring(onM.end, tailStart)
+    val condMasked = masked.substring(onM.end, tailStart)
     val condDep = Dialect.depths(condMasked)
     val cuts = "(?i)\\bAND\\b".r.findAllMatchIn(condMasked)
       .filter(m => condDep(m.start) == 0).map(_.start).toList
@@ -187,159 +184,103 @@ object AsOfSql {
   /** Execute an ASOF JOIN body on the live session; None if the body is
     * not (a supported form of) one. */
   def asofDf(spark: SparkSession, body: String): Option[DataFrame] =
-    parse(body).map { p0 =>
-      val l = spark.sql(s"SELECT * FROM ${p0.leftSrc} __asof_l")
-      val r0 = spark.sql(s"SELECT * FROM ${p0.rightSrc} __asof_r")
-      // USING names resolve case-insensitively but the engine's schema
-      // surgery is exact-case — normalize to the ACTUAL column spellings
-      // before anything downstream compares names
-      val p = if (!p0.usingForm) p0 else {
-        def actual(cols: Array[String], n: String): String =
-          cols.find(_.equalsIgnoreCase(n)).getOrElse(n)
-        p0.copy(
-          keys = p0.keys.map { case (lk, rk) =>
-            (actual(l.columns, lk), actual(r0.columns, rk)) },
-          leftTs = actual(l.columns, p0.leftTs),
-          rightTs = actual(r0.columns, p0.rightTs))
-      }
-      // same-name key contract of the engine op: rename right keys
-      val r1 = p.keys.foldLeft(r0) { case (df, (lk, rk)) =>
-        if (lk == rk) df else df.withColumnRenamed(rk, lk)
-      }
-      // the match marker distinguishes "matched with NULL payload" from
-      // "no match" — inner ASOF filters on it
-      val r = r1.withColumn("__asof_hit", lit(1))
-      val leftNames = l.columns.map(_.toLowerCase).toSet
-      val keyL = p.keys.map(_._1)
-      // carry every right column except the (renamed) keys; collide-safe
-      val carried: Map[String, String] = (r.columns.toSeq
-        .filterNot(c => keyL.exists(_.equalsIgnoreCase(c))))
-        .map { c =>
-          val dst =
-            if (leftNames(c.toLowerCase)) s"${if (p.rightAlias.nonEmpty) p.rightAlias else "r"}_$c"
-            else c
-          c -> dst
-        }.toMap
-      val joined = graft.ops.AsOfJoin.asof(l, r, keyL, p.leftTs,
-        p.rightTs, carried)
-      val matchedCol = carried("__asof_hit")
-      val base = if (p.leftOuter) joined else joined.filter(col(matchedCol) === 1)
-      val cleaned = base.drop(matchedCol)
-      // project the original select list with alias qualifiers mapped:
-      // right refs resolve through the carry renames (keys resolve to
-      // the LEFT name they were renamed to), left refs just lose the
-      // qualifier
-      // lower-cased keys: Spark resolution is case-insensitive, so a
-      // case-mismatched user ref (q.PRICE for column price) must still
-      // find the carry rename — a raw-case miss would silently resolve
-      // to the LEFT column after a collision rename
-      val rightRef: Map[String, String] =
-        (carried ++ p.keys.map { case (lk, rk) => rk -> lk }.toMap)
-          .map { case (k, v) => k.toLowerCase -> v }
-      // alias-qualifier rewrite, applied OUTSIDE quoted regions only
-      // (a literal like 'see q.bid' must come through untouched)
-      def rewriteRefs(s0: String): String = {
-        var s = s0
-        if (p.rightAlias.nonEmpty)
-          s = Dialect.replaceUnquoted(s,
-            ("(?i)\\b" + java.util.regex.Pattern.quote(p.rightAlias) + "\\.(\\w+)").r)(
-            m => "`" + rightRef.getOrElse(m.group(1).toLowerCase, m.group(1)) + "`")
-        if (p.leftAlias.nonEmpty)
-          s = Dialect.replaceUnquoted(s,
-            ("(?i)\\b" + java.util.regex.Pattern.quote(p.leftAlias) + "\\.(\\w+)").r)(
-            m => "`" + m.group(1) + "`")
-        s
-      }
-      val afterWhere = p.where match {
-        case Some(w) => cleaned.where(expr(rewriteRefs(w)))
-        case None    => cleaned
-      }
-      val projected =
-        if (p.selList.trim == "*") {
-          // USING semantics: each using column appears ONCE (the left's
-          // values) — the carried right-side bound column leaves the
-          // star projection; an explicit `q.ts` reference still works
-          // (the non-star branch projects from the full frame). The
-          // lookup is case-insensitive like every other resolution path
-          // here (USING (sym, TS) against a physical `ts` must not
-          // crash on an exact-case map miss)
-          if (p.usingForm)
-            carried.collectFirst {
-              case (k, v) if k.equalsIgnoreCase(p.rightTs) => v
-            }.map(afterWhere.drop(_: String)).getOrElse(afterWhere)
-          else afterWhere
-        } else {
-          // selectExpr over the rewritten list: no temp-view registration
-          // per call (a long-lived session must not accumulate catalog
-          // entries for every statement it ever executed)
-          afterWhere.selectExpr(
-            Dialect.splitTop(rewriteRefs(p.selList)).filter(_.nonEmpty): _*)
-        }
-      val afterSort = p.orderBy match {
-        case Some(ob) =>
-          val cols = Dialect.splitTop(rewriteRefs(ob)).filter(_.nonEmpty).map { piece =>
-            val m = "(?is)^(.*?)(?:\\s+(ASC|DESC))?(?:\\s+NULLS\\s+(FIRST|LAST))?\\s*$".r
-              .findFirstMatchIn(piece).get
-            val base = expr(m.group(1))
-            val desc = Option(m.group(2)).exists(_.equalsIgnoreCase("DESC"))
-            Option(m.group(3)).map(_.toUpperCase) match {
-              case Some("FIRST") => if (desc) base.desc_nulls_first else base.asc_nulls_first
-              case Some("LAST")  => if (desc) base.desc_nulls_last else base.asc_nulls_last
-              case _             => if (desc) base.desc else base.asc
-            }
-          }
-          projected.orderBy(cols: _*)
-        case None => projected
-      }
-      p.limit.map(afterSort.limit).getOrElse(afterSort)
+    Body.parse(body) match {
+      case Body.AsOf(p) => Some(df(spark, p))
+      case _ => None
     }
 
-  /** Depth-0 ASOF JOIN present anywhere in the statement? */
-  private[component] def containsAsOf(stmt: String): Boolean = {
-    val masked = Dialect.maskQuoted(stmt)
-    val dep = Dialect.depths(masked)
-    "(?is)\\bASOF\\s+(?:LEFT\\s+)?JOIN\\b".r.findAllMatchIn(masked)
-      .exists(m => dep(m.start) == 0)
-  }
-
-  /** Validation/execution symmetry guard: [[stub]] (used by static
-    * analysis) accepts ANY statement containing ASOF by deleting the
-    * keyword, but the executor only runs what [[parse]] accepts — so a
-    * statement that contains a depth-0 ASOF JOIN yet fails [[parse]]
-    * would validate cleanly and then die at run time with an opaque
-    * Spark parse error on the ASOF token. This returns the clear
-    * message for that case (checking the body of CREATE ... AS /
-    * INSERT INTO wrappers, which is what the executor actually runs). */
-  def unsupportedForm(stmt: String): Option[String] = {
-    val body0 = "(?is)^\\s*(?:CREATE\\s+(?:OR\\s+REPLACE\\s+)?(?:VIEW|TABLE)\\s+`?[^`\\s(]+`?\\s+AS|INSERT\\s+INTO\\s+`?[^`\\s(]+`?\\s*)\\s*(.*)$".r
-      .findFirstMatchIn(stmt).map(_.group(1)).getOrElse(stmt)
-    // an INSERT body may lead with a COLUMN LIST — the executor strips it
-    // before running the remainder, so this guard must too (otherwise
-    // `INSERT INTO t (a, b) SELECT ... ASOF ...` false-flags)
-    val body =
-      "(?is)^\\s*\\(([^()]*)\\)\\s*(SELECT\\b.*)$".r.findFirstMatchIn(body0) match {
-        case Some(m) if !m.group(1).trim.toUpperCase.startsWith("SELECT") =>
-          m.group(2)
-        case _ => body0
+  /** Run a parsed ASOF JOIN. */
+  def df(spark: SparkSession, p0: Parsed): DataFrame = {
+    val l = spark.sql(s"SELECT * FROM ${p0.leftSrc} __asof_l")
+    val r0 = spark.sql(s"SELECT * FROM ${p0.rightSrc} __asof_r")
+    // USING names resolve case-insensitively but the engine's schema
+    // surgery is exact-case — normalize to the ACTUAL column spellings
+    // before anything downstream compares names
+    val p = if (!p0.usingForm) p0 else {
+      def actual(cols: Array[String], n: String): String =
+        cols.find(_.equalsIgnoreCase(n)).getOrElse(n)
+      p0.copy(
+        keys = p0.keys.map { case (lk, rk) =>
+          (actual(l.columns, lk), actual(r0.columns, rk)) },
+        leftTs = actual(l.columns, p0.leftTs),
+        rightTs = actual(r0.columns, p0.rightTs))
+    }
+    // same-name key contract of the engine op: rename right keys
+    val r1 = p.keys.foldLeft(r0) { case (df, (lk, rk)) =>
+      if (lk == rk) df else df.withColumnRenamed(rk, lk)
+    }
+    // the match marker distinguishes "matched with NULL payload" from
+    // "no match" — inner ASOF filters on it
+    val r = r1.withColumn("__asof_hit", lit(1))
+    val leftNames = l.columns.map(_.toLowerCase).toSet
+    val keyL = p.keys.map(_._1)
+    // carry every right column except the (renamed) keys; collide-safe
+    val carried: Map[String, String] = (r.columns.toSeq
+      .filterNot(c => keyL.exists(_.equalsIgnoreCase(c))))
+      .map { c =>
+        val dst =
+          if (leftNames(c.toLowerCase)) s"${if (p.rightAlias.nonEmpty) p.rightAlias else "r"}_$c"
+          else c
+        c -> dst
+      }.toMap
+    val joined = graft.ops.AsOfJoin.asof(l, r, keyL, p.leftTs,
+      p.rightTs, carried)
+    val matchedCol = carried("__asof_hit")
+    val base = if (p.leftOuter) joined else joined.filter(col(matchedCol) === 1)
+    val cleaned = base.drop(matchedCol)
+    // project the original select list with alias qualifiers mapped:
+    // right refs resolve through the carry renames (keys resolve to
+    // the LEFT name they were renamed to), left refs just lose the
+    // qualifier
+    // lower-cased keys: Spark resolution is case-insensitive, so a
+    // case-mismatched user ref (q.PRICE for column price) must still
+    // find the carry rename — a raw-case miss would silently resolve
+    // to the LEFT column after a collision rename
+    val rightRef: Map[String, String] =
+      (carried ++ p.keys.map { case (lk, rk) => rk -> lk }.toMap)
+        .map { case (k, v) => k.toLowerCase -> v }
+    // alias-qualifier rewrite, applied OUTSIDE quoted regions only
+    // (a literal like 'see q.bid' must come through untouched)
+    def rewriteRefs(s0: String): String = {
+      var s = s0
+      if (p.rightAlias.nonEmpty)
+        s = Dialect.replaceUnquoted(s,
+          ("(?i)\\b" + java.util.regex.Pattern.quote(p.rightAlias) + "\\.(\\w+)").r)(
+          m => "`" + rightRef.getOrElse(m.group(1).toLowerCase, m.group(1)) + "`")
+      if (p.leftAlias.nonEmpty)
+        s = Dialect.replaceUnquoted(s,
+          ("(?i)\\b" + java.util.regex.Pattern.quote(p.leftAlias) + "\\.(\\w+)").r)(
+          m => "`" + m.group(1) + "`")
+      s
+    }
+    val afterWhere = p.where match {
+      case Some(w) => cleaned.where(expr(rewriteRefs(w)))
+      case None    => cleaned
+    }
+    val projected =
+      if (p.selList.trim == "*") {
+        // USING semantics: each using column appears ONCE (the left's
+        // values) — the carried right-side bound column leaves the
+        // star projection; an explicit `q.ts` reference still works
+        // (the non-star branch projects from the full frame). The
+        // lookup is case-insensitive like every other resolution path
+        // here (USING (sym, TS) against a physical `ts` must not
+        // crash on an exact-case map miss)
+        if (p.usingForm)
+          carried.collectFirst {
+            case (k, v) if k.equalsIgnoreCase(p.rightTs) => v
+          }.map(afterWhere.drop(_: String)).getOrElse(afterWhere)
+        else afterWhere
+      } else {
+        // selectExpr over the rewritten list: no temp-view registration
+        // per call (a long-lived session must not accumulate catalog
+        // entries for every statement it ever executed)
+        afterWhere.selectExpr(
+          Dialect.splitTop(rewriteRefs(p.selList)).filter(_.nonEmpty): _*)
       }
-    if (containsAsOf(body) && parse(body).isEmpty)
-      Some("unsupported ASOF JOIN form: supported shapes are SELECT ... FROM l " +
-        "ASOF [LEFT] JOIN r ON <equalities AND one >=/<= bound> and " +
-        "... ASOF [LEFT] JOIN r USING (keys..., ts) " +
-        "[WHERE ...] [ORDER BY ...] [LIMIT n]; GROUP BY/HAVING/QUALIFY " +
-        "after an ASOF join are not supported")
-    else None
-  }
-
-  /** Session-free stand-in: deleting the ASOF keyword leaves a plain
-    * theta-join that Catalyst parses, with the identical dependency
-    * set. Non-matching statements pass through unchanged. */
-  def stub(stmt: String): String = {
-    val masked = Dialect.maskQuoted(stmt)
-    val m = "(?is)\\bASOF\\s+((?:LEFT\\s+)?JOIN)\\b".r.findFirstMatchIn(masked)
-      .getOrElse(return stmt)
-    stmt.substring(0, m.start) + stmt.substring(masked.toUpperCase
-      .indexOf(if (m.group(1).toUpperCase.startsWith("LEFT")) "LEFT" else "JOIN",
-        m.start))
+    val afterSort = p.orderBy
+      .map(ob => projected.orderBy(UnionByNameSql.sortColumns(rewriteRefs(ob)): _*))
+      .getOrElse(projected)
+    p.limit.map(afterSort.limit).getOrElse(afterSort)
   }
 }

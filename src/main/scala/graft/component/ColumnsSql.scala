@@ -27,10 +27,11 @@ import org.apache.spark.sql.DataFrame
   * multiple calls is out of scope, also loud). */
 object ColumnsSql {
 
-  private val callRe = "(?is)\\bCOLUMNS\\s*\\(".r
+  private[component] val callRe = "(?is)\\bCOLUMNS\\s*\\(".r
 
-  def has(stmt: String): Boolean =
-    callRe.findFirstMatchIn(Dialect.maskQuoted(stmt)).isDefined
+  /** Does the masked body call COLUMNS anywhere? */
+  private[component] def has(masked: String): Boolean =
+    callRe.findFirstMatchIn(masked).isDefined
 
   /** Expand, given the executor's bodyDf for the schema probe; None when
     * the statement has no COLUMNS call or is not a plain SELECT body. */
@@ -91,14 +92,8 @@ object ColumnsSql {
         }
       }
     }
-    // the probe keeps FROM..WHERE (schema-neutral) and cuts the clauses
-    // a bare SELECT * cannot carry
-    val cutM = "(?is)\\b(GROUP\\s+BY|HAVING|ORDER\\s+BY|LIMIT|QUALIFY|WINDOW)\\b".r
-      .findAllMatchIn(masked).find(m => dep(m.start) == 0 && m.start > fromM.end)
-    val probeTail = body.substring(fromM.start,
-      cutM.map(_.start).getOrElse(body.length))
     val cols: Seq[String] =
-      bodyDf(s"SELECT * $probeTail").schema.map(_.name)
+      bodyDf(s"SELECT * ${probeTail(body, masked, dep, fromM)}").schema.map(_.name)
 
     // depth-0 comma split of the select list
     val items = Dialect.splitTop(body.substring(selM.end, fromM.start))
@@ -194,6 +189,16 @@ object ColumnsSql {
       body.substring(fromM.start))
   }
 
+  /** The FROM..WHERE tail of a block from its depth-0 `from` match: the
+    * source of a schema probe (`SELECT * <tail>`, analyzed, never
+    * executed), cut before the clauses a bare SELECT * cannot carry. */
+  private[component] def probeTail(body: String, masked: String, dep: Array[Int],
+                                   from: scala.util.matching.Regex.Match): String = {
+    val cut = "(?is)\\b(GROUP\\s+BY|HAVING|ORDER\\s+BY|LIMIT|QUALIFY|WINDOW)\\b".r
+      .findAllMatchIn(masked).find(m => dep(m.start) == 0 && m.start > from.end)
+    body.substring(from.start, cut.map(_.start).getOrElse(body.length))
+  }
+
   /** The column names a COLUMNS argument selects (probed v1.0; matched
     * names come back in TABLE order for every form):
     *  - `*` — every column;
@@ -279,36 +284,5 @@ object ColumnsSql {
     while (d < masked.length && masked.charAt(d).isWhitespace) d += 1
     if (d < masked.length && masked.charAt(d) == ')') Some((c + 1, d))
     else None
-  }
-
-  /** Session-free stand-in for static analysis: every COLUMNS(...) call
-    * — and a direct `unpack(...)` wrapper with it — becomes `*`; same
-    * dependency set, parseable without a schema. A statement with
-    * SEVERAL calls (the lockstep form) stubs them all to `1` instead —
-    * `* + *` would not parse, and the FROM clause carries the
-    * dependencies either way. */
-  def stub(stmt: String): String = {
-    val masked = Dialect.maskQuoted(stmt)
-    val calls = callRe.findAllMatchIn(masked).toList
-    // a lone select-list call stubs to `*`; several calls (lockstep) or
-    // a call past the first depth-0 FROM (WHERE position) stub to `1` —
-    // `* + *` and `WHERE *` would not parse, and the FROM clause
-    // carries the dependencies either way
-    val dep = Dialect.depths(masked)
-    val firstFrom = "(?is)\\bFROM\\b".r.findAllMatchIn(masked)
-      .find(m => dep(m.start) == 0).map(_.start).getOrElse(masked.length)
-    calls.headOption match {
-      case None => stmt
-      case Some(m) =>
-        val repl = if (calls.length > 1 || m.start > firstFrom) "1" else "*"
-        val close = Dialect.matchingParen(masked, m.end - 1)
-        if (close < 0) stmt
-        else unpackSpan(masked, m.start, close) match {
-          case Some((us, ue)) =>
-            stub(stmt.substring(0, us) + repl + stmt.substring(ue + 1))
-          case None =>
-            stub(stmt.substring(0, m.start) + repl + stmt.substring(close + 1))
-        }
-    }
   }
 }

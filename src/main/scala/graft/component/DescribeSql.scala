@@ -27,10 +27,14 @@ import org.apache.spark.sql.types._
   * driver (bounded by the schema width, never by data). */
 object DescribeSql {
 
-  final case class Parsed(summarize: Boolean, target: String)
+  final case class Parsed(summarize: Boolean, target: String) {
+    /** The target query, or None for a table name. */
+    def query: Option[String] =
+      Some(target).filter("(?is)^(SELECT|WITH|FROM|TABLE|\\()".r.findFirstIn(_).isDefined)
+  }
 
-  def parse(stmt0: String): Option[Parsed] = {
-    val stmt = stmt0.trim.stripSuffix(";")
+  /** Parse a normalized body ([[Body.parse]]) as DESCRIBE / SUMMARIZE. */
+  private[component] def parse(stmt: String): Option[Parsed] = {
     "(?is)^(DESCRIBE|SUMMARIZE)\\s+(.+)$".r.findFirstMatchIn(stmt).map { m =>
       // `DESCRIBE TABLE t` ≡ `DESCRIBE t` (both dialects accept both)
       val target = m.group(2).trim.replaceFirst("(?is)^TABLE\\s+", "")
@@ -39,28 +43,6 @@ object DescribeSql {
       // Spark's own DESCRIBE FUNCTION/DATABASE/QUERY forms pass through
       "(?is)^(FUNCTION|DATABASE|NAMESPACE|CATALOG)\\b".r
         .findFirstIn(p.target).isDefined && !p.summarize)
-  }
-
-  /** Session-free stand-in for static analysis: the dependency set is
-    * the target's. Reads a bare statement or a body
-    * (`CREATE TABLE p AS DESCRIBE t` hands it `DESCRIBE t`). */
-  def stub(stmt: String): String =
-    parse(stmt).map { p =>
-      val t = p.target
-      if ("(?is)^(SELECT|WITH|FROM|TABLE|\\()".r.findFirstIn(t).isDefined)
-        Dialect.fromFirst(t.stripPrefix("(").stripSuffix(")"))
-      else s"SELECT * FROM $t"
-    }.getOrElse(stmt)
-
-  private def rel(spark: SparkSession, p: Parsed,
-                  bodyDf: String => DataFrame): DataFrame = {
-    val t = p.target
-    if ("(?is)^(SELECT|WITH|FROM|TABLE|\\()".r.findFirstIn(t).isDefined)
-      bodyDf(if (t.startsWith("(")) t.substring(1, t.length - 1) else t)
-    else {
-      val name = t.stripPrefix("`").stripSuffix("`")
-      spark.table(s"`${Names.view(name)}`")
-    }
   }
 
   /** Spark type → the DuckDB spelling a migrating user's scripts expect
@@ -91,9 +73,10 @@ object DescribeSql {
     case other => other.sql
   }
 
-  def df(spark: SparkSession, p: Parsed,
-         bodyDf: String => DataFrame): DataFrame = {
-    val in = rel(spark, p, bodyDf)
+  /** Describe or summarize `query`'s result, or the target table's. */
+  def df(spark: SparkSession, p: Parsed, query: Option[DataFrame]): DataFrame = {
+    val in = query.getOrElse(
+      spark.table(s"`${Names.view(p.target.stripPrefix("`").stripSuffix("`"))}`"))
     if (!p.summarize) describe(spark, in) else summarize(spark, in)
   }
 

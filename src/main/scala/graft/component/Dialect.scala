@@ -437,18 +437,17 @@ object Dialect {
 
   /** A depth-0 trailing `LIMIT n% [OFFSET m]` (DuckDB percent limit,
     * probed v1.0: row count = FLOOR(total · n/100), offset applies
-    * first) → (body without the clause, percent, offset). Executed by
-    * [[Executor.bodyDf]] as count-then-limit — the same two-pass price
+    * first) → (body without the clause, percent, offset), read from a
+    * normalized body and its mask ([[Body.parse]]). Executed by
+    * `Executor.bodyDf` as count-then-limit — the same two-pass price
     * the reference engine pays to know the total. */
-  def parseLimitPercent(body: String): Option[(String, Double, Long)] = {
-    val masked = maskQuoted(body)
-    val dep = depths(masked)
+  private[component] def parseLimitPercent(body: String, masked: String)
+      : Option[(String, Double, Long)] =
     ("(?is)\\bLIMIT\\s+([0-9]+(?:\\.[0-9]+)?)\\s*(?:%|PERCENT\\b)" +
-      "(?:\\s+OFFSET\\s+([0-9]+))?\\s*;?\\s*$").r
-      .findAllMatchIn(masked).find(m => dep(m.start) == 0)
+      "(?:\\s+OFFSET\\s+([0-9]+))?\\s*$").r
+      .findFirstMatchIn(masked).filter(m => depths(masked)(m.start) == 0)
       .map(m => (body.substring(0, m.start), m.group(1).toDouble,
         Option(m.group(2)).map(_.toLong).getOrElse(0L)))
-  }
 
   /** Rewrite one DuckDB statement into Spark SQL: [[chain]], folded by
     * [[run]]. */
@@ -868,12 +867,39 @@ object Dialect {
     out
   }
 
+  /** End of the query block that holds `from`: the first position where
+    * the paren depth drops below `from`'s (the enclosing subquery
+    * closes), or where a set operator at that depth starts the next leg
+    * (`UNION`, `INTERSECT`, or an `EXCEPT` that is no `* EXCEPT (...)`
+    * star modifier), or the end of the text. */
+  private[component] def blockEnd(masked: String, dep: Array[Int], from: Int): Int = {
+    val d = dep(from)
+    var i = from
+    while (i < masked.length && dep(i) >= d && !(dep(i) == d && setOpAt(masked, i))) i += 1
+    i
+  }
+
+  private val setOps = Seq("UNION", "INTERSECT", "EXCEPT")
+
+  private def setOpAt(masked: String, i: Int): Boolean =
+    (i == 0 || !isWordChar(masked.charAt(i - 1))) && setOps.exists { w =>
+      masked.regionMatches(true, i, w, 0, w.length) &&
+        (i + w.length == masked.length || !isWordChar(masked.charAt(i + w.length))) &&
+        (w != "EXCEPT" || {
+          var j = i - 1
+          while (j >= 0 && masked.charAt(j).isWhitespace) j -= 1
+          j < 0 || masked.charAt(j) != '*'
+        })
+    }
+
+  private def isWordChar(c: Char) = c.isLetterOrDigit || c == '_'
+
   /** DuckDB `SELECT DISTINCT ON (keys) ...` (keep the first row per key
     * group under the block's ORDER BY) rewrites to a QUALIFY row_number
     * filter, which [[qualify]] then lowers to a window subquery.
     * Block-scoped: a DISTINCT ON inside a subquery/CTE/parenthesized view
-    * body is rewritten within ITS query block (depth-relative offsets),
-    * iterating until none remain. */
+    * body, or in one leg of a set operation, is rewritten within ITS
+    * query block ([[blockEnd]]), iterating until none remain. */
   private val distinctOn =
     Sites("(?is)\\bSELECT\\s+DISTINCT\\s+ON\\s*\\(".r, lowerDistinctOn)
 
@@ -885,27 +911,45 @@ object Dialect {
     if (close < 0) return Skip(stmt.length)
     val keys = stmt.substring(m.end, close).trim
     val i = close + 1
-    // block extent: until depth drops below blockDepth (closing paren of
-    // the enclosing subquery/view body) or end of statement
-    var blockEnd = i
-    while (blockEnd < stmt.length && dep(blockEnd) >= blockDepth) blockEnd += 1
+    val end = blockEnd(masked, dep, i)
     def findAt(regex: String, from: Int): Option[Int] =
       regex.r.findAllMatchIn(masked).map(_.start)
-        .find(p => p >= from && p < blockEnd && dep(p) == blockDepth)
+        .find(p => p >= from && p < end && dep(p) == blockDepth)
     val ob = findAt("(?i)\\bORDER\\s+BY\\b", i)
     val lim = findAt("(?i)\\b(LIMIT|OFFSET)\\b", i)
     val windowOrder = ob match {
       case Some(p) =>
         val obEnd = "(?i)\\bORDER\\s+BY\\b".r.findFirstMatchIn(masked.substring(p)).get.end + p
-        stmt.substring(obEnd, lim.getOrElse(blockEnd)).trim
+        stmt.substring(obEnd, lim.getOrElse(end)).trim
       case None => keys
     }
-    val qualify =
-      s"QUALIFY ROW_NUMBER() OVER (PARTITION BY $keys ORDER BY $windowOrder) = 1"
     // splice before ORDER BY if present, else before LIMIT/OFFSET, else
     // at block end — the filter must precede the final LIMIT
-    val at = ob.orElse(lim).getOrElse(blockEnd)
-    Splice(m.start, at, "SELECT" + stmt.substring(i, at) + s" $qualify ")
+    val at = ob.orElse(lim).getOrElse(end)
+    findAt("(?i)\\bQUALIFY\\b", i).filter(_ < at) match {
+      case None =>
+        Splice(m.start, at, "SELECT" + stmt.substring(i, at) +
+          s" QUALIFY ROW_NUMBER() OVER (PARTITION BY $keys ORDER BY $windowOrder) = 1 ")
+      case Some(_) =>
+        // DuckDB filters by the block's QUALIFY first and picks among the
+        // survivors (probed v1.0): the block with its QUALIFY becomes the
+        // inner query, which carries the keys and the order terms out as
+        // hidden columns for the outer row-number filter
+        // (expression, hidden column, sort modifiers)
+        val from = findAt("(?i)\\bFROM\\b", i).getOrElse(return Skip(m.end))
+        val keyCols = splitTop(keys).zipWithIndex.map { case (k, n) => (k, s"__dk$n", "") }
+        val orderCols = splitTop(windowOrder).zipWithIndex.map { case (o, n) =>
+          val t = "(?is)^(.*?)((?:\\s+(?:ASC|DESC))?(?:\\s+NULLS\\s+(?:FIRST|LAST))?)$".r
+            .findFirstMatchIn(o).get
+          (t.group(1), s"__do$n", t.group(2))
+        }
+        val hidden = keyCols ++ orderCols
+        def refs(cs: Seq[(String, String, String)]) = cs.map(c => c._2 + c._3).mkString(", ")
+        val inner = "SELECT" + stmt.substring(i, from).stripTrailing() +
+          hidden.map { case (e, c, _) => s", $e AS $c" }.mkString + " " + stmt.substring(from, at)
+        Splice(m.start, at, s"SELECT * EXCEPT (${hidden.map(_._2).mkString(", ")}) FROM ($inner) " +
+          s"QUALIFY ROW_NUMBER() OVER (PARTITION BY ${refs(keyCols)} ORDER BY ${refs(orderCols)}) = 1 ")
+    }
   }
 
   /** DuckDB QUALIFY (filter on window-function results) has no Spark
@@ -914,19 +958,18 @@ object Dialect {
     * `SELECT * EXCEPT (__q) FROM (SELECT <sel>, (<pred>) AS __q FROM <rest>)
     *  WHERE __q [<tail>]`.
     * Block-scoped: each QUALIFY is rewritten within its own query block
-    * (subqueries, CTE bodies, parenthesized view bodies), iterating until
-    * none remain. */
+    * (subqueries, CTE bodies, parenthesized view bodies, set-operation
+    * legs — [[blockEnd]]), iterating until none remain. */
   private val qualify = Sites("(?i)\\bQUALIFY\\b".r, lowerQualify)
 
   private def lowerQualify(stmt: String, masked: String, m: MatchResult): Step = {
     val dep = depths(masked)
     val q = m.start
     val blockDepth = dep(q)
-    var blockEnd = q
-    while (blockEnd < stmt.length && dep(blockEnd) >= blockDepth) blockEnd += 1
+    val end = blockEnd(masked, dep, q)
     def positions(regex: String): List[Int] =
       regex.r.findAllMatchIn(masked).map(_.start)
-        .filter(p => p < blockEnd && dep(p) == blockDepth).toList
+        .filter(p => p < end && dep(p) == blockDepth).toList
     val selects = positions("(?i)\\bSELECT\\b").filter(_ < q)
     val froms = positions("(?i)\\bFROM\\b").filter(_ < q)
     if (selects.isEmpty || froms.isEmpty) return Skip(stmt.length)
@@ -934,7 +977,7 @@ object Dialect {
     val selStart = selKw + "SELECT".length
     val fromStart = froms.find(_ > selKw).getOrElse(return Skip(stmt.length))
     val tailStart = positions("(?i)\\b(ORDER|LIMIT|OFFSET)\\b")
-      .find(_ > q).getOrElse(blockEnd)
+      .find(_ > q).getOrElse(end)
     val sel = stmt.substring(selStart, fromStart)
     val rest = stmt.substring(fromStart, q)
     val pred = stmt.substring(q + "QUALIFY".length, tailStart).trim
@@ -1240,6 +1283,10 @@ object Dialect {
     val opEnd = j + 1
     while (j >= 0 && "=!<>".indexOf(stmt.charAt(j)) >= 0) j -= 1
     val op = stmt.substring(j + 1, opEnd)
+    // `UNION ALL (SELECT ...)` opens a set-operation leg, whose own
+    // comparisons still lower
+    if (op.isEmpty && setOps.exists(w => opEnd >= w.length && setOpAt(masked, opEnd - w.length)))
+      return Skip(open)
     val sub = stmt.substring(open + 1, close).trim
     val isQuery =
       "(?is)^\\s*(SELECT|WITH|VALUES)\\b".r.findFirstIn(sub).isDefined
@@ -1992,30 +2039,6 @@ object Dialect {
         rest.substring(0, listEnd).trim + " " + fromSeg + " " +
           rest.substring(listEnd).trim
     }
-  }
-
-  /** Session-free shims for query-body forms only the EXECUTOR
-    * evaluates, so static analysis (parsePlan for deps, syntax check)
-    * sees a Catalyst-parseable twin with the same dependency set — one
-    * link of [[SqlAnalyzer.bodyStub]]. Matches are located on the
-    * quote-masked text — literals survive. */
-  def analysisStub(stmt: String): String = {
-    var s = stmt
-    // percent LIMIT parses nowhere in Spark; a LIMIT 1 stand-in keeps
-    // the dependency set
-    s = replaceUnquoted(s, "(?is)\\bLIMIT\\s+[0-9.]+\\s*(?:%|PERCENT\\b)(\\s+OFFSET\\s+[0-9]+)?".r)(
-      _ => "LIMIT 1")
-    // star REPLACE parses nowhere in Spark; the except-form has the
-    // identical dependency set (expressions kept, order moot here)
-    if (StarReplaceSql.has(s)) s = StarReplaceSql.except(s)
-    // COLUMNS(...) likewise: `*` stands in with the same dependencies
-    if (ColumnsSql.has(s)) s = ColumnsSql.stub(s)
-    // * RENAME (a AS b) likewise
-    if (StarRenameSql.has(s)) s = StarRenameSql.stub(s)
-    // qualified star name-filters (`t.* LIKE 'p'`) collapse to `t.*`
-    if (StarReplaceSql.hasQualifiedLike(s))
-      s = StarReplaceSql.stubQualifiedLike(s)
-    s
   }
 
   /** Dollar-quoted strings (`$$...$$`, `$tag$...$tag$` — probed v1.0:

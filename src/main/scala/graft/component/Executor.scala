@@ -189,7 +189,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     viewDefs.forEach { (key, defn) =>
       val (sanitized, body, deps) = defn
       if (deps.exists(affected)) {
-        spark.sql(body).createOrReplaceTempView(sanitized)
+        bodyDf(body).createOrReplaceTempView(sanitized)
         affected += key
       }
     }
@@ -473,7 +473,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
               val newBody = renameRefs(renameRefs(body, from, to), src, to)
               val newDeps = deps.map(d =>
                 if (affected(d.toLowerCase)) to.toLowerCase else d)
-              spark.sql(newBody).createOrReplaceTempView(sanitized)
+              bodyDf(newBody).createOrReplaceTempView(sanitized)
               viewDefs.put(key, (sanitized, newBody, newDeps))
               affected += key
             }
@@ -629,10 +629,10 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       }: _*)
       replace(p.target, existing.unionByName(aligned))
 
-    case Stmt.EngineQuery(sql) =>
+    case Stmt.EngineQuery(body) =>
       // bare PIVOT / ASOF / POSITIONAL / UNION BY NAME / star REPLACE /
-      // DESCRIBE / SUMMARIZE: execute for effect + errors
-      bodyDf(sql).queryExecution.assertAnalyzed()
+      // DESCRIBE / SUMMARIZE / ...: execute for effect + errors
+      runBody(body).queryExecution.assertAnalyzed()
 
     case Stmt.Catalyst(sql) =>
       val plan = spark.sessionState.sqlParser.parsePlan(sql)
@@ -727,67 +727,50 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       s"""Binder Error: Table "${Names.view(name)}" does not have a column """ +
         s"""with name "$c""""))
 
-  /** A statement body: plain Spark SQL, a DuckDB simplified PIVOT
-    * (dynamic DataFrame pivot — [[Pivot.pivotDf]]), or an ASOF JOIN
-    * ([[AsOfSql.asofDf]] → the graft as-of engine core). */
-  private def bodyDf(body0: String): DataFrame = {
-    // DuckDB FROM-first bodies: `CREATE TABLE x AS FROM y`
-    val body = Dialect.fromFirst(body0)
-    Pivot.pivotDf(spark, body)
-      .orElse(AsOfSql.asofDf(spark, body))
-      .orElse(PositionalSql.df(spark, body))
-      .orElse(UnionByNameSql.parse(body)
-        .map(UnionByNameSql.df(spark, _, bodyDf)))
-      .orElse(DescribeSql.parse(body)
-        .map(DescribeSql.df(spark, _, bodyDf)))
-      .orElse {
-        if (!ColumnsSql.has(body)) None
-        else ColumnsSql.expand(body, bodyDf).map(bodyDf)
+  /** A statement body, classified by [[Body.parse]] and run by [[runBody]]. */
+  private def bodyDf(body: String): DataFrame = runBody(Body.parse(body))
+
+  /** Run one classified body: plain Spark SQL through the session, each
+    * DuckDB-only form through its module. A star form expands against
+    * the analyzed schema and the expansion runs as a body of its own. */
+  private def runBody(body: Body): DataFrame = body match {
+    case Body.Plain(sql) => spark.sql(sql)
+    case Body.Pivot(p) => Pivot.df(spark, p)
+    case Body.AsOf(p) => AsOfSql.df(spark, p)
+    case Body.Positional(p) => PositionalSql.df(spark, p)
+    case Body.UnionByName(p, legs) => UnionByNameSql.df(p, legs.map(runBody))
+    case Body.Describe(p, query) => DescribeSql.df(spark, p, query.map(runBody))
+    case Body.Columns(sql) => bodyDf(expanded("COLUMNS(...)", ColumnsSql.expand(sql, bodyDf)))
+    case Body.StarRename(sql) => bodyDf(expanded("* RENAME", StarRenameSql.expand(sql, bodyDf)))
+    case Body.QualifiedLike(sql) =>
+      bodyDf(expanded("t.* LIKE", StarReplaceSql.expandQualifiedLike(sql, bodyDf)))
+    // percent LIMIT (probed v1.0: FLOOR(total · n/100) rows after the
+    // offset) — one count job to learn the total, then the ordinary
+    // offset+limit over the same plan
+    case Body.LimitPercent(inner, pct, off) =>
+      val df = runBody(inner)
+      val n = math.floor(df.count() * pct / 100.0).toInt
+      (if (off > 0) df.offset(off.toInt) else df).limit(n)
+    case Body.StarReplace(sql) =>
+      // except-form computes the values; the strip-form's ANALYZED
+      // schema (never executed) gives DuckDB's column order back
+      val out = bodyDf(StarReplaceSql.except(sql))
+      val order = scala.util.Try(
+        bodyDf(StarReplaceSql.strip(sql)).schema.map(_.name)).toOption
+      order match {
+        case Some(names)
+            if names.map(_.toLowerCase).distinct.length == names.length &&
+              names.map(_.toLowerCase).sorted ==
+                out.columns.map(_.toLowerCase).sorted.toSeq =>
+          out.select(names.map(n => col(s"`$n`")): _*)
+        case _ => out // duplicate/mismatched names: keep except order
       }
-      .orElse {
-        if (!StarRenameSql.has(body)) None
-        else StarRenameSql.expand(body, bodyDf).map(bodyDf)
-      }
-      .orElse {
-        if (!StarReplaceSql.hasQualifiedLike(body)) None
-        else StarReplaceSql.expandQualifiedLike(body, bodyDf).map(bodyDf)
-      }
-      .orElse {
-        // percent LIMIT (probed v1.0: FLOOR(total · n/100) rows after
-        // the offset) — one count job to learn the total, then the
-        // ordinary offset+limit over the same plan
-        Dialect.parseLimitPercent(body).map { case (inner, pct, off) =>
-          val df = bodyDf(inner)
-          val n = math.floor(df.count() * pct / 100.0).toInt
-          (if (off > 0) df.offset(off.toInt) else df).limit(n)
-        }
-      }
-      .orElse {
-        if (!StarReplaceSql.has(body)) None
-        else Some {
-          // except-form computes the values; the strip-form's ANALYZED
-          // schema (never executed) gives DuckDB's column order back
-          val out = bodyDf(StarReplaceSql.except(body))
-          val order = scala.util.Try(
-            bodyDf(StarReplaceSql.strip(body)).schema.map(_.name)).toOption
-          order match {
-            case Some(names)
-                if names.map(_.toLowerCase).distinct.length == names.length &&
-                  names.map(_.toLowerCase).sorted ==
-                    out.columns.map(_.toLowerCase).sorted.toSeq =>
-              out.select(names.map(n => col(s"`$n`")): _*)
-            case _ => out // duplicate/mismatched names: keep except order
-          }
-        }
-      }
-      .getOrElse {
-        // an ASOF/POSITIONAL statement outside the supported grammar would
-        // reach spark.sql and die with an opaque parse error on the token
-        (AsOfSql.unsupportedForm(body) ++ PositionalSql.unsupportedForm(body))
-          .foreach(msg => throw new IllegalArgumentException(msg))
-        spark.sql(body)
-      }
+    case Body.Unsupported(message) => throw new Body.UnsupportedBody(message)
   }
+
+  private def expanded(form: String, text: Option[String]): String =
+    text.getOrElse(throw new Body.UnsupportedBody(
+      s"$form expands only in the select list or WHERE clause of a top-level SELECT ... FROM block"))
 
   private def targetName(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): String =
     plan.collectFirst {

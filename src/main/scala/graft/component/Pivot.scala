@@ -29,12 +29,10 @@ import org.apache.spark.sql.functions._
   * implicit grouping is every source column not pivoted on and not
   * referenced by the aggregate — DuckDB's rule.
   *
-  * For DAG building and syntax validation — which run WITHOUT a live
-  * session — [[staticStub]] reduces a PIVOT statement to
-  * `SELECT * FROM <src>`: same dependency set, parseable by Catalyst. */
+  * [[Body.parse]] recognizes the form; its dependencies are the source's. */
 object Pivot {
 
-  private[component] final case class Parsed(
+  final case class Parsed(
       src: String, on: String, aggFn: String, aggArg: String,
       groupCols: Option[Seq[String]])
 
@@ -43,14 +41,11 @@ object Pivot {
     ("(?i)\\b" + kw + "\\b").r.findAllMatchIn(masked).map(_.start)
       .find(p => p >= from && dep(p) == 0).getOrElse(-1)
 
-  /** Parse a statement whose body (after optional wrapping parens) is a
-    * simplified PIVOT. Returns None when the statement is anything else. */
-  private[component] def parse(stmt0: String): Option[Parsed] = {
-    val stmt = unwrap(stmt0)
-    val masked = Dialect.maskQuoted(stmt)
-    if (!"(?is)^\\s*PIVOT\\b".r.findFirstIn(masked).isDefined) return None
+  /** Parse a normalized body ([[Body.parse]]) and its mask as a
+    * simplified PIVOT. Returns None when the body is anything else. */
+  private[component] def parse(stmt: String, masked: String): Option[Parsed] = {
+    val afterKw = "(?is)^\\s*PIVOT\\b".r.findFirstMatchIn(masked).getOrElse(return None).end
     val dep = Dialect.depths(masked)
-    val afterKw = "(?is)^\\s*PIVOT\\b".r.findFirstMatchIn(masked).get.end
     // source: identifier or parenthesized subquery
     var i = afterKw
     while (i < stmt.length && stmt.charAt(i).isWhitespace) i += 1
@@ -89,72 +84,41 @@ object Pivot {
   private def stripIdentQuotes(s: String): String =
     s.stripPrefix("\"").stripSuffix("\"").stripPrefix("`").stripSuffix("`")
 
-  /** Strip ONE fully-wrapping paren pair (`CREATE VIEW v AS (PIVOT ...)`). */
-  private def unwrap(stmt0: String): String = {
-    val s = stmt0.trim
-    if (!s.startsWith("(") || !s.endsWith(")")) return s
-    val close = Dialect.matchingParen(Dialect.maskQuoted(s), 0)
-    if (close >= 0 && close < s.length - 1) s
-    else unwrap(s.substring(1, s.length - 1))
-  }
-
   /** Execute a simplified-PIVOT body on the live session; None when the
     * body is not a PIVOT. */
   def pivotDf(spark: SparkSession, body: String): Option[DataFrame] =
-    parse(body).map { p =>
-      // one resolution path for both source shapes — the same name
-      // resolution any statement body gets
-      val df = spark.sql(s"SELECT * FROM ${p.src} __piv_src")
-      val cols = df.columns
-      def isCol(name: String) = cols.exists(_.equalsIgnoreCase(name))
-      if (!isCol(p.on))
-        throw new UserException(s"PIVOT ON column '${p.on}' not in ${cols.mkString(", ")}")
-      // DuckDB's implicit grouping: every column not pivoted on and not
-      // referenced inside the USING aggregate. Token comparison is
-      // case-INSENSITIVE like every other column check here — DuckDB
-      // excludes aggregate-referenced columns regardless of case
-      // (`USING max(N_CHARS)` must exclude n_chars).
-      val argTokens = "[A-Za-z_][A-Za-z0-9_]*".r.findAllIn(p.aggArg)
-        .map(_.toLowerCase).toSet
-      val groups = p.groupCols.getOrElse(
-        cols.toSeq.filterNot(c => c.equalsIgnoreCase(p.on) ||
-          argTokens.contains(c.toLowerCase)))
-      groups.filterNot(isCol) match {
-        case missing if missing.nonEmpty =>
-          throw new UserException(s"PIVOT GROUP BY column(s) ${missing.mkString(", ")} not in source")
-        case _ =>
-      }
-      df.groupBy(groups.map(col): _*)
-        .pivot(p.on)
-        .agg(expr(s"${p.aggFn}(${p.aggArg})"))
+    Body.parse(body) match {
+      case Body.Pivot(p) => Some(df(spark, p))
+      case _ => None
     }
 
-  /** Session-free reduction of a PIVOT statement (bare, or as a CREATE/
-    * INSERT body) to a Catalyst-parseable stand-in with the SAME
-    * dependency set. Non-PIVOT statements pass through unchanged. */
-  def staticStub(stmt: String): String = {
-    parse(stmt) match {
-      case Some(p) => return s"SELECT * FROM ${p.src}"
-      case None =>
+  /** Run a parsed PIVOT. */
+  def df(spark: SparkSession, p: Parsed): DataFrame = {
+    // one resolution path for both source shapes — the same name
+    // resolution any statement body gets
+    val in = spark.sql(s"SELECT * FROM ${p.src} __piv_src")
+    val cols = in.columns
+    def isCol(name: String) = cols.exists(_.equalsIgnoreCase(name))
+    if (!isCol(p.on))
+      throw new UserException(s"PIVOT ON column '${p.on}' not in ${cols.mkString(", ")}")
+    // DuckDB's implicit grouping: every column not pivoted on and not
+    // referenced inside the USING aggregate. Token comparison is
+    // case-INSENSITIVE like every other column check here — DuckDB
+    // excludes aggregate-referenced columns regardless of case
+    // (`USING max(N_CHARS)` must exclude n_chars).
+    val argTokens = "[A-Za-z_][A-Za-z0-9_]*".r.findAllIn(p.aggArg)
+      .map(_.toLowerCase).toSet
+    val groups = p.groupCols.getOrElse(
+      cols.toSeq.filterNot(c => c.equalsIgnoreCase(p.on) ||
+        argTokens.contains(c.toLowerCase)))
+    groups.filterNot(isCol) match {
+      case missing if missing.nonEmpty =>
+        throw new UserException(s"PIVOT GROUP BY column(s) ${missing.mkString(", ")} not in source")
+      case _ =>
     }
-    val masked = Dialect.maskQuoted(stmt)
-    val asM = "(?is)\\bAS\\s+(\\(\\s*)?PIVOT\\b".r.findFirstMatchIn(masked)
-      .getOrElse(return stmt)
-    // body segment: from the paren (if any) to its match, else to the end
-    val parenStart = Option(asM.group(1)).map(_ => masked.indexOf('(', asM.start))
-    val (bodyStart, bodyEnd) = parenStart match {
-      case Some(open) =>
-        val close = Dialect.matchingParen(masked, open)
-        if (close < 0) return stmt
-        (open, close + 1)
-      case None => (masked.toUpperCase.indexOf("PIVOT", asM.start), stmt.length)
-    }
-    parse(stmt.substring(bodyStart, bodyEnd)) match {
-      case Some(p) =>
-        stmt.substring(0, bodyStart) + s"SELECT * FROM ${p.src}" +
-          stmt.substring(bodyEnd)
-      case None => stmt
-    }
+    in.groupBy(groups.map(col): _*)
+      .pivot(p.on)
+      .agg(expr(s"${p.aggFn}(${p.aggArg})"))
   }
 
   /** Textual UNPIVOT rewrite: DuckDB

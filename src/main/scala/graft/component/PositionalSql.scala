@@ -22,13 +22,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * apply after the join, over the zipped columns — left's then right's,
   * DuckDB's output order. Side aliases are accepted; their qualified
   * references in the select list / tail are resolved by prefix-stripping
-  * (the zipped relation is one flat view). Chained positional joins and
-  * mixing with other join types are rejected with a clear validation
-  * message ([[unsupportedForm]]) rather than an opaque parse error.
-  *
-  * For session-free static analysis, [[stub]] rewrites the keyword pair
-  * to CROSS JOIN: parseable by Catalyst with the identical dependency
-  * set. */
+  * (the zipped relation is one flat view), and so are those of an
+  * unaliased source's own name (`l.k` for `FROM l`). Chained positional
+  * joins and mixing with other join types make the body
+  * [[Body.Unsupported]], a clear message rather than an opaque parse
+  * error. */
 object PositionalSql {
 
   private val posJoinRe = "(?is)\\bPOSITIONAL\\s+JOIN\\b".r
@@ -38,49 +36,16 @@ object PositionalSql {
                           leftAlias: Option[String], rightSrc: String,
                           rightAlias: Option[String], tail: String)
 
-  def has(stmt: String): Boolean =
-    posJoinRe.findFirstIn(Dialect.maskQuoted(stmt)).isDefined
-
-  /** Static-analysis twin: CROSS JOIN parses and carries the same deps. */
-  def stub(stmt: String): String = {
-    if (!has(stmt)) return stmt
-    val masked = Dialect.maskQuoted(stmt)
-    val sb = new StringBuilder
-    var last = 0
-    for (m <- posJoinRe.findAllMatchIn(masked)) {
-      sb.append(stmt.substring(last, m.start)).append("CROSS JOIN")
-      last = m.end
-    }
-    sb.append(stmt.substring(last))
-    sb.toString
-  }
-
-  /** A clear message for shapes the executor cannot run (the stub would
-    * otherwise let them validate cleanly and fail opaquely later). */
-  def unsupportedForm(stmt: String): Option[String] = {
-    val masked = Dialect.maskQuoted(stmt)
-    val n = posJoinRe.findAllMatchIn(masked).size
-    if (n == 0) None
-    else if (n > 1)
-      Some("chained POSITIONAL JOINs are not supported — zip two relations " +
-        "per statement (nest via a subquery or temp table)")
-    else if (parse(stmt).isEmpty)
-      Some("unsupported POSITIONAL JOIN form — supported: SELECT ... FROM " +
-        "<table|(subquery)> [alias] POSITIONAL JOIN <table|(subquery)> " +
-        "[alias] [WHERE/GROUP BY/ORDER BY/LIMIT ...]")
-    else None
-  }
-
-  def parse(stmt0: String): Option[Parsed] = {
-    val stmt = stmt0.trim.stripSuffix(";")
-    val masked = Dialect.maskQuoted(stmt)
+  /** Parse a normalized body ([[Body.parse]]) and its mask as one
+    * supported positional join. */
+  private[component] def parse(stmt: String, masked: String): Option[Parsed] = {
+    val hits = posJoinRe.findAllMatchIn(masked).toList
+    if (hits.isEmpty || !"(?is)^\\s*SELECT\\b".r.findFirstIn(masked).isDefined) return None
     val dep = Dialect.depths(masked)
-    val pj = posJoinRe.findAllMatchIn(masked).filter(m => dep(m.start) == 0).toList
-    val m = pj match {
+    val m = hits.filter(m => dep(m.start) == 0) match {
       case one :: Nil => one
       case _ => return None
     }
-    if (!"(?is)^\\s*SELECT\\b".r.findFirstIn(masked).isDefined) return None
     val fromM = "(?i)\\bFROM\\b".r.findAllMatchIn(masked)
       .find(f => dep(f.start) == 0 && f.start < m.start).getOrElse(return None)
     val selList = stmt.substring(
@@ -138,18 +103,27 @@ object PositionalSql {
   /** Execute a recognized statement; None if the text is not a
     * positional join. */
   def df(spark: SparkSession, stmt: String): Option[DataFrame] =
-    parse(stmt).map { p =>
-      val zipped = graft.ops.Positional.zip(
-        relDf(spark, p.leftSrc), relDf(spark, p.rightSrc))
-      val view = s"__positional_${viewSeq.incrementAndGet()}"
-      zipped.createOrReplaceTempView(view)
-      val body = stripAliases(
-        s"SELECT ${p.selList} FROM $view ${p.tail}",
-        Seq(p.leftAlias, p.rightAlias).flatten)
-      // the view stays registered (unique name, session-scoped): the
-      // returned DataFrame's lazy plan reads through it
-      spark.sql(body)
+    Body.parse(stmt) match {
+      case Body.Positional(p) => Some(df(spark, p))
+      case _ => None
     }
+
+  /** Run a parsed positional join. */
+  def df(spark: SparkSession, p: Parsed): DataFrame = {
+    val zipped = graft.ops.Positional.zip(
+      relDf(spark, p.leftSrc), relDf(spark, p.rightSrc))
+    val view = s"__positional_${viewSeq.incrementAndGet()}"
+    zipped.createOrReplaceTempView(view)
+    // an unaliased bare table name qualifies its own columns (`l.k`)
+    def qualifier(src: String, alias: Option[String]) =
+      alias.orElse(Some(src).filter(_.matches("[A-Za-z_][A-Za-z0-9_]*")))
+    val body = stripAliases(
+      s"SELECT ${p.selList} FROM $view ${p.tail}",
+      Seq(qualifier(p.leftSrc, p.leftAlias), qualifier(p.rightSrc, p.rightAlias)).flatten)
+    // the view stays registered (unique name, session-scoped): the
+    // returned DataFrame's lazy plan reads through it
+    spark.sql(body)
+  }
 
   private def relDf(spark: SparkSession, src: String): DataFrame = {
     val t = src.trim
@@ -158,7 +132,7 @@ object PositionalSql {
     else spark.sql(s"SELECT * FROM $t")
   }
 
-  /** `alias.col` → `col` outside quotes (the zipped view is one flat
+  /** `qualifier.col` → `col` outside quotes (the zipped view is one flat
     * relation). */
   private def stripAliases(sql: String, aliases: Seq[String]): String = {
     if (aliases.isEmpty) return sql

@@ -12,9 +12,11 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * is; this object reads that decision into a DAG contract:
   *
   *  - query bodies (a VIEW/CTAS body, an INSERT source, `COPY (query)`, a
-  *    MERGE source, a PREPARE body, a bare query) go through
-  *    [[bodyStub]] and Catalyst's parser: their `UnresolvedRelation`
-  *    names are dependencies, CTE names excluded;
+  *    MERGE source, a PREPARE body, a bare query) are classified by
+  *    [[Body.parse]]: a plain body goes through Catalyst's parser (its
+  *    `UnresolvedRelation` names are dependencies, CTE names excluded),
+  *    every other form reads its [[Body.parts]], and an unsupported form
+  *    fails with its own message;
   *  - created and inserted objects are outputs, subtracted from the
   *    dependencies (the reference's create-output subtraction /
   *    INSERT-target exclusion);
@@ -43,14 +45,6 @@ object SqlAnalyzer {
 
   private val Empty = Analysis(Set.empty, Set.empty, OtherStmt)
 
-  /** A query body's Catalyst-parseable twin: PIVOT / ASOF / POSITIONAL /
-    * UNION BY NAME / DESCRIBE / star modifiers have no Catalyst spelling,
-    * and their session-free stand-ins parse with the same dependency
-    * set. The executor's `bodyDf` runs the real forms. */
-  def bodyStub(body: String): String =
-    PositionalSql.stub(AsOfSql.stub(Pivot.staticStub(UnionByNameSql.stub(
-      DescribeSql.stub(Dialect.analysisStub(Dialect.fromFirst(body)))))))
-
   /** The DAG contract of one classified statement; a Failure is the
     * statement's syntax_check error. File table-function views
     * (read_csv/read_parquet rewrites) are not workspace tables: they never
@@ -78,10 +72,14 @@ object SqlAnalyzer {
 
   private def contract(spark: SparkSession, stmt: Stmt): Analysis = {
     def parse(sql: String) = spark.sessionState.sqlParser.parsePlan(sql)
-    def reads(body: String): Set[String] = {
-      val plan = parse(bodyStub(body))
-      allRelations(plan) -- cteNames(plan)
+    def bodyReads(body: Body): Set[String] = body match {
+      case Body.Plain(sql) =>
+        val plan = parse(sql)
+        allRelations(plan) -- cteNames(plan)
+      case Body.Unsupported(message) => throw new Body.UnsupportedBody(message)
+      case form => form.parts.flatMap(bodyReads).toSet
     }
+    def reads(body: String): Set[String] = bodyReads(Body.parse(body))
     // a name in a dialect table position arrives sanitized and keys as
     // written, the way Catalyst reads its readers; COPY, MERGE, sequence
     // and type names key through Names.view, like their readers
@@ -129,11 +127,11 @@ object SqlAnalyzer {
       // the body with every parameter slot NULL carries the template's
       // sets (an EXECUTE in the same code inherits them at the code level)
       case Stmt.Prepare(p) => contract(spark, Stmt.parse(PrepareSql.nullBody(p)))
-      case Stmt.EngineQuery(sql) => Analysis(reads(sql), Set.empty, OtherStmt)
+      case Stmt.EngineQuery(body) => Analysis(bodyReads(body), Set.empty, OtherStmt)
       // a variable's value expression may read tables (`SET VARIABLE x =
       // (SELECT max(k) FROM src)`): the DAG orders it after their producers
       case Stmt.SetVariable(_, expr) => Analysis(reads(s"SELECT $expr"), Set.empty, OtherStmt)
-      case Stmt.Catalyst(sql) => fromPlan(parse(bodyStub(sql)))
+      case Stmt.Catalyst(sql) => fromPlan(parse(sql))
       // EXPORT reads the whole catalog and IMPORT's outputs are unknowable
       // before its scripts exist (both documented); the rest name no table
       case Stmt.Rejected(_) | Stmt.Drop(_, _, _) | Stmt.DropIndex(_) |

@@ -15,15 +15,16 @@ import org.apache.spark.sql.DataFrame
   * per statement (more is loud), top-level select list only. */
 object StarRenameSql {
 
-  def has(stmt: String): Boolean = occ(stmt, Dialect.maskQuoted(stmt)).isDefined
+  private[component] def has(stmt: String, masked: String): Boolean =
+    occ(stmt, masked).isDefined
 
   /** (starIdx, exceptList, listOpen, listClose) of the first
     * `* [EXCEPT(...)] RENAME (` occurrence. */
-  private def occ(stmt: String,
-                  masked: String): Option[(Int, Option[String], Int, Int)] = {
+  private[component] def occ(stmt: String,
+                             masked: String): Option[(Int, Option[String], Int, Int)] = {
     var i = 0
     while (i < masked.length) {
-      if (masked.charAt(i) == '*' && isStar(stmt, i)) {
+      if (masked.charAt(i) == '*' && StarReplaceSql.isStar(stmt, i)) {
         var j = i + 1
         while (j < masked.length && masked.charAt(j).isWhitespace) j += 1
         var exceptList: Option[String] = None
@@ -51,23 +52,6 @@ object StarRenameSql {
     None
   }
 
-  /** Same star-vs-multiplication rule as [[StarReplaceSql]]. */
-  private def isStar(stmt: String, idx: Int): Boolean = {
-    var j = idx - 1
-    while (j >= 0 && stmt.charAt(j).isWhitespace) j -= 1
-    if (j < 0) return true
-    stmt.charAt(j) match {
-      case ',' | '(' | '.' => true
-      case c if c.isLetterOrDigit || c == '_' =>
-        var k = j
-        while (k >= 0 && { val ch = stmt.charAt(k); ch.isLetterOrDigit || ch == '_' })
-          k -= 1
-        Set("select", "distinct", "all")(
-          stmt.substring(k + 1, j + 1).toLowerCase)
-      case _ => false
-    }
-  }
-
   private def unq(s: String): String = {
     val t = s.trim
     if (t.length >= 2 && ((t.head == '"' && t.last == '"') ||
@@ -82,18 +66,14 @@ object StarRenameSql {
       case Some(o) => o
       case None => return None
     }
-    // schema probe: the FROM..WHERE tail with the clauses a bare
-    // SELECT * cannot carry cut off (the ColumnsSql rule)
+    // schema probe over the block's FROM..WHERE tail
     val dep = Dialect.depths(masked)
     val fromM = "(?is)\\bFROM\\b".r.findAllMatchIn(masked)
       .find(m => dep(m.start) == 0 && m.start > listClose)
       .getOrElse(throw new UserException(
         "* RENAME needs a FROM clause to expand against"))
-    val cutM = "(?is)\\b(GROUP\\s+BY|HAVING|ORDER\\s+BY|LIMIT|QUALIFY|WINDOW)\\b".r
-      .findAllMatchIn(masked).find(m => dep(m.start) == 0 && m.start > fromM.end)
-    val probeTail = body.substring(fromM.start,
-      cutM.map(_.start).getOrElse(body.length))
-    val cols: Seq[String] = bodyDf(s"SELECT * $probeTail").schema.map(_.name)
+    val cols: Seq[String] =
+      bodyDf(s"SELECT * ${ColumnsSql.probeTail(body, masked, dep, fromM)}").schema.map(_.name)
     val excluded = exceptList.toSeq.flatMap(_.split(","))
       .map(e => unq(e).toLowerCase).filter(_.nonEmpty).toSet
     val renames: Seq[(String, String)] =
@@ -148,13 +128,4 @@ object StarRenameSql {
     }.mkString(", ")
     Some(body.substring(0, starIdx) + projection + body.substring(listClose + 1))
   }
-
-  /** Static-analysis twin: the whole modifier group collapses to `*` —
-    * identical dependency set, parseable without a schema. */
-  def stub(stmt: String): String =
-    occ(stmt, Dialect.maskQuoted(stmt)) match {
-      case Some((starIdx, _, _, listClose)) =>
-        stub(stmt.substring(0, starIdx) + "*" + stmt.substring(listClose + 1))
-      case None => stmt
-    }
 }

@@ -32,8 +32,8 @@ object StarReplaceSql {
   private final case class Occ(starIdx: Int, listOpen: Int, listClose: Int,
                                exceptSpan: Option[(Int, Int)])
 
-  def has(stmt: String): Boolean =
-    occurrences(stmt, Dialect.maskQuoted(stmt)).nonEmpty
+  private[component] def has(stmt: String, masked: String): Boolean =
+    occurrences(stmt, masked).nonEmpty
 
   /** Is the `*` at `idx` a STAR (projection) rather than multiplication?
     * A star follows a select-list context: start of text, `,`, `(`, a
@@ -41,7 +41,7 @@ object StarReplaceSql {
     * after an operand (identifier char, `)`, `]`, a quote) is the
     * multiplication operator — `amount * replace(fmt, ',', '')` must
     * never read as a star modifier. */
-  private def isStar(stmt: String, idx: Int): Boolean = {
+  private[component] def isStar(stmt: String, idx: Int): Boolean = {
     // read the ORIGINAL text: masking blanks string literals, and a
     // literal before `*` ('a' * replace(..)) is an operand end too
     var j = idx - 1
@@ -230,12 +230,11 @@ object StarReplaceSql {
 
   /** One qualified star name-filter occurrence
     * (`qual.* [NOT] LIKE/ILIKE/SIMILAR TO 'pat'`). */
-  private final case class QLike(qualStart: Int, dotIdx: Int, starIdx: Int,
-                                 not: Boolean, op: String,
-                                 qStart: Int, qEnd: Int)
+  private[component] final case class QLike(qualStart: Int, dotIdx: Int, starIdx: Int,
+                                            not: Boolean, op: String,
+                                            qStart: Int, qEnd: Int)
 
-  private def findQualifiedLike(stmt: String): Option[QLike] = {
-    val masked = Dialect.maskQuoted(stmt)
+  private[component] def findQualifiedLike(stmt: String, masked: String): Option[QLike] = {
     var i = 0
     while (i < masked.length) {
       if (masked.charAt(i) == '*' && isStar(stmt, i)) {
@@ -272,13 +271,13 @@ object StarReplaceSql {
 
   /** Does the statement carry a QUALIFIED star name-filter? The
     * unqualified form lowers textually onto COLUMNS in [[starLike]];
-    * the qualified form needs the QUALIFIER's schema, so
-    * [[expandQualifiedLike]] runs in the executor's bodyDf chain.
+    * the qualified form needs the QUALIFIER's schema, so the executor
+    * runs [[expandQualifiedLike]] on a [[Body.QualifiedLike]] body.
     * DuckDB ≥ 1.4 surface (v1.0 probes a binder error: "STAR expression
     * is only allowed as the root element"), so the semantics — a name
     * filter over the qualified relation's columns — are spec-pinned. */
-  def hasQualifiedLike(stmt: String): Boolean =
-    findQualifiedLike(stmt).isDefined
+  private[component] def hasQualifiedLike(stmt: String, masked: String): Boolean =
+    findQualifiedLike(stmt, masked).isDefined
 
   /** Expand the first `qual.* [NOT] LIKE 'pat'` against the qualifier's
     * ANALYZED schema (the [[ColumnsSql]] probe: `SELECT qual.* FROM
@@ -287,20 +286,16 @@ object StarReplaceSql {
   def expandQualifiedLike(body: String,
                           bodyDf: String => org.apache.spark.sql.DataFrame)
       : Option[String] = {
-    val q = findQualifiedLike(body).getOrElse(return None)
-    val qual = body.substring(q.qualStart, q.dotIdx)
     val masked = Dialect.maskQuoted(body)
+    val q = findQualifiedLike(body, masked).getOrElse(return None)
+    val qual = body.substring(q.qualStart, q.dotIdx)
     val dep = Dialect.depths(masked)
     val fromM = "(?is)\\bFROM\\b".r.findAllMatchIn(masked)
       .find(m => dep(m.start) == 0 && m.start > q.starIdx)
       .getOrElse(return None)
-    val cutM = ("(?is)\\b(GROUP\\s+BY|HAVING|ORDER\\s+BY|LIMIT|QUALIFY|" +
-      "WINDOW)\\b").r.findAllMatchIn(masked)
-      .find(m => dep(m.start) == 0 && m.start > fromM.end)
-    val probeTail = body.substring(fromM.start,
-      cutM.map(_.start).getOrElse(body.length))
     val cols: Seq[String] =
-      bodyDf(s"SELECT `$qual`.* $probeTail").schema.map(_.name)
+      bodyDf(s"SELECT `$qual`.* ${ColumnsSql.probeTail(body, masked, dep, fromM)}")
+        .schema.map(_.name)
     val raw = body.substring(q.qStart + 1, q.qEnd - 1).replace("''", "'")
     val core = q.op match {
       case "SIMILAR TO" => s"(?:$raw)"
@@ -317,15 +312,6 @@ object StarReplaceSql {
     Some(body.substring(0, q.qualStart) +
       keep.map(c => s"`$qual`.`$c`").mkString(", ") + body.substring(q.qEnd))
   }
-
-  /** Static-analysis twin: the filter collapses to the bare qualified
-    * star — identical dependency set, parseable without a schema. */
-  def stubQualifiedLike(stmt: String): String =
-    findQualifiedLike(stmt) match {
-      case Some(q) => stubQualifiedLike(
-        stmt.substring(0, q.starIdx + 1) + stmt.substring(q.qEnd))
-      case None => stmt
-    }
 
   /** LIKE-pattern → regex CORE (no anchors): `%` any run, `_` one char,
     * everything else literal. */

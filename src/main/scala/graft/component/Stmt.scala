@@ -12,8 +12,8 @@ import scala.util.control.NonFatal
   * [[Executor.runStatement]] (on the text it actually runs, after type
   * aliases substitute), [[SqlAnalyzer]] (dependencies, outputs, statement
   * type) and [[Actions.syntaxCheck]] (the parse verdict). Query bodies
-  * stay text: the executor runs them through `bodyDf`, the analyzer
-  * through [[SqlAnalyzer.bodyStub]] and Catalyst's parser.
+  * inside other statements stay text; each reader classifies them with
+  * [[Body.parse]], the one body model.
   */
 sealed trait Stmt
 
@@ -65,10 +65,11 @@ object Stmt {
   final case class SequenceBlocks(n: Long) extends Stmt
   final case class CopyToFile(p: CopyTo.Parsed) extends Stmt
   final case class CopyFromFile(p: CopyFrom.Parsed) extends Stmt
-  /** A bare query with DuckDB-only forms (PIVOT, ASOF, POSITIONAL, UNION
-    * BY NAME, star REPLACE/RENAME/LIKE, COLUMNS, DESCRIBE, SUMMARIZE):
-    * only the executor's body path runs it. */
-  final case class EngineQuery(sql: String) extends Stmt
+  /** A bare query whose [[Body]] is not [[Body.Plain]] (PIVOT, ASOF,
+    * POSITIONAL, UNION BY NAME, star REPLACE/RENAME/LIKE, COLUMNS,
+    * DESCRIBE, SUMMARIZE, percent LIMIT, or an unsupported form): only
+    * the executor's body path runs it. */
+  final case class EngineQuery(body: Body) extends Stmt
   /** Everything else is Spark SQL as written (SELECT, WITH, DELETE,
     * UPDATE, SET, ...), parsed by the session's Catalyst parser. */
   final case class Catalyst(sql: String) extends Stmt
@@ -168,12 +169,10 @@ object Stmt {
         .orElse(CopyTo.parse(s).map(CopyToFile))
         .orElse(CopyFrom.parse(s).map(CopyFromFile))
         .getOrElse {
-          if (Pivot.parse(s).isDefined || AsOfSql.parse(s).isDefined ||
-              UnionByNameSql.parse(s).isDefined || StarReplaceSql.has(s) ||
-              DescribeSql.parse(s).isDefined || ColumnsSql.has(s) ||
-              StarRenameSql.has(s) || StarReplaceSql.hasQualifiedLike(s) ||
-              PositionalSql.parse(s).isDefined) EngineQuery(s)
-          else Catalyst(s)
+          Body.parse(s) match {
+            case Body.Plain(_) => Catalyst(s)
+            case body => EngineQuery(body)
+          }
         }
   }
 

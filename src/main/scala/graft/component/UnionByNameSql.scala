@@ -1,6 +1,6 @@
 package graft.component
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** DuckDB `UNION [ALL] BY NAME` — column-matching set union, a DuckDB
@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   * front-end mapping like [[AsOfSql]].
   *
   * Shape: two or more depth-0 segments joined by set operators, at least
-  * one of which is `UNION [ALL] BY NAME`; each segment is a SELECT (or
-  * parenthesized query, PIVOT, ASOF — anything [[Executor]]'s bodyDf
-  * runs). The split covers ALL depth-0 set operators (plain
+  * one of which is `UNION [ALL] BY NAME`; each segment is a query body
+  * of its own ([[Body]]: a SELECT, a parenthesized query, PIVOT, ASOF,
+  * ...). The split covers ALL depth-0 set operators (plain
   * UNION/UNION ALL/EXCEPT [ALL] too), folded LEFT-ASSOCIATIVELY like
   * DuckDB: `a UNION BY NAME b UNION ALL c` is (distinct(a ∪ b)) UNION ALL
   * c, never distinct(a ∪ b ∪ c) — splitting only on the BY NAME spellings
@@ -35,9 +35,13 @@ object UnionByNameSql {
   final case class Parsed(segments: Seq[String], ops: Seq[SetOp],
                           orderBy: Option[String], limit: Option[Int])
 
-  def parse(stmt0: String): Option[Parsed] = {
-    val stmt = stmt0.trim.stripSuffix(";")
-    val masked = Dialect.maskQuoted(stmt)
+  private val setOp = "(?is)\\b(UNION|EXCEPT|INTERSECT)(\\s+ALL)?(\\s+BY\\s+NAME)?\\b".r
+
+  /** Parse a normalized body ([[Body.parse]]) and its mask as set
+    * operations with a BY NAME union; throws on the shapes DuckDB reads
+    * differently from a left fold. */
+  private[component] def parse(stmt: String, masked: String): Option[Parsed] = {
+    if ("(?i)\\bBY\\s+NAME\\b".r.findFirstIn(masked).isEmpty) return None
     val dep = Dialect.depths(masked)
     // a star-modifier `* EXCEPT(c)` (or pre-rewrite `* EXCLUDE`) is a
     // PROJECTION clause, not a set operator — an EXCEPT preceded by `*`
@@ -47,8 +51,7 @@ object UnionByNameSql {
       while (j >= 0 && stmt.charAt(j).isWhitespace) j -= 1
       j >= 0 && stmt.charAt(j) == '*'
     }
-    val ops0 = "(?is)\\b(UNION|EXCEPT|INTERSECT)(\\s+ALL)?(\\s+BY\\s+NAME)?\\b".r
-      .findAllMatchIn(masked)
+    val ops0 = setOp.findAllMatchIn(masked)
       .filter(m => dep(m.start) == 0 && !afterStar(m.start)).toList
     val ops = ops0.map { m =>
       SetOp(m.group(1).toUpperCase, m.group(2) != null, m.group(3) != null)
@@ -67,47 +70,30 @@ object UnionByNameSql {
     val segments0 = bounds.map { case (a, b) => stmt.substring(a, b).trim }
     if (segments0.exists(_.isEmpty)) return None
     // trailing ORDER BY / LIMIT on the LAST segment applies to the union
-    val lastMasked = Dialect.maskQuoted(segments0.last)
-    val lastDep = Dialect.depths(lastMasked)
-    val tailKws = "(?is)\\b(ORDER\\s+BY|LIMIT)\\b".r
-      .findAllMatchIn(lastMasked).filter(m => lastDep(m.start) == 0).toList
+    val lastStart = bounds.last._1
+    val tailKws = "(?is)\\b(ORDER\\s+BY|LIMIT)\\b".r.findAllMatchIn(masked)
+      .filter(m => m.start > lastStart && dep(m.start) == 0).toList
     val (lastSeg, orderBy, limit) = tailKws.headOption match {
       case None => (segments0.last, None, None)
       case Some(first) =>
         val segs = tailKws.zipWithIndex.map { case (m, i) =>
-          val end = if (i + 1 < tailKws.length) tailKws(i + 1).start
-            else segments0.last.length
-          m.group(1).toUpperCase.replaceAll("\\s+", " ") ->
-            segments0.last.substring(m.end, end).trim
+          val end = if (i + 1 < tailKws.length) tailKws(i + 1).start else stmt.length
+          m.group(1).toUpperCase.replaceAll("\\s+", " ") -> stmt.substring(m.end, end).trim
         }.toMap
-        (segments0.last.substring(0, first.start).trim,
+        (stmt.substring(lastStart, first.start).trim,
           segs.get("ORDER BY"),
           segs.get("LIMIT").flatMap(v => scala.util.Try(v.trim.toInt).toOption))
     }
     Some(Parsed(segments0.init :+ lastSeg, ops, orderBy, limit))
   }
 
-  /** Session-free stand-in for static analysis: positional UNION ALL has
-    * the identical dependency set (schemas don't matter unresolved). */
-  def stub(stmt: String): String =
-    parse(stmt) match {
-      case Some(p) => p.segments.mkString(" UNION ALL ")
-      case None => stmt
-    }
-
-  def df(spark: SparkSession, p: Parsed,
-         bodyDf: String => DataFrame): DataFrame = {
-    def leg(s: String): DataFrame = {
-      val t = s.trim
-      if (t.startsWith("(") && t.endsWith(")")) bodyDf(t.substring(1, t.length - 1))
-      else bodyDf(t)
-    }
+  /** Fold the legs' DataFrames, one per segment, under `p`'s operators. */
+  def df(p: Parsed, legs: Seq[DataFrame]): DataFrame = {
     // left-associative fold: each operator combines the ACCUMULATED
     // result with the next leg, so set semantics (distinct / except)
     // apply at the point the operator appears, exactly DuckDB's reading
-    val unioned = p.segments.tail.zip(p.ops)
-      .foldLeft(leg(p.segments.head)) { case (acc, (seg, op)) =>
-        val r = leg(seg)
+    val unioned = legs.tail.zip(p.ops)
+      .foldLeft(legs.head) { case (acc, (r, op)) =>
         op.kind match {
           case "UNION" =>
             val u = if (op.byName) acc.unionByName(r, allowMissingColumns = true)
@@ -119,26 +105,24 @@ object UnionByNameSql {
             throw new UserException(s"unsupported set operator: $other")
         }
       }
-    val sorted = p.orderBy match {
-      case Some(ob) =>
-        // depth-0 comma split: a bare split(",") would break
-        // `ORDER BY coalesce(a, b)` at the call's comma
-        val cols: Seq[Column] = Dialect.splitTop(ob).filter(_.nonEmpty).map { piece =>
-          // ASC/DESC and the NULLS qualifier (rewriteNullsLast appends
-          // one) split off — Column sort modifiers, not expression text
-          val m = "(?is)^(.*?)(?:\\s+(ASC|DESC))?(?:\\s+NULLS\\s+(FIRST|LAST))?\\s*$".r
-            .findFirstMatchIn(piece).get
-          val base = expr(m.group(1))
-          val desc = Option(m.group(2)).exists(_.equalsIgnoreCase("DESC"))
-          Option(m.group(3)).map(_.toLowerCase) match {
-            case Some("first") => if (desc) base.desc_nulls_first else base.asc_nulls_first
-            case Some("last") => if (desc) base.desc_nulls_last else base.asc_nulls_last
-            case _ => if (desc) base.desc else base.asc
-          }
-        }
-        unioned.orderBy(cols: _*)
-      case None => unioned
-    }
+    val sorted = p.orderBy.map(ob => unioned.orderBy(sortColumns(ob): _*)).getOrElse(unioned)
     p.limit.map(sorted.limit).getOrElse(sorted)
   }
+
+  /** An ORDER BY list as sort Columns. The split is at depth-0 commas (a
+    * bare split(",") would break `ORDER BY coalesce(a, b)` at the call's
+    * comma); ASC/DESC and the NULLS qualifier (the dialect's nulls-last
+    * pass appends one) are Column sort modifiers, not expression text. */
+  private[component] def sortColumns(orderBy: String): Seq[Column] =
+    Dialect.splitTop(orderBy).filter(_.nonEmpty).map { piece =>
+      val m = "(?is)^(.*?)(?:\\s+(ASC|DESC))?(?:\\s+NULLS\\s+(FIRST|LAST))?\\s*$".r
+        .findFirstMatchIn(piece).get
+      val base = expr(m.group(1))
+      val desc = Option(m.group(2)).exists(_.equalsIgnoreCase("DESC"))
+      Option(m.group(3)).map(_.toLowerCase) match {
+        case Some("first") => if (desc) base.desc_nulls_first else base.asc_nulls_first
+        case Some("last") => if (desc) base.desc_nulls_last else base.asc_nulls_last
+        case _ => if (desc) base.desc else base.asc
+      }
+    }
 }

@@ -125,8 +125,7 @@ object UnnestSql {
     }
     if (owner < 0) return stop
     val bd = dep(owner)
-    var blockEnd = owner
-    while (blockEnd < stmt.length && dep(blockEnd) >= bd) blockEnd += 1
+    val blockEnd = Dialect.blockEnd(masked, dep, owner)
     def firstAt(re: String, from: Int): Option[Int] =
       re.r.findAllMatchIn(masked).map(_.start)
         .find(p => p >= from && p < blockEnd && dep(p) == bd)

@@ -633,7 +633,7 @@ object Extended {
 
     // percent LIMIT (IDENTICAL SELECT text both engines, probed v1.0:
     // FLOOR(total · n/100) rows after the offset) — the Spark leg runs
-    // it through the executor's bodyDf chain via a CTAS wrapper (the
+    // it through the executor's body model via a CTAS wrapper (the
     // engine path: one count job, then offset+limit over the same plan).
     "q86_limit_percent" -> ((s, d) => {
       graft.component.DuckFunctions.register(s)

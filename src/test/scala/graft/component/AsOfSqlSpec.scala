@@ -16,6 +16,11 @@ class AsOfSqlSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
+  private def parse(body: String) = Body.parse(body) match {
+    case Body.AsOf(p) => Some(p)
+    case _ => None
+  }
+
   private def trades = Seq(
     (1L, "A", ts("2024-01-01 10:00:05"), 100.0),
     (2L, "A", ts("2024-01-01 10:00:15"), 101.0),
@@ -30,24 +35,24 @@ class AsOfSqlSpec extends SparkSpec {
     .toDF("q_sym", "q_ts", "bid")
 
   test("parse: canonical form with aliases, equality + one bound") {
-    val p = AsOfSql.parse(
+    val p = parse(
       "SELECT t.trade_id, q.bid FROM trades t ASOF JOIN quotes q " +
         "ON t.sym = q.q_sym AND t.t_ts >= q.q_ts").get
     assert(p.leftSrc == "trades" && p.leftAlias == "t")
     assert(p.rightSrc == "quotes" && p.rightAlias == "q")
     assert(p.keys == Seq(("sym", "q_sym")))
     assert(p.leftTs == "t_ts" && p.rightTs == "q_ts" && !p.leftOuter)
-    assert(AsOfSql.parse(
+    assert(parse(
       "SELECT * FROM a x ASOF LEFT JOIN b y ON x.k = y.k AND x.ts >= y.ts")
       .get.leftOuter)
     // a <= bound written right-to-left normalizes
-    val q = AsOfSql.parse(
+    val q = parse(
       "SELECT * FROM a x ASOF JOIN b y ON x.k = y.k AND y.ts <= x.ts").get
     assert(q.leftTs == "ts" && q.rightTs == "ts")
     // not ASOF: no match
-    assert(AsOfSql.parse("SELECT * FROM a JOIN b ON a.k = b.k").isEmpty)
+    assert(parse("SELECT * FROM a JOIN b ON a.k = b.k").isEmpty)
     // two bounds: rejected
-    assert(AsOfSql.parse(
+    assert(parse(
       "SELECT * FROM a x ASOF JOIN b y ON x.ts >= y.ts AND x.e >= y.e").isEmpty)
   }
 
@@ -61,13 +66,16 @@ class AsOfSqlSpec extends SparkSpec {
     assert(got == Map(1L -> 99.0, 2L -> 100.5, 3L -> 49.5))
   }
 
-  test("stub deletes the keyword, preserving a parseable plan + deps") {
-    val s = AsOfSql.stub(
-      "SELECT t.id FROM trades t ASOF LEFT JOIN quotes q ON t.s = q.s AND t.ts >= q.ts")
-    assert(s == "SELECT t.id FROM trades t LEFT JOIN quotes q ON t.s = q.s AND t.ts >= q.ts")
-    val a = SqlAnalyzer.analyzeStatement(spark,
-      "SELECT t.trade_id FROM trades t ASOF JOIN quotes q ON t.sym = q.q_sym AND t.t_ts >= q.q_ts")
-    assert(a.dependencies == Set("trades", "quotes"))
+  test("an ASOF body reads both sides: dependencies through the body model") {
+    for (join <- Seq("ASOF JOIN", "ASOF LEFT JOIN")) {
+      val a = SqlAnalyzer.analyzeStatement(spark,
+        s"SELECT t.trade_id FROM trades t $join quotes q ON t.sym = q.q_sym AND t.t_ts >= q.q_ts")
+      assert(a.dependencies == Set("trades", "quotes"), join)
+    }
+    val sub = SqlAnalyzer.analyzeStatement(spark,
+      "CREATE TABLE x AS SELECT * FROM (SELECT * FROM trades) t ASOF JOIN quotes q " +
+        "USING (sym, t_ts)")
+    assert(sub.dependencies == Set("trades", "quotes") && sub.outputs == Set("x"))
   }
 
   test("asofDf: latest quote at or before each trade; inner vs LEFT") {
@@ -118,7 +126,7 @@ class AsOfSqlSpec extends SparkSpec {
   test("trailing WHERE / ORDER BY / LIMIT are applied after the join") {
     trades.createOrReplaceTempView("trades")
     quotes.createOrReplaceTempView("quotes")
-    val p = AsOfSql.parse(
+    val p = parse(
       "SELECT t.trade_id, q.bid FROM trades t ASOF JOIN quotes q " +
         "ON t.sym = q.q_sym AND t.t_ts >= q.q_ts " +
         "WHERE q.bid > 49.5 ORDER BY q.bid DESC LIMIT 1").get
@@ -173,21 +181,25 @@ class AsOfSqlSpec extends SparkSpec {
     // an opaque run-time Spark parse error on the ASOF token
     val bad = "SELECT t.sym, count(*) FROM trades t ASOF JOIN quotes q " +
       "ON t.sym = q.q_sym AND t.t_ts >= q.q_ts GROUP BY t.sym"
-    assert(AsOfSql.unsupportedForm(bad).exists(_.contains("unsupported ASOF")))
+    def unsupported(stmt: String): Option[String] =
+      SqlAnalyzer.check(spark, Stmt.parse(stmt)).failed.toOption.collect {
+        case e: Body.UnsupportedBody => e.getMessage
+      }
+    assert(unsupported(bad).exists(_.contains("unsupported ASOF")))
     // ... also when wrapped in the CREATE body the executor actually runs
-    assert(AsOfSql.unsupportedForm(s"CREATE TABLE x AS $bad").isDefined)
+    assert(unsupported(s"CREATE TABLE x AS $bad").isDefined)
     // supported forms (incl. trailing ORDER BY now) report no issue
-    assert(AsOfSql.unsupportedForm(
+    assert(unsupported(
       "SELECT * FROM a x ASOF JOIN b y ON x.k = y.k AND x.ts >= y.ts " +
         "ORDER BY x.k LIMIT 5").isEmpty)
     // INSERT with a column list runs the remainder as the body — the
-    // guard must strip the list like the executor does, not false-flag
-    assert(AsOfSql.unsupportedForm(
+    // body model reads it the same way, no false flag
+    assert(unsupported(
       "INSERT INTO t (a, b) SELECT x.a, y.b FROM l x ASOF JOIN r y " +
         "ON x.k = y.k AND x.ts >= y.ts").isEmpty)
-    assert(AsOfSql.unsupportedForm("SELECT * FROM a JOIN b ON a.k = b.k").isEmpty)
+    assert(unsupported("SELECT * FROM a JOIN b ON a.k = b.k").isEmpty)
     // a string literal containing 'ASOF JOIN' is not an ASOF statement
-    assert(AsOfSql.unsupportedForm(
+    assert(unsupported(
       "SELECT 'ASOF JOIN docs' AS s FROM a GROUP BY s").isEmpty)
   }
 

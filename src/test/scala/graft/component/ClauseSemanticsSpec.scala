@@ -93,4 +93,51 @@ class ClauseSemanticsSpec extends SparkSpec {
     assert(sql("SELECT v FROM (VALUES (1), (2)) t(v) WHERE NULL")
       .collect().isEmpty)
   }
+
+  private def pairs(q: String) = sql(q).collect().map(r => (r.getInt(0), r.getInt(1))).toList
+
+  private def clauseTables(): Unit = {
+    import spark.implicits._
+    Seq((1, 10), (1, 20), (2, 15)).toDF("k", "t").createOrReplaceTempView("l")
+    Seq((1, 5, 100), (1, 15, 200), (2, 12, 300)).toDF("k", "t", "y").createOrReplaceTempView("r")
+  }
+
+  test("set-operation legs bound DISTINCT ON, QUALIFY and select-list UNNEST (probed v1.0)") {
+    clauseTables()
+    val rLeg = List((1, 100), (1, 200), (2, 300))
+    // DuckDB: 5 rows — every r row, and one l row per key
+    val d = pairs("SELECT DISTINCT ON (k) k, t FROM l UNION ALL SELECT k, y FROM r")
+    assert(d.length == 5 && rLeg.forall(d.contains), d)
+    assert(d.filterNot(rLeg.contains).map(_._1).sorted == List(1, 2), d)
+    val q = List((1, 20), (1, 100), (1, 200), (2, 15), (2, 300))
+    assert(pairs("SELECT k, t FROM l QUALIFY row_number() OVER (PARTITION BY k ORDER BY t DESC) = 1 " +
+      "UNION ALL SELECT k, y FROM r").sorted == q)
+    assert(pairs("SELECT k, y FROM r UNION ALL SELECT k, t FROM l " +
+      "QUALIFY row_number() OVER (PARTITION BY k ORDER BY t DESC) = 1").sorted == q)
+    val u = List((1, 10), (1, 11), (1, 20), (1, 21), (1, 100), (1, 200), (2, 15), (2, 16), (2, 300))
+    assert(pairs("SELECT k, unnest([t, t + 1]) AS u FROM l UNION ALL SELECT k, y FROM r").sorted == u)
+    assert(pairs("SELECT k, y FROM r UNION ALL SELECT k, unnest([t, t + 1]) AS u FROM l").sorted == u)
+  }
+
+  test("a parenthesized UNION ALL leg is no quantifier: its own ALL/ANY lowers (probed v1.0)") {
+    clauseTables()
+    assert(pairs("(SELECT k, t FROM l) UNION ALL " +
+      "(SELECT k, y FROM r WHERE t >= ALL (SELECT t FROM l WHERE k = 2))").sorted ==
+      List((1, 10), (1, 20), (1, 200), (2, 15)))
+    assert(pairs("SELECT k, t FROM l UNION ALL " +
+      "(SELECT k, y FROM r WHERE t > ANY (SELECT t FROM l WHERE k = 2))").sorted ==
+      List((1, 10), (1, 20), (2, 15)))
+  }
+
+  test("DISTINCT ON with QUALIFY in one block: QUALIFY filters first (probed v1.0)") {
+    clauseTables()
+    val base = "SELECT DISTINCT ON (k) k, t FROM l QUALIFY "
+    assert(pairs(base + "row_number() OVER (PARTITION BY k ORDER BY t DESC) = 1 ORDER BY k") ==
+      List((1, 20), (2, 15)))
+    assert(pairs(base + "row_number() OVER (PARTITION BY k ORDER BY t) = 1 ORDER BY k, t DESC") ==
+      List((1, 10), (2, 15)))
+    assert(pairs(base + "count(*) OVER (PARTITION BY k) > 1 ORDER BY k, t DESC") == List((1, 20)))
+    assert(pairs(base + "row_number() OVER (PARTITION BY k ORDER BY t DESC) = 1 ORDER BY k LIMIT 1") ==
+      List((1, 20)))
+  }
 }

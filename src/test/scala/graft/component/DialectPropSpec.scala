@@ -84,17 +84,15 @@ class DialectPropSpec extends AnyFunSuite {
       val stmt = s"SELECT 'use $trap here' AS hint FROM real_table"
       val out = Dialect.rewrite(Dialect.fromFirst(stmt))
       assert(out.contains(s"'use $trap here'"), s"trap: $trap → $out")
-      val stub = Dialect.analysisStub(stmt)
-      assert(stub.contains(s"'use $trap here'"), s"stub trap: $trap → $stub")
+      assert(Body.parse(stmt) == Body.Plain(stmt), s"body trap: $trap")
     }
   }
 
-  test("fromFirst and analysisStub are total on arbitrary input") {
+  test("fromFirst and Body.parse are total on arbitrary input") {
     for (s <- samples(sqlish, 500)) {
       Dialect.fromFirst(s)      // must not throw
-      Dialect.analysisStub(s)   // must not throw
+      Body.parse(s)             // the body model is total
       Macros.expand(s)          // must not throw (no defs registered)
-      PositionalSql.stub(s)     // round-12 stubs likewise
       Stmt.parse(s)             // the statement model is total too
     }
   }
@@ -111,7 +109,7 @@ class DialectPropSpec extends AnyFunSuite {
         assert(UnnestSql.rewrite(s) == s, s"UnnestSql perturbed: $s")
       if (!"(?i)\\bPOSITIONAL\\s+JOIN\\b".r
             .findFirstIn(Dialect.maskQuoted(s)).isDefined)
-        assert(PositionalSql.stub(s) == s, s"PositionalSql perturbed: $s")
+        assert(!Body.parse(s).isInstanceOf[Body.Positional], s"Positional matched: $s")
     }
   }
 

@@ -5,8 +5,8 @@ import java.nio.file.{Files, Path}
 import graft.SparkSpec
 
 /** DuckDB simplified PIVOT / UNPIVOT statement support ([[Pivot]]):
-  * grammar parsing, the session-free dependency stub, the dynamic
-  * DataFrame execution path, and an end-to-end component run. */
+  * grammar parsing through the body model, its dependencies, the
+  * dynamic DataFrame execution path, and an end-to-end component run. */
 class PivotSpec extends SparkSpec {
 
   import spark.implicits._
@@ -16,21 +16,26 @@ class PivotSpec extends SparkSpec {
     ("west", "Q1", 5L), ("west", "Q3", 7L))
     .toDF("region", "quarter", "amount")
 
+  private def parse(body: String) = Body.parse(body) match {
+    case Body.Pivot(p) => Some(p)
+    case _ => None
+  }
+
   test("parse extracts src/on/agg/groups from the simplified grammar") {
-    val p = Pivot.parse(
+    val p = parse(
       "PIVOT sales ON quarter USING sum(amount) GROUP BY region").get
     assert(p.src == "sales" && p.on == "quarter")
     assert(p.aggFn == "sum" && p.aggArg == "amount")
     assert(p.groupCols.contains(Seq("region")))
     // subquery source, no GROUP BY, wrapping parens
-    val q = Pivot.parse(
+    val q = parse(
       "(PIVOT (SELECT * FROM sales WHERE amount > 0) ON quarter USING count(*))").get
     assert(q.src.startsWith("(SELECT") && q.groupCols.isEmpty)
     assert(q.aggFn == "count" && q.aggArg == "*")
     // non-pivot statements do not match
-    assert(Pivot.parse("SELECT * FROM t").isEmpty)
+    assert(parse("SELECT * FROM t").isEmpty)
     // ON/USING inside the subquery do not confuse the depth-0 scan
-    val r = Pivot.parse(
+    val r = parse(
       "PIVOT (SELECT a FROM x JOIN y ON x.id = y.id) ON a USING max(a)")
     assert(r.isDefined && r.get.on == "a")
   }
@@ -67,18 +72,19 @@ class PivotSpec extends SparkSpec {
     assert(out.columns.toList == List("region", "Q1", "Q2", "Q3"))
   }
 
-  test("staticStub reduces PIVOT to a parseable SELECT with the same deps") {
-    val bare = Pivot.staticStub("PIVOT sales ON q USING sum(x)")
-    assert(bare == "SELECT * FROM sales")
-    val create = Pivot.staticStub(
-      "CREATE VIEW v AS (PIVOT sales ON q USING sum(x) GROUP BY r)")
-    assert(create == "CREATE VIEW v AS SELECT * FROM sales")
-    val a = SqlAnalyzer.analyzeStatement(spark,
-      "CREATE VIEW v AS PIVOT sales ON q USING sum(x)")
-    assert(a.dependencies == Set("sales") && a.outputs == Set("v"))
-    // untouched statements come back verbatim
+  test("a PIVOT body reads its source: dependencies through the body model") {
+    assert(parse("PIVOT sales ON q USING sum(x)").map(_.src).contains("sales"))
+    for (stmt <- Seq(
+        "CREATE VIEW v AS (PIVOT sales ON q USING sum(x) GROUP BY r)",
+        "CREATE VIEW v AS PIVOT sales ON q USING sum(x)",
+        "CREATE VIEW v AS PIVOT (SELECT * FROM sales JOIN r USING (k)) ON q USING sum(x)")) {
+      val a = SqlAnalyzer.analyzeStatement(spark, stmt)
+      assert(a.dependencies == (if (stmt.contains("JOIN")) Set("sales", "r") else Set("sales")) &&
+        a.outputs == Set("v"), stmt)
+    }
+    // untouched statements are plain bodies
     val plain = "SELECT PIVOT_FREE FROM t"
-    assert(Pivot.staticStub(plain) == plain)
+    assert(Body.parse(plain) == Body.Plain(plain))
   }
 
   test("rewriteUnpivot produces Spark UNPIVOT that runs") {

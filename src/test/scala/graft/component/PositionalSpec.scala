@@ -82,18 +82,29 @@ class PositionalSpec extends SparkSpec {
     assert(d4.collect().head.getLong(0) == 3)
   }
 
-  test("stub and unsupported forms") {
+  test("positional forms and their dependencies through the body model") {
     val s = "SELECT * FROM a POSITIONAL JOIN b WHERE x > 1"
-    assert(PositionalSql.stub(s) == "SELECT * FROM a CROSS JOIN b WHERE x > 1")
-    assert(PositionalSql.unsupportedForm(s).isEmpty)
-    assert(PositionalSql.unsupportedForm(
-      "SELECT * FROM a POSITIONAL JOIN b POSITIONAL JOIN c")
+    assert(Body.parse(s).isInstanceOf[Body.Positional])
+    assert(SqlAnalyzer.analyzeStatement(spark, s).dependencies == Set("a", "b"))
+    def unsupported(body: String) = Body.parse(body) match {
+      case Body.Unsupported(m) => Some(m)
+      case _ => None
+    }
+    assert(unsupported("SELECT * FROM a POSITIONAL JOIN b POSITIONAL JOIN c")
       .exists(_.contains("chained")))
-    assert(PositionalSql.unsupportedForm(
-      "SELECT * FROM a POSITIONAL JOIN b JOIN c ON b.x = c.x")
+    assert(unsupported("SELECT * FROM a POSITIONAL JOIN b JOIN c ON b.x = c.x")
       .exists(_.contains("unsupported")))
     // a quoted literal never triggers the path
-    assert(!PositionalSql.has("SELECT 'POSITIONAL JOIN' AS s FROM t"))
+    val lit = "SELECT 'POSITIONAL JOIN' AS s FROM t"
+    assert(Body.parse(lit) == Body.Plain(lit))
+  }
+
+  test("an unaliased source's own name qualifies its columns (probed v1.0)") {
+    Seq((1, 10), (1, 20), (2, 15)).toDF("k", "t").createOrReplaceTempView("l")
+    Seq(100, 200, 300).toDF("y").createOrReplaceTempView("r2")
+    val d = PositionalSql.df(spark, "SELECT l.k, l.t, r2.y FROM l POSITIONAL JOIN r2").get
+    assert(d.collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toList ==
+      List((1, 10, 100), (1, 20, 200), (2, 15, 300)))
   }
 
   test("executor end-to-end: CTAS over a positional join") {

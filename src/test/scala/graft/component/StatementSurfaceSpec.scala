@@ -318,8 +318,7 @@ class StatementSurfaceSpec extends SparkSpec {
     // bare FROM statement through prepare (the interactive idiom)
     Dialect.prepare("FROM ff_src").foreach(ex.runStatement) // must not throw
     // analysis sees the same deps
-    val a = SqlAnalyzer.analyzeStatement(spark,
-      Dialect.analysisStub("CREATE TABLE x AS FROM orders"))
+    val a = SqlAnalyzer.analyzeStatement(spark, "CREATE TABLE x AS FROM orders")
     assert(a.dependencies == Set("orders") && a.outputs == Set("x"))
   }
 
@@ -400,8 +399,8 @@ class StatementSurfaceSpec extends SparkSpec {
       "SELECT * FROM orders UNION ALL BY NAME SELECT * FROM nation"))
     assert(a.dependencies == Set("orders", "nation"))
     // trailing LIMIT applies to the union result
-    val p = UnionByNameSql.parse(
-      "SELECT * FROM a UNION BY NAME SELECT * FROM b ORDER BY x DESC LIMIT 2").get
+    val Body.UnionByName(p, _) = Body.parse(
+      "SELECT * FROM a UNION BY NAME SELECT * FROM b ORDER BY x DESC LIMIT 2")
     assert(p.segments == Seq("SELECT * FROM a", "SELECT * FROM b"))
     assert(p.orderBy.contains("x DESC") && p.limit.contains(2))
     assert(p.ops == Seq(UnionByNameSql.SetOp("UNION", all = false, byName = true)))
@@ -438,7 +437,7 @@ class StatementSurfaceSpec extends SparkSpec {
     assert(kept == List(1L, 2L), kept)
     // INTERSECT binds tighter than UNION — reject loudly, never mis-fold
     val e = intercept[UserException] {
-      UnionByNameSql.parse("SELECT * FROM lsa UNION BY NAME " +
+      ex.runStatement("SELECT * FROM lsa UNION BY NAME " +
         "SELECT * FROM lsb INTERSECT SELECT * FROM lsc")
     }
     assert(e.getMessage.toLowerCase.contains("intersect"), e.getMessage)
@@ -494,8 +493,9 @@ class StatementSurfaceSpec extends SparkSpec {
     // MULTIPLICATION by replace() is never a star modifier: the `*`
     // follows an operand (identifier / string literal), not a
     // select-list position
-    assert(!StarReplaceSql.has("SELECT w * replace(s, 'a', 'b') FROM t"))
-    assert(!StarReplaceSql.has("SELECT 'x' * replace(s, 'a', 'b') FROM t"))
+    for (q <- Seq("SELECT w * replace(s, 'a', 'b') FROM t",
+        "SELECT 'x' * replace(s, 'a', 'b') FROM t"))
+      assert(Body.parse(q) == Body.Plain(q), q)
     ex.runStatement("CREATE TABLE sr7 AS SELECT id * " +
       "CAST(replace('1,5', ',', '.') AS DOUBLE) AS v FROM sr_t")
     assert(spark.table("sr7").collect().map(_.getDouble(0)).sorted.toList ==
