@@ -2,6 +2,8 @@ package graft.component
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
 
@@ -16,10 +18,11 @@ import org.apache.spark.sql.catalyst.expressions.Literal
   *   4. plan: producer map → per-block Kahn batches (A13–A16) over the
   *      dependency analysis, which runs once, before step 2 (the startup
   *      syntax check reads the same analysis);
-  *   5. execute blocks sequentially, batches thread-parallel (A17) — new
-  *      tables materialize into `out/files/warehouse/`;
+  *   5. execute blocks sequentially, batches thread-parallel (A17) — table
+  *      state lives in Spark's block manager, and each changed table is
+  *      written to `out/files/warehouse/` once, at the end;
   *   6. export each output mapping as single-file quoted CSV + manifest
-  *      (A6–A10).
+  *      (A6–A10), mappings concurrently.
   *
   * Sync actions (`syntax_check`, `expected_input_tables`, `lineage`,
   * `execution_plan`) dispatch without executing (A19–A22).
@@ -44,6 +47,8 @@ object Component {
     // re-attaches its own via `.types.sql` at Executor construction
     // (DuckDB types live in the database file)
     TypeSql.reset()
+    // SET VARIABLE values live per run like the other session objects
+    VariableSql.clear()
 
     // A26: resolve the configured compatibility version through the
     // registry (alias + unsupported-falls-back-to-default, the reference
@@ -104,19 +109,25 @@ object Component {
           issues.map(i => s"${i.query}: ${i.message}").mkString("\n"))
     }
 
-    // 2. warehouse passthrough (prior run's materialized tables). A
-    // subdirectory with a meta.json is a graft.ops.DedupIndex — engine
-    // STATE riding the same run-to-run contract (the reference's
-    // `.duck.db` passthrough), not a table: it is consumed through
-    // DedupIndex.load, never registered as a view.
+    // 2. warehouse passthrough (prior run's materialized tables), read
+    // concurrently and registered in dir-name order. A subdirectory with
+    // a meta.json is a graft.ops.DedupIndex — engine STATE riding the
+    // same run-to-run contract (the reference's `.duck.db` passthrough),
+    // not a table: it is consumed through DedupIndex.load, never
+    // registered as a view.
+    val threads = SystemResources.resolveThreads(config.threads)
     val inWarehouse = Paths.get(dataDir, "in", "files", "warehouse")
     if (Files.isDirectory(inWarehouse)) {
       val listing = Files.list(inWarehouse)
-      try listing.forEach { p =>
-        if (Files.isDirectory(p) && !Files.exists(p.resolve("meta.json")))
-          spark.read.parquet(p.toString)
-            .createOrReplaceTempView(Names.view(p.getFileName.toString))
-      } finally listing.close()
+      val dirs =
+        try listing.iterator().asScala.filter(p =>
+          Files.isDirectory(p) && !Files.exists(p.resolve("meta.json")))
+          .toList.sortBy(_.getFileName.toString)
+        finally listing.close()
+      Parallel.map(threads, dirs)(p => spark.read.parquet(p.toString))
+        .zip(dirs).foreach { case (df, p) =>
+          df.createOrReplaceTempView(Names.view(p.getFileName.toString))
+        }
     }
 
     // 3. ingest
@@ -126,7 +137,6 @@ object Component {
     val outWarehouse = Paths.get(dataDir, "out", "files", "warehouse")
     Files.createDirectories(outWarehouse)
     val plan = Planner.plan(queries)
-    val threads = SystemResources.resolveThreads(config.threads)
     val stats = new Executor(spark, outWarehouse.toString, threads).execute(plan)
 
     // 6. export

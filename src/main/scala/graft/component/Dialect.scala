@@ -1948,9 +1948,10 @@ object Dialect {
     * misconfigure Spark either. `SET k = v` already parses natively. */
   private def rewritePragma(stmt: String): String = {
     // transaction + maintenance statements. BEGIN/COMMIT/END are inert:
-    // each block already runs as one session, and every table
-    // materialization is an atomic staging-dir swap — the weaker
-    // statement-level atomicity is this engine's documented semantics.
+    // each block already runs as one session, and every table-state
+    // swap is atomic (the new snapshot registers only once computed) —
+    // the weaker statement-level atomicity is this engine's documented
+    // semantics.
     // ROLLBACK must NOT be silently inert (the user asked for work to be
     // undone; pretending it happened is the one unacceptable answer) —
     // the executor surfaces it loudly. CHECKPOINT/VACUUM/ANALYZE are

@@ -17,11 +17,14 @@ import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
   * buys latency on many small queries.
   *
   * Mutable-table semantics over immutable DataFrames (SURVEY §7 "hard
-  * parts"): CREATE VIEW registers lazily; CREATE TABLE materializes to the
-  * warehouse directory (parquet) and registers the read-back — which also
-  * implements the reference's database-passthrough (A11); INSERT unions and
-  * re-registers; UPDATE/DELETE re-derive with when()/filter() from the
-  * parsed assignments/condition.
+  * parts"): CREATE VIEW registers lazily; CREATE TABLE computes the body
+  * once into Spark's block manager and registers that snapshot; INSERT
+  * unions and re-snapshots; UPDATE/DELETE re-derive with when()/filter()
+  * from the parsed assignments/condition. The executor keeps a registry of
+  * the tables it holds, and at the end of every [[execute]] call writes
+  * each table that call changed to the warehouse directory (parquet), once
+  * — the reference's database passthrough (A11), where DuckDB keeps every
+  * table in one database and writes the `.duck.db` file once.
   */
 final case class QueryTiming(name: String, seconds: Double)
 final case class ExecutionStats(timings: List[QueryTiming]) {
@@ -58,6 +61,12 @@ private[component] final case class TableMeta(
     copy(defaults = defaults - c.toLowerCase,
       notNull = notNull.filterNot(_.equalsIgnoreCase(c)))
 }
+
+/** A table an [[Executor]] holds: its warehouse dir name and its current
+  * block-manager snapshot, with the nullability its statement computed
+  * (the catalog registers the snapshot all-nullable, as a parquet read
+  * would). */
+private[component] final case class Held(dir: String, df: DataFrame)
 
 class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
 
@@ -119,18 +128,38 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       indexNames.values.exists { case (t, cols) =>
         t == table && cols.exists(_.equalsIgnoreCase(c)) }
 
+  /** The tables this executor holds: lowercased sanitized name → the
+    * warehouse dir name (the spelling that created it) and the current
+    * snapshot. `changed` names every table whose state changed since the
+    * last [[persist]], dropped and renamed-away ones included. */
+  private val held = scala.collection.concurrent.TrieMap[String, Held]()
+  private val changed = scala.collection.concurrent.TrieMap[String, Unit]()
+
+  /** Register `df` as the state of table `name`. */
+  private def hold(name: String, df: DataFrame): Unit = {
+    val key = Names.view(name).toLowerCase
+    held.updateWith(key)(h =>
+      Some(Held(h.fold(Names.view(name))(_.dir), df)))
+    changed.put(key, ())
+    register(name, GraftSqlBridge.asNullable(df))
+  }
+
+  /** `sanitized` no longer names a table this executor holds. */
+  private def release(sanitized: String): Unit = {
+    held.remove(sanitized.toLowerCase)
+    changed.put(sanitized.toLowerCase, ())
+  }
+
   /** The constraint-registry window [[IntrospectSql]] reads through.
     * Catalog = the session's registered relations minus engine-internal
-    * names; BASE TABLE = a warehouse directory exists (file-read helper
+    * names; BASE TABLE = a table this executor holds (file-read helper
     * views registered by FileReads list as VIEWs — a documented
     * impurity vs DuckDB, whose table functions are not cataloged). */
   private lazy val introspectMeta: IntrospectSql.Meta = new IntrospectSql.Meta {
     def pk(t: String): Seq[String] = metaOf(t.toLowerCase).pk
     def notNull(t: String): Seq[String] = metaOf(t.toLowerCase).notNull
     def defaults(t: String): Map[String, String] = metaOf(t.toLowerCase).defaults
-    def isBaseTable(n: String): Boolean =
-      java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(warehouseDir, Names.view(n)))
+    def isBaseTable(n: String): Boolean = held.contains(Names.view(n).toLowerCase)
     def catalogNames: Seq[String] =
       spark.catalog.listTables().collect().map(_.name)
         .filterNot(n => n.startsWith("__graft") || n.startsWith(".staging"))
@@ -168,9 +197,9 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
   /** View definitions registered this run, in creation order:
     * lowercased sanitized name → (sanitized name, body SQL, direct deps).
     * Registering a view stores the eagerly-analyzed plan, which pins the
-    * backing parquet file listing of every table it reads; the reference's
-    * DuckDB views are late-bound instead. [[rebind]] restores that
-    * semantics after DML swaps a table's files. */
+    * snapshot of every table it reads; the reference's DuckDB views are
+    * late-bound instead. [[rebind]] restores that semantics after DML
+    * swaps a table's snapshot. */
   private val viewDefs =
     new java.util.LinkedHashMap[String, (String, String, Set[String])]()
 
@@ -178,14 +207,13 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     * connection-scoped prepared statements; [[PrepareSql]]). */
   private val prepared = scala.collection.concurrent.TrieMap[String, String]()
 
-  /** Re-register every view that (transitively) depends on `changed` after
-    * its backing files were swapped by a DML re-materialization — otherwise
-    * a block-1 view read after a block-2 INSERT/UPDATE/DELETE throws
-    * FileNotFoundException on the deleted old files. Creation order is a
-    * valid re-bind order: a view body can only reference objects that
+  /** Re-register every view that (transitively) depends on `table` after
+    * DML swapped its snapshot — otherwise a block-1 view read after a
+    * block-2 INSERT/UPDATE/DELETE still reads the old state. Creation order
+    * is a valid re-bind order: a view body can only reference objects that
     * already existed when it was created. */
-  private def rebind(changed: String): Unit = viewDefs.synchronized {
-    val affected = scala.collection.mutable.Set(changed)
+  private def rebind(table: String): Unit = viewDefs.synchronized {
+    val affected = scala.collection.mutable.Set(table)
     viewDefs.forEach { (key, defn) =>
       val (sanitized, body, deps) = defn
       if (deps.exists(affected)) {
@@ -195,6 +223,9 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     }
   }
 
+  /** Run the plan's blocks in order and each batch's queries on the pool,
+    * then [[persist]] the tables the plan changed. A failed statement
+    * fails the call before anything is written. */
   def execute(plan: ExecutionPlan): ExecutionStats = {
     val pool = Executors.newFixedThreadPool(math.max(1, threads))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
@@ -211,8 +242,36 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         // any failure aborts the run (reference: collect failures, cancel rest)
         timings ++= Await.result(Future.sequence(fs), Duration.Inf)
       }
+      persist()
     } finally pool.shutdown()
     ExecutionStats(timings.toList)
+  }
+
+  /** Write every table changed since the last persist to its warehouse
+    * dir, concurrently on `ec`, and delete the dir of every table dropped
+    * or renamed away. Each write stages into a fresh directory and moves
+    * into place, replacing any dir the table had before (under any
+    * spelling of its name). */
+  def persist()(implicit ec: ExecutionContext): Unit = {
+    import java.nio.file.{Files, Paths}
+    val keys = changed.keys.toList.sorted
+    val listing = Option(Paths.get(warehouseDir).toFile.listFiles()).getOrElse(Array.empty)
+    val onDisk = listing.filter(f => f.isDirectory && !f.getName.startsWith(".staging_"))
+      .map(_.toPath).groupBy(_.getFileName.toString.toLowerCase)
+    val writes = keys.map { key =>
+      Future {
+        val staged = held.get(key).map { h =>
+          val staging = Paths.get(warehouseDir,
+            s".staging_${h.dir}_${version.incrementAndGet()}")
+          h.df.write.mode("overwrite").parquet(staging.toString)
+          (staging, Paths.get(warehouseDir, h.dir))
+        }
+        onDisk.getOrElse(key, Array.empty).foreach(deleteRecursively)
+        staged.foreach { case (staging, dir) => Files.move(staging, dir) }
+        changed.remove(key)
+      }
+    }
+    Await.result(Future.sequence(writes), Duration.Inf)
   }
 
   /** Run one rewritten statement against the session catalog. Returns the
@@ -262,6 +321,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
           viewDefs.put(sanitized.toLowerCase, (sanitized, body, deps))
         }
         register(name, bodyDf(body))
+        if (held.contains(sanitized.toLowerCase)) release(sanitized)
       }
 
     case Stmt.CreateTableAs(name, body, ifNotExists) =>
@@ -438,17 +498,15 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       if (!existed && !ifExists)
         throw new UserException(s"ALTER ... RENAME: $from does not exist")
       if (existed) {
-        // a materialized table's files MOVE to the new name's warehouse
-        // dir — left under the old name, a later CREATE TABLE of that
-        // name would overwrite the renamed table's data
-        val srcDir = java.nio.file.Paths.get(warehouseDir, src)
-        if (java.nio.file.Files.isDirectory(srcDir)) {
-          val dstDir = java.nio.file.Paths.get(warehouseDir, Names.view(to))
-          if (java.nio.file.Files.exists(dstDir)) deleteRecursively(dstDir)
-          java.nio.file.Files.move(srcDir, dstDir)
-          register(to, spark.read.parquet(dstDir.toString))
-        } else {
-          register(to, spark.table(s"`$src`")) // view: same analyzed plan
+        // a held table's snapshot moves to the new name, and [[persist]]
+        // writes it there and deletes the old name's dir
+        held.get(src.toLowerCase) match {
+          case Some(h) =>
+            release(src)
+            hold(to, h.df)
+          case None =>
+            register(to, spark.table(s"`$src`")) // view: same analyzed plan
+            if (held.contains(Names.view(to).toLowerCase)) release(Names.view(to))
         }
         spark.catalog.dropTempView(src)
         renameTableMeta(src.toLowerCase, Names.view(to).toLowerCase)
@@ -460,11 +518,10 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
           }
           // DuckDB's late-bound views would error after the rename; this
           // engine's eager-bind contract keeps dependent views WORKING
-          // instead — but a materialized table's files just MOVED, so
-          // their captured file indexes point at deleted paths. Re-run
-          // each (transitively) dependent view with references renamed,
-          // in creation order, recording the new name in body + deps so
-          // later DML on the new name keeps rebinding them.
+          // instead. Re-run each (transitively) dependent view with
+          // references renamed, in creation order, recording the new name
+          // in body + deps so later DML on the new name keeps rebinding
+          // them.
           val affected =
             scala.collection.mutable.Set(src.toLowerCase, from.toLowerCase)
           viewDefs.forEach { (key, defn) =>
@@ -491,6 +548,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         spark.catalog.dropTempView(sanitized)
         viewDefs.synchronized { viewDefs.remove(sanitized.toLowerCase) }
         clearTableMeta(sanitized.toLowerCase)
+        if (held.contains(sanitized.toLowerCase)) release(sanitized)
       }
 
     case Stmt.Upsert(u) =>
@@ -650,11 +708,10 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
             .map(e => df.filter(!coalesce(GraftSqlBridge.column(e), lit(false))))
             .getOrElse(df.limit(0))
           if (returning.isDefined) {
-            // the deleted rows' OLD values — pinned before the swap
-            // deletes the files they'd be read from
+            // the deleted rows' OLD values, read from the old snapshot
             val hit = cond.map(e =>
               coalesce(GraftSqlBridge.column(e), lit(false))).getOrElse(lit(true))
-            delta = Some(df.filter(hit).localCheckpoint())
+            delta = Some(df.filter(hit))
           }
           replace(name, out)
 
@@ -824,23 +881,18 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
   }
 
   /** The one table-state swap (CREATE TABLE, INSERT, UPDATE, DELETE,
-    * MERGE, upsert, COPY FROM, ALTER TABLE): enforce `name`'s constraints
-    * on the write pass, persist to the warehouse dir (parquet), register
-    * the read-back — which cuts lineage and survives into the next run's
-    * input (A11 database passthrough) — and re-bind the views over it.
-    * Writes stage into a fresh directory and swap in afterwards:
-    * re-derivations READ the current files of the same table while
-    * writing the new state, so an in-place overwrite would consume its
-    * own deletes. */
+    * MERGE, upsert, COPY FROM, ALTER TABLE): compute `df` once, with
+    * `name`'s constraints enforced on that pass, into a block-manager
+    * snapshot (an eager local checkpoint, MEMORY_AND_DISK), hold it as
+    * the table's state and re-bind the views over it. The snapshot cuts
+    * lineage, and a NOT NULL or CHECK violation fails the statement that
+    * writes the table. No file is written here: [[persist]] writes the
+    * table once, at the end of the [[execute]] call. A superseded
+    * snapshot is left to Spark's ContextCleaner, because a running plan
+    * may still read it. */
   private def replace(name: String, df: DataFrame): Unit = {
-    import java.nio.file.{Files, Paths}
-    val dir = Paths.get(warehouseDir, Names.view(name))
-    val staging = Paths.get(warehouseDir,
-      s".staging_${Names.view(name)}_${version.incrementAndGet()}")
-    enforced(name, df).write.mode("overwrite").parquet(staging.toString)
-    if (Files.exists(dir)) deleteRecursively(dir) // replace previous state
-    Files.move(staging, dir)
-    register(name, spark.read.parquet(dir.toString))
+    hold(name, enforced(name, df)
+      .localCheckpoint(eager = true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     rebind(Names.view(name).toLowerCase)
   }
 
@@ -1066,11 +1118,10 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     val (keptTgt, tgtAnnotated) = if (!needJoin) (existing, None)
     else if (deletesEveryMatch) {
       // the RETURNING delta is the left-semi complement: old values,
-      // pinned before the swap deletes the files they are read from
+      // read from the old snapshot
       val deleted = if (!wantDelta) None
         else Some(againstSource("left_semi")
-          .withColumn("__m_action", lit(matchedClauses.head.idx))
-          .localCheckpoint())
+          .withColumn("__m_action", lit(matchedClauses.head.idx)))
       (againstSource("left_anti"), deleted)
     } else {
       // SCALE fast path: the row_number dedup below shuffles the FULL
@@ -1302,7 +1353,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     aligned
   }
 
-  /** EXPORT DATABASE: dump every warehouse table (data + CREATE TABLE
+  /** EXPORT DATABASE: dump every held table (data + CREATE TABLE
     * DDL with its PRIMARY KEY), every UNIQUE index, every live sequence
     * (CREATE SEQUENCE with the CURRENT counter as START, so a replayed
     * warehouse resumes key generation where it left off) and every view
@@ -1330,16 +1381,13 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         .getOrElse(dt.sql.replace("STRING", "VARCHAR"))
     val out = Paths.get(e.dir)
     Files.createDirectories(out)
-    val tables = Option(Paths.get(warehouseDir).toFile.listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && !f.getName.startsWith(".staging_"))
-      .map(_.getName).sorted
+    val tables = held.values.toSeq.sortBy(_.dir)
     val schema = new StringBuilder
     val load = new StringBuilder
     SequenceSql.exportDdl.foreach(s => schema.append(s).append("\n"))
     TypeSql.exportDdl.foreach(s => schema.append(s).append("\n"))
-    for (t <- tables) {
-      val df = spark.read.parquet(Paths.get(warehouseDir, t).toString)
+    for (Held(t, state) <- tables) {
+      val df = GraftSqlBridge.asNullable(state)
       // DEFAULT / NOT NULL ride the column defs so a replay keeps the
       // insert-time behavior, not just the shape
       val meta = metaOf(t.toLowerCase)
@@ -1387,7 +1435,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     // UNIQUE indexes declare upsert keys — replayed through the CREATE
     // INDEX path (non-unique indexes are inert accelerators here and
     // carry no replayable column list)
-    val tableSet = tables.map(_.toLowerCase).toSet
+    val tableSet = tables.map(_.dir.toLowerCase).toSet
     indexNames.toSeq.sortBy(_._1).foreach { case (name, (tbl, cols)) =>
       if (cols.nonEmpty && tableSet(tbl))
         schema.append(s"CREATE UNIQUE INDEX ${ident(name)} ON " +

@@ -12,15 +12,21 @@ import org.apache.spark.sql.SparkSession
   * output manifest carrying destination/pk/incremental and the schema
   * down-mapped to base types.
   *
-  * Spark writes directories of part files; `coalesce(1)` + rename produces
-  * the single-file contract. The coalesce is an export-boundary cost only —
-  * upstream transforms keep full parallelism, and a view's trailing ORDER
-  * BY survives because the sort sits above the final exchange.
+  * Spark writes directories of part files, one per partition, all in
+  * parallel; concatenating them in partition order produces the
+  * single-file contract with the rows in the plan's order, so a view's
+  * trailing ORDER BY survives.
   */
 object Export {
 
+  /** Export every output mapping concurrently (on the resolved `threads`
+    * lanes). Mappings that write one destination file share a lane and
+    * run in config order, so the last one still wins the file. */
   def exportAll(spark: SparkSession, dataDir: String, config: Config): Unit = {
-    config.outputTables.foreach(t => exportTable(spark, dataDir, t))
+    val lanes = config.outputTables.map(_.source).distinct
+      .map(s => config.outputTables.filter(_.source == s))
+    Parallel.map(SystemResources.resolveThreads(config.threads), lanes)(
+      _.foreach(t => exportTable(spark, dataDir, t)))
     exportFileManifests(dataDir, config)
   }
 
@@ -69,17 +75,21 @@ object Export {
   def writeSingleCsv(df: org.apache.spark.sql.DataFrame, dest: Path): Unit = {
     val tmp = Files.createTempDirectory("graft_csv_")
     val stage = tmp.resolve("stage").toString
-    df.coalesce(1).write
+    df.write
       .option("header", "false")
       .option("quoteAll", "true")
       .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
       .option("dateFormat", "yyyy-MM-dd")
       .mode("overwrite")
       .csv(stage)
+    // `part-<partition>-<job>.csv`: the partition number orders the parts
+    val partNo = "^part-(\\d+)-".r
     val listing = Files.list(Paths.get(stage))
-    val part =
-      try listing.iterator().asScala
-        .find(_.getFileName.toString.startsWith("part-"))
+    val parts =
+      try listing.iterator().asScala.toList
+        .flatMap(p => partNo.findFirstMatchIn(p.getFileName.toString)
+          .map(m => (m.group(1).toLong, p)))
+        .sortBy(_._1).map(_._2)
       finally listing.close()
     Files.createDirectories(dest.getParent)
     val header = df.columns
@@ -88,7 +98,7 @@ object Export {
     val out = Files.newOutputStream(dest)
     try {
       out.write(header.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      part.foreach(p => Files.copy(p, out)) // zero rows ⇒ no part file
+      parts.foreach(p => Files.copy(p, out)) // empty partitions write no part
     } finally out.close()
     // best-effort cleanup of the staging dir
     val walk = Files.walk(tmp)

@@ -31,6 +31,10 @@ import org.apache.spark.sql.types._
   */
 object Ingest {
 
+  /** Load every staged file concurrently (on the resolved `threads`
+    * lanes), then register the views in file-name order, so the last file
+    * still wins a destination two files map to. A failure surfaces as the
+    * first failing file in that order. */
   def loadAll(spark: SparkSession, dataDir: String, config: Config): Unit = {
     val tablesDir = Paths.get(dataDir, "in", "tables")
     if (!Files.isDirectory(tablesDir)) return
@@ -39,22 +43,21 @@ object Ingest {
     val entries =
       try listing.iterator().asScala.toList.sortBy(_.getFileName.toString)
       finally listing.close()
-    entries
-      .filter { p =>
-        val n = p.getFileName.toString
-        !n.endsWith(".manifest") && !n.startsWith(".")
-      }
-      .foreach { p =>
-        val manifest = Manifest.readInput(Paths.get(p.toString + ".manifest"))
-        val storageId = manifest.id.getOrElse(p.getFileName.toString)
-        val mapping = bySource.get(storageId)
-        val name = mapping.map(_.destination).getOrElse(p.getFileName.toString)
-        val fileType = mapping.map(_.fileType).getOrElse("csv")
-        val df =
-          if (fileType.equalsIgnoreCase("parquet")) loadParquet(spark, p, manifest)
-          else loadCsv(spark, p, manifest, config.dtypesInfer)
-        df.createOrReplaceTempView(Names.view(name))
-      }
+    val staged = entries.filter { p =>
+      val n = p.getFileName.toString
+      !n.endsWith(".manifest") && !n.startsWith(".")
+    }
+    Parallel.map(SystemResources.resolveThreads(config.threads), staged) { p =>
+      val manifest = Manifest.readInput(Paths.get(p.toString + ".manifest"))
+      val storageId = manifest.id.getOrElse(p.getFileName.toString)
+      val mapping = bySource.get(storageId)
+      val name = mapping.map(_.destination).getOrElse(p.getFileName.toString)
+      val fileType = mapping.map(_.fileType).getOrElse("csv")
+      val df =
+        if (fileType.equalsIgnoreCase("parquet")) loadParquet(spark, p, manifest)
+        else loadCsv(spark, p, manifest, config.dtypesInfer)
+      (name, df)
+    }.foreach { case (name, df) => df.createOrReplaceTempView(Names.view(name)) }
   }
 
   /** Load one staged file as `t.destination` (direct-path entry used by

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
   * right before the statement runs ([[ensureRegistered]] — constraint
   * metadata lives in the executor's registries, so the hook takes a
   * [[Meta]] window onto them). BASE TABLE vs VIEW follows the engine's
-  * contract: a warehouse directory = BASE TABLE, anything else
+  * contract: a table the executor holds = BASE TABLE, anything else
   * registered = VIEW (input mappings are views, matching the reference's
   * CSV-scan-as-view ingest). */
 object IntrospectSql {

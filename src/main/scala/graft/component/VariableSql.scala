@@ -12,11 +12,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
   *
   * The store is process-global like the sequence catalog — statements
   * in one code run in order, so a SET is visible to every later
-  * getvariable in the run. `getvariable` resolves to a LITERAL at the
-  * consuming statement's analysis, which keeps every downstream plan
-  * constant-folded (a filter on a variable is an ordinary pushed-down
-  * literal predicate at any scale). A VIEW capturing getvariable
-  * freezes the value at creation (documented; DuckDB late-binds). */
+  * getvariable in the run, and `Component.run` clears it per run.
+  * `getvariable` resolves to a LITERAL at the consuming statement's
+  * analysis, which keeps every downstream plan constant-folded (a filter
+  * on a variable is an ordinary pushed-down literal predicate at any
+  * scale). A VIEW capturing getvariable freezes the value at creation
+  * (documented; DuckDB late-binds). */
 object VariableSql {
 
   private val store =
@@ -42,6 +43,9 @@ object VariableSql {
   }
 
   def reset(name: String): Unit = store.remove(name.toLowerCase)
+
+  /** Forget every variable (a new run starts with none). */
+  def clear(): Unit = store.clear()
 
   /** The getvariable('name') expression: the stored value as a literal,
     * NULL (untyped) when undefined — the documented contract. */

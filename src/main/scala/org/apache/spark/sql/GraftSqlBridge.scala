@@ -49,6 +49,20 @@ object GraftSqlBridge {
       schema: types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
 
+  /** A local checkpoint with every column nullable, as a table read back
+    * from files reads; the checkpointed partitions, statistics and output
+    * partitioning are shared. */
+  def asNullable(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    ds.logicalPlan match {
+      case r: execution.LogicalRDD if r.output.exists(!_.nullable) =>
+        classic.Dataset.ofRows(ds.sparkSession, r.makeCopy(Array(
+          r.output.map(_.withNullability(true)), r.rdd, r.outputPartitioning,
+          r.outputOrdering, Boolean.box(r.isStreaming), r.stream)))
+      case _ => df
+    }
+  }
+
   /** Register an extra planner strategy on a running session. */
   def injectStrategy(spark: SparkSession, s: execution.SparkStrategy): Unit = {
     val cs = spark.asInstanceOf[classic.SparkSession]

@@ -169,12 +169,19 @@ class TypeSqlSpec extends SparkSpec {
   }
 
   test("ENUM equality vs string literals lowers to the index field and PUSHES to parquet") {
-    val ex = mkEx()
+    TypeSql.reset()
+    DuckFunctions.register(spark)
+    val wh = Files.createTempDirectory("graft_type_")
+    val ex = new Executor(spark, wh.toString)
     def run(q: String) = ex.runStatement(Dialect.rewrite(q))
     run("CREATE TYPE pdmood AS ENUM ('sad','ok','happy')")
     run("CREATE TABLE pd_t (id BIGINT, m pdmood)")
     run("INSERT INTO pd_t SELECT id, (CASE WHEN id % 3 = 0 THEN 'sad' " +
       "WHEN id % 3 = 1 THEN 'ok' ELSE 'happy' END)::pdmood FROM range(300) t(id)")
+    // read the table the way the next run's passthrough does: from its
+    // warehouse parquet
+    ex.persist()(scala.concurrent.ExecutionContext.global)
+    spark.read.parquet(wh.resolve("pd_t").toString).createOrReplaceTempView("pd_t")
     // equality and IN lower to the SMALLINT index field — a nested-field
     // predicate the parquet scan pushes down (element_at decode cannot)
     val df = sel("SELECT count(*) AS n FROM pd_t WHERE m = 'ok'")
@@ -248,6 +255,7 @@ class TypeSqlSpec extends SparkSpec {
     assert(r.getString(0) == "sad") // definition-index min survived replay
     // warehouse passthrough: a new executor over the ORIGINAL warehouse
     // re-attaches the catalog from .types.sql after a process-level reset
+    ex.persist()(scala.concurrent.ExecutionContext.global)
     TypeSql.reset()
     new Executor(spark, wh1)
     assert(TypeSql.enumValues("exmood")

@@ -99,13 +99,17 @@ class PlanShapeSpec extends SparkSpec {
     import graft.component.{Dialect, DuckFunctions, Executor, TypeSql}
     TypeSql.reset()
     DuckFunctions.register(spark)
-    val ex = new Executor(spark,
-      java.nio.file.Files.createTempDirectory("graft_planshape_enum_").toString)
+    val wh = java.nio.file.Files.createTempDirectory("graft_planshape_enum_")
+    val ex = new Executor(spark, wh.toString)
     def run(q: String) = ex.runStatement(Dialect.rewrite(q))
     run("CREATE TYPE psmood AS ENUM ('sad','ok','happy')")
     run("CREATE TABLE ps_enum_t (id BIGINT, m psmood)")
     run("INSERT INTO ps_enum_t SELECT id, (CASE WHEN id % 3 = 0 THEN 'sad' " +
       "WHEN id % 3 = 1 THEN 'ok' ELSE 'happy' END)::psmood FROM range(300) t(id)")
+    // read the table the way the next run's passthrough does: from its
+    // warehouse parquet
+    ex.persist()(scala.concurrent.ExecutionContext.global)
+    spark.read.parquet(wh.resolve("ps_enum_t").toString).createOrReplaceTempView("ps_enum_t")
     def sel(q: String) =
       spark.sql(TypeSql.substitute(Dialect.rewrite(q)))
     // shape 1: equality vs a foldable string lowers to the SMALLINT index
