@@ -2,6 +2,10 @@ package graft.component
 
 import scala.util.control.NonFatal
 
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StructType}
+
 import graft.component.{Pivot => PivotSql}
 
 /** One query body, classified once: which of the DuckDB-only body forms
@@ -11,7 +15,7 @@ import graft.component.{Pivot => PivotSql}
   * decides what a body is; here [[Body.parse]] decides it, and four
   * readers match on the result:
   *
-  *  - `Executor.bodyDf` runs it;
+  *  - [[Body.run]] runs it, for the Executor and for every view read;
   *  - [[SqlAnalyzer]] reads its dependencies: a [[Body.Plain]] body
   *    through Catalyst's parser, every other variant through its
   *    [[Body.parts]];
@@ -169,4 +173,100 @@ object Body {
       case Some((from, to, text)) => parse(sql.substring(0, from) + text + sql.substring(to))
       case None => Plain(sql)
     }
+
+  /** Run one classified body: plain Spark SQL through the session, each
+    * DuckDB-only form through its module. A star form expands against
+    * the analyzed schema and the expansion runs as a body of its own. */
+  def run(spark: SparkSession, body: Body): DataFrame = {
+    def df(text: String): DataFrame = run(spark, parse(text))
+    body match {
+      case Plain(sql) => spark.sql(sql)
+      case Pivot(p) => PivotSql.df(spark, p)
+      case AsOf(p) => AsOfSql.df(spark, p)
+      case Positional(p) => PositionalSql.df(spark, p)
+      case UnionByName(p, legs) => UnionByNameSql.df(p, legs.map(run(spark, _)))
+      case Describe(p, query) => DescribeSql.df(spark, p, query.map(run(spark, _)))
+      case Columns(sql) => df(expanded("COLUMNS(...)", ColumnsSql.expand(sql, df)))
+      case StarRename(sql) => df(expanded("* RENAME", StarRenameSql.expand(sql, df)))
+      case QualifiedLike(sql) =>
+        df(expanded("t.* LIKE", StarReplaceSql.expandQualifiedLike(sql, df)))
+      // percent LIMIT (probed v1.0: FLOOR(total · n/100) rows after the
+      // offset) — one count job to learn the total, then the ordinary
+      // offset+limit over the same plan
+      case LimitPercent(inner, pct, off) =>
+        val in = run(spark, inner)
+        val n = math.floor(in.count() * pct / 100.0).toInt
+        (if (off > 0) in.offset(off.toInt) else in).limit(n)
+      case StarReplace(sql) =>
+        // except-form computes the values; the strip-form's ANALYZED
+        // schema (never executed) gives DuckDB's column order back
+        val out = df(StarReplaceSql.except(sql))
+        val order = scala.util.Try(df(StarReplaceSql.strip(sql)).schema.map(_.name)).toOption
+        order match {
+          case Some(names)
+              if names.map(_.toLowerCase).distinct.length == names.length &&
+                names.map(_.toLowerCase).sorted ==
+                  out.columns.map(_.toLowerCase).sorted.toSeq =>
+            out.select(names.map(n => col(s"`$n`")): _*)
+          case _ => out // duplicate/mismatched names: keep except order
+        }
+      case Unsupported(message) => throw new UnsupportedBody(message)
+    }
+  }
+
+  private def expanded(form: String, text: Option[String]): String =
+    text.getOrElse(throw new UnsupportedBody(
+      s"$form expands only in the select list or WHERE clause of a top-level SELECT ... FROM block"))
+
+  /** The session table function every view reads through:
+    * `__graft_body('<body>', '<columns at CREATE, as schema JSON>')`
+    * runs the body at each analysis of a statement that reads the view,
+    * so a view binds late, as a DuckDB view does: each read sees its
+    * sources' current state, and a read fails once a source is gone or
+    * the body's column types or names (nullability aside) differ from
+    * the recorded ones — the latter with DuckDB's binder message. */
+  private val viewFunction = "__graft_body"
+
+  /** Bind [[viewFunction]] on `spark`; it reads nothing but the session
+    * and its two literal arguments, so executors share it. */
+  def register(spark: SparkSession): Unit =
+    GraftSqlBridge.registerTableFunction(spark, viewFunction, args => {
+      val Seq(text, columns) = args.map(_.eval().toString)
+      val out = viewOf(spark, text)
+      contentCheck(DataType.fromJson(columns).asInstanceOf[StructType], out.schema)
+      GraftSqlBridge.logicalPlan(out)
+    })
+
+  /** Register `name` as a late-bound view over `text`. The body runs
+    * once here: one that does not analyze fails the CREATE, and its
+    * columns become the view's recorded ones. */
+  def createView(spark: SparkSession, name: String, text: String): Unit = {
+    // backslash is an escape in a Spark SQL string literal
+    def literal(s: String) = "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    val out = viewOf(spark, text)
+    GraftSqlBridge.createSqlTempView(spark, name,
+      s"SELECT * FROM $viewFunction(${literal(text)}, ${literal(out.schema.json)})", out, Seq(viewFunction))
+  }
+
+  /** A body's rows as its view reads them: a repeated column name `k`
+    * (case aside) reads as `k_1`, `k_2`, ..., as in a DuckDB view. */
+  private def viewOf(spark: SparkSession, text: String): DataFrame = {
+    val out = run(spark, parse(text))
+    val seen = scala.collection.mutable.Map[String, Int]()
+    val names = out.columns.map { c =>
+      val n = seen.getOrElse(c.toLowerCase, 0)
+      seen(c.toLowerCase) = n + 1
+      if (n == 0) c else s"${c}_$n"
+    }
+    if (names.sameElements(out.columns)) out else out.toDF(names.toIndexedSeq: _*)
+  }
+
+  private def contentCheck(recorded: StructType, now: StructType): Unit =
+    Seq[(String, StructType => Seq[String])]("types" -> (_.map(_.dataType.sql)), "names" -> (_.map(_.name)))
+      .find { case (_, show) => show(recorded) != show(now) }
+      .foreach { case (what, show) =>
+        throw new UserException(s"Binder Error: Contents of view were altered: $what don't match! " +
+          s"Expected ${show(recorded).mkString("[", ", ", "]")}, but found " +
+          s"${show(now).mkString("[", ", ", "]")} instead")
+      }
 }

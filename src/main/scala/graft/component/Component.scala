@@ -2,8 +2,6 @@ package graft.component
 
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
 
@@ -11,9 +9,10 @@ import org.apache.spark.sql.catalyst.expressions.Literal
   * directory (reference `src/component.py:36-56` lifecycle):
   *
   *   1. parse `config.json`;
-  *   2. warehouse passthrough: tables persisted by a previous run under
-  *      `in/files/warehouse/<t>` re-register (the Spark analogue of the
-  *      `.duck.db` file move, A11);
+  *   2. warehouse passthrough: tables and types persisted by a previous
+  *      run under `in/files/warehouse` attach to the executor, which
+  *      carries the tables no statement changes to `out/files/warehouse`
+  *      (the Spark analogue of the `.duck.db` file move, A11);
   *   3. ingest the input mappings as temp views (A1–A5, A12);
   *   4. plan: producer map → per-block Kahn batches (A13–A16) over the
   *      dependency analysis, which runs once, before step 2 (the startup
@@ -44,7 +43,7 @@ object Component {
     // (warehouse passthrough does not persist counters — documented)
     SequenceSql.clear()
     // user-defined types likewise reset per run; a PASSTHROUGH warehouse
-    // re-attaches its own via `.types.sql` at Executor construction
+    // re-attaches its own via `.types.sql` (Executor.attach)
     // (DuckDB types live in the database file)
     TypeSql.reset()
     // SET VARIABLE values live per run like the other session objects
@@ -109,35 +108,19 @@ object Component {
           issues.map(i => s"${i.query}: ${i.message}").mkString("\n"))
     }
 
-    // 2. warehouse passthrough (prior run's materialized tables), read
-    // concurrently and registered in dir-name order. A subdirectory with
-    // a meta.json is a graft.ops.DedupIndex — engine STATE riding the
-    // same run-to-run contract (the reference's `.duck.db` passthrough),
-    // not a table: it is consumed through DedupIndex.load, never
-    // registered as a view.
+    // 2. warehouse passthrough: the prior run's tables and types, held
+    // by the executor from the start, read concurrently
     val threads = SystemResources.resolveThreads(config.threads)
-    val inWarehouse = Paths.get(dataDir, "in", "files", "warehouse")
-    if (Files.isDirectory(inWarehouse)) {
-      val listing = Files.list(inWarehouse)
-      val dirs =
-        try listing.iterator().asScala.filter(p =>
-          Files.isDirectory(p) && !Files.exists(p.resolve("meta.json")))
-          .toList.sortBy(_.getFileName.toString)
-        finally listing.close()
-      Parallel.map(threads, dirs)(p => spark.read.parquet(p.toString))
-        .zip(dirs).foreach { case (df, p) =>
-          df.createOrReplaceTempView(Names.view(p.getFileName.toString))
-        }
-    }
+    val outWarehouse = Paths.get(dataDir, "out", "files", "warehouse")
+    Files.createDirectories(outWarehouse)
+    val executor = new Executor(spark, outWarehouse.toString, threads)
+    executor.attach(Paths.get(dataDir, "in", "files", "warehouse"))
 
     // 3. ingest
     Ingest.loadAll(spark, dataDir, config)
 
     // 4-5. plan + execute
-    val outWarehouse = Paths.get(dataDir, "out", "files", "warehouse")
-    Files.createDirectories(outWarehouse)
-    val plan = Planner.plan(queries)
-    val stats = new Executor(spark, outWarehouse.toString, threads).execute(plan)
+    val stats = executor.execute(Planner.plan(queries))
 
     // 6. export
     Export.exportAll(spark, dataDir, config)

@@ -439,7 +439,7 @@ object Dialect {
     * probed v1.0: row count = FLOOR(total · n/100), offset applies
     * first) → (body without the clause, percent, offset), read from a
     * normalized body and its mask ([[Body.parse]]). Executed by
-    * `Executor.bodyDf` as count-then-limit — the same two-pass price
+    * `Body.run` as count-then-limit — the same two-pass price
     * the reference engine pays to know the total. */
   private[component] def parseLimitPercent(body: String, masked: String)
       : Option[(String, Double, Long)] =

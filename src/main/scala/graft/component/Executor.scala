@@ -1,5 +1,6 @@
 package graft.component
 
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.Executors
 
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -17,14 +18,18 @@ import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
   * buys latency on many small queries.
   *
   * Mutable-table semantics over immutable DataFrames (SURVEY §7 "hard
-  * parts"): CREATE VIEW registers lazily; CREATE TABLE computes the body
-  * once into Spark's block manager and registers that snapshot; INSERT
-  * unions and re-snapshots; UPDATE/DELETE re-derive with when()/filter()
-  * from the parsed assignments/condition. The executor keeps a registry of
-  * the tables it holds, and at the end of every [[execute]] call writes
-  * each table that call changed to the warehouse directory (parquet), once
-  * — the reference's database passthrough (A11), where DuckDB keeps every
-  * table in one database and writes the `.duck.db` file once.
+  * parts"): CREATE VIEW registers a late-bound view over the body
+  * ([[Body.createView]]), which re-runs the body at each read, so no
+  * swap touches a view; CREATE TABLE computes the body once into Spark's
+  * block manager and registers that snapshot; INSERT unions and
+  * re-snapshots; UPDATE/DELETE re-derive with when()/filter() from the
+  * parsed assignments/condition, every stored value cast to its column's
+  * type ([[Executor.stored]]). The executor keeps a registry of the
+  * tables it holds — the passthrough tables it [[Executor.attach]]es
+  * included — and at the end of every [[execute]] call writes each table
+  * that call changed or attached to the warehouse directory (parquet),
+  * once — the reference's database passthrough (A11), where DuckDB keeps
+  * every table in one database and writes the `.duck.db` file once.
   */
 final case class QueryTiming(name: String, seconds: Double)
 final case class ExecutionStats(timings: List[QueryTiming]) {
@@ -70,6 +75,8 @@ private[component] final case class Held(dir: String, df: DataFrame)
 
 class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
 
+  Body.register(spark)
+
   /** Declared state per table (lowercased sanitized name); a table with
     * no entry declares nothing. */
   private val tableMeta = scala.collection.concurrent.TrieMap[String, TableMeta]()
@@ -80,23 +87,25 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
 
   // Types ride the warehouse like DuckDB types ride the database file
   // (the reference's passthrough contract): a `.types.sql` snapshot is
-  // replayed at attach — enum columns persisted by a PREVIOUS run decode
-  // again without re-running their CREATE TYPE. Written on every
-  // create/drop ([[persistTypes]]); per-run TypeSql.reset() in
-  // Component.run keeps non-passthrough runs isolated.
-  locally {
-    val f = java.nio.file.Paths.get(warehouseDir, ".types.sql")
-    if (java.nio.file.Files.exists(f))
-      TypeSql.loadDdl(java.nio.file.Files.readString(f))
+  // replayed here and by [[attach]] — enum columns persisted by a
+  // PREVIOUS run decode again without re-running their CREATE TYPE.
+  // Written by every [[persist]] ([[persistTypes]]); per-run
+  // TypeSql.reset() in Component.run keeps non-passthrough runs isolated.
+  loadTypes(Paths.get(warehouseDir))
+
+  private def loadTypes(dir: Path): Unit = {
+    val f = dir.resolve(".types.sql")
+    if (Files.exists(f))
+      TypeSql.loadDdl(Files.readString(f))
   }
 
   private def persistTypes(): Unit = {
-    val f = java.nio.file.Paths.get(warehouseDir, ".types.sql")
+    val f = Paths.get(warehouseDir, ".types.sql")
     val ddl = TypeSql.exportDdl
-    if (ddl.isEmpty) java.nio.file.Files.deleteIfExists(f)
+    if (ddl.isEmpty) Files.deleteIfExists(f)
     else {
-      java.nio.file.Files.createDirectories(f.getParent)
-      java.nio.file.Files.writeString(f, ddl.mkString("\n") + "\n")
+      Files.createDirectories(f.getParent)
+      Files.writeString(f, ddl.mkString("\n") + "\n")
     }
   }
 
@@ -134,6 +143,31 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     * last [[persist]], dropped and renamed-away ones included. */
   private val held = scala.collection.concurrent.TrieMap[String, Held]()
   private val changed = scala.collection.concurrent.TrieMap[String, Unit]()
+
+  /** Attach the tables a previous run left in `dir` (the warehouse
+    * passthrough): its `.types.sql` replays first, then every table dir
+    * (a dir with a `meta.json` is a graft.ops.DedupIndex, engine state
+    * read through DedupIndex.load, not a table) is read concurrently and
+    * held as changed, in dir-name order, so [[persist]] carries a table
+    * no statement touches on to the warehouse. An enum column whose type
+    * the catalog lacks fails here. */
+  def attach(dir: Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    if (!Files.isDirectory(dir)) return
+    loadTypes(dir)
+    val listing = Files.list(dir)
+    val dirs =
+      try listing.iterator().asScala.filter(p =>
+        Files.isDirectory(p) && !Files.exists(p.resolve("meta.json")))
+        .toList.sortBy(_.getFileName.toString)
+      finally listing.close()
+    Parallel.map(threads, dirs)(p => spark.read.parquet(p.toString))
+      .zip(dirs).foreach { case (df, p) =>
+        df.schema.foreach(f =>
+          graft.functions.EnumExprs.enumNameOf(f.dataType).foreach(graft.functions.EnumExprs.values))
+        hold(p.getFileName.toString, df)
+      }
+  }
 
   /** Register `df` as the state of table `name`. */
   private def hold(name: String, df: DataFrame): Unit = {
@@ -194,33 +228,26 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     }
   }
 
-  /** View definitions registered this run, in creation order:
-    * lowercased sanitized name → (sanitized name, body SQL, direct deps).
-    * Registering a view stores the eagerly-analyzed plan, which pins the
-    * snapshot of every table it reads; the reference's DuckDB views are
-    * late-bound instead. [[rebind]] restores that semantics after DML
-    * swaps a table's snapshot. */
-  private val viewDefs =
-    new java.util.LinkedHashMap[String, (String, String, Set[String])]()
+  /** View definitions registered this run, in creation order (a
+    * replaced view moves to the end): lowercased sanitized name →
+    * (sanitized name, body SQL). EXPORT DATABASE writes them, and RENAME
+    * re-creates the ones whose body names the renamed object. */
+  private val viewDefs = new java.util.LinkedHashMap[String, (String, String)]()
 
   /** PREPARE templates, name → body (per-run, like the reference's
     * connection-scoped prepared statements; [[PrepareSql]]). */
   private val prepared = scala.collection.concurrent.TrieMap[String, String]()
 
-  /** Re-register every view that (transitively) depends on `table` after
-    * DML swapped its snapshot — otherwise a block-1 view read after a
-    * block-2 INSERT/UPDATE/DELETE still reads the old state. Creation order
-    * is a valid re-bind order: a view body can only reference objects that
-    * already existed when it was created. */
-  private def rebind(table: String): Unit = viewDefs.synchronized {
-    val affected = scala.collection.mutable.Set(table)
-    viewDefs.forEach { (key, defn) =>
-      val (sanitized, body, deps) = defn
-      if (deps.exists(affected)) {
-        bodyDf(body).createOrReplaceTempView(sanitized)
-        affected += key
-      }
+  /** The one view path (CREATE VIEW, IMPORT DATABASE's replay and
+    * RENAME): register `sanitized` as a late-bound view over `body` and
+    * record it, last in creation order. */
+  private def createView(sanitized: String, body: String): Unit = {
+    Body.createView(spark, sanitized, body)
+    viewDefs.synchronized {
+      viewDefs.remove(sanitized.toLowerCase)
+      viewDefs.put(sanitized.toLowerCase, (sanitized, body))
     }
+    if (held.contains(sanitized.toLowerCase)) release(sanitized)
   }
 
   /** Run the plan's blocks in order and each batch's queries on the pool,
@@ -248,12 +275,11 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
   }
 
   /** Write every table changed since the last persist to its warehouse
-    * dir, concurrently on `ec`, and delete the dir of every table dropped
-    * or renamed away. Each write stages into a fresh directory and moves
-    * into place, replacing any dir the table had before (under any
-    * spelling of its name). */
+    * dir, concurrently on `ec`, delete the dir of every table dropped or
+    * renamed away, and write the type catalog. Each write stages into a
+    * fresh directory and moves into place, replacing any dir the table
+    * had before (under any spelling of its name). */
   def persist()(implicit ec: ExecutionContext): Unit = {
-    import java.nio.file.{Files, Paths}
     val keys = changed.keys.toList.sorted
     val listing = Option(Paths.get(warehouseDir).toFile.listFiles()).getOrElse(Array.empty)
     val onDisk = listing.filter(f => f.isDirectory && !f.getName.startsWith(".staging_"))
@@ -272,6 +298,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       }
     }
     Await.result(Future.sequence(writes), Duration.Inf)
+    persistTypes()
   }
 
   /** Run one rewritten statement against the session catalog. Returns the
@@ -313,16 +340,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     case Stmt.CreateView(name, body, ifNotExists) =>
       val sanitized = Names.view(name)
       if (ifNotExists && spark.catalog.tableExists(s"`$sanitized`")) ()
-      else {
-        val deps = SqlAnalyzer.analyzeStatement(spark, body).dependencies
-        viewDefs.synchronized {
-          // re-insert on replace so creation order tracks the LATEST definition
-          viewDefs.remove(sanitized.toLowerCase)
-          viewDefs.put(sanitized.toLowerCase, (sanitized, body, deps))
-        }
-        register(name, bodyDf(body))
-        if (held.contains(sanitized.toLowerCase)) release(sanitized)
-      }
+      else createView(sanitized, body)
 
     case Stmt.CreateTableAs(name, body, ifNotExists) =>
       if (ifNotExists &&
@@ -499,42 +517,32 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         throw new UserException(s"ALTER ... RENAME: $from does not exist")
       if (existed) {
         // a held table's snapshot moves to the new name, and [[persist]]
-        // writes it there and deletes the old name's dir
-        held.get(src.toLowerCase) match {
-          case Some(h) =>
+        // writes it there and deletes the old name's dir; a view moves
+        // with its body
+        val dst = Names.view(to)
+        val view = viewDefs.synchronized(Option(viewDefs.remove(src.toLowerCase)))
+        (held.get(src.toLowerCase), view) match {
+          case (Some(h), _) =>
             release(src)
             hold(to, h.df)
-          case None =>
-            register(to, spark.table(s"`$src`")) // view: same analyzed plan
-            if (held.contains(Names.view(to).toLowerCase)) release(Names.view(to))
+          case (None, Some((_, body))) => createView(dst, body)
+          case (None, None) =>
+            register(to, spark.table(s"`$src`")) // input: same analyzed plan
+            if (held.contains(dst.toLowerCase)) release(dst)
         }
         spark.catalog.dropTempView(src)
-        renameTableMeta(src.toLowerCase, Names.view(to).toLowerCase)
-        viewDefs.synchronized {
-          Option(viewDefs.remove(src.toLowerCase)).foreach {
-            case (_, body, deps) =>
-              viewDefs.put(Names.view(to).toLowerCase,
-                (Names.view(to), body, deps))
-          }
-          // DuckDB's late-bound views would error after the rename; this
-          // engine's eager-bind contract keeps dependent views WORKING
-          // instead. Re-run each (transitively) dependent view with
-          // references renamed, in creation order, recording the new name
-          // in body + deps so later DML on the new name keeps rebinding
-          // them.
-          val affected =
-            scala.collection.mutable.Set(src.toLowerCase, from.toLowerCase)
-          viewDefs.forEach { (key, defn) =>
-            val (sanitized, body, deps) = defn
-            if (deps.exists(d => affected(d.toLowerCase))) {
-              val newBody = renameRefs(renameRefs(body, from, to), src, to)
-              val newDeps = deps.map(d =>
-                if (affected(d.toLowerCase)) to.toLowerCase else d)
-              bodyDf(newBody).createOrReplaceTempView(sanitized)
-              viewDefs.put(key, (sanitized, newBody, newDeps))
-              affected += key
-            }
-          }
+        renameTableMeta(src.toLowerCase, dst.toLowerCase)
+        // DuckDB's views would fail after the rename ("Table with name
+        // ... does not exist"); this engine keeps them working, a
+        // documented divergence. A view whose body names the old name and
+        // no longer reads is re-created over the new name, in creation
+        // order; views over it resolve by name, and a body that spells
+        // the old name only as a column keeps its definition.
+        val views = viewDefs.synchronized(new java.util.ArrayList(viewDefs.values))
+        views.forEach { case (sanitized, body) =>
+          val renamed = renameRefs(renameRefs(body, from, to), src, to)
+          if (renamed != body && scala.util.Try(spark.table(s"`$sanitized`").schema).isFailure)
+            createView(sanitized, renamed)
         }
       }
 
@@ -546,7 +554,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
           s"DROP ${kind.toUpperCase}: $name does not exist")
       if (existed) {
         spark.catalog.dropTempView(sanitized)
-        viewDefs.synchronized { viewDefs.remove(sanitized.toLowerCase) }
+        viewDefs.synchronized(viewDefs.remove(sanitized.toLowerCase))
         clearTableMeta(sanitized.toLowerCase)
         if (held.contains(sanitized.toLowerCase)) release(sanitized)
       }
@@ -601,13 +609,9 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     // CREATE TYPE / DROP TYPE — user-type aliases ([[TypeSql]]; probed
     // v1.0: duplicates error, nested aliases resolve at creation, DROP
     // of a missing name errors unless IF EXISTS)
-    case Stmt.CreateType(c) =>
-      TypeSql.create(c)
-      persistTypes()
+    case Stmt.CreateType(c) => TypeSql.create(c)
 
-    case Stmt.DropType(tn, ife) =>
-      TypeSql.drop(tn, ife, Some(spark))
-      persistTypes()
+    case Stmt.DropType(tn, ife) => TypeSql.drop(tn, ife, Some(spark))
 
     // SET VARIABLE / RESET VARIABLE (DuckDB ≥ 1.1 — [[VariableSql]];
     // getvariable resolves through the function registry)
@@ -690,7 +694,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     case Stmt.EngineQuery(body) =>
       // bare PIVOT / ASOF / POSITIONAL / UNION BY NAME / star REPLACE /
       // DESCRIBE / SUMMARIZE / ...: execute for effect + errors
-      runBody(body).queryExecution.assertAnalyzed()
+      Body.run(spark, body).queryExecution.assertAnalyzed()
 
     case Stmt.Catalyst(sql) =>
       val plan = spark.sessionState.sqlParser.parsePlan(sql)
@@ -726,11 +730,12 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
           val assigned = assigns.map { case (k, v) => k.toLowerCase -> v }.toMap
           val outCols = df.columns.map { c =>
             assigned.get(c.toLowerCase) match {
-              case Some(value) => (cond match {
-                case Some(p) => when(GraftSqlBridge.column(p),
-                  GraftSqlBridge.column(value)).otherwise(col(c))
-                case None => GraftSqlBridge.column(value)
-              }).as(c)
+              case Some(value0) =>
+                val value = stored(GraftSqlBridge.column(value0), df.schema(c).dataType)
+                (cond match {
+                  case Some(p) => when(GraftSqlBridge.column(p), value).otherwise(col(c))
+                  case None => value
+                }).as(c)
               case None => col(c)
             }
           }
@@ -784,50 +789,8 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       s"""Binder Error: Table "${Names.view(name)}" does not have a column """ +
         s"""with name "$c""""))
 
-  /** A statement body, classified by [[Body.parse]] and run by [[runBody]]. */
-  private def bodyDf(body: String): DataFrame = runBody(Body.parse(body))
-
-  /** Run one classified body: plain Spark SQL through the session, each
-    * DuckDB-only form through its module. A star form expands against
-    * the analyzed schema and the expansion runs as a body of its own. */
-  private def runBody(body: Body): DataFrame = body match {
-    case Body.Plain(sql) => spark.sql(sql)
-    case Body.Pivot(p) => Pivot.df(spark, p)
-    case Body.AsOf(p) => AsOfSql.df(spark, p)
-    case Body.Positional(p) => PositionalSql.df(spark, p)
-    case Body.UnionByName(p, legs) => UnionByNameSql.df(p, legs.map(runBody))
-    case Body.Describe(p, query) => DescribeSql.df(spark, p, query.map(runBody))
-    case Body.Columns(sql) => bodyDf(expanded("COLUMNS(...)", ColumnsSql.expand(sql, bodyDf)))
-    case Body.StarRename(sql) => bodyDf(expanded("* RENAME", StarRenameSql.expand(sql, bodyDf)))
-    case Body.QualifiedLike(sql) =>
-      bodyDf(expanded("t.* LIKE", StarReplaceSql.expandQualifiedLike(sql, bodyDf)))
-    // percent LIMIT (probed v1.0: FLOOR(total · n/100) rows after the
-    // offset) — one count job to learn the total, then the ordinary
-    // offset+limit over the same plan
-    case Body.LimitPercent(inner, pct, off) =>
-      val df = runBody(inner)
-      val n = math.floor(df.count() * pct / 100.0).toInt
-      (if (off > 0) df.offset(off.toInt) else df).limit(n)
-    case Body.StarReplace(sql) =>
-      // except-form computes the values; the strip-form's ANALYZED
-      // schema (never executed) gives DuckDB's column order back
-      val out = bodyDf(StarReplaceSql.except(sql))
-      val order = scala.util.Try(
-        bodyDf(StarReplaceSql.strip(sql)).schema.map(_.name)).toOption
-      order match {
-        case Some(names)
-            if names.map(_.toLowerCase).distinct.length == names.length &&
-              names.map(_.toLowerCase).sorted ==
-                out.columns.map(_.toLowerCase).sorted.toSeq =>
-          out.select(names.map(n => col(s"`$n`")): _*)
-        case _ => out // duplicate/mismatched names: keep except order
-      }
-    case Body.Unsupported(message) => throw new Body.UnsupportedBody(message)
-  }
-
-  private def expanded(form: String, text: Option[String]): String =
-    text.getOrElse(throw new Body.UnsupportedBody(
-      s"$form expands only in the select list or WHERE clause of a top-level SELECT ... FROM block"))
+  /** A statement body, classified by [[Body.parse]] and run by [[Body.run]]. */
+  private def bodyDf(body: String): DataFrame = Body.run(spark, Body.parse(body))
 
   private def targetName(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): String =
     plan.collectFirst {
@@ -883,62 +846,67 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
   /** The one table-state swap (CREATE TABLE, INSERT, UPDATE, DELETE,
     * MERGE, upsert, COPY FROM, ALTER TABLE): compute `df` once, with
     * `name`'s constraints enforced on that pass, into a block-manager
-    * snapshot (an eager local checkpoint, MEMORY_AND_DISK), hold it as
-    * the table's state and re-bind the views over it. The snapshot cuts
+    * snapshot (an eager local checkpoint, MEMORY_AND_DISK) and hold it as
+    * the table's state; a view over it reads the new state at its next
+    * analysis. The snapshot cuts
     * lineage, and a NOT NULL or CHECK violation fails the statement that
     * writes the table. No file is written here: [[persist]] writes the
     * table once, at the end of the [[execute]] call. A superseded
     * snapshot is left to Spark's ContextCleaner, because a running plan
     * may still read it. */
-  private def replace(name: String, df: DataFrame): Unit = {
+  private def replace(name: String, df: DataFrame): Unit =
     hold(name, enforced(name, df)
       .localCheckpoint(eager = true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    rebind(Names.view(name).toLowerCase)
-  }
 
   /** Depth-first delete; the walk stream is CLOSED (an unclosed
     * Files.walk leaks a directory fd per DDL/DML statement). */
-  private def deleteRecursively(dir: java.nio.file.Path): Unit = {
-    val walk = java.nio.file.Files.walk(dir)
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p))
+  private def deleteRecursively(dir: Path): Unit = {
+    val walk = Files.walk(dir)
+    try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => Files.deleteIfExists(p))
     finally walk.close()
   }
 
   /** Textually rename identifier references of `from` to `to` in a view
-    * body: bare word-boundary occurrences outside quotes/comments, and
-    * `"from"` / `` `from` `` quoted spellings. A textual pass (not AST)
-    * — the rename path re-analyzes the result, so a miss surfaces as a
-    * clear analysis error, never silent wrong data. */
+    * body: bare word-boundary occurrences outside quotes and comments,
+    * and the quoted identifiers `"from"` / `` `from` ``. A textual pass
+    * (not AST): the rename path re-creates the view from the result,
+    * which analyzes it, so a miss never reads silent wrong data. */
   private def renameRefs(sql: String, from: String, to: String): String = {
-    if (from.equalsIgnoreCase(to)) return sql
-    val masked = Dialect.maskQuoted(sql)
+    val bare = Dialect.replaceUnquoted(sql,
+      ("(?iU)(?<!\\w)" + java.util.regex.Pattern.quote(from) + "(?!\\w)").r)(_ => to)
     val out = new StringBuilder
     var i = 0
-    val fl = from.length
-    def isWordChar(ch: Char) = ch.isLetterOrDigit || ch == '_'
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if ((c == '"' || c == '`') && masked.charAt(i) == ' ') {
-        val end = sql.indexOf(c, i + 1)
-        val stop = if (end < 0) sql.length else end + 1
-        val inner = sql.substring(math.min(i + 1, stop), math.max(i + 1, stop - 1))
-        if (inner.equalsIgnoreCase(from)) out.append(c).append(to).append(c)
-        else out.append(sql.substring(i, stop))
-        i = stop
-      } else if (masked.charAt(i) == c && isWordChar(c) &&
-          (i == 0 || !isWordChar(sql.charAt(i - 1))) &&
-          i + fl <= sql.length &&
-          sql.regionMatches(true, i, from, 0, fl) &&
-          (i + fl == sql.length || !isWordChar(sql.charAt(i + fl)))) {
-        out.append(to); i += fl
-      } else { out.append(c); i += 1 }
+    while (i < bare.length) {
+      val e = Dialect.spanEnd(bare, i)
+      if (e < 0) { out.append(bare.charAt(i)); i += 1 }
+      else {
+        val span = bare.substring(i, e)
+        val quoted = (span.head == '"' || span.head == '`') && span.length > 1 &&
+          span.substring(1, span.length - 1).equalsIgnoreCase(from)
+        out.append(if (quoted) s"${span.head}$to${span.head}" else span)
+        i = e
+      }
     }
     out.toString
   }
 
   private def register(name: String, df: DataFrame): Unit =
     df.createOrReplaceTempView(Names.view(name))
+
+  /** The one store cast: a value written to a column of type `dt` (INSERT,
+    * UPDATE, MERGE, upsert) takes that type through the cast `x::dt`
+    * lowers to, so an integral column rounds a fractional value the way
+    * DuckDB does ([[graft.functions.DuckIntCast]]) instead of truncating,
+    * and an UPDATE never changes a column's type. */
+  private def stored(value: Column, dt: org.apache.spark.sql.types.DataType): Column = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    dt match {
+      case ByteType | ShortType | IntegerType | LongType => GraftSqlBridge.column(
+        graft.functions.DuckIntCast(GraftSqlBridge.expression(value), dt, lenient = false))
+      case _ => value.cast(dt)
+    }
+  }
 
   /** Read an INSERT tail ([[Stmt.insertSource]]) and return (target's
     * current state, incoming rows aligned to the target's schema) — the
@@ -1006,10 +974,11 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     // (the resolver default, and DuckDB's behavior)
     val addedCols = added.columns.map(_.toLowerCase).toSet
     val aligned = added.select(existing.columns.map { c =>
-      if (addedCols(c.toLowerCase)) col(c).cast(existing.schema(c).dataType).as(c)
-      else defaults.get(c.toLowerCase) // absent column: declared DEFAULT, else NULL
-        .map(d => expr(d).cast(existing.schema(c).dataType).as(c))
-        .getOrElse(lit(null).cast(existing.schema(c).dataType).as(c))
+      stored(
+        if (addedCols(c.toLowerCase)) col(c)
+        else defaults.get(c.toLowerCase).map(expr) // absent column: declared DEFAULT, else NULL
+          .getOrElse(lit(null)),
+        existing.schema(c).dataType).as(c)
     }: _*)
     (existing, aligned)
   }
@@ -1167,7 +1136,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
           }
           setV match {
             case Some(v) => when(col("__m_action") === cl.idx,
-              v.cast(existing.schema(c).dataType)).otherwise(acc)
+              stored(v, existing.schema(c).dataType)).otherwise(acc)
             case None => acc
           }
         }.as(c)
@@ -1193,7 +1162,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       val acted = unmatched.withColumn("__m_action", chain(insClauses))
         .filter(col("__m_action") =!= -1)
       val projIns = existing.columns.zipWithIndex.map { case (c, ci) =>
-        insActionClauses.foldRight(lit(null): Column) { (cl, acc) =>
+        stored(insActionClauses.foldRight(lit(null): Column) { (cl, acc) =>
           val value: Column = cl.action match {
             case MergeSql.Insert(None, None) =>
               // bare INSERT: the source row BY NAME, missing → NULL
@@ -1212,7 +1181,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
             case _ => lit(null) // unreachable (validated non-Insert skipped)
           }
           when(col("__m_action") === cl.idx, value).otherwise(acc)
-        }.cast(existing.schema(c).dataType).as(c)
+        }, existing.schema(c).dataType).as(c)
       }
       val annotated0 = acted.select(projIns :+ col("__m_action"): _*)
       val insHasErr = insClauses.exists(_.action.isInstanceOf[MergeSql.Error])
@@ -1343,8 +1312,8 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
           throw new UserException(s"upsert on $name: SET column $c does not exist"))
         joined.select(existing.columns.map { c =>
           setMap.get(c.toLowerCase) match {
-            case Some(e) => when(hit, expr(rewriteExcluded(e))
-              .cast(existing.schema(c).dataType)).otherwise(col(c)).as(c)
+            case Some(e) => when(hit, stored(expr(rewriteExcluded(e)),
+              existing.schema(c).dataType)).otherwise(col(c)).as(c)
             case None => col(c)
           }
         }: _*).unionByName(fresh)
@@ -1369,7 +1338,6 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     * precision (the COPY FROM read format); PARQUET is the lossless
     * path. */
   private def exportDatabase(e: ExportDb.Export): Unit = {
-    import java.nio.file.{Files, Paths}
     def ident(n: String): String =
       if (n.matches("[A-Za-z_][A-Za-z0-9_]*")) n else "\"" + n + "\""
     def sqlTypeOf(dt: org.apache.spark.sql.types.DataType): String =
@@ -1442,12 +1410,9 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
           s"${ident(tbl)} (${cols.map(ident).mkString(", ")});\n")
     }
     schema.append("\n")
-    viewDefs.synchronized {
-      viewDefs.forEach { (_, defn) =>
-        val (name, body, _) = defn
-        schema.append(s"CREATE VIEW ${ident(name)} AS $body;\n")
-      }
-    }
+    viewDefs.synchronized(viewDefs.forEach { case (_, (name, body)) =>
+      schema.append(s"CREATE VIEW ${ident(name)} AS $body;\n")
+    })
     Files.writeString(out.resolve("schema.sql"), schema.toString)
     Files.writeString(out.resolve("load.sql"), load.toString)
   }
@@ -1457,7 +1422,6 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     * the view path; restore exercises the statements users script by
     * hand. */
   private def importDatabase(dir: String): Unit = {
-    import java.nio.file.{Files, Paths}
     val schemaSql = Paths.get(dir, "schema.sql")
     if (!Files.exists(schemaSql))
       throw new UserException(

@@ -63,12 +63,19 @@ object IntrospectSql {
     case _ => (null, null, null)
   }
 
+  /** `t`'s columns as the catalog records them: a view's are the ones
+    * recorded at CREATE, read without running its body, so a view whose
+    * sources changed still lists (DuckDB lists a view's stored columns). */
+  private def columns(spark: SparkSession, t: String): Array[StructField] =
+    spark.sessionState.catalog.getTempViewOrPermanentTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(t)).schema.fields
+
   /** Register fresh snapshots for every introspection view the rewritten
     * statement references. */
   def ensureRegistered(spark: SparkSession, stmt: String, meta: Meta): Unit = {
     "__graft_pti_([a-z0-9_]+)".r.findAllMatchIn(stmt).map(_.group(1)).toSet
       .foreach { t: String =>
-        val fields = spark.table(s"`$t`").schema.fields
+        val fields = columns(spark, t)
         val isBase = meta.isBaseTable(t)
         val nn = meta.notNull(t).map(_.toLowerCase).toSet
         val pks = meta.pk(t).map(_.toLowerCase).toSet
@@ -144,7 +151,7 @@ object IntrospectSql {
         val nn = meta.notNull(n).map(_.toLowerCase).toSet
         val pks = meta.pk(n).map(_.toLowerCase).toSet
         val dfs = meta.defaults(n)
-        spark.table(s"`$n`").schema.fields.zipWithIndex.map { case (f, i) =>
+        columns(spark, n).zipWithIndex.map { case (f, i) =>
           val (p, r, s) = numeric(f.dataType)
           val notNullable =
             base && (nn(f.name.toLowerCase) || pks(f.name.toLowerCase))

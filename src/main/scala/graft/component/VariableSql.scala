@@ -16,8 +16,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
   * `getvariable` resolves to a LITERAL at the consuming statement's
   * analysis, which keeps every downstream plan constant-folded (a filter
   * on a variable is an ordinary pushed-down literal predicate at any
-  * scale). A VIEW capturing getvariable freezes the value at creation
-  * (documented; DuckDB late-binds). */
+  * scale). A view re-analyzes its body at each read ([[Body.createView]]),
+  * so a view over getvariable reads the variable's current value, as
+  * DuckDB's late-bound views do. */
 object VariableSql {
 
   private val store =

@@ -23,6 +23,15 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object EnumExprs {
 
+  /** The labels of enum type `n`, which the run's type catalog must
+    * define. */
+  def values(n: String): Seq[String] =
+    graft.component.TypeSql.enumValues(n).getOrElse(throw new
+        graft.component.UserException(
+      s"enum type $n is not defined in this run's type catalog " +
+        "(a persisted enum column from a previous run needs its " +
+        "CREATE TYPE re-run first)"))
+
   /** The enum name when `dt` is an enum-encoded struct. */
   def enumNameOf(dt: DataType): Option[String] = dt match {
     case st: StructType

@@ -114,14 +114,8 @@ object GraftExtensions {
         org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
     import org.apache.spark.sql.catalyst.expressions.{Cast, EqualTo, EvalMode, Expression, GetStructField, In, Literal}
     import org.apache.spark.sql.types.{ShortType, StringType}
-    import EnumExprs.enumNameOf
+    import EnumExprs.{enumNameOf, values => vals}
 
-    private def vals(n: String): Seq[String] =
-      graft.component.TypeSql.enumValues(n).getOrElse(throw new
-          graft.component.UserException(
-        s"enum type $n is not defined in this run's type catalog " +
-          "(a persisted enum column from a previous run needs its " +
-          "CREATE TYPE re-run first)"))
     private def isEnum(e: Expression): Boolean =
       e.resolved && scala.util.Try(enumNameOf(e.dataType).isDefined)
         .getOrElse(false) // some nodes (WindowFrame) have no dataType

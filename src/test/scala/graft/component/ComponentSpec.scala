@@ -172,6 +172,52 @@ class ComponentSpec extends SparkSpec {
     assert(Files.readString(dd2.resolve("out/tables/echo")).contains("\"42\""))
   }
 
+  test("warehouse passthrough carries enum types and untouched tables to the next run") {
+    def config(dd: Path, script: String, out: String) = write(dd.resolve("config.json"),
+      s"""{"parameters": {"blocks": [{"name": "b", "codes": [{"name": "c", "script": [
+         |  "$script"]}]}]},
+         | "storage": {"input": {"tables": []}, "output": {"tables": [$out]}}}""".stripMargin)
+    def ship(from: Path, to: Path): Unit = {
+      val src = from.resolve("out/files/warehouse")
+      Files.walk(src).forEach { p =>
+        val dst = to.resolve("in/files/warehouse").resolve(src.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(dst) else Files.copy(p, dst)
+      }
+    }
+    val dd1 = datadir()
+    config(dd1, "CREATE TYPE pt_mood AS ENUM ('sad','ok','happy'); " +
+      "CREATE TABLE pt_ep (id INT, m pt_mood); INSERT INTO pt_ep VALUES (1,'happy'),(2,'sad')", "")
+    Component.run(spark, dd1.toString)
+    val dd2 = datadir()
+    ship(dd1, dd2)
+    config(dd2, "CREATE TABLE pt_echo AS SELECT id, m::VARCHAR AS m FROM pt_ep; " +
+      "CREATE TABLE pt_kind AS SELECT table_type FROM information_schema.tables WHERE table_name = 'pt_ep'",
+      """{"source": "pt_echo", "destination": "out.c-y.pt_echo"},
+        |{"source": "pt_kind", "destination": "out.c-y.pt_kind"}""".stripMargin)
+    Component.run(spark, dd2.toString)
+    // the labels, not the struct-encoded indexes ("{2}", "{0}")
+    assert(Files.readString(dd2.resolve("out/tables/pt_echo")).linesIterator.toList.sorted ==
+      List("\"1\",\"happy\"", "\"2\",\"sad\"", "\"id\",\"m\""))
+    // a passthrough table is a table of the run, not a view
+    assert(Files.readString(dd2.resolve("out/tables/pt_kind")).contains("\"BASE TABLE\""))
+    // the untouched table and the type catalog ride on to the next run
+    assert(Files.isDirectory(dd2.resolve("out/files/warehouse/pt_ep")))
+    assert(Files.readString(dd2.resolve("out/files/warehouse/.types.sql")).contains("pt_mood"))
+    val dd3 = datadir()
+    ship(dd2, dd3)
+    config(dd3, "CREATE TABLE pt_n AS SELECT count(*) AS n, min(m)::VARCHAR AS lo FROM pt_ep",
+      """{"source": "pt_n", "destination": "out.c-y.pt_n"}""")
+    Component.run(spark, dd3.toString)
+    assert(Files.readString(dd3.resolve("out/tables/pt_n")).contains("\"2\",\"sad\""))
+    // a persisted enum column whose type is gone fails with the catalog message
+    val dd4 = datadir()
+    ship(dd3, dd4)
+    Files.delete(dd4.resolve("in/files/warehouse/.types.sql"))
+    config(dd4, "CREATE TABLE pt_x AS SELECT id FROM pt_ep", "")
+    val e = intercept[UserException](Component.run(spark, dd4.toString))
+    assert(e.getMessage.startsWith("enum type pt_mood is not defined"), e.getMessage)
+  }
+
   test("sync actions: expected_input_tables, lineage, execution plan, syntax check") {
     val cfgJson =
       """{"parameters": {"blocks": [{"name": "b", "codes": [

@@ -387,4 +387,67 @@ class MergeSpec extends SparkSpec {
     named("DELETE FROM lw_missing USING lw_s WHERE lw_missing.k = lw_s.k",
       "DELETE")
   }
+
+  test("INSERT after MERGE, UPDATE ... FROM and DELETE ... USING appends to the new state") {
+    // probed v1.0 for the two lowered forms (MERGE is spec-pinned):
+    // UPDATE..FROM then INSERT VALUES/SELECT → [(1, 5), (2, 3), ...];
+    // DELETE..USING then INSERT → the inserted rows only
+    val forms = Seq(
+      "MERGE INTO ia_u USING ia_s ON ia_u.k = ia_s.k WHEN MATCHED THEN UPDATE SET j = 5" -> Seq((1, 5)),
+      "UPDATE ia_u SET j = 5 FROM ia_s WHERE ia_u.k = ia_s.k" -> Seq((1, 5)),
+      "DELETE FROM ia_u USING ia_s WHERE ia_u.k = ia_s.k" -> Seq())
+    for ((dml, kept) <- forms;
+         insert <- Seq("INSERT INTO ia_u VALUES (2, 3)", "INSERT INTO ia_u SELECT 2, 3")) {
+      val ex = mkEx()
+      def run(sql: String) = ex.runStatement(Dialect.rewrite(sql))
+      run("CREATE OR REPLACE TABLE ia_u AS SELECT 1 AS k, 7 AS j")
+      run("CREATE OR REPLACE TABLE ia_s AS SELECT 1 AS k")
+      run(dml)
+      run(insert)
+      assert(rows("ia_u") == kept :+ ((2, 3)), s"$dml; $insert")
+    }
+  }
+
+  test("INSERT, UPDATE, MERGE and upsert store values with the column's type, rounding like DuckDB") {
+    import org.apache.spark.sql.types.{DecimalType, IntegerType}
+    val ex = mkEx()
+    def run(sql: String) = ex.runStatement(Dialect.rewrite(sql))
+    def one(t: String, c: String) = {
+      val df = spark.table(t)
+      (df.select(c).collect().head.get(0), df.schema(c).dataType)
+    }
+    // tools/view_probe.py on DuckDB 1.0 — "update keeps the column
+    // type": [(4, 'INTEGER')]
+    run("CREATE OR REPLACE TABLE sc_w AS SELECT 1 AS k, 7 AS i")
+    run("UPDATE sc_w SET i = i / 2")
+    assert(one("sc_w", "i") == ((4, IntegerType)))
+    // "update keeps a decimal column type": [(Decimal('11.06'), 'DECIMAL(15,2)')]
+    run("CREATE OR REPLACE TABLE sc_p AS SELECT 1 AS k, 10.05::DECIMAL(15,2) AS p")
+    run("UPDATE sc_p SET p = round(p * 1.1, 2)")
+    assert(one("sc_p", "p") == ((new java.math.BigDecimal("11.06"), DecimalType(15, 2))))
+    // "insert values rounds into an integer column": [(4, 'INTEGER')]
+    run("CREATE OR REPLACE TABLE sc_u (k INTEGER PRIMARY KEY, j INTEGER)")
+    run("INSERT INTO sc_u VALUES (1, 3.5)")
+    assert(one("sc_u", "j") == ((4, IntegerType)))
+    // "insert select rounds into an integer column": [(2, 'INTEGER')]
+    // (DOUBLE rounds half to even)
+    run("CREATE OR REPLACE TABLE sc_d (k INTEGER, j INTEGER)")
+    run("INSERT INTO sc_d SELECT 1, 2.5::DOUBLE")
+    assert(one("sc_d", "j") == ((2, IntegerType)))
+    // "upsert set rounds into an integer column": [(4, 'INTEGER')]
+    run("UPDATE sc_u SET j = 7")
+    run("INSERT INTO sc_u VALUES (1, 0) ON CONFLICT (k) DO UPDATE SET j = sc_u.j / 2")
+    assert(one("sc_u", "j") == ((4, IntegerType)))
+    // "update from rounds into an integer column": [(4, 'INTEGER')]
+    run("CREATE OR REPLACE TABLE sc_s AS SELECT 1 AS k")
+    run("UPDATE sc_u SET j = 7")
+    run("UPDATE sc_u SET j = sc_u.j / 2 FROM sc_s WHERE sc_u.k = sc_s.k")
+    assert(one("sc_u", "j") == ((4, IntegerType)))
+    // MERGE's INSERT clause, spec-pinned: the DECIMAL → INTEGER cast
+    // rounds half away from zero (probed v1.0: 2.5::INTEGER = 3)
+    run("CREATE OR REPLACE TABLE sc_s2 AS SELECT 9 AS k")
+    run("MERGE INTO sc_d USING sc_s2 ON sc_d.k = sc_s2.k " +
+      "WHEN NOT MATCHED THEN INSERT VALUES (sc_s2.k, 2.5)")
+    assert(spark.table("sc_d").filter("k = 9").collect().head.getInt(1) == 3)
+  }
 }
