@@ -7,7 +7,6 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
 
 /** Block-sequential / batch-parallel executor over one SparkSession
@@ -22,14 +21,16 @@ import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
   * ([[Body.createView]]), which re-runs the body at each read, so no
   * swap touches a view; CREATE TABLE computes the body once into Spark's
   * block manager and registers that snapshot; INSERT unions and
-  * re-snapshots; UPDATE/DELETE re-derive with when()/filter() from the
-  * parsed assignments/condition, every stored value cast to its column's
+  * re-snapshots; MERGE, UPDATE and DELETE re-derive the table on one
+  * engine ([[executeMerge]]; a plain UPDATE or DELETE marks the rows its
+  * WHERE selects, with no join), every stored value cast to its column's
   * type ([[Executor.stored]]). The executor keeps a registry of the
   * tables it holds — the passthrough tables it [[Executor.attach]]es
   * included — and at the end of every [[execute]] call writes each table
-  * that call changed or attached to the warehouse directory (parquet),
-  * once — the reference's database passthrough (A11), where DuckDB keeps
-  * every table in one database and writes the `.duck.db` file once.
+  * that call changed to the warehouse directory (parquet), once, and
+  * copies the files of each passthrough table no statement changed — the
+  * reference's database passthrough (A11), where DuckDB keeps every table
+  * in one database and writes the `.duck.db` file once.
   */
 final case class QueryTiming(name: String, seconds: Double)
 final case class ExecutionStats(timings: List[QueryTiming]) {
@@ -140,17 +141,20 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
   /** The tables this executor holds: lowercased sanitized name → the
     * warehouse dir name (the spelling that created it) and the current
     * snapshot. `changed` names every table whose state changed since the
-    * last [[persist]], dropped and renamed-away ones included. */
+    * last [[persist]], dropped and renamed-away ones included.
+    * `untouched` maps each attached table whose files the warehouse has
+    * not received yet to the dir it was read from. */
   private val held = scala.collection.concurrent.TrieMap[String, Held]()
   private val changed = scala.collection.concurrent.TrieMap[String, Unit]()
+  private val untouched = scala.collection.concurrent.TrieMap[String, Path]()
 
   /** Attach the tables a previous run left in `dir` (the warehouse
     * passthrough): its `.types.sql` replays first, then every table dir
     * (a dir with a `meta.json` is a graft.ops.DedupIndex, engine state
     * read through DedupIndex.load, not a table) is read concurrently and
-    * held as changed, in dir-name order, so [[persist]] carries a table
-    * no statement touches on to the warehouse. An enum column whose type
-    * the catalog lacks fails here. */
+    * held unchanged, in dir-name order; [[persist]] copies the files of a
+    * table no statement changes on to the warehouse. An enum column whose
+    * type the catalog lacks fails here. */
   def attach(dir: Path): Unit = {
     import scala.jdk.CollectionConverters._
     if (!Files.isDirectory(dir)) return
@@ -165,16 +169,20 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       .zip(dirs).foreach { case (df, p) =>
         df.schema.foreach(f =>
           graft.functions.EnumExprs.enumNameOf(f.dataType).foreach(graft.functions.EnumExprs.values))
-        hold(p.getFileName.toString, df)
+        hold(p.getFileName.toString, df, Some(p))
       }
   }
 
-  /** Register `df` as the state of table `name`. */
-  private def hold(name: String, df: DataFrame): Unit = {
+  /** Register `df` as the state of table `name`: changed, or read
+    * untouched from the passthrough dir `attached`. */
+  private def hold(name: String, df: DataFrame, attached: Option[Path] = None): Unit = {
     val key = Names.view(name).toLowerCase
     held.updateWith(key)(h =>
       Some(Held(h.fold(Names.view(name))(_.dir), df)))
-    changed.put(key, ())
+    attached match {
+      case Some(dir) => untouched.put(key, dir)
+      case None => changed.put(key, ())
+    }
     register(name, GraftSqlBridge.asNullable(df))
   }
 
@@ -275,12 +283,13 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
   }
 
   /** Write every table changed since the last persist to its warehouse
-    * dir, concurrently on `ec`, delete the dir of every table dropped or
-    * renamed away, and write the type catalog. Each write stages into a
-    * fresh directory and moves into place, replacing any dir the table
-    * had before (under any spelling of its name). */
+    * dir and copy the files of every attached table no statement changed,
+    * concurrently on `ec`, delete the dir of every table dropped or
+    * renamed away, and write the type catalog. Each write or copy stages
+    * into a fresh directory and moves into place, replacing any dir the
+    * table had before (under any spelling of its name). */
   def persist()(implicit ec: ExecutionContext): Unit = {
-    val keys = changed.keys.toList.sorted
+    val keys = (changed.keys ++ untouched.keys).toList.distinct.sorted
     val listing = Option(Paths.get(warehouseDir).toFile.listFiles()).getOrElse(Array.empty)
     val onDisk = listing.filter(f => f.isDirectory && !f.getName.startsWith(".staging_"))
       .map(_.toPath).groupBy(_.getFileName.toString.toLowerCase)
@@ -289,12 +298,14 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         val staged = held.get(key).map { h =>
           val staging = Paths.get(warehouseDir,
             s".staging_${h.dir}_${version.incrementAndGet()}")
-          h.df.write.mode("overwrite").parquet(staging.toString)
+          if (changed.contains(key)) h.df.write.mode("overwrite").parquet(staging.toString)
+          else copyTree(untouched(key), staging)
           (staging, Paths.get(warehouseDir, h.dir))
         }
         onDisk.getOrElse(key, Array.empty).foreach(deleteRecursively)
         staged.foreach { case (staging, dir) => Files.move(staging, dir) }
         changed.remove(key)
+        untouched.remove(key)
       }
     }
     Await.result(Future.sequence(writes), Duration.Inf)
@@ -427,8 +438,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         val dt = parseTypeText(typeText)
         // probed: the DEFAULT is EVALUATED for existing rows, and it
         // persists for future partial-column inserts
-        val value = colP.default.map(d => expr(d).cast(dt))
-          .getOrElse(lit(null).cast(dt))
+        val value = stored(colP.default.map(expr).getOrElse(lit(null)), dt)
         colP.default.foreach { d =>
           updateMeta(Names.view(name).toLowerCase)(t =>
             t.copy(defaults = t.defaults + (colP.name.toLowerCase -> d)))
@@ -488,7 +498,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
                 "has a CHECK constraint specified")
           val dt = parseTypeText(typeText)
           val src = Option(usingTxt).map(expr).getOrElse(col(s"`$c`"))
-          replace(name, existing.withColumn(c, src.cast(dt)))
+          replace(name, existing.withColumn(c, stored(src, dt)))
         case a if "(?is)^SET\\s+DEFAULT\\s+.+$".r.findFirstIn(a).isDefined =>
           val d = a.replaceFirst("(?is)^SET\\s+DEFAULT\\s+", "").trim
           updateMeta(key)(t => t.copy(defaults = t.defaults + (c.toLowerCase -> d)))
@@ -564,7 +574,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       // which is exactly the pinned batch the upsert evaluated once
       delta = Some(upsert(u))
 
-    // MERGE INTO, and UPDATE ... FROM / DELETE ... USING lowered onto it
+    // MERGE INTO, and every UPDATE and DELETE lowered onto it
     case Stmt.Merge(m) =>
       delta = executeMerge(m, returning.isDefined)
 
@@ -686,8 +696,8 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       }
       val addedCols = added0.columns.map(_.toLowerCase).toSet
       val aligned = added0.select(existing.columns.map { c =>
-        if (addedCols(c.toLowerCase)) col(c).cast(existing.schema(c).dataType).as(c)
-        else lit(null).cast(existing.schema(c).dataType).as(c)
+        stored(if (addedCols(c.toLowerCase)) col(c) else lit(null),
+          existing.schema(c).dataType).as(c)
       }: _*)
       replace(p.target, existing.unionByName(aligned))
 
@@ -697,68 +707,8 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       Body.run(spark, body).queryExecution.assertAnalyzed()
 
     case Stmt.Catalyst(sql) =>
-      val plan = spark.sessionState.sqlParser.parsePlan(sql)
-      plan.getClass.getSimpleName match {
-        case "DeleteFromTable" =>
-          val name = targetName(plan)
-          val cond = plan.productIterator.collectFirst {
-            case e: org.apache.spark.sql.catalyst.expressions.Expression => e
-            case Some(e: org.apache.spark.sql.catalyst.expressions.Expression) => e
-          }
-          val df = spark.table(s"`${Names.view(name)}`")
-          // SQL DELETE keeps rows whose predicate is NULL (unknown); a bare
-          // filter(!p) would drop them, so fold NULL to false first
-          val out = cond
-            .map(e => df.filter(!coalesce(GraftSqlBridge.column(e), lit(false))))
-            .getOrElse(df.limit(0))
-          if (returning.isDefined) {
-            // the deleted rows' OLD values, read from the old snapshot
-            val hit = cond.map(e =>
-              coalesce(GraftSqlBridge.column(e), lit(false))).getOrElse(lit(true))
-            delta = Some(df.filter(hit))
-          }
-          replace(name, out)
-
-        case "UpdateTable" =>
-          val name = targetName(plan)
-          val df = spark.table(s"`${Names.view(name)}`")
-          val (assigns, cond) = updateParts(plan)
-          // all SET expressions evaluate against the PRE-update row (SQL
-          // simultaneous-assignment semantics: `SET a = b, b = a` swaps),
-          // so build every output column in a single projection; SET
-          // targets match case-insensitively like the resolver
-          val assigned = assigns.map { case (k, v) => k.toLowerCase -> v }.toMap
-          val outCols = df.columns.map { c =>
-            assigned.get(c.toLowerCase) match {
-              case Some(value0) =>
-                val value = stored(GraftSqlBridge.column(value0), df.schema(c).dataType)
-                (cond match {
-                  case Some(p) => when(GraftSqlBridge.column(p), value).otherwise(col(c))
-                  case None => value
-                }).as(c)
-              case None => col(c)
-            }
-          }
-          if (returning.isDefined) {
-            // RETURNING must observe the WRITTEN rows: a nondeterministic
-            // SET (nextval(), uuidv7(), random()) evaluated once for the
-            // table and again for the delta would return rows that were
-            // never stored and advance sequences twice. Pin ONE shared
-            // evaluation — checkpoint the hit-annotated projection and
-            // derive both the new table state and the delta from it
-            // (the same single-eval contract as INSERT/upsert above)
-            val hit = cond.map(p =>
-              coalesce(GraftSqlBridge.column(p), lit(false))).getOrElse(lit(true))
-            val pinned = df.select(outCols :+ hit.as("__upd_ret_hit"): _*)
-              .localCheckpoint()
-            delta = Some(pinned.filter(col("__upd_ret_hit")).drop("__upd_ret_hit"))
-            replace(name, pinned.drop("__upd_ret_hit"))
-          } else replace(name, df.select(outCols: _*))
-
-        case _ =>
-          // plain SELECT / SET / etc.: execute for effect + error surfacing
-          spark.sql(sql).queryExecution.assertAnalyzed()
-      }
+      // SELECT / SET / etc.: execute for effect + error surfacing
+      spark.sql(sql).queryExecution.assertAnalyzed()
     }
     returning.map { proj =>
       val d = delta.getOrElse(throw new UserException(
@@ -791,32 +741,6 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
 
   /** A statement body, classified by [[Body.parse]] and run by [[Body.run]]. */
   private def bodyDf(body: String): DataFrame = Body.run(spark, Body.parse(body))
-
-  private def targetName(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): String =
-    plan.collectFirst {
-      case r: UnresolvedRelation => r.multipartIdentifier.mkString(".")
-    }.getOrElse(throw new UserException(s"cannot resolve statement target in: $plan"))
-
-  /** (assignments, condition) out of a parsed UpdateTable node. */
-  private def updateParts(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : (Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)],
-         Option[org.apache.spark.sql.catalyst.expressions.Expression]) = {
-    import org.apache.spark.sql.catalyst.expressions.Expression
-    var assigns = Seq.empty[(String, Expression)]
-    var cond: Option[Expression] = None
-    plan.productIterator.foreach {
-      case s: Seq[_] =>
-        assigns = s.collect {
-          case a if a.getClass.getSimpleName == "Assignment" =>
-            val it = a.asInstanceOf[Product].productIterator.toList
-            (it.head.asInstanceOf[Expression].sql.stripPrefix("`").stripSuffix("`"),
-              it(1).asInstanceOf[Expression])
-        }
-      case Some(e: Expression) => cond = Some(e)
-      case _ =>
-    }
-    (assigns, cond)
-  }
 
   private val version = new java.util.concurrent.atomic.AtomicLong()
 
@@ -858,6 +782,14 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     hold(name, enforced(name, df)
       .localCheckpoint(eager = true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
+  /** Copy the file tree under `from` to the new directory `to`, byte for
+    * byte. */
+  private def copyTree(from: Path, to: Path): Unit = {
+    val walk = Files.walk(from)
+    try walk.forEach(p => Files.copy(p, to.resolve(from.relativize(p).toString)))
+    finally walk.close()
+  }
+
   /** Depth-first delete; the walk stream is CLOSED (an unclosed
     * Files.walk leaks a directory fd per DDL/DML statement). */
   private def deleteRecursively(dir: Path): Unit = {
@@ -895,7 +827,8 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     df.createOrReplaceTempView(Names.view(name))
 
   /** The one store cast: a value written to a column of type `dt` (INSERT,
-    * UPDATE, MERGE, upsert) takes that type through the cast `x::dt`
+    * UPDATE, MERGE, upsert, COPY FROM, ALTER COLUMN TYPE, ADD COLUMN
+    * DEFAULT) takes that type through the cast `x::dt`
     * lowers to, so an integral column rounds a fractional value the way
     * DuckDB does ([[graft.functions.DuckIntCast]]) instead of truncating,
     * and an UPDATE never changes a column's type. */
@@ -985,9 +918,10 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
 
   /** MERGE INTO re-derivation (spec-pinned DuckDB 1.4 semantics —
     * [[MergeSql]]; the local v1.0 oracle cannot parse the statement),
-    * which also runs UPDATE ... FROM and DELETE ... USING as the
-    * one-clause merges [[MergeSql.parse]] lowers them to (their probed
-    * v1.0 rules). Two distributed branches, no per-row path:
+    * which also runs every UPDATE and DELETE as the one-clause merge
+    * [[MergeSql.parse]] lowers it to (their probed v1.0 rules). A merge
+    * with no source (a plain UPDATE or DELETE) marks the target's rows in
+    * place ([[markInPlace]]). Two distributed branches, no per-row path:
     *
     *  - target side (WHEN MATCHED / NOT MATCHED BY SOURCE): ONE left
     *    join of the target against the source on the user's ON, a
@@ -1025,8 +959,22 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       throw new UserException(s"${m.verb}: table ${m.target} does not exist")
     val existing = spark.table(s"`$sanitized`")
     val tAlias = m.targetAlias.getOrElse(m.target)
-    val (srcSql, sAlias) = MergeSql.sourceOf(m)
+    val byLower = existing.columns.map(c => c.toLowerCase -> c).toMap
     val clauses = m.clauses
+    // SET / INSERT column names must exist (loud, like the binder)
+    clauses.foreach {
+      case MergeSql.Clause(_, _, _, MergeSql.Update(sets)) =>
+        sets.foreach { case (k, _) => if (!byLower.contains(k.toLowerCase))
+          throw new UserException(
+            s"${m.verb} ${m.target}: SET column $k does not exist") }
+      case MergeSql.Clause(_, _, _, MergeSql.Insert(Some(cs), _)) =>
+        cs.foreach(k => if (!byLower.contains(k.toLowerCase))
+          throw new UserException(
+            s"MERGE INTO ${m.target}: INSERT column $k does not exist"))
+      case _ => ()
+    }
+    val (srcSql, sAlias) = MergeSql.sourceOf(m).getOrElse(
+      return markInPlace(m, existing.alias(tAlias), wantDelta))
     val matchedClauses = clauses.filter(_.kind == MergeSql.Matched)
     val bySourceClauses = clauses.filter(_.kind == MergeSql.NotMatchedBySource)
     val insClauses = clauses.filter(_.kind == MergeSql.NotMatchedByTarget)
@@ -1043,19 +991,6 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     val src = if (needJoin && needInsert) src0.localCheckpoint() else src0
     val srcByLower = src.columns.filter(_ != "__m_hit")
       .map(c => c.toLowerCase -> c).toMap
-    val byLower = existing.columns.map(c => c.toLowerCase -> c).toMap
-    // SET / INSERT column names must exist (loud, like the binder)
-    clauses.foreach {
-      case MergeSql.Clause(_, _, _, MergeSql.Update(sets)) =>
-        sets.foreach { case (k, _) => if (!byLower.contains(k.toLowerCase))
-          throw new UserException(
-            s"${m.verb} ${m.target}: SET column $k does not exist") }
-      case MergeSql.Clause(_, _, _, MergeSql.Insert(Some(cs), _)) =>
-        cs.foreach(k => if (!byLower.contains(k.toLowerCase))
-          throw new UserException(
-            s"MERGE INTO ${m.target}: INSERT column $k does not exist"))
-      case _ => ()
-    }
 
     def clauseCond(c: MergeSql.Clause): Column =
       c.cond.map(t => coalesce(expr(t), lit(false))).getOrElse(lit(true))
@@ -1219,6 +1154,41 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       Some(
         if (parts.isEmpty) existing.limit(0).select(tagged(""): _*)
         else parts.reduce(_ unionByName _))
+    }
+  }
+
+  /** A merge with no source (a plain UPDATE or DELETE) over the aliased
+    * `target`: its one clause marks the rows its ON selects, in place —
+    * one filter for a DELETE, one projection for an UPDATE, no join and no
+    * dedup. A NULL condition marks no row: the UPDATE's when() falls
+    * through on NULL by itself, which keeps an IN-subquery condition a
+    * plain existence join, and the DELETE folds NULL to false. Under
+    * RETURNING the marked projection is checkpointed once and the written
+    * state AND the delta derive from it, so a nondeterministic SET
+    * (nextval(), random()) draws its values once and returns the rows it
+    * stored. */
+  private def markInPlace(m: MergeSql.Parsed, target: DataFrame,
+                          wantDelta: Boolean): Option[DataFrame] = {
+    val on = expr(m.on)
+    val hit = coalesce(on, lit(false))
+    val (delete, sets) = m.clauses.head.action match {
+      case MergeSql.Update(s) => (false, s)
+      case _ => (true, Nil)
+    }
+    // one projection: every SET reads the pre-update row (`SET a = b, b = a` swaps)
+    val cols = target.columns.map { c =>
+      sets.collectFirst { case (k, v) if k.equalsIgnoreCase(c) =>
+        when(on, stored(expr(v), target.schema(c).dataType)).otherwise(col(c)).as(c)
+      }.getOrElse(col(c))
+    }
+    if (!wantDelta) {
+      replace(m.target, if (delete) target.filter(!hit) else target.select(cols: _*))
+      None
+    } else {
+      val marked = target.select(cols :+ hit.as("__m_hit"): _*).localCheckpoint()
+      val kept = if (delete) marked.filter(!col("__m_hit")) else marked
+      replace(m.target, kept.drop("__m_hit"))
+      Some(marked.filter(col("__m_hit")).drop("__m_hit"))
     }
   }
 

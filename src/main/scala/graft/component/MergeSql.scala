@@ -21,25 +21,29 @@ package graft.component
   * NAME (missing target columns NULL-fill). `merge_action` in RETURNING
   * renders 'UPDATE' / 'DELETE' / 'INSERT' per affected row.
   *
-  * DuckDB's join-update and join-delete lower onto the same plan, as
-  * one-clause merges over their single source relation (probed v1.0,
-  * pinned in StatementSurfaceSpec; WHERE is required and comma-joined
-  * source lists reject loudly — pre-join them in a subquery):
+  * DuckDB's UPDATE and DELETE lower onto the same plan, as one-clause
+  * merges (the join forms probed v1.0 and pinned in StatementSurfaceSpec;
+  * a join form needs its WHERE, and comma-joined source lists reject
+  * loudly — pre-join them in a subquery):
   * {{{
   * UPDATE t [AS a] SET ... FROM src WHERE c  ≡ MERGE INTO t USING src ON c WHEN MATCHED THEN UPDATE SET ...
   * DELETE FROM t [AS a] USING src WHERE c    ≡ MERGE INTO t USING src ON c WHEN MATCHED THEN DELETE
+  * UPDATE t [AS a] SET ... [WHERE c]         ≡ the same one-clause merge with no source, ON c
+  * DELETE FROM t [AS a] [WHERE c]            ≡ (ON TRUE without a WHERE)
   * }}}
   * Several source rows matching one target row update from ONE
   * arbitrary match (DuckDB does the same, no error). Column names that
   * both sides carry must be qualified with the table or alias name.
   * The lowered forms keep their own statement name in errors and have
-  * no `merge_action`.
+  * no `merge_action`. Every statement that starts with UPDATE or DELETE
+  * is one of these forms or a parse error: none reaches Spark's parser.
   *
   * Parsing only — [[Executor.executeMerge]] runs the plan: one
   * uid-annotated left join for the matched / not-matched-by-source
   * branches (one anti-join when every match is deleted), one anti-join
   * for the insert branch (the distributed shuffle-on-key MERGE shape;
-  * no per-row path).
+  * no per-row path); a merge with no source marks the target's rows in
+  * place.
   */
 object MergeSql {
 
@@ -66,25 +70,29 @@ object MergeSql {
                           action: Action)
 
   /** `verb` is the statement the user wrote (`MERGE INTO`, or `UPDATE` /
-    * `DELETE FROM` for the lowered join forms): it names errors, and
-    * only a MERGE has the `merge_action` pseudo-column. */
+    * `DELETE FROM` for the lowered forms): it names errors, and only a
+    * MERGE has the `merge_action` pseudo-column. `source` is None for a
+    * plain UPDATE / DELETE. */
   final case class Parsed(target: String, targetAlias: Option[String],
-                          sourceText: String, on: String,
+                          source: Option[String], on: String,
                           clauses: Seq[Clause], verb: String = Merge) {
     def isMerge: Boolean = verb == Merge
   }
 
   private val Merge = "MERGE INTO"
 
-  /** `<lead> target [[AS] alias] <kw>` — the alias may not be `kw`. The
-    * match ends at the keyword: it runs on masked text, where a quoted
-    * name right after the keyword (`USING "delta.csv" d`) reads as blanks. */
-  private def head(lead: String, kw: String) =
+  /** `<lead> target [[AS] alias]`, then one of the keywords `kws`
+    * (group 3) or, when `bare`, the end of the statement. The alias may
+    * not be a keyword. The match runs on the statement text itself: the
+    * target is the only quoted token it spans, and masking would blank it. */
+  private def head(lead: String, kws: String, bare: Boolean) =
     (s"(?is)^\\s*$lead\\s+(`[^`]+`|\"[^\"]+\"|[A-Za-z_][\\w.]*)" +
-      s"(?:\\s+(?:AS\\s+)?(?!$kw\\b)([A-Za-z_]\\w*))?\\s+$kw(?=\\s)").r
-  private val mergeHead = head("MERGE\\s+INTO", "USING")
-  private val updateHead = head("UPDATE", "SET")
-  private val deleteHead = head("DELETE\\s+FROM", "USING")
+      s"(?:\\s+(?:AS\\s+)?(?!(?:$kws)\\b)([A-Za-z_]\\w*))?" +
+      s"(?:\\s+($kws)\\b${if (bare) "|\\s*$" else ""})").r
+  private val mergeHead = head("MERGE\\s+INTO", "USING", bare = false)
+  private val updateHead = head("UPDATE", "SET", bare = false)
+  private val deleteHead = head("DELETE\\s+FROM", "USING|WHERE", bare = true)
+  private val dmlStart = "(?is)^\\s*(UPDATE|DELETE)\\b".r
 
   /** Strip one pair of identifier quotes (`"x"` / `` `x` ``). */
   private[component] def unq(s: String): String = {
@@ -115,19 +123,15 @@ object MergeSql {
     re.r.findAllMatchIn(masked).find(m => dep(m.start) == 0)
   }
 
+  /** None for a statement that is not MERGE, UPDATE or DELETE; an
+    * UPDATE or DELETE this parser cannot read throws. */
   def parse(stmt0: String): Option[Parsed] = {
     val stmt = stmt0.trim.stripSuffix(";")
     val masked = Dialect.maskQuoted(stmt)
-    mergeHead.findFirstMatchIn(masked) match {
-      case Some(hm) => Some(parseMerge(stmt, hm))
-      case None => parseUpdateFrom(stmt, masked)
-        .orElse(deleteHead.findFirstMatchIn(masked).map { hm =>
-          val target = unq(stmt.substring(hm.start(1), hm.end(1)))
-          joinForm("DELETE FROM", target, Option(hm.group(2)),
-            s"DELETE FROM $target USING", "delete empties the table on any " +
-              "non-empty source", stmt.substring(hm.end), Delete)
-        })
-    }
+    mergeHead.findFirstMatchIn(stmt).map(parseMerge(stmt, _)).orElse(
+      dmlStart.findFirstMatchIn(masked).map(m =>
+        if (m.group(1).equalsIgnoreCase("UPDATE")) parseUpdate(stmt, masked)
+        else parseDelete(stmt)))
   }
 
   private def parseMerge(stmt: String, hm: scala.util.matching.Regex.Match): Parsed = {
@@ -157,39 +161,65 @@ object MergeSql {
       parseClause(txt, i)
     }
     validate(target, clauses)
-    Parsed(target, alias, sourceText, on, clauses)
+    Parsed(target, alias, Some(sourceText), on, clauses)
   }
 
-  /** `UPDATE t [AS a] SET ... FROM src WHERE c`; None without a depth-0
-    * FROM (the plain UPDATE path owns the statement) or without a
-    * parseable SET list. */
-  private def parseUpdateFrom(stmt: String, masked: String): Option[Parsed] = {
-    val hm = updateHead.findFirstMatchIn(masked).getOrElse(return None)
+  /** `UPDATE t [[AS] a] SET ... [FROM src] [WHERE c]`. The statement's
+    * WHERE is its first depth-0 one, and a depth-0 FROM before it (not
+    * the FROM of `IS [NOT] DISTINCT FROM`) starts the join form's source. */
+  private def parseUpdate(stmt: String, masked: String): Parsed = {
+    val hm = updateHead.findFirstMatchIn(stmt).getOrElse(throw new UserException(
+      "UPDATE: expected UPDATE table [[AS] alias] SET col = expr, ... " +
+        "[FROM source] [WHERE condition]"))
     val target = unq(stmt.substring(hm.start(1), hm.end(1)))
     val rest = stmt.substring(hm.end)
-    val fm = topLevel("(?is)\\bFROM\\b", masked.substring(hm.end))
-      .getOrElse(return None)
-    setList(rest.substring(0, fm.start)).map(sets =>
-      joinForm("UPDATE", target, Option(hm.group(2)),
-        s"UPDATE $target ... FROM", "update takes an arbitrary source row",
-        rest.substring(fm.end), Update(sets)))
+    val rm = masked.substring(hm.end)
+    val wm = topLevel("(?is)\\bWHERE\\b", rm)
+    val fm = topLevel("(?is)(?<!\\bDISTINCT\\s{1,64})\\bFROM\\b",
+      rm.substring(0, wm.fold(rm.length)(_.start)))
+    val sets = setList(rest.substring(0, fm.orElse(wm).fold(rest.length)(_.start)))
+      .getOrElse(throw new UserException(
+        s"UPDATE $target: SET needs a col = expr list"))
+    lowered("UPDATE", target, Option(hm.group(2)),
+      fm.map(f => rest.substring(f.end, wm.fold(rest.length)(_.start))),
+      wm.map(w => rest.substring(w.end)), Update(sets))
   }
 
-  /** The lowered join forms' shared tail `src WHERE c` → a one-clause
-    * WHEN MATCHED merge with `c` as its ON. */
-  private def joinForm(verb: String, target: String, alias: Option[String],
-                       what: String, crossJoin: String, body: String,
-                       action: Action): Parsed = {
-    val bm = Dialect.maskQuoted(body)
-    val wm = topLevel("(?is)\\bWHERE\\b", bm).getOrElse(throw new UserException(
-      s"$what: a WHERE join condition is required (an unconditioned " +
-        s"cross-join $crossJoin)"))
-    if (Dialect.splitTop(bm.substring(0, wm.start)).length > 1)
-      throw new UserException(
+  /** `DELETE FROM t [[AS] a] [USING src] [WHERE c]`. */
+  private def parseDelete(stmt: String): Parsed = {
+    val hm = deleteHead.findFirstMatchIn(stmt).getOrElse(throw new UserException(
+      "DELETE: expected DELETE FROM table [[AS] alias] [USING source] " +
+        "[WHERE condition]"))
+    val tail = stmt.substring(hm.end)
+    val (source, where) = Option(hm.group(3)).map(_.toUpperCase) match {
+      case Some("USING") =>
+        val wm = topLevel("(?is)\\bWHERE\\b", Dialect.maskQuoted(tail))
+        (Some(wm.fold(tail)(w => tail.substring(0, w.start))), wm.map(w => tail.substring(w.end)))
+      case kw => (None, kw.map(_ => tail))
+    }
+    lowered("DELETE FROM", unq(stmt.substring(hm.start(1), hm.end(1))),
+      Option(hm.group(2)), source, where, Delete)
+  }
+
+  /** A lowered UPDATE / DELETE: a one-clause WHEN MATCHED merge over the
+    * FROM / USING `source`, if any, whose ON is the WHERE condition (TRUE
+    * without a WHERE, which only a form without a source may omit). */
+  private def lowered(verb: String, target: String, alias: Option[String],
+                      source: Option[String], where: Option[String],
+                      action: Action): Parsed = {
+    source.foreach { src =>
+      val what = if (action == Delete) s"$verb $target USING" else s"$verb $target ... FROM"
+      if (where.isEmpty) throw new UserException(
+        s"$what: a WHERE join condition is required (an unconditioned cross-join " +
+          (if (action == Delete) "delete empties the table on any non-empty source"
+           else "update takes an arbitrary source row") + ")")
+      if (Dialect.splitTop(Dialect.maskQuoted(src)).length > 1) throw new UserException(
         s"$what: only one source relation is supported " +
           "(pre-join multiple sources in a subquery)")
-    Parsed(target, alias, body.substring(0, wm.start).trim,
-      body.substring(wm.end).trim, Seq(Clause(0, Matched, None, action)), verb)
+    }
+    val on = where.fold("TRUE")(_.trim)
+    if (on.isEmpty) throw new UserException(s"$verb $target: the WHERE condition is empty")
+    Parsed(target, alias, source.map(_.trim), on, Seq(Clause(0, Matched, None, action)), verb)
   }
 
   private def parseClause(txt0: String, idx: Int): Clause = {
@@ -350,9 +380,9 @@ object MergeSql {
 
   /** The source relation split into (text-to-run, alias): a bare name
     * (optionally aliased) or a parenthesized subquery (alias required —
-    * DuckDB requires one too). */
-  def sourceOf(p: Parsed): (String, String) = {
-    val t = p.sourceText.trim
+    * DuckDB requires one too). None for a plain UPDATE / DELETE. */
+  def sourceOf(p: Parsed): Option[(String, String)] = p.source.map { t0 =>
+    val t = t0.trim
     if (t.startsWith("(")) {
       val close = Dialect.matchingParen(Dialect.maskQuoted(t), 0)
       val alias = "(?is)^\\s*(?:AS\\s+)?([A-Za-z_]\\w*)\\s*$".r

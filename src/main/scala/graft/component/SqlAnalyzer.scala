@@ -12,7 +12,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * is; this object reads that decision into a DAG contract:
   *
   *  - query bodies (a VIEW/CTAS body, an INSERT source, `COPY (query)`, a
-  *    MERGE source, a PREPARE body, a bare query) are classified by
+  *    MERGE source, a PREPARE body, a bare query, and every MERGE, UPDATE
+  *    or DELETE expression read as `SELECT <expr>`) are classified by
   *    [[Body.parse]]: a plain body goes through Catalyst's parser (its
   *    `UnresolvedRelation` names are dependencies, CTE names excluded),
   *    every other form reads its [[Body.parts]], and an unsupported form
@@ -106,7 +107,16 @@ object SqlAnalyzer {
       case Stmt.Insert(t, tail) => makes(name(t), reads(Stmt.insertSource(tail)._3), InsertStmt)
       // the plain INSERT head has the upsert's dependency/output sets
       case Stmt.Upsert(u) => contract(spark, Stmt.parse(u.insertHead))
-      case Stmt.Merge(m) => mutates(view(m.target), reads(MergeSql.sourceOf(m)._1))
+      // a subquery in the ON, a WHEN condition, a SET or an INSERT value
+      // reads its relations too
+      case Stmt.Merge(m) =>
+        val exprs = m.on +: m.clauses.flatMap(c => c.cond.toSeq ++ (c.action match {
+          case MergeSql.Update(sets) => sets.map(_._2)
+          case MergeSql.Insert(_, values) => values.getOrElse(Nil)
+          case _ => Nil
+        }))
+        mutates(view(m.target), MergeSql.sourceOf(m).fold(Set.empty[String])(s => reads(s._1)) ++
+          exprs.flatMap(e => reads(s"SELECT $e")))
       case Stmt.CopyToFile(p) =>
         Analysis(
           if (p.source.startsWith("(")) reads(p.source.substring(1, p.source.length - 1))
@@ -203,21 +213,14 @@ object SqlAnalyzer {
 
   private def fromPlan(plan: LogicalPlan): Analysis = {
     val kind = plan.getClass.getSimpleName
-
-    val relations = allRelations(plan)
-    val ctes = cteNames(plan)
-
-    val identifiers: Set[String] = plan.collect {
-      case u: UnresolvedIdentifier => u.nameParts.mkString(".").toLowerCase
-    }.toSet
-
     val stmtType =
       if (kind == "InsertIntoStatement") InsertStmt
       else if (kind.startsWith("Create") || kind.startsWith("ReplaceTable")) CreateStmt
       else OtherStmt
-
     val outputs: Set[String] = stmtType match {
-      case CreateStmt => identifiers
+      case CreateStmt => plan.collect {
+        case u: UnresolvedIdentifier => u.nameParts.mkString(".").toLowerCase
+      }.toSet
       case InsertStmt =>
         // the target table is the statement's first plan-typed field
         plan.productIterator.collectFirst {
@@ -225,20 +228,8 @@ object SqlAnalyzer {
             case r: UnresolvedRelation => relName(r)
           }
         }.flatten.toSet
-      case OtherStmt =>
-        // UPDATE / DELETE mutate their target (tracked as outputs, like the
-        // reference's parser: `src/sql_parser.py:99-102`)
-        if (kind == "DeleteFromTable" || kind == "UpdateTable")
-          plan.collectFirst {
-            case r: UnresolvedRelation => relName(r)
-          }.toSet
-        else Set.empty
+      case OtherStmt => Set.empty
     }
-
-    // UPDATE/DELETE keep their target as a dependency too: re-derivation
-    // must run after whatever produced the current state of the table.
-    val keepTargetDep = kind == "DeleteFromTable" || kind == "UpdateTable"
-    Analysis(if (keepTargetDep) relations -- ctes else relations -- ctes -- outputs,
-      outputs, stmtType)
+    Analysis(allRelations(plan) -- cteNames(plan) -- outputs, outputs, stmtType)
   }
 }

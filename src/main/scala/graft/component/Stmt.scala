@@ -43,7 +43,7 @@ object Stmt {
   /** `DROP TABLE|VIEW`; `kind` as written. */
   final case class Drop(kind: String, name: String, ifExists: Boolean) extends Stmt
   final case class Upsert(p: UpsertSql.Parsed) extends Stmt
-  /** MERGE INTO, and UPDATE ... FROM / DELETE ... USING lowered onto it. */
+  /** MERGE INTO, and every UPDATE and DELETE lowered onto it. */
   final case class Merge(p: MergeSql.Parsed) extends Stmt
   final case class CreateIndex(c: IndexSql.Create) extends Stmt
   final case class DropIndex(d: IndexSql.Drop) extends Stmt
@@ -70,8 +70,8 @@ object Stmt {
     * DESCRIBE, SUMMARIZE, percent LIMIT, or an unsupported form): only
     * the executor's body path runs it. */
   final case class EngineQuery(body: Body) extends Stmt
-  /** Everything else is Spark SQL as written (SELECT, WITH, DELETE,
-    * UPDATE, SET, ...), parsed by the session's Catalyst parser. */
+  /** Everything else is Spark SQL as written (SELECT, WITH, SET, ...),
+    * parsed by the session's Catalyst parser; never an UPDATE or DELETE. */
   final case class Catalyst(sql: String) extends Stmt
 
   // TEMP is accepted and treated like a regular object (the whole run is

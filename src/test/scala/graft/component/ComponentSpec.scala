@@ -2,6 +2,8 @@ package graft.component
 
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 
 /** End-to-end datadir runs, modeled on the reference's golden-directory
@@ -15,6 +17,15 @@ class ComponentSpec extends SparkSpec {
   }
 
   private def datadir(): Path = Files.createTempDirectory("graft_dd_")
+
+  /** Every regular file under `dir`: relative path → bytes. */
+  private def files(dir: Path): List[(String, Seq[Byte])] = {
+    val walk = Files.walk(dir)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => dir.relativize(p).toString -> Files.readAllBytes(p).toSeq)
+      .toList.sortBy(_._1)
+    finally walk.close()
+  }
 
   private def daysCsv: String =
     "\"id\",\"name\"\n\"1\",\"Monday\"\n\"2\",\"Tuesday\"\n\"3\",\"Wednesday\"\n" +
@@ -200,8 +211,11 @@ class ComponentSpec extends SparkSpec {
       List("\"1\",\"happy\"", "\"2\",\"sad\"", "\"id\",\"m\""))
     // a passthrough table is a table of the run, not a view
     assert(Files.readString(dd2.resolve("out/tables/pt_kind")).contains("\"BASE TABLE\""))
-    // the untouched table and the type catalog ride on to the next run
+    // the untouched table and the type catalog ride on to the next run;
+    // the table's files are copied, byte for byte
     assert(Files.isDirectory(dd2.resolve("out/files/warehouse/pt_ep")))
+    assert(files(dd2.resolve("out/files/warehouse/pt_ep")) ==
+      files(dd2.resolve("in/files/warehouse/pt_ep")))
     assert(Files.readString(dd2.resolve("out/files/warehouse/.types.sql")).contains("pt_mood"))
     val dd3 = datadir()
     ship(dd2, dd3)
@@ -216,6 +230,31 @@ class ComponentSpec extends SparkSpec {
     config(dd4, "CREATE TABLE pt_x AS SELECT id FROM pt_ep", "")
     val e = intercept[UserException](Component.run(spark, dd4.toString))
     assert(e.getMessage.startsWith("enum type pt_mood is not defined"), e.getMessage)
+  }
+
+  test("an untouched passthrough table is copied once per run; a changed one is written") {
+    val in = Files.createTempDirectory("graft_pt_in_")
+    Seq("pt_keep", "pt_edit").foreach(t =>
+      spark.range(3).toDF("k").write.parquet(in.resolve(t).toString))
+    val out = Files.createTempDirectory("graft_pt_out_")
+    val ex = new Executor(spark, out.toString)
+    ex.attach(in)
+    // one execute call per batch, as a traced run makes them
+    def execute(sql: String*): Unit = ex.execute(ExecutionPlan(List(PlannedBlock("b",
+      List(Batch(List(Query(0, "b", "c", "c", sql.mkString(";"), sql.map(Dialect.rewrite).toList,
+        Set.empty, Set.empty, SqlAnalyzer.OtherStmt)))))), Map.empty))
+    execute("DELETE FROM pt_edit WHERE k = 0")
+    assert(files(out.resolve("pt_keep")) == files(in.resolve("pt_keep")))
+    assert(spark.read.parquet(out.resolve("pt_edit").toString).count() == 2)
+    // a later call copies nothing again (a file added to the source dir
+    // since stays behind; Spark's reader skips `_` names)
+    Files.writeString(in.resolve("pt_keep").resolve("_marker"), "x")
+    execute("SELECT 1")
+    assert(files(out.resolve("pt_keep")) == files(in.resolve("pt_keep")).filter(_._1 != "_marker"))
+    // once a statement changes it, the table is written from its new state
+    execute("UPDATE pt_keep SET k = k + 10")
+    assert(spark.read.parquet(out.resolve("pt_keep").toString).collect()
+      .map(_.getLong(0)).sorted.toSeq == Seq(10L, 11L, 12L))
   }
 
   test("sync actions: expected_input_tables, lineage, execution plan, syntax check") {

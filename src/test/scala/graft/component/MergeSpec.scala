@@ -450,4 +450,111 @@ class MergeSpec extends SparkSpec {
       "WHEN NOT MATCHED THEN INSERT VALUES (sc_s2.k, 2.5)")
     assert(spark.table("sc_d").filter("k = 9").collect().head.getInt(1) == 3)
   }
+
+  test("ALTER COLUMN TYPE, ADD COLUMN DEFAULT and COPY FROM store through the rounding cast") {
+    import org.apache.spark.sql.types.IntegerType
+    val ex = mkEx()
+    def run(sql: String) = ex.runStatement(Dialect.rewrite(sql))
+    def values(t: String, c: String) = {
+      val df = spark.table(t).orderBy("k")
+      (df.select(c).collect().map(_.get(0)).toSeq, df.schema(c).dataType)
+    }
+    // tools/view_probe.py on DuckDB 1.0 — "alter type rounds a double into
+    // an integer column": [(4, 'INTEGER'), (-2, 'INTEGER')] (half to even)
+    run("CREATE OR REPLACE TABLE sa_d AS SELECT 1 AS k, 3.5::DOUBLE AS x " +
+      "UNION ALL SELECT 2, -2.5::DOUBLE")
+    run("ALTER TABLE sa_d ALTER COLUMN x TYPE INTEGER")
+    assert(values("sa_d", "x") == ((Seq(4, -2), IntegerType)))
+    // "alter type rounds a decimal into an integer column": [(3, 'INTEGER')]
+    run("CREATE OR REPLACE TABLE sa_m AS SELECT 1 AS k, 2.5::DECIMAL(4,1) AS x")
+    run("ALTER TABLE sa_m ALTER COLUMN x TYPE INTEGER")
+    assert(values("sa_m", "x") == ((Seq(3), IntegerType)))
+    // "alter type using rounds into an integer column": [(4, 'INTEGER')]
+    run("CREATE OR REPLACE TABLE sa_u AS SELECT 1 AS k, 7 AS x")
+    run("ALTER TABLE sa_u ALTER COLUMN x TYPE INTEGER USING x / 2")
+    assert(values("sa_u", "x") == ((Seq(4), IntegerType)))
+    // "add column default rounds a decimal into an integer column":
+    // [(3, 'INTEGER')]; "... a double ...": [(4, 'INTEGER')]
+    run("CREATE OR REPLACE TABLE sa_a AS SELECT 1 AS k")
+    run("ALTER TABLE sa_a ADD COLUMN n INTEGER DEFAULT 2.5")
+    run("ALTER TABLE sa_a ADD COLUMN n2 INTEGER DEFAULT 3.5::DOUBLE")
+    assert(values("sa_a", "n") == ((Seq(3), IntegerType)))
+    assert(values("sa_a", "n2") == ((Seq(4), IntegerType)))
+    // "copy from parquet rounds into an integer column": [(4, 'INTEGER')]
+    val f = Files.createTempDirectory("graft_sa_").resolve("j.parquet")
+    run(s"COPY (SELECT 1 AS k, 3.5::DOUBLE AS j) TO '$f' (FORMAT PARQUET)")
+    run("CREATE OR REPLACE TABLE sa_c (k INTEGER, j INTEGER)")
+    run(s"COPY sa_c FROM '$f'")
+    assert(values("sa_c", "j") == ((Seq(4), IntegerType)))
+  }
+
+  test("plain UPDATE and DELETE run on the MERGE engine: aliases, no WHERE, unknown SET column") {
+    val ex = mkEx()
+    def run(sql: String) = ex.runStatement(Dialect.rewrite(sql))
+    def after(dml: String) = {
+      run("CREATE OR REPLACE TABLE p_t (k INTEGER, v INTEGER)")
+      run("INSERT INTO p_t VALUES (1, 10), (2, 20), (3, 30)")
+      run(dml)
+      rows("p_t")
+    }
+    // tools/view_probe.py on DuckDB 1.0, a fresh p_t per row — "update
+    // with an AS alias" and "... a bare alias": [(1, 11), (2, 20), (3, 30)]
+    assert(after("UPDATE p_t AS a SET v = 11 WHERE a.k = 1") == Seq((1, 11), (2, 20), (3, 30)))
+    assert(after("UPDATE p_t a SET v = 11 WHERE a.k = 1") == Seq((1, 11), (2, 20), (3, 30)))
+    // "delete with an AS alias" and "... a bare alias": [(1, 10), (2, 20)]
+    assert(after("DELETE FROM p_t AS a WHERE a.k = 3") == Seq((1, 10), (2, 20)))
+    assert(after("DELETE FROM p_t a WHERE a.k = 3") == Seq((1, 10), (2, 20)))
+    // "update without where": [(1, 11), (2, 21), (3, 31)]
+    assert(after("UPDATE p_t SET v = v + 1") == Seq((1, 11), (2, 21), (3, 31)))
+    // "delete without where": []
+    assert(after("DELETE FROM p_t") == Seq())
+    // "update where is distinct from": [(1, 0), (2, 20), (3, 0)]
+    assert(after("UPDATE p_t SET v = 0 WHERE k IS DISTINCT FROM 2") ==
+      Seq((1, 0), (2, 20), (3, 0)))
+    // "update an unknown column": Binder Error: Referenced update column
+    // nope not found in table! — here the statement names the column
+    val e = intercept[UserException](after("UPDATE p_t SET nope = 5 WHERE k = 1"))
+    assert(e.getMessage == "UPDATE p_t: SET column nope does not exist", e.getMessage)
+    assert(rows("p_t") == Seq((1, 10), (2, 20), (3, 30)))
+  }
+
+  test("plain UPDATE and DELETE mark the target's rows in place: no join, no probe, no window") {
+    val ex = mkEx()
+    def run(sql: String) = ex.runStatement(Dialect.rewrite(sql))
+    run("CREATE TABLE ip_t (k INTEGER, v INTEGER)")
+    run("INSERT INTO ip_t VALUES (1, 1), (2, 2), (3, 3)")
+    def inPlace(plans: Seq[String]): Unit = {
+      val all = plans.map(_.split("== Initial Plan ==").head).mkString("\n----\n")
+      assert(plans.nonEmpty)
+      assert(!all.contains("Join") && !all.contains("HashAggregate") &&
+        "\\bWindow\\b".r.findFirstIn(all).isEmpty, all)
+    }
+    inPlace(executedPlans(run("UPDATE ip_t AS a SET v = a.v * 10 WHERE a.k > 1")))
+    inPlace(executedPlans(run("DELETE FROM ip_t WHERE k = 2")))
+    assert(rows("ip_t") == Seq((1, 1), (3, 30)))
+  }
+
+  test("MERGE, UPDATE and DELETE dependencies read the relations inside their expressions") {
+    def an(sql: String) = SqlAnalyzer.analyzeStatement(spark, Dialect.rewrite(sql))
+    // DuckDB 1.0 runs the join forms (tools/view_probe.py "update from with
+    // subqueries in set and where": [(1, 99), (2, 20)]; "delete using with
+    // a subquery in where": [(2, 20)]), so `other` must be produced first
+    Seq(
+      "MERGE INTO t USING s ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = (SELECT max(x) FROM other)",
+      "MERGE INTO t USING s ON t.k = s.k AND t.k IN (SELECT k FROM other) WHEN MATCHED THEN DELETE",
+      "MERGE INTO t USING s ON t.k = s.k WHEN MATCHED AND t.k IN (SELECT k FROM other) THEN DELETE",
+      "MERGE INTO t USING s ON t.k = s.k WHEN NOT MATCHED THEN INSERT VALUES (s.k, (SELECT max(x) FROM other))",
+      "UPDATE t SET v = (SELECT max(x) FROM other) FROM s WHERE t.k = s.k",
+      "UPDATE t SET v = s.v FROM s WHERE t.k = s.k AND t.k IN (SELECT k FROM other)",
+      "DELETE FROM t USING s WHERE t.k = s.k AND t.k IN (SELECT k FROM other)"
+    ).foreach { sql =>
+      val a = an(sql)
+      assert(a.dependencies == Set("t", "s", "other") && a.outputs == Set("t"), s"$sql → $a")
+    }
+    // the plain forms: the target plus what their expressions read
+    val u = an("UPDATE ek SET v = 0 WHERE k IN (SELECT k FROM other)")
+    assert(u.dependencies == Set("ek", "other") && u.outputs == Set("ek"), u)
+    val d = an("DELETE FROM ek AS e WHERE e.k = 1")
+    assert(d.dependencies == Set("ek") && d.outputs == Set("ek"), d)
+  }
 }

@@ -1,5 +1,7 @@
 package graft.component
 
+import java.nio.file.{Files, Paths}
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Stmt.parse]]: one row per statement variant, plus the cases where
@@ -64,7 +66,8 @@ class StmtSpec extends AnyFunSuite {
     is("SUMMARIZE t") { case Stmt.EngineQuery(_) => true }
     is("SELECT * FROM a POSITIONAL JOIN b") { case Stmt.EngineQuery(_) => true }
     is("SELECT 1") { case Stmt.Catalyst("SELECT 1") => true }
-    is("DELETE FROM t WHERE k = 1") { case Stmt.Catalyst(_) => true }
+    is("DELETE FROM t WHERE k = 1") {
+      case Stmt.Merge(m) => m.verb == "DELETE FROM" && m.source.isEmpty && m.on == "k = 1" }
   }
 
   test("classification order: the earlier form wins") {
@@ -83,13 +86,21 @@ class StmtSpec extends AnyFunSuite {
       case Stmt.Upsert(u) => u.action == UpsertSql.Ignore }
     is("INSERT INTO t SELECT * FROM s ON CONFLICT DO NOTHING") {
       case Stmt.Upsert(u) => u.action == UpsertSql.Ignore }
-    // UPDATE ... FROM and DELETE ... USING lower to MERGE; the plain
-    // forms stay Spark's
+    // every UPDATE and DELETE lowers to MERGE: the join forms with their
+    // source, the plain forms without one (ON TRUE without a WHERE)
     is("UPDATE t SET v = s.v FROM s WHERE t.k = s.k") {
-      case Stmt.Merge(m) => !m.isMerge && m.verb == "UPDATE" }
+      case Stmt.Merge(m) => !m.isMerge && m.verb == "UPDATE" && m.source.contains("s") }
     is("DELETE FROM t USING s WHERE t.k = s.k") {
       case Stmt.Merge(m) => !m.isMerge && m.verb == "DELETE FROM" }
-    is("UPDATE t SET v = 1 WHERE k = 2") { case Stmt.Catalyst(_) => true }
+    is("UPDATE t SET v = 1 WHERE k = 2") {
+      case Stmt.Merge(m) => m.verb == "UPDATE" && m.source.isEmpty && m.on == "k = 2" }
+    is("UPDATE `t` AS a SET v = 1") {
+      case Stmt.Merge(m) => m.target == "t" && m.targetAlias.contains("a") && m.on == "TRUE" }
+    is("DELETE FROM `t` a") {
+      case Stmt.Merge(m) => m.target == "t" && m.targetAlias.contains("a") && m.on == "TRUE" }
+    // the FROM of IS DISTINCT FROM in the WHERE starts no join source
+    is("UPDATE t SET v = 0 WHERE k IS DISTINCT FROM 2") {
+      case Stmt.Merge(m) => m.source.isEmpty && m.on == "k IS DISTINCT FROM 2" }
     // the sequence knob is not a Spark SET; any other SET is
     is("SET graft_sequence_blocks = 4") { case Stmt.SequenceBlocks(4) => true }
     is("SET threads = 4") { case Stmt.Catalyst(_) => true }
@@ -114,6 +125,23 @@ class StmtSpec extends AnyFunSuite {
   test("parse is total: a parser's refusal is Malformed, never a throw") {
     is("UPDATE t SET v = 1 FROM s") {
       case Stmt.Malformed(e) => e.getMessage.contains("WHERE join condition") }
+    // an UPDATE or DELETE MergeSql cannot read never falls through to Spark
+    is("UPDATE t") { case Stmt.Malformed(e) => e.getMessage.startsWith("UPDATE: expected") }
+    is("UPDATE t SET WHERE k = 1") {
+      case Stmt.Malformed(e) => e.getMessage.contains("SET needs a col = expr list") }
+    is("DELETE t WHERE k = 1") { case Stmt.Malformed(e) => e.getMessage.startsWith("DELETE: expected") }
+    is("DELETE FROM t WHERE") {
+      case Stmt.Malformed(e) => e.getMessage.contains("WHERE condition is empty") }
     is("DROP TYPE m CASCADE") { case Stmt.Malformed(e) => e.getMessage.contains("CASCADE") }
+  }
+
+  test("every UPDATE and DELETE form of tools/statement_forms.sql is a Merge or Malformed") {
+    val forms = Dialect.splitStatements(
+      Files.readString(Paths.get("tools/statement_forms.sql")))
+      .map(_.replaceAll("(?m)^\\s*--.*$", "").trim)
+      .filter("(?is)^(UPDATE|DELETE|TRUNCATE)\\b".r.findFirstIn(_).isDefined)
+      .flatMap(Dialect.prepare)
+    assert(forms.length >= 10, forms)
+    forms.foreach(sql => is(sql) { case Stmt.Merge(_) | Stmt.Malformed(_) => true })
   }
 }

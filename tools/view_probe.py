@@ -2,10 +2,11 @@
 """View-binding and store-cast probes on the installed DuckDB.
 
 Every row of ViewBindingSpec (src/test/scala/graft/component) and the
-DML store-cast rows of MergeSpec carry the result this script prints
-for them on DuckDB 1.0. Each row runs on a fresh in-memory database:
-its setup statements in order, then one probe query, and prints the
-probe's rows or the error it raised.
+DML store-cast and plain UPDATE/DELETE rows of MergeSpec carry the
+result this script prints for them on DuckDB 1.0. Each row runs on a
+fresh in-memory database: its setup statements in order, then one probe
+query (or a function of the connection), and prints the probe's rows or
+the error it raised.
 
 Rows that need SQL DuckDB 1.0 lacks (SET VARIABLE, MERGE) are not
 here; their specs say so.
@@ -27,8 +28,23 @@ def exported_views(con):
             return [l.strip() for l in f if l.upper().startswith("CREATE VIEW")]
 
 
+def copy_from_parquet(con):
+    """COPY FROM a parquet DOUBLE column into an INTEGER column."""
+    with tempfile.TemporaryDirectory() as d:
+        f = os.path.join(d, "j.parquet")
+        con.execute(f"COPY (SELECT 1 AS k, 3.5::DOUBLE AS j) TO '{f}' (FORMAT PARQUET)")
+        con.execute("CREATE TABLE u (k INTEGER, j INTEGER)")
+        con.execute(f"COPY u FROM '{f}'")
+        return con.execute("SELECT j, typeof(j) FROM u").fetchall()
+
+
 T = "CREATE TABLE t AS SELECT * FROM (VALUES (1, 10), (2, 20)) v(k, x)"
 V = "CREATE VIEW v AS SELECT * FROM t"
+P = "CREATE TABLE p_t AS SELECT * FROM (VALUES (1, 10), (2, 20), (3, 30)) v(k, v)"
+PQ = "SELECT * FROM p_t ORDER BY k"
+J = ["CREATE TABLE t AS SELECT * FROM (VALUES (1, 10), (2, 20)) v(k, v)",
+     "CREATE TABLE s AS SELECT * FROM (VALUES (1, 5), (2, 6)) v(k, nv)",
+     "CREATE TABLE other AS SELECT 1 AS k, 99 AS x"]
 
 ROWS = [
     # (label, setup statements, probe query or a function of the connection)
@@ -110,6 +126,43 @@ ROWS = [
      ["CREATE TABLE u (k INTEGER PRIMARY KEY, j INTEGER)", "INSERT INTO u VALUES (1, 7)",
       "INSERT INTO u VALUES (1, 0) ON CONFLICT (k) DO UPDATE SET j = u.j / 2"],
      "SELECT j, typeof(j) FROM u"),
+    ("alter type rounds a double into an integer column",
+     ["CREATE TABLE w AS SELECT 1 AS k, 3.5::DOUBLE AS x UNION ALL SELECT 2, -2.5::DOUBLE",
+      "ALTER TABLE w ALTER COLUMN x TYPE INTEGER"],
+     "SELECT x, typeof(x) FROM w ORDER BY k"),
+    ("alter type rounds a decimal into an integer column",
+     ["CREATE TABLE w AS SELECT 1 AS k, 2.5::DECIMAL(4,1) AS x",
+      "ALTER TABLE w ALTER COLUMN x TYPE INTEGER"],
+     "SELECT x, typeof(x) FROM w"),
+    ("alter type using rounds into an integer column",
+     ["CREATE TABLE w AS SELECT 1 AS k, 7 AS x",
+      "ALTER TABLE w ALTER COLUMN x TYPE INTEGER USING x / 2"],
+     "SELECT x, typeof(x) FROM w"),
+    ("add column default rounds a decimal into an integer column",
+     ["CREATE TABLE w AS SELECT 1 AS k", "ALTER TABLE w ADD COLUMN n INTEGER DEFAULT 2.5"],
+     "SELECT n, typeof(n) FROM w"),
+    ("add column default rounds a double into an integer column",
+     ["CREATE TABLE w AS SELECT 1 AS k",
+      "ALTER TABLE w ADD COLUMN n INTEGER DEFAULT 3.5::DOUBLE"],
+     "SELECT n, typeof(n) FROM w"),
+    ("copy from parquet rounds into an integer column", [], copy_from_parquet),
+    # plain UPDATE and DELETE: one binder with the join forms
+    ("update with an AS alias", [P, "UPDATE p_t AS a SET v = 11 WHERE a.k = 1"], PQ),
+    ("update with a bare alias", [P, "UPDATE p_t a SET v = 11 WHERE a.k = 1"], PQ),
+    ("delete with an AS alias", [P, "DELETE FROM p_t AS a WHERE a.k = 3"], PQ),
+    ("delete with a bare alias", [P, "DELETE FROM p_t a WHERE a.k = 3"], PQ),
+    ("update an unknown column", [P, "UPDATE p_t SET nope = 5 WHERE k = 1"], PQ),
+    ("update without where", [P, "UPDATE p_t SET v = v + 1"], PQ),
+    ("delete without where", [P, "DELETE FROM p_t"], PQ),
+    ("update where is distinct from", [P, "UPDATE p_t SET v = 0 WHERE k IS DISTINCT FROM 2"], PQ),
+    # subqueries inside the join forms' expressions
+    ("update from with subqueries in set and where",
+     J + ["UPDATE t SET v = (SELECT max(x) FROM other) FROM s "
+          "WHERE t.k = s.k AND t.k IN (SELECT k FROM other)"],
+     "SELECT * FROM t ORDER BY k"),
+    ("delete using with a subquery in where",
+     J + ["DELETE FROM t USING s WHERE t.k = s.k AND t.k IN (SELECT k FROM other)"],
+     "SELECT * FROM t ORDER BY k"),
 ]
 
 
